@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Plan-audit helper: print the formatted physical plan of one or more
@@ -30,7 +30,7 @@ object Explain {
     * counted each operator twice (tree line + detail header): compare
     * r18 numbers at half value.
     */
-  private case class Census(
+  private[graft] case class Census(
       shuffleEx: Int, bcastEx: Int, smj: Int, bhj: Int, shj: Int,
       bnlj: Int, cartesian: Int, scalaUdf: Int, kernels: Int,
       kernelsInFilter: Int, scans: Int, scansUnpruned: Int,
@@ -49,16 +49,15 @@ object Explain {
   private val zero =
     Census(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil)
 
-  private def census(root: SparkPlan): Census = {
+  /** Census of the same static tree [[PlanAudit]] walks: the prepared
+    * plan, exchanges inserted.
+    */
+  private[graft] def census(df: DataFrame): Census = {
     import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{
       BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins._
-    val plan = root match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
+    val plan = PlanAudit.preparedPlan(df)
     // collectWithSubqueries descends into scalar/IN-subquery plans —
     // the BNLJ scalar-subquery shapes live there.
     val nodes: Seq[SparkPlan] = plan.collectWithSubqueries { case p => p }
@@ -132,8 +131,7 @@ object Explain {
       var total = zero
       val unpruned = scala.collection.mutable.ListBuffer.empty[String]
       keys.foreach { k =>
-        val c = census(
-          SparkEntry.queries(k)(spark, dir).queryExecution.executedPlan)
+        val c = census(SparkEntry.queries(k)(spark, dir))
         println(s"$k ${c.line}")
         c.unprunedDetail.foreach(d => unpruned += s"$k $d")
         total = total + c

@@ -65,30 +65,16 @@ object Validate {
     when(size(arr) > 0, array_join(arr, "; "))
   }
 
-  /** F1: conjunction of V1–V5 — true iff the row passes everything. */
-  def isValid(conf: PipelineConf): Column = {
-    def numOk(c: Column, r: ValueRange) = {
-      val p = Cleanse.tryDouble(c)
-      c.isNotNull && p.isNotNull && p.between(r.lo, r.hi)
-    }
-    col("sensor_id").isNotNull &&
-      col("timestamp").isNotNull &&
-      Cleanse.tryTimestamp(col("timestamp")).isNotNull &&
-      numOk(col("temperature"), conf.tempRange) &&
-      numOk(col("humidity"), conf.humidityRange) &&
-      numOk(col("pressure"), conf.pressureRange)
-  }
-
-  /** Adds `is_valid` and `row_errors` to an all-string sensor frame that
-    * already carries a deterministic 1-based data row number in
-    * `rowNumCol` (CSV line = rowNum + 1, header is line 1 — the
-    * reference's `index+2`, `pipeline.py:117`).
+  /** Adds `row_errors` and `is_valid` (F1: no field check failed) to an
+    * all-string sensor frame that already carries a deterministic
+    * 1-based data row number in `rowNumCol` (CSV line = rowNum + 1,
+    * header is line 1 — the reference's `index+2`, `pipeline.py:117`).
     */
   def withValidation(
       df: DataFrame, conf: PipelineConf, rowNumCol: String): DataFrame = {
     val lineNo = col(rowNumCol) + lit(1) // CSV line number incl. header
-    df.withColumn("is_valid", isValid(conf))
-      .withColumn("row_errors", rowErrors(conf, lineNo))
+    df.withColumn("row_errors", rowErrors(conf, lineNo))
+      .withColumn("is_valid", col("row_errors").isNull)
   }
 
   /** F3: strict per-file verdict. One row per file: row/invalid counts,

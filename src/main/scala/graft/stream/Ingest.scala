@@ -36,7 +36,9 @@ import graft.sink.{BatchSink, FsRouting}
   *     idempotent (delete-by-file / upsert), and a still-failing sink
   *     keeps the entry for the next attempt.
   *
-  * Scale note: validation is one distributed pass over the whole
+  * Scale note: each file is read whole, into one input partition (the
+  * file is the reference's atomic unit), so parallelism is files per
+  * micro-batch. Validation is one distributed pass over the whole
   * micro-batch, and the commit is ONE group write for every clean file
   * (`BatchSink.writeAll` — per-file idempotence preserved through the
   * `file_name` partition/lineage column, per-file transactions kept by
@@ -94,7 +96,7 @@ object Ingest {
     // V6: per-file header check (reference `pipeline.py:100-105`) — with
     // an explicit schema Spark's CSV reader matches columns by POSITION
     // and ignores header names, so the header must be classified here
-    // or bad data flows through silently. Four classes:
+    // or bad data flows through silently. Three classes:
     //   canonical  — exactly the expected columns in order: the
     //                positional batch read is already correct;
     //   remappable — all required columns present but reordered or
@@ -102,40 +104,13 @@ object Ingest {
     //                values under the wrong names (the reference's
     //                pandas maps by NAME and accepts these), so the
     //                file is re-read by name and processed alone;
-    //   bad        — required columns missing, header quoting
+    //   bad        — required columns missing or header quoting
     //                malformed (tokens Spark's parser would not
-    //                reproduce), or the file too large for the
-    //                single-split line-numbering contract: quarantine.
+    //                reproduce): quarantine.
     val fileTokens: Map[String, Option[Either[String, Seq[String]]]] = batch
       .select("__file").distinct().collect().map(_.getString(0))
       .map(uri => uri -> headerTokens(FsRouting.toLocalPath(uri))).toMap
-    // Line-number contract guard: `__mono` (monotonically_increasing_id)
-    // follows CSV line order only while a file maps to ONE input split.
-    // Spark cuts a file into splits of `FilePartition.maxSplitBytes` =
-    // min(maxPartitionBytes, max(openCostInBytes, bytesPerCore)) — NOT
-    // plain maxPartitionBytes: a small batch shrinks bytesPerCore so the
-    // effective split size can drop to openCostInBytes (4 MiB default),
-    // splitting files well under the conf. Compute the same formula over
-    // this batch's files so the guard quarantines exactly the files
-    // Spark would split. Size 0 on a stat failure ⇒ not oversize; the
-    // unreadable/moved path below decides.
-    val sizes: Map[String, Long] = fileTokens.keys.map { uri =>
-      uri -> (try Files.size(FsRouting.toLocalPath(uri))
-      catch { case _: Exception => 0L })
-    }.toMap
-    val splitLimit = effectiveMaxSplitBytes(batch.sparkSession, sizes.values)
-    val oversize: Map[String, String] = sizes.flatMap { case (uri, sz) =>
-      if (sz > splitLimit)
-        Some(uri -> (s"File is $sz bytes, larger than the effective " +
-          s"input split size ($splitLimit = min(spark.sql.files." +
-          "maxPartitionBytes, max(openCostInBytes, bytesPerCore))): " +
-          "per-file line numbering requires a single input split. " +
-          "Raise spark.sql.files.maxPartitionBytes (and openCostInBytes " +
-          "for small batches) to ingest files this large. Quarantining."))
-      else None
-    }
     val headerBad: Map[String, String] = fileTokens.flatMap {
-      case (uri, _) if oversize.contains(uri) => Some(uri -> oversize(uri))
       case (uri, Some(Left(reason))) => Some(uri -> reason)
       case (uri, Some(Right(tokens))) =>
         val missing = Schemas.sensorColumns.filterNot(tokens.toSet)
@@ -200,7 +175,9 @@ object Ingest {
       val mapped: Option[DataFrame] =
         try {
           val spark = batch.sparkSession
-          val byName = spark.read.option("header", "true").csv(path.toString)
+          val byName = spark.read
+            .options(csvOptions(ignoreMissingFiles = false))
+            .csv(path.toString)
           val actual = byName.columns.map(c => normToken(c) -> c).toMap
           val missing = Schemas.sensorColumns.filterNot(actual.contains)
           if (missing.nonEmpty)
@@ -268,176 +245,137 @@ object Ingest {
       outcomes: scala.collection.mutable.ArrayBuffer[FileOutcome],
       pendingMoves: scala.collection.mutable.ArrayBuffer[(Path, Option[String])])
       : Unit = {
-    if (!batchOk.isEmpty) {
-      // NA normalization (S1) then per-file line numbers: the window is
-      // partitioned per file — parallelism = files per batch, matching
-      // the reference's unit of work.
-      // __mono must be added HERE: inside foreachBatch the frame is a
-      // plain batch DF (monotonically_increasing_id is rejected on
-      // streaming plans).
-      // Line-number ordering contract: __mono follows (partitionId,
-      // offset), which matches CSV line order only while each file maps
-      // to a SINGLE input split. Guarded upstream (processBatch
-      // pre-quarantines files larger than the batch's effective split
-      // size) and VERIFIED from the data below: the per-file __mono
-      // contiguity check quarantines any file whose rows actually
-      // arrived across input splits — which also covers the by-name
-      // re-read path, whose SOLO scan computes its own (smaller)
-      // split size the batch-wide pre-guard cannot see.
-      val cleaned = Schemas.sensorColumns.foldLeft(
-        batchOk.withColumn("__mono", monotonically_increasing_id()))((d, c) =>
-        d.withColumn(c, Cleanse.naNormalize(col(c))))
-      val w = Window.partitionBy(col("__file"))
-        .orderBy(col("__mono"))
-      val numbered = cleaned
-        .withColumn("row_num", row_number().over(w).cast("long"))
-      val validated = Validate.withValidation(numbered, conf, "row_num")
-        .persist()
-      try {
-        // Single-split contract verified by OBSERVATION, not only
-        // predicted by formula: monotonically_increasing_id packs the
-        // partition id into the high 33 bits, so a file read as one
-        // split has CONTIGUOUS ids (two splits of one file land in
-        // different partitions, whose id islands sit ≥2^33 apart and
-        // can never abut). Non-contiguity ⇒ row_number over __mono
-        // would misnumber lines — quarantine with an actionable
-        // reason. One extra bounded aggregate (3 longs per file).
-        val splitFiles: Map[String, String] = validated
-          .groupBy(col("__file"))
-          .agg(count(lit(1)).as("__n"),
-            min(col("__mono")).as("__lo"), max(col("__mono")).as("__hi"))
-          .collect()
-          .flatMap { r =>
-            val n = r.getAs[Long]("__n")
-            val span = r.getAs[Long]("__hi") - r.getAs[Long]("__lo") + 1
-            if (span != n)
-              Some(r.getAs[String]("__file") ->
-                ("File rows arrived across multiple input splits " +
-                  s"(id span $span over $n rows): per-file line " +
-                  "numbering requires a single input split. Raise " +
-                  "spark.sql.files.maxPartitionBytes (and " +
-                  "openCostInBytes for small batches) to ingest files " +
-                  "this large. Quarantining."))
-            else None
-          }.toMap
+    // NA normalization (S1) then per-file line numbers: the window is
+    // partitioned per file — parallelism = files per batch, matching
+    // the reference's unit of work. __mono must be added HERE: inside
+    // foreachBatch the frame is a plain batch DF
+    // (monotonically_increasing_id is rejected on streaming plans).
+    // Every file is read whole into one input partition (`csvOptions`),
+    // so __mono follows record order within each file.
+    val cleaned = Schemas.sensorColumns.foldLeft(
+      batchOk.withColumn("__mono", monotonically_increasing_id()))((d, c) =>
+      d.withColumn(c, Cleanse.naNormalize(col(c))))
+    val w = Window.partitionBy(col("__file"))
+      .orderBy(col("__mono"))
+    val numbered = cleaned
+      .withColumn("row_num", row_number().over(w).cast("long"))
+    val validated = Validate.withValidation(numbered, conf, "row_num")
+      .persist()
+    try {
+      val verdicts = Validate.strictVerdicts(validated, "__file")
+        .collect() // one row per file — driver-side routing decisions
 
-        val verdicts = Validate.strictVerdicts(validated, "__file")
-          .collect() // one row per file — driver-side routing decisions
+      // Routing decisions stay per-file (quarantine, logs, outcomes);
+      // the committable files then GROUP-COMMIT in one sink pass
+      // below, instead of one driver-serialized Spark job pair per
+      // file — the difference between O(files) and O(1) job
+      // submissions per micro-batch at production file counts.
+      final case class Committable(
+          uri: String, name: String, path: Path, rows: Long, dropped: Long)
+      val toCommit = scala.collection.mutable.ArrayBuffer.empty[Committable]
 
-        // Routing decisions stay per-file (quarantine, logs, outcomes);
-        // the committable files then GROUP-COMMIT in one sink pass
-        // below, instead of one driver-serialized Spark job pair per
-        // file — the difference between O(files) and O(1) job
-        // submissions per micro-batch at production file counts.
-        final case class Committable(
-            uri: String, name: String, path: Path, rows: Long, dropped: Long)
-        val toCommit = scala.collection.mutable.ArrayBuffer.empty[Committable]
+      verdicts.foreach { v =>
+        val fileUri = v.getAs[String]("__file")
+        val path = FsRouting.toLocalPath(fileUri)
+        val name = path.getFileName.toString
+        val nRows = v.getAs[Long]("n_rows")
+        val nInvalid = v.getAs[Long]("n_invalid")
+        val isClean = v.getAs[Boolean]("is_clean")
+        val firstError = Option(v.getAs[String]("first_error"))
 
-        verdicts.foreach { v =>
-          val fileUri = v.getAs[String]("__file")
-          val path = FsRouting.toLocalPath(fileUri)
-          val name = path.getFileName.toString
-          val nRows = v.getAs[Long]("n_rows")
-          val nInvalid = v.getAs[Long]("n_invalid")
-          val isClean = v.getAs[Boolean]("is_clean")
-          val firstError = Option(v.getAs[String]("first_error"))
-
-          if (splitFiles.contains(fileUri)) {
-            val reason = splitFiles(fileUri)
-            log.warn(s"File '$name': $reason")
+        if (conf.strictMode) {
+          // Past tense: the validation pass already ran (the verdict
+          // aggregate above IS the validation); a "Starting…" line
+          // here would misstate the execution order.
+          log.info(s"File '$name': STRICT validation checked $nRows rows.")
+          if (!isClean) {
+            val reason = firstError.getOrElse("Validation failed.")
+            log.warn(s"Strict validation failed for '$name'. " +
+              s"Quarantining. Summary: $reason")
             pendingMoves += path -> Some(reason)
             outcomes += FileOutcome(name, "quarantined", Some(reason), nRows)
-          } else if (conf.strictMode) {
-            // Past tense: the validation pass already ran (the verdict
-            // aggregate above IS the validation); a "Starting…" line
-            // here would misstate the execution order.
-            log.info(s"File '$name': STRICT validation checked $nRows rows.")
-            if (!isClean) {
-              val reason = firstError.getOrElse("Validation failed.")
-              log.warn(s"Strict validation failed for '$name'. " +
-                s"Quarantining. Summary: $reason")
-              pendingMoves += path -> Some(reason)
-              outcomes += FileOutcome(name, "quarantined", Some(reason), nRows)
-            } else {
-              log.info(s"File '$name': All $nRows rows passed strict validation.")
-              toCommit += Committable(fileUri, name, path, nRows, 0L)
-            }
           } else {
-            // Lenient: drop bad rows with a logged summary, commit the
-            // valid subset (reference log evidence: "Validation
-            // complete. 19 valid rows out of 20." then store + move).
-            val nValid = nRows - nInvalid
-            log.info(s"File '$name': Validation complete. " +
-              s"$nValid valid rows out of $nRows.")
-            firstError.foreach(e =>
-              log.warn(s"File '$name': Summary of row-level issues: $e"))
-            if (nValid == 0) {
-              // A file with NOTHING valid is garbage, not a partial:
-              // committing an empty write and marking it processed
-              // would silently discard 100% of its content. Quarantine
-              // it like strict mode does.
-              val reason = firstError.getOrElse("No valid rows.")
-              pendingMoves += path -> Some(reason)
-              outcomes += FileOutcome(name, "quarantined", Some(reason), nRows)
-            } else {
-              toCommit += Committable(fileUri, name, path, nValid, nInvalid)
-            }
+            log.info(s"File '$name': All $nRows rows passed strict validation.")
+            toCommit += Committable(fileUri, name, path, nRows, 0L)
+          }
+        } else {
+          // Lenient: drop bad rows with a logged summary, commit the
+          // valid subset (reference log evidence: "Validation
+          // complete. 19 valid rows out of 20." then store + move).
+          val nValid = nRows - nInvalid
+          log.info(s"File '$name': Validation complete. " +
+            s"$nValid valid rows out of $nRows.")
+          firstError.foreach(e =>
+            log.warn(s"File '$name': Summary of row-level issues: $e"))
+          if (nValid == 0) {
+            // A file with NOTHING valid is garbage, not a partial:
+            // committing an empty write and marking it processed
+            // would silently discard 100% of its content. Quarantine
+            // it like strict mode does.
+            val reason = firstError.getOrElse("No valid rows.")
+            pendingMoves += path -> Some(reason)
+            outcomes += FileOutcome(name, "quarantined", Some(reason), nRows)
+          } else {
+            toCommit += Committable(fileUri, name, path, nValid, nInvalid)
           }
         }
+      }
 
-        if (toCommit.nonEmpty) {
-          // ONE typed frame + ONE long-format aggregate for ALL
-          // committable files. `is_valid` filters nothing in strict
-          // mode (a clean file has no invalid rows) and selects the
-          // lenient subset otherwise. file_name comes from a bounded
-          // driver map (≤ files-per-trigger entries) rather than URI
-          // string surgery, so URL-encoded names stay byte-identical
-          // to the quarantine/ledger side.
-          val nameByUri =
-            typedLit(toCommit.map(c => c.uri -> c.name).toMap)
-          val committableRows = validated
-            .filter(col("__file").isin(toCommit.map(_.uri).toSeq: _*) &&
-              col("is_valid"))
-            .withColumn("file_name", element_at(nameByUri, col("__file")))
-          val typedAll = Cleanse.castTyped(committableRows
-            .select((Schemas.sensorColumns :+ "file_name").map(col): _*))
-          val aggAll = Aggregate.metricAggregates(
-            typedAll, Seq("file_name", "sensor_id"),
-            Schemas.metricColumns, "timestamp")
-          val failed = sink.writeAll(toCommit.map(_.name).toSeq,
-            typedAll, aggAll)
-          toCommit.foreach { c =>
-            if (!failed.contains(c.name)) {
-              pendingMoves += c.path -> None
-              log.info(
-                s"Successfully stored data from '${c.name}'. Moving to processed.")
-              outcomes += FileOutcome(c.name, "processed",
-                if (c.dropped > 0) Some(s"${c.dropped} invalid rows dropped")
-                else None, c.rows)
-            } else {
-              // retained in data/ AND recorded in the retry ledger
-              // (T5): the checkpointed source will never re-emit this
-              // path, so the ledger is what actually drives the retry
-              // (at query start and at each later trigger). Report the
-              // ATTEMPTED row count — in lenient mode that is the
-              // valid subset, not the whole file.
-              recordRetry(conf, c.name)
-              log.error(s"Failed to store data for '${c.name}' in DB. " +
-                "File remains in data folder for retry.")
-              outcomes += FileOutcome(c.name, "retained",
-                Some("sink failure"), c.rows)
-            }
+      if (toCommit.nonEmpty) {
+        // ONE typed frame + ONE long-format aggregate for ALL
+        // committable files. `is_valid` filters nothing in strict
+        // mode (a clean file has no invalid rows) and selects the
+        // lenient subset otherwise. file_name comes from a bounded
+        // driver map (≤ files-per-trigger entries) rather than URI
+        // string surgery, so URL-encoded names stay byte-identical
+        // to the quarantine/ledger side.
+        val nameByUri =
+          typedLit(toCommit.map(c => c.uri -> c.name).toMap)
+        val committableRows = validated
+          .filter(col("__file").isin(toCommit.map(_.uri).toSeq: _*) &&
+            col("is_valid"))
+          .withColumn("file_name", element_at(nameByUri, col("__file")))
+        val typedAll = Cleanse.castTyped(committableRows
+          .select((Schemas.sensorColumns :+ "file_name").map(col): _*))
+        val aggAll = Aggregate.metricAggregates(
+          typedAll, Seq("file_name", "sensor_id"),
+          Schemas.metricColumns, "timestamp")
+        val failed = sink.writeAll(toCommit.map(_.name).toSeq,
+          typedAll, aggAll)
+        toCommit.foreach { c =>
+          if (!failed.contains(c.name)) {
+            pendingMoves += c.path -> None
+            log.info(
+              s"Successfully stored data from '${c.name}'. Moving to processed.")
+            outcomes += FileOutcome(c.name, "processed",
+              if (c.dropped > 0) Some(s"${c.dropped} invalid rows dropped")
+              else None, c.rows)
+          } else {
+            // retained in data/ AND recorded in the retry ledger
+            // (T5): the checkpointed source will never re-emit this
+            // path, so the ledger is what actually drives the retry
+            // (at query start and at each later trigger). Report the
+            // ATTEMPTED row count — in lenient mode that is the
+            // valid subset, not the whole file.
+            recordRetry(conf, c.name)
+            log.error(s"Failed to store data for '${c.name}' in DB. " +
+              "File remains in data folder for retry.")
+            outcomes += FileOutcome(c.name, "retained",
+              Some("sink failure"), c.rows)
           }
         }
-      } finally validated.unpersist()
-    }
+      }
+    } finally validated.unpersist()
   }
 
   /** S5: header-only/zero-line files produce no rows, so they never
     * appear in a micro-batch — sweep them from `data/` directly
     * (reference: `pipeline.py:287-296`, reason `quarantine_log.txt:1`).
+    * A header with malformed quoting is swept too, with the header
+    * check's reason: read whole, a quote it opens and never closes
+    * swallows every later line, so such a file may produce no rows.
     */
-  def sweepEmptyFiles(conf: PipelineConf): Seq[FileOutcome] = {
+  def sweepRowlessFiles(conf: PipelineConf): Seq[FileOutcome] = {
     val dir = Paths.get(conf.dataDir)
     if (!Files.isDirectory(dir)) return Seq.empty
     // Files.list holds a directory fd until closed; this runs every
@@ -447,8 +385,13 @@ object Ingest {
     try {
       listing.iterator().asScala
         .filter(p => p.toString.endsWith(".csv"))
-        .filter(p => countDataLines(p) == 0)
         .flatMap { p =>
+          val reason =
+            if (countDataLines(p) == 0) Some(FsRouting.EmptyFileReason)
+            else headerTokens(p).flatMap(_.left.toOption)
+          reason.map(p -> _)
+        }
+        .flatMap { case (p, reason) =>
           // Guarded like the deferred-move loop: the sweep runs AFTER
           // processBatch has executed its physical moves, so a throw
           // here (quarantine dir unwritable, file yanked mid-sweep)
@@ -456,14 +399,14 @@ object Ingest {
           // strand the checkpoint replay on missing files. A failed
           // sweep just leaves the file for the next trigger's sweep.
           try {
-            log.warn(s"File '${p.getFileName}' is empty. Quarantining.")
-            FsRouting.quarantine(p, Paths.get(conf.quarantineDir),
-              FsRouting.EmptyFileReason)
+            FsRouting.quarantine(p, Paths.get(conf.quarantineDir), reason)
+            log.warn(s"File '${p.getFileName}' moved to quarantine. " +
+              s"Reason: $reason")
             Some(FileOutcome(p.getFileName.toString, "quarantined",
-              Some(FsRouting.EmptyFileReason), 0L))
+              Some(reason), 0L))
           } catch {
             case scala.util.control.NonFatal(e) =>
-              log.error(s"Empty-file sweep of '${p.getFileName}' failed " +
+              log.error(s"Sweep of '${p.getFileName}' failed " +
                 s"(${e.getMessage}); retrying next trigger.")
               None
           }
@@ -516,11 +459,10 @@ object Ingest {
     val files = live.map(m =>
       Paths.get(conf.dataDir).resolve(m.getFileName).toString)
     log.info(s"Retrying ${files.size} retained file(s) from the ledger.")
+    // A listed-then-moved file (operator action between the exists()
+    // check above and the scan) must skip, not kill the retry pass.
     val batch = spark.read
-      .option("header", "true")
-      // A listed-then-moved file (operator action between the exists()
-      // check above and the scan) must skip, not kill the retry pass.
-      .option("ignoreMissingFiles", "true")
+      .options(csvOptions(ignoreMissingFiles = true))
       .schema(Schemas.sensorCsvRaw)
       .csv(files: _*)
       .withColumn("__file", input_file_name())
@@ -531,6 +473,16 @@ object Ingest {
     }
     outcomes
   }
+
+  /** The read contract of every sensor CSV: the stream, the retry pass
+    * and the by-name re-read all go through here. `multiLine` makes
+    * Spark's CSV source treat each file as unsplittable, so a file is
+    * read whole into one input partition and numbered by record, as
+    * the reference does — a quoted field spanning lines is one record.
+    */
+  private def csvOptions(ignoreMissingFiles: Boolean): Map[String, String] =
+    Map("header" -> "true", "multiLine" -> "true") ++
+      Option.when(ignoreMissingFiles)("ignoreMissingFiles" -> "true")
 
   /** Header-token normalization: strip a UTF-8 BOM and surrounding
     * RFC-4180 quotes before comparing — '"timestamp"' and a
@@ -601,41 +553,6 @@ object Ingest {
     Some(out.toSeq)
   }
 
-  /** The single-split size limit for the per-file line-number contract
-    * (`spark.sql.files.maxPartitionBytes`, parsed with Spark's own
-    * byte-string rules so both "2048" and "128MB" forms work).
-    */
-  private def maxPartitionBytes(spark: SparkSession): Long =
-    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-
-  /** The split size Spark will actually use for a scan over files of
-    * the given sizes — `FilePartition.maxSplitBytes` re-derived:
-    * min(maxPartitionBytes, max(openCostInBytes, bytesPerCore)) with
-    * bytesPerCore = Σ(size + openCost) / minPartitionNum, and
-    * minPartitionNum defaulting through leafNodeDefaultParallelism to
-    * the cluster's default parallelism. A file ≤ this is guaranteed a
-    * single input split (Spark chunks each file at exactly this
-    * stride); `spark.sql.files.maxPartitionNum` can only COARSEN
-    * splits further, so the bound stays safe under it.
-    */
-  private[stream] def effectiveMaxSplitBytes(
-      spark: SparkSession, sizes: Iterable[Long]): Long = {
-    val bytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes _
-    val defaultMax = maxPartitionBytes(spark)
-    val openCost = bytes(
-      spark.conf.get("spark.sql.files.openCostInBytes", "4MB"))
-    val minPartitionNum =
-      spark.conf.getOption("spark.sql.files.minPartitionNum")
-        .orElse(spark.conf.getOption("spark.sql.leafNodeDefaultParallelism"))
-        .map(_.toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism)
-        .max(1)
-    val totalBytes = sizes.map(_ + openCost).sum
-    val bytesPerCore = totalBytes / minPartitionNum
-    math.min(defaultMax, math.max(openCost, bytesPerCore))
-  }
-
   private def countDataLines(p: Path): Long =
     try {
       val s = Files.lines(p)
@@ -659,14 +576,13 @@ object Ingest {
     // recover them (the source itself never re-emits a seen path).
     val startupRetries = retryPending(spark, conf, sink)
     if (startupRetries.nonEmpty) onBatch(startupRetries)
+    // A checkpoint-replayed batch lists the exact files of the failed
+    // trigger; any of them ALREADY moved (a retry pass committed it
+    // before the abort, an operator intervened) must scan as zero rows,
+    // not kill every replay of the batch forever.
     val reader = spark.readStream
-      .option("header", "true")
+      .options(csvOptions(ignoreMissingFiles = true))
       .option("pathGlobFilter", "*.csv")
-      // A checkpoint-replayed batch lists the exact files of the failed
-      // trigger; any of them ALREADY moved (a retry pass committed it
-      // before the abort, an operator intervened) must scan as zero
-      // rows, not kill every replay of the batch forever.
-      .option("ignoreMissingFiles", "true")
       .schema(Schemas.sensorCsvRaw)
     // Backpressure: bound files per micro-batch so a restart against a
     // deep backlog doesn't become one giant batch/transaction.
@@ -686,7 +602,7 @@ object Ingest {
         // batch re-lists a file whose sink failed last attempt): those
         // defer to processBatch, which is about to drive them anyway.
         // The file list comes from the plan's FileIndex (driver-side,
-        // no scan). The empty-file sweep runs LAST, after BOTH
+        // no scan). The row-less-file sweep runs LAST, after BOTH
         // processBatch passes: it physically moves files, and a
         // header-only file discovered in THIS trigger is listed in the
         // current batch's scan — sweeping it from inside the retry
@@ -698,7 +614,7 @@ object Ingest {
           catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
         onBatch(retryPending(spark, conf, sink, exclude = batchNames) ++
           processBatch(conf, sink, batch) ++
-          sweepEmptyFiles(conf)); ()
+          sweepRowlessFiles(conf)); ()
       }
       .start()
   }

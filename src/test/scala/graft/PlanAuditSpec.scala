@@ -57,4 +57,17 @@ class PlanAuditSpec extends SparkSpec {
                              // window-group-limit, exchange) + ranks
       s"allowlisted single-partition shape census changed: $shapeCounts")
   }
+
+  test("the census walks the prepared plan: a keyed aggregate with " +
+    "broadcast disabled shows its shuffle exchange") {
+    import org.apache.spark.sql.functions._
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val keyed = spark.range(100).groupBy((col("id") % 7).as("k")).count()
+      val c = Explain.census(keyed)
+      assert(c.shuffleEx >= 1, s"census missed the exchange: ${c.line}")
+    } finally spark.conf.set(key, prev)
+  }
 }

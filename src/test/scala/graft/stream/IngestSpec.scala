@@ -647,59 +647,70 @@ class IngestSpec extends SparkSpec {
     assert(agg.select("file_name").distinct().count() === 5)
   }
 
-  test("a file larger than spark.sql.files.maxPartitionBytes is " +
-    "quarantined deterministically (line-number contract guard)") {
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-    try {
-      val root = tmp("graft_oversize")
-      val conf = mkConf(root)
-      val dataDir = Files.createDirectories(root.resolve("data"))
-      // ~4 KB of perfectly valid rows: correctness of the CONTENT is
-      // not the issue — split line numbering is
-      writeCsv(dataDir, "big.csv",
-        (1 to 100).map(i =>
-          f"2025-05-26 04:${i % 60}%02d:08,S${i % 5},25.5,0.65,1013.25"): _*)
-      writeCsv(dataDir, "small.csv",
-        "2025-05-26 04:36:08,S1,22.5,0.45,1013.25")
-      val q = Ingest.start(spark, conf, new ParquetSink(
-        root.resolve("raw").toString, root.resolve("agg").toString))
-      try { q.processAllAvailable() } finally q.stop()
-      assert(Files.exists(root.resolve("quarantine/big.csv")))
-      assert(Files.exists(root.resolve("processed/small.csv")))
-      val log = Files.readString(root.resolve("quarantine/quarantine_log.txt"))
-      assert(log.contains("larger than the effective input split size"),
-        log)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  /** Run `body` with Spark's CSV split sizes shrunk so far that a
+    * line-mode read would cut even a few-KB file into several splits.
+    */
+  private def withTinySplits(body: => Unit): Unit = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes" -> "2048",
+      "spark.sql.files.openCostInBytes" -> "256")
+    val prev = keys.map { case (k, _) => k -> spark.conf.get(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("the oversize guard derives Spark's ACTUAL split size " +
-    "(min(maxPartitionBytes, max(openCost, bytesPerCore))), not the " +
-    "raw conf — small batches split files well under the conf") {
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    try {
-      // Small batch: bytesPerCore ≪ openCost, so the effective split
-      // size is openCostInBytes, NOT the 128 MiB maxPartitionBytes.
-      spark.conf.set("spark.sql.files.openCostInBytes", "4096")
-      val small = Ingest.effectiveMaxSplitBytes(spark, Seq(1000L, 2000L))
-      assert(small === 4096L,
-        s"openCost must bind when bytesPerCore is small: $small")
-      // Large batch: bytesPerCore grows past openCost but is capped by
-      // maxPartitionBytes.
-      val cap = Ingest.effectiveMaxSplitBytes(
-        spark, Seq.fill(64)(1L << 30)) // 64 GiB total
-      val confCap = org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-      assert(cap === confCap,
-        s"maxPartitionBytes must cap the split size: $cap vs $confCap")
-      // Mid batch: bytesPerCore itself binds. defaultParallelism cores,
-      // openCost 4096: sizes chosen so openCost < bytesPerCore < cap.
-      val cores = spark.sparkContext.defaultParallelism
-      val mid = Ingest.effectiveMaxSplitBytes(
-        spark, Seq.fill(cores)(1L << 20))
-      assert(mid === (1L << 20) + 4096L,
-        s"bytesPerCore must bind in between: $mid")
-    } finally spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+  test("a file several times larger than maxPartitionBytes is read " +
+    "whole: strict quarantines it and lenient processes it, both " +
+    "naming the bad row's true CSV line") {
+    withTinySplits {
+      // ~8 KB, four times the split size; the bad record is CSV line 191
+      val rows = (1 to 200).map(i =>
+        if (i == 190) "2025-05-26 04:10:08,S1,abc,0.65,1013.25"
+        else f"2025-05-26 04:${i % 60}%02d:08,S${i % 5},25.5,0.65,1013.25")
+      val expected = "Validation failed at row 191: " +
+        "Row 191: 'temperature' ('abc') is not a valid number."
+      Seq(true, false).foreach { strict =>
+        val root = tmp("graft_bigfile")
+        val conf = mkConf(root).copy(strictMode = strict)
+        val dataDir = Files.createDirectories(root.resolve("data"))
+        writeCsv(dataDir, "big.csv", rows: _*)
+        val logs = capturingLogs {
+          val q = Ingest.start(spark, conf, new ParquetSink(
+            root.resolve("raw").toString, root.resolve("agg").toString))
+          try q.processAllAvailable() finally q.stop()
+        }
+        if (strict) {
+          assert(Files.exists(root.resolve("quarantine/big.csv")))
+          val log = Files.readString(
+            root.resolve("quarantine/quarantine_log.txt"))
+          assert(log.contains(s"File: big.csv, Reason: $expected"), log)
+        } else {
+          assert(Files.exists(root.resolve("processed/big.csv")))
+          assert(spark.read.parquet(root.resolve("raw").toString)
+            .count() === 199)
+          assert(logs.contains(
+            s"File 'big.csv': Summary of row-level issues: $expected"), logs)
+        }
+      }
+    }
+  }
+
+  test("a quoted field spanning lines is ONE record: the strict " +
+    "quarantine names the reference's record-based row number") {
+    val root = tmp("graft_multiline")
+    val conf = mkConf(root)
+    val dataDir = Files.createDirectories(root.resolve("data"))
+    // record 1 (row 2) spans CSV lines 2-3; record 2 (row 3) is invalid
+    Files.writeString(dataDir.resolve("nl.csv"),
+      "timestamp,sensor_id,temperature,humidity,pressure\n" +
+        "2025-05-26 04:36:08,\"S\n1\",26.41,0.95,1014.74\n" +
+        "2025-05-26 04:37:08,S1,abc,0.95,1014.74\n")
+    val q = Ingest.start(spark, conf, new ParquetSink(
+      root.resolve("raw").toString, root.resolve("agg").toString))
+    try q.processAllAvailable() finally q.stop()
+    assert(Files.exists(root.resolve("quarantine/nl.csv")))
+    val log = Files.readString(root.resolve("quarantine/quarantine_log.txt"))
+    assert(log.contains("File: nl.csv, Reason: Validation failed at row 3: " +
+      "Row 3: 'temperature' ('abc') is not a valid number."), log)
   }
 
   test("retryPending defers markers for files the current batch lists " +
@@ -805,44 +816,41 @@ class IngestSpec extends SparkSpec {
       Files.readString(log).contains("Header remap failed"))
   }
 
-  test("a remappable file whose SOLO re-read splits across input " +
-    "partitions is quarantined by the contiguity check, never " +
-    "silently misnumbered (the batch-wide pre-guard cannot see the " +
-    "solo scan's smaller split size)") {
-    val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    try {
-      // Batch pre-guard passes: splitLimit = min(4096, max(256,
-      // bytesPerCore over ~16 files)) = 4096 > the ~3 KB remap file.
-      // Solo re-read of that one file: bytesPerCore = (3 KB + 256)/4
-      // cores < 4096, so Spark cuts it into multiple splits.
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-      spark.conf.set("spark.sql.files.openCostInBytes", "256")
+  test("a remappable file is re-read whole by name: processed and " +
+    "numbered by record even where a line-mode read would split it") {
+    withTinySplits {
       val root = tmp("graft_remap_split")
-      val conf = mkConf(root)
+      val conf = mkConf(root).copy(strictMode = false)
       val dataDir = Files.createDirectories(root.resolve("data"))
       val rows = (1 to 60).map(i =>
         f"2025-05-26 04:${i % 60}%02d:08,S${i % 5},25.5,0.65,1013.25")
-      // reordered header -> the remap path; content itself is valid
+      // reordered header -> the remap path; the record at CSV line 56
+      // carries a bad temperature
       Files.writeString(dataDir.resolve("bigremap.csv"),
         ("timestamp,sensor_id,humidity,temperature,pressure" +:
-          rows.map { r =>
-            val c = r.split(","); Seq(c(0), c(1), c(3), c(2), c(4)).mkString(",")
+          rows.zipWithIndex.map { case (r, i) =>
+            val c = r.split(",")
+            val temp = if (i == 54) "abc" else c(2)
+            Seq(c(0), c(1), c(3), temp, c(4)).mkString(",")
           }).mkString("", "\n", "\n"))
       (1 to 15).foreach(i => writeCsv(dataDir, s"pad$i.csv", rows: _*))
-      val q = Ingest.start(spark, conf, new ParquetSink(
-        root.resolve("raw").toString, root.resolve("agg").toString))
-      try { q.processAllAvailable() } finally q.stop()
-      assert(Files.exists(root.resolve("quarantine/bigremap.csv")),
-        "the split solo re-read must quarantine, not misnumber")
+      val rawOut = root.resolve("raw").toString
+      val logs = capturingLogs {
+        val q = Ingest.start(spark, conf,
+          new ParquetSink(rawOut, root.resolve("agg").toString))
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(Files.exists(root.resolve("processed/bigremap.csv")))
       (1 to 15).foreach(i =>
         assert(Files.exists(root.resolve(s"processed/pad$i.csv"))))
-      val log = Files.readString(
-        root.resolve("quarantine/quarantine_log.txt"))
-      assert(log.contains("across multiple input splits"), log)
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+      assert(logs.contains("File 'bigremap.csv': Summary of row-level " +
+        "issues: Validation failed at row 56: Row 56: 'temperature' " +
+        "('abc') is not a valid number."), logs)
+      val remapped = spark.read.parquet(rawOut)
+        .filter($"file_name" === "bigremap.csv")
+        .select("temperature", "humidity").as[(Double, Double)].collect()
+      assert(remapped.length === 59)
+      assert(remapped.forall(_ == ((25.5, 0.65)))) // by NAME: not swapped
     }
   }
 }
