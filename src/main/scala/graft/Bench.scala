@@ -348,8 +348,10 @@ object Bench {
         }
       val dt = (System.nanoTime() - t0) / 1e9
       // LSH queries persist their signature tables; drop them so later
-      // queries aren't measured against a shrinking storage pool.
+      // queries aren't measured against a shrinking storage pool, and
+      // drop the corpus-size memo so each query pays its own count job.
       spark.catalog.clearCache()
+      SparkEntry.clearCorpusSizeCache()
       (dt, err, jobCounter.get() - jobs0)
     }
     // Session noise floor, measured BEFORE the sweep: 3 samples of each

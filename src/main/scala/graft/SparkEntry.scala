@@ -27,8 +27,9 @@ object SparkEntry {
   /** Embeddings-corpus row count per data dir, memoized: the count
     * sizes both the adaptive-LSH rung (Similarity.adaptiveLshBits)
     * and the SemDeDup k ladder (Dedup.semDeDupK), and without the
-    * memo every bench warmup/timed/re-time invocation of each
-    * corpus-sized query re-ran the counting job.
+    * memo every invocation of each corpus-sized query re-ran the
+    * counting job. Bench clears it after each timed query, so every
+    * timed query pays its own count, not only the first one.
     *
     * CALLER CONTRACT — immutable corpora per JVM: the cache assumes
     * the embeddings table under a given dir does not change while

@@ -66,7 +66,7 @@ class CollectAuditSpec extends AnyFunSuite {
       "one row per FILE in the micro-batch (distinct files, strict " +
         "verdicts) — driver-side routing decisions are per-file by " +
         "design"),
-    "graft/Explain.scala" -> (1,
+    "graft/PlanAudit.scala" -> (1,
       "dev CLI only (GRAFT_EXPLAIN_RUN=1 materializes a query to " +
         "print its ADAPTIVE plan) — never a library code path"))
 

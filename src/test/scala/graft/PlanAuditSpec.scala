@@ -1,18 +1,47 @@
 package graft
 
-/** Single-partition-shape tripwire over the WHOLE inventory, built on
-  * [[PlanAudit]]'s collector and allowlist (the CLI main and this spec
-  * share them, so they cannot drift — this spec supersedes the older
-  * window-only WindowPartitionAuditSpec by also covering 1-partition
-  * shuffle exchanges and window-group-limits, including inside
-  * subquery plans).
+import org.apache.spark.sql.functions._
+
+/** Plan invariants over the WHOLE inventory, built on [[PlanAudit]]'s
+  * walker and allowlist (the CLI main and this spec share them, so they
+  * cannot drift). Each query is built once at sf0.001 and audited in
+  * both join shapes.
   *
-  * Adding a single-partition shape anywhere outside the allowlist
-  * fails this spec until it is re-expressed (plans.Prefix /
-  * plans.Ordinal / pre-aggregation) or proven bounded and allowlisted
-  * in [[PlanAudit.boundedAllowlist]] with the bound stated.
+  * A finding outside [[PlanAudit.allowlist]], or at a count other than
+  * the pinned one, fails this spec until it is re-expressed
+  * (plans.Prefix / plans.Ordinal / pre-aggregation / pruning) or proven
+  * bounded and allowlisted with the reason stated; an entry that no
+  * longer flags fails it too. Counts are pinned, not just keys, so an
+  * allowlisted query is no blanket exemption: a new shape added inside
+  * it shows as a count change — re-verify its bound before updating.
   */
 class PlanAuditSpec extends SparkSpec {
+
+  private lazy val inventory: Seq[(String, Map[String, PlanAudit.Census])] = {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.queries.keys.toSeq.sorted.map { k =>
+      k -> PlanAudit.shapeCensus(SparkEntry.queries(k)(spark, dir))
+    }
+  }
+
+  /** Every query's finding count (> 0) in `column`, per shape, against
+    * what the allowlist permits there.
+    */
+  private def checkFindings(column: String): Unit =
+    PlanAudit.shapes.foreach { shape =>
+      val found = inventory.flatMap { case (k, m) =>
+        val n = m(shape)(column)
+        if (n > 0) Some(k -> n) else None
+      }.toMap
+      val allowed = PlanAudit.permitted(shape)(column)
+      val unexpected = found.filter { case (k, n) => !allowed.get(k).contains(n) }
+      val stale = allowed.filter { case (k, n) => !found.get(k).contains(n) }
+      assert(unexpected.isEmpty && stale.isEmpty,
+        s"$shape shape, $column: found $unexpected outside the allowlist " +
+          s"(or at another count); allowlisted $stale no longer found as " +
+          "pinned — re-express the plan, or state the reason and update " +
+          "PlanAudit.allowlist")
+    }
 
   test("no inventory query plans a single-partition window or exchange " +
     "outside the global-agg merge and the documented bounded allowlist") {
@@ -20,54 +49,39 @@ class PlanAuditSpec extends SparkSpec {
     // or a Spark plan-shape change silently turns this audit vacuous.
     {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
       val bad = spark.range(10).toDF("v")
         .withColumn("r", row_number().over(Window.orderBy(col("v"))))
-      assert(PlanAudit.singlePartitionShapes(PlanAudit.preparedPlan(bad))
-        .nonEmpty, "detector canary failed")
+      assert(PlanAudit.census(bad)("single_part") >= 1,
+        "detector canary failed")
     }
-    val dir = "/root/testdata/sf0.001"
-    val shapeCounts: Map[String, Int] =
-      SparkEntry.queries.keys.toSeq.sorted.flatMap { k =>
-        val plan = PlanAudit.preparedPlan(SparkEntry.queries(k)(spark, dir))
-        val n = PlanAudit.singlePartitionShapes(plan).size
-        if (n > 0) Some(k -> n) else None
-      }.toMap
-    val flagged = shapeCounts.keys.toSeq
-    val unexpected = flagged.filterNot(PlanAudit.boundedAllowlist.contains)
-    assert(unexpected.isEmpty,
-      s"single-partition plans outside the allowlist: $unexpected — " +
-        "re-express via plans.Prefix/Ordinal or prove the input " +
-        "bounded and allowlist it with the bound stated")
-    // the allowlist must not go stale either: every entry still flags
-    val stale = PlanAudit.boundedAllowlist.keySet -- flagged.toSet
-    assert(stale.isEmpty,
-      s"allowlisted queries no longer plan a single-partition shape: " +
-        s"$stale — drop them from the allowlist")
-    // ...and it must not become a BLANKET exemption: the allowlist is
-    // per-QUERY, so a new, genuinely-unbounded shape added inside an
-    // allowlisted query would otherwise ride the exemption unseen.
-    // Pin the exact shape census of each allowlisted plan (sf0.001 is
-    // deterministic); any change here means a shape was added or
-    // removed — re-verify its bound before updating the census.
-    assert(shapeCounts === Map(
-      "q_mix_plan" -> 2, // Hamilton rank window + its feeding exchange
-      "q_mix_temp_general" -> 2, // same shape via temperatureAllocate
-      "q_mix_capped" -> 16), // water-filling: 4 rank rounds × (window,
-                             // window-group-limit, exchange) + ranks
-      s"allowlisted single-partition shape census changed: $shapeCounts")
+    checkFindings("single_part")
   }
 
   test("the census walks the prepared plan: a keyed aggregate with " +
     "broadcast disabled shows its shuffle exchange") {
-    import org.apache.spark.sql.functions._
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try {
       val keyed = spark.range(100).groupBy((col("id") % 7).as("k")).count()
-      val c = Explain.census(keyed)
-      assert(c.shuffleEx >= 1, s"census missed the exchange: ${c.line}")
+      val c = PlanAudit.census(keyed)
+      assert(c("sx") >= 1, s"census missed the exchange: ${c.line}")
     } finally spark.conf.set(key, prev)
+  }
+
+  test("a centroid kernel inside a Filter counts as misplaced") {
+    val centroids = Array(Array(0.0, 0.0), Array(9.0, 0.0))
+    val bad = spark.range(10)
+      .select(array(col("id").cast("double"), lit(0.0)).as("v"))
+      .filter(graft.functions.VectorExprs.nearestCentroidQ(
+        col("v"), centroids) === 1)
+    val c = PlanAudit.census(bad)
+    assert(c("kernels_misplaced") >= 1, s"kernel placement missed: ${c.line}")
+  }
+
+  test("in both join shapes: no ScalaUDF, no misplaced kernel, and " +
+    "Cartesian products and full-width scans only as allowlisted") {
+    Seq("scalaudf", "kernels_misplaced", "cartesian", "scans_unpruned")
+      .foreach(checkFindings)
   }
 }
