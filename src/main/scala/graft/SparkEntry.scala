@@ -583,21 +583,19 @@ object SparkEntry {
 
     // [EXT] REAL image decode + resize over FIVE real formats,
     // doc_id % 5 cycling: (0) 24-bit BMPs with formula pixels
-    // (bottom-up rows, padding, BGR); (1) baseline JPEGs — a REAL
-    // Huffman-coded bitstream (DC prediction, EOB, byte stuffing)
-    // whose 8×8 blocks are formula-CONSTANT with an identity quant
-    // table, which makes the lossy format decode bit-exactly
-    // (JpegCodec scaladoc); (2) PNGs — a REAL zlib-deflated bitstream
-    // with the filter type CYCLING 0→4 per scanline and Adam7
-    // interlace on alternating ids, losslessly carrying the BMP pixel
-    // formula; (3) GIFs — a REAL LZW-coded bitstream with a 64-entry
-    // formula palette and 4-pass interlace on alternating ids
-    // (palette-lossless); (4) lossless WebPs — a REAL VP8L
-    // prefix-coded bitstream (libwebp-conformance-proven codec),
-    // losslessly carrying the BMP pixel formula. All
-    // DuckDB-oracle-able. Each is decoded, nearest-neighbor resized
-    // to 5×3, and reduced to exact channel stats the oracle
-    // recomputes from the generator formulas.
+    // (bottom-up rows, padding, BGR); (1) single-component JPEGs
+    // whose 8×8 blocks are formula-CONSTANT, written at quality 1.0
+    // (all-ones quantization tables), which makes the lossy format
+    // decode bit-exactly (MediaCodec.encodeImage); (2) PNGs losslessly
+    // carrying the BMP pixel formula, Adam7-interlaced on alternating
+    // ids; (3) GIFs with a 64-entry formula palette, 4-pass interlaced
+    // on alternating ids (palette-lossless); (4) lossless WebPs — a
+    // REAL VP8L prefix-coded bitstream (libwebp-conformance-proven
+    // codec), losslessly carrying the BMP pixel formula. JPEG, PNG and
+    // GIF are written and read through the JDK's ImageIO; BMP and WebP
+    // by the repo's own codecs. All DuckDB-oracle-able. Each is
+    // decoded, nearest-neighbor resized to 5×3, and reduced to exact
+    // channel stats the oracle recomputes from the generator formulas.
     "q_image_resize" -> ((s, dir) => {
       import s.implicits._
       val media = Tables.documents(s, dir).select(col("doc_id")).as[Long]
@@ -610,18 +608,14 @@ object SparkEntry {
                 (x, y, c) =>
                   ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt))
             case 1 =>
-              (id, "image", graft.ext.JpegCodec.encodeBaseline(w, h, 1,
-                (x, y, _) =>
-                  ((id * 11 + (x / 8) * 7 + (y / 8) * 13) % 256).toInt,
-                lumaQuant = graft.ext.JpegCodec.FlatQuant))
+              (id, "image", graft.ext.MediaCodec.encodeImage("jpeg",
+                graft.ext.MediaCodec.grayImage(w, h, (x, y) =>
+                  ((id * 11 + (x / 8) * 7 + (y / 8) * 13) % 256).toInt)))
             case 2 =>
-              // PNG samples are RGB-ordered; the shared pixel formula
-              // indexes Bmp24 channels (0 = B), so sample c carries
-              // channel 2 − c — the decode lands formula(c) at c.
-              (id, "image", graft.ext.PngCodec.encode(w, h, 3,
-                (x, y, c) =>
-                  ((id * 7 + x * 13 + y * 31 + (2 - c) * 5) % 256).toInt,
-                filterMode = -1, interlaced = id % 2 == 0))
+              (id, "image", graft.ext.MediaCodec.encodeImage("png",
+                graft.ext.MediaCodec.bgrImage(w, h, (x, y, c) =>
+                  ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt),
+                interlaced = id % 2 == 0))
             case 3 =>
               // GIF: 64-entry palette whose entry i decodes to the
               // BGR-indexed formula (id·7 + i·13 + c·5) % 256; packed
@@ -630,11 +624,13 @@ object SparkEntry {
                 def pf(c: Int) = ((id * 7 + i * 13 + c * 5) % 256).toInt
                 (pf(2) << 16) | (pf(1) << 8) | pf(0)
               }
-              (id, "image", graft.ext.GifCodec.encode(w, h, pal,
-                (x, y) => (x * 3 + y * 5) % 64, interlaced = id % 2 == 1))
+              (id, "image", graft.ext.MediaCodec.encodeImage("gif",
+                graft.ext.MediaCodec.indexedImage(w, h, pal,
+                  (x, y) => (x * 3 + y * 5) % 64),
+                interlaced = id % 2 == 1))
             case _ =>
-              // WebP (VP8L, lossless): encode samples are RGB-ordered
-              // like PNG's, so sample c carries BGR channel 2 − c.
+              // WebP (VP8L, lossless): encode samples are RGB-ordered,
+              // so sample c carries BGR channel 2 − c.
               (id, "image", graft.ext.VP8LCodec.encode(w, h,
                 (x, y, c) =>
                   ((id * 7 + x * 13 + y * 31 + (2 - c) * 5) % 256).toInt))

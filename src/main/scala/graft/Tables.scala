@@ -39,20 +39,16 @@ object Tables {
     // default 64m stays) and coalescePartitions.initialPartitionNum
     // (a blanket 256 added ~45% wall at sf0.001). Compute-per-row
     // skew that no byte trigger can see is handled at the query
-    // level (editDistancePairs' explicit fan-out). Set idempotently
-    // here because the driver may hand us its own session.
-    //
-    // These two are HARD framework defaults (registered SQLConf keys
-    // always report a value, so "was it externally set?" is not
-    // observable from here): a caller who tuned its own session keeps
-    // its values by exporting SPARK_GRAFT_SKEW_THRESHOLD /
-    // SPARK_GRAFT_SKEW_FACTOR — prepare() then applies THOSE instead
-    // of clobbering back to 32m/2 on every query entry.
-    spark.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "32m"))
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_FACTOR", "2"))
+    // level (editDistancePairs' explicit fan-out). Set only where the
+    // session has no value of its own: `conf.getAll` lists only keys
+    // that were set (on the builder or at runtime), while `get` would
+    // report the default, so a caller that tuned its session keeps its
+    // values.
+    val own = spark.conf.getAll
+    Seq(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2"
+    ).foreach { case (k, v) => if (!own.contains(k)) spark.conf.set(k, v) }
     // SQL surface for the native kernels (idempotent re-registration);
     // sessions built with spark.sql.extensions=GraftExtensions get the
     // same set at config time.

@@ -780,10 +780,9 @@ object Dedup {
     }
 
   /** Hot-cell gate default for the SimHash miners: 8192 unless
-    * overridden via SPARK_GRAFT_GRID_THRESHOLD (a tuning knob in the
-    * SPARK_GRAFT_SKEW_THRESHOLD tradition — the shipped default was
-    * measured-then-chosen, the env override lets a deployment or an
-    * A/B probe re-gate without a rebuild).
+    * overridden via SPARK_GRAFT_GRID_THRESHOLD (a tuning knob: the
+    * shipped default was measured-then-chosen, the env override lets a
+    * deployment or an A/B probe re-gate without a rebuild).
     */
   private[graft] def defaultGridThreshold: Int =
     sys.env.get("SPARK_GRAFT_GRID_THRESHOLD").map { v =>

@@ -1,14 +1,22 @@
 package graft.ext
 
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, DataBuffer, DataBufferByte, IndexColorModel}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{IIOImage, ImageIO, ImageReader, ImageWriteParam}
+import javax.imageio.event.IIOReadWarningListener
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import scala.util.control.NonFatal
+
 /** [EXT] Real (non-stub) byte-level media header codec for the six
   * container formats parseable without any codec library: BMP
   * (BITMAPINFOHEADER), canonical PCM WAV (RIFF/fmt), PNG (IHDR),
   * JPEG/JFIF (SOF marker scan), GIF (logical screen descriptor), and
-  * WebP (VP8X extended header / VP8L lossless bitstream header). Pure
-  * byte arithmetic — the real-decode backend behind every
-  * [[Multimodal]] media path (the former fake codec is gone), and
-  * exactly the seam where a full compressed-pixel decoder would plug
-  * in.
+  * WebP (VP8X extended header / VP8L lossless bitstream header) — pure
+  * byte arithmetic. It is also the one pixel seam behind every
+  * [[Multimodal]] media path: [[decodeImage]] decodes BMP24 and
+  * lossless WebP in the repo and PNG, GIF and JPEG through the JDK's
+  * `javax.imageio`, and [[encodeImage]] writes the last three.
   *
   * Layout references (public format specs):
   *   BMP: "BM" magic; BITMAPINFOHEADER at offset 14 — width i32le@18,
@@ -403,42 +411,257 @@ object MediaCodec {
     Bmp24(h.width, h.height, out)
   }
 
-  /** Minimal video container ("GVID"): magic + u32le frame count,
-    * then length-prefixed frames (any embedded codec — here BMP24).
-    * The 1→N decode shape of real video without an external codec.
+  /** The pixel-count cap of every decode, checked against the
+    * header's dimensions before any pixel is allocated: a hostile
+    * 65535×65535 header would otherwise demand ~13 G ints.
     */
-  /** Unified pixel decode over the formats with a REAL decoder: 24-bit
-    * BMP (here), baseline sequential JPEG ([[JpegCodec]]), PNG
-    * ([[PngCodec]] — all color types, Adam7, zlib inflate) and GIF
-    * ([[GifCodec]] — LZW, interlace, first frame); grayscale expands
-    * to B = G = R. One return shape for every pixel consumer.
+  private val MaxPixels = 1 << 25
+
+  /** Unified pixel decode, one return shape for every pixel consumer:
+    * 24-bit BMP ([[decodeBmp24]]) and lossless WebP ([[VP8LCodec]])
+    * in the repo; PNG, GIF and JPEG through the JDK's `javax.imageio`
+    * ([[readImage]]). Grayscale expands to B = G = R and alpha is
+    * dropped. Every failure on untrusted bytes is an
+    * IllegalArgumentException.
     */
   def decodeImage(b: Array[Byte]): Bmp24 = detect(b) match {
     case "bmp" => decodeBmp24(b)
-    case "jpeg" => JpegCodec.decodeBaseline(b)
-    case "png" => PngCodec.decode(b)
-    case "gif" => GifCodec.decode(b)
     case "webp" => VP8LCodec.decode(b)
+    case fmt @ ("png" | "gif" | "jpeg") => readImage(fmt, b)
     case other => throw new IllegalArgumentException(
       s"no pixel decoder for format '$other'")
   }
 
-  /** Guard for [[decodeImage]] on untrusted corpus bytes. The JPEG and
-    * PNG guards are structural (they do not decode entropy data), so a
-    * guard-passing stream can still fail decode with
-    * IllegalArgumentException — consumers of untrusted bytes must
-    * catch it and fall back.
+  /** True iff [[decodeImage]] succeeds on `b` (a full decode: a
+    * header can be valid while the pixel data is not).
     */
   def isDecodableImage(b: Array[Byte]): Boolean =
-    detect(b) match {
-      case "bmp" => isCompleteBmp24(b)
-      case "jpeg" => JpegCodec.isBaselineDecodable(b)
-      case "png" => PngCodec.isDecodable(b)
-      case "gif" => GifCodec.isDecodable(b)
-      case "webp" => VP8LCodec.isDecodable(b)
-      case _ => false
-    }
+    try { decodeImage(b); true }
+    catch { case _: IllegalArgumentException => false }
 
+  /** Decode the first image of a PNG, GIF or JPEG stream with one
+    * ImageIO reader. Both the header's dimensions (for GIF the logical
+    * screen, which is the canvas) and the reader's image dimensions
+    * are checked against [[MaxPixels]] before `read`. A reader warning
+    * (libjpeg reports a truncated scan as one and pads the image)
+    * fails the decode, and every ImageIO exception surfaces as an
+    * IllegalArgumentException.
+    */
+  private def readImage(fmt: String, b: Array[Byte]): Bmp24 = {
+    def cap(w: Int, h: Int): Unit = require(w.toLong * h <= MaxPixels,
+      s"$fmt: ${w}x$h exceeds the $MaxPixels-pixel decode cap")
+    val (hw, hh) = fmt match {
+      case "png" =>
+        checkPngChunks(b)
+        val h = parsePng(b); (h.width, h.height)
+      case "jpeg" => val h = parseJpeg(b); (h.width, h.height)
+      case _ => val h = parseGif(b); (h.width, h.height)
+    }
+    cap(hw, hh)
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    val reader = ImageIO.getImageReadersByFormatName(fmt).next()
+    var warning: Option[String] = None
+    reader.addIIOReadWarningListener(new IIOReadWarningListener {
+      def warningOccurred(r: ImageReader, msg: String): Unit =
+        if (warning.isEmpty) warning = Some(msg)
+    })
+    try {
+      // GIF keeps its metadata: the frame offsets live there
+      reader.setInput(in, true, fmt != "gif")
+      cap(reader.getWidth(0), reader.getHeight(0))
+      val img = toBmp24(reader.read(0))
+      warning.foreach(m => throw new IllegalArgumentException(s"$fmt: $m"))
+      if (fmt != "gif") img
+      else {
+        val root = reader.getImageMetadata(0)
+          .getAsTree("javax_imageio_gif_image_1.0")
+        val desc = Iterator.iterate(root.getFirstChild)(_.getNextSibling)
+          .find(_.getNodeName == "ImageDescriptor").get.getAttributes
+        def attr(name: String): Int =
+          desc.getNamedItem(name).getNodeValue.toInt
+        composeGif(b, img, hw, hh,
+          attr("imageLeftPosition"), attr("imageTopPosition"))
+      }
+    } catch {
+      case NonFatal(e) if !e.isInstanceOf[IllegalArgumentException] =>
+        val why = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString(": ")
+        throw new IllegalArgumentException(
+          s"$fmt: corrupt or unsupported stream: $why", e)
+    } finally {
+      reader.dispose()
+      in.close()
+    }
+  }
+
+  /** Walk a PNG's chunks to IEND, verifying each chunk's bounds and
+    * CRC, and reject an unknown critical chunk (uppercase first letter,
+    * PNG spec §5.4), which would change what the pixels mean. ImageIO's
+    * reader checks neither.
+    */
+  private def checkPngChunks(b: Array[Byte]): Unit = {
+    var pos = 8L
+    var typ = ""
+    while (typ != "IEND") {
+      require(pos + 12 <= b.length, "png: truncated chunk header")
+      val len = be32(b, pos.toInt)
+      require(len >= 0 && pos + 12 + len <= b.length,
+        s"png: chunk length $len overruns the ${b.length}-byte payload")
+      val crc = new java.util.zip.CRC32
+      crc.update(b, pos.toInt + 4, 4 + len)
+      require(crc.getValue.toInt == be32(b, pos.toInt + 8 + len),
+        "png: chunk CRC mismatch")
+      typ = new String(b, pos.toInt + 4, 4, "ISO-8859-1")
+      require((typ.charAt(0) & 0x20) != 0 ||
+        Set("IHDR", "PLTE", "IDAT", "IEND")(typ),
+        s"png: unknown critical chunk $typ")
+      pos += 12 + len
+    }
+  }
+
+  /** Raster → [[Bmp24]] through the colour model: palette entries are
+    * looked up, gray expands to B = G = R, alpha is dropped, and
+    * samples deeper or shallower than 8 bits scale to 0..255. Not
+    * `BufferedImage.getRGB`, which sends gray through an sRGB
+    * conversion and changes its values.
+    */
+  private def toBmp24(img: BufferedImage): Bmp24 = {
+    val r = img.getRaster
+    val (w, h, nb) = (r.getWidth, r.getHeight, r.getNumBands)
+    val out = new Array[Int](3 * w * h)
+    val row = new Array[Int](w * nb)
+    img.getColorModel match {
+      case cm: IndexColorModel =>
+        val rgb = new Array[Int](cm.getMapSize)
+        cm.getRGBs(rgb)
+        for (y <- 0 until h) {
+          r.getPixels(0, y, w, 1, row)
+          for (x <- 0 until w) {
+            val i = row(x)
+            require(i < rgb.length, s"palette index $i of ${rgb.length}")
+            val o = 3 * (y * w + x)
+            out(o) = rgb(i) & 0xff
+            out(o + 1) = (rgb(i) >> 8) & 0xff
+            out(o + 2) = (rgb(i) >> 16) & 0xff
+          }
+        }
+      case cm =>
+        val bands = // raster band holding B, G, R
+          if (cm.getNumColorComponents == 1) Array(0, 0, 0)
+          else if (cm.getColorSpace.getType == ColorSpace.TYPE_RGB) Array(2, 1, 0)
+          else throw new IllegalArgumentException(
+            s"unsupported colour space type ${cm.getColorSpace.getType}")
+        val max = bands.map(c => (1 << cm.getComponentSize(c)) - 1)
+        for (y <- 0 until h) {
+          r.getPixels(0, y, w, 1, row)
+          for (x <- 0 until w; c <- 0 until 3)
+            out(3 * (y * w + x) + c) = row(x * nb + bands(c)) * 255 / max(c)
+        }
+    }
+    Bmp24(w, h, out)
+  }
+
+  /** Composite a GIF's first frame over its logical screen, at its
+    * (left, top) offset, on the background colour (black without a
+    * global colour table). ImageIO returns the bare frame.
+    */
+  private def composeGif(
+      b: Array[Byte], frame: Bmp24, sw: Int, sh: Int,
+      left: Int, top: Int): Bmp24 = {
+    require(sw > 0 && sh > 0, s"gif: bad screen dimensions ${sw}x$sh")
+    require(left + frame.width <= sw && top + frame.height <= sh,
+      s"gif: frame ${frame.width}x${frame.height} at ($left,$top) " +
+        s"exceeds screen ${sw}x$sh")
+    if (frame.width == sw && frame.height == sh) return frame
+    val out = new Array[Int](3 * sw * sh)
+    val gct = parseGif(b).gctEntries
+    val bg = 13 + 3 * (b(11) & 0xff)
+    if (bg + 2 < 13 + 3 * gct && bg + 2 < b.length)
+      for (i <- 0 until sw * sh; c <- 0 until 3)
+        out(3 * i + c) = b(bg + 2 - c) & 0xff
+    for (y <- 0 until frame.height)
+      System.arraycopy(frame.pixels, 3 * y * frame.width,
+        out, 3 * ((top + y) * sw + left), 3 * frame.width)
+    Bmp24(sw, sh, out)
+  }
+
+  /** Encode an image as PNG, GIF or JPEG through ImageIO — the writer
+    * that matches [[decodeImage]]. `interlaced` selects Adam7 (PNG) or
+    * the 4-pass row interlace (GIF) through the progressive mode. JPEG
+    * is written at quality 1.0, whose quantization tables are all ones,
+    * so content that is constant over each 8×8 block decodes back
+    * exactly.
+    */
+  def encodeImage(
+      fmt: String, img: BufferedImage,
+      interlaced: Boolean = false): Array[Byte] = {
+    val bos = new ByteArrayOutputStream
+    val out = new MemoryCacheImageOutputStream(bos)
+    val writer = ImageIO.getImageWritersByFormatName(fmt).next()
+    try {
+      val p = writer.getDefaultWriteParam
+      p.setProgressiveMode(
+        if (interlaced) ImageWriteParam.MODE_DEFAULT
+        else ImageWriteParam.MODE_DISABLED)
+      if (fmt == "jpeg") {
+        p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+        p.setCompressionQuality(1f)
+      }
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, null), p)
+    } finally {
+      writer.dispose()
+      out.close()
+    }
+    bos.toByteArray
+  }
+
+  /** Fill a byte-backed image whose pixels interleave `bands` samples:
+    * sample c of top-down (x, y) is `f(x, y, c)`.
+    */
+  private def filled(img: BufferedImage, bands: Int)(
+      f: (Int, Int, Int) => Int): BufferedImage = {
+    val data = img.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+    val w = img.getWidth
+    for (y <- 0 until img.getHeight; x <- 0 until w; c <- 0 until bands)
+      data((y * w + x) * bands + c) = f(x, y, c).toByte
+    img
+  }
+
+  /** An image whose channel c ∈ {0=B, 1=G, 2=R} at top-down (x, y) is
+    * `pixel(x, y, c)` — the [[Bmp24]] order, which is also the byte
+    * order of `TYPE_3BYTE_BGR`.
+    */
+  def bgrImage(
+      width: Int, height: Int, pixel: (Int, Int, Int) => Int): BufferedImage =
+    filled(new BufferedImage(width, height, BufferedImage.TYPE_3BYTE_BGR), 3)(
+      pixel)
+
+  /** An 8-bit grayscale image. */
+  def grayImage(width: Int, height: Int, v: (Int, Int) => Int): BufferedImage =
+    filled(new BufferedImage(width, height, BufferedImage.TYPE_BYTE_GRAY), 1)(
+      (x, y, _) => v(x, y))
+
+  /** An 8-bit indexed image over `palette` (packed 0xRRGGBB, at most
+    * 256 entries); `index(x, y)` must be < palette.length.
+    */
+  def indexedImage(
+      width: Int, height: Int, palette: Array[Int],
+      index: (Int, Int) => Int): BufferedImage = {
+    val cm = new IndexColorModel(8, palette.length, palette, 0, false, -1,
+      DataBuffer.TYPE_BYTE)
+    filled(new BufferedImage(
+      width, height, BufferedImage.TYPE_BYTE_INDEXED, cm), 1) { (x, y, _) =>
+      val i = index(x, y)
+      require(i >= 0 && i < palette.length, s"index $i out of palette at ($x,$y)")
+      i
+    }
+  }
+
+  /** Minimal video container ("GVID"): magic + u32le frame count,
+    * then length-prefixed frames (any embedded codec — here BMP24).
+    * The 1→N decode shape of real video without an external codec.
+    */
   def synthesizeVideo(frames: Seq[Array[Byte]]): Array[Byte] = {
     val total = 8 + frames.map(4 + _.length).sum
     val b = new Array[Byte](total)

@@ -9,23 +9,15 @@ import org.apache.spark.sql.functions._
   * reference equivalent.
   *
   * Every path here decodes REAL bytes via [[MediaCodec]]: header
-  * parse for all six formats, full pixel decode for 24-bit BMP,
-  * baseline sequential JPEG ([[JpegCodec]] — Huffman entropy decode,
-  * dequantize, IDCT, chroma upsample, YCbCr→RGB, cross-checked
-  * against the JDK's ImageIO in both directions) AND PNG
-  * ([[PngCodec]] — zlib inflate, all five scanline filters, Adam7
-  * interlace, gray/RGB/palette/alpha color types, also
-  * ImageIO-cross-checked), GIF ([[GifCodec]] — LZW entropy decode,
-  * 4-pass interlace, color tables, also ImageIO-cross-checked) AND
-  * lossless WebP ([[VP8LCodec]] — VP8L prefix codes, LZ77, color
-  * cache, all four transforms, conformance-proven against libwebp
-  * fixtures in both directions), full sample decode for 16-bit PCM
-  * WAV, container walk + frame decode for GVID video. The remaining
-  * stub boundary — clearly labeled at each site — is pixel decode of
-  * LOSSY WebP (VP8 boolean-arithmetic coding) and non-PCM audio:
-  * those need codec libraries this environment doesn't ship, and a
-  * real deployment swaps in javacv / a `mapInPandas` PIL worker at
-  * exactly those branches.
+  * parse for all six formats; full pixel decode for 24-bit BMP and
+  * lossless WebP ([[VP8LCodec]] — conformance-proven against libwebp
+  * fixtures) in the repo, and for PNG, GIF and JPEG (progressive
+  * included) through the JDK's `javax.imageio`; full sample decode for
+  * 16-bit PCM and G.711 WAV; container walk + frame decode for GVID
+  * video. The remaining stub boundary — clearly labeled at each site —
+  * is pixel decode of LOSSY WebP (VP8 boolean-arithmetic coding),
+  * which neither the repo nor the JDK reads: a real deployment swaps
+  * in javacv / a `mapInPandas` PIL worker at exactly that branch.
   *
   * Design for 100 TB: payloads are decoded per-partition via
   * `mapPartitions` over a typed Dataset, so one task holds one batch of
@@ -53,10 +45,9 @@ object Multimodal {
     * header variants carry no depth (channels 0 — honest, not
     * invented); unknown payloads are all-zero.
     */
-  /** Pixel decode of untrusted bytes: the structural guards
-    * ([[MediaCodec.isDecodableImage]]) don't inflate/entropy-decode,
-    * so decode can still reject a guard-passing corrupt stream — as a
-    * data fault (IllegalArgumentException) this catches, never a
+  /** Pixel decode of untrusted bytes: every decode fault is an
+    * IllegalArgumentException, so a header-only, truncated or corrupt
+    * payload yields None (the caller's header-dims fallback), never a
     * task-killing escape.
     */
   private def decodeChecked(p: Array[Byte]): Option[MediaCodec.Bmp24] =
@@ -90,11 +81,12 @@ object Multimodal {
 
   /** Feature extraction over REAL decoded content — the fixed-width
     * float vector a downstream [[Similarity]] index consumes, one
-    * encoder pass per partition. BMP, baseline-JPEG and PNG features
-    * come from the actual pixel decode (dims + exact per-channel means
-    * + min/max); WAV features from the actual PCM samples (count,
-    * peak, RMS, mean); the remaining compressed format (lossy-VP8
-    * WebP) gets header dims only, zero-padded — the LABELED STUB boundary:
+    * encoder pass per partition. BMP, JPEG, PNG, GIF and
+    * lossless-WebP features come from the actual pixel decode (dims +
+    * exact per-channel means + min/max); WAV features from the actual
+    * PCM samples (count, peak, RMS, mean); the remaining compressed
+    * format (lossy-VP8 WebP) gets header dims only, zero-padded — the
+    * LABELED STUB boundary:
     * replacing the zeros with learned-encoder output is exactly where
     * a PIL/torchvision `mapInPandas` worker plugs in.
     */
@@ -106,19 +98,11 @@ object Multimodal {
         // per-partition "model load" happens here in a real codec
         rows.map { r =>
           val p = if (r.payload == null) Array.emptyByteArray else r.payload
-          // Completeness-guarded dispatch: a header-only or truncated
-          // payload (valid magic, missing pixels/samples) routes to
-          // the header-dims fallback instead of killing the task —
-          // corpus bytes are untrusted.
+          // A header-only or truncated payload (valid magic, missing
+          // pixels/samples) routes to the header-dims fallback instead
+          // of killing the task — corpus bytes are untrusted.
           val stats: Array[Float] = MediaCodec.detect(p) match {
-            // REAL pixel decode for every format with a real decoder
-            // (BMP24, baseline JPEG, PNG) — the former "external codec
-            // required" stub branches. decodeChecked, not decodeImage:
-            // the JPEG/PNG guards are structural, so a guard-passing
-            // stream can still fail entropy decode; untrusted corpus
-            // bytes must fall back to header dims, never kill the task.
-            case "bmp" | "jpeg" | "png" | "gif" | "webp"
-                if MediaCodec.isDecodableImage(p) =>
+            case "bmp" | "jpeg" | "png" | "gif" | "webp" =>
               decodeChecked(p) match {
                 case Some(img) =>
                   val npx = math.max(1, img.width * img.height)
@@ -172,12 +156,12 @@ object Multimodal {
       }
   }
 
-  /** REAL thumbnail path: BMP24, baseline-JPEG, PNG, GIF and
-    * lossless-WebP payloads are pixel-decoded, nearest-neighbor
-    * resampled (the [[imageResizeStats]] coordinate math) and
-    * RE-ENCODED in the SOURCE format through the real encoders
-    * (PNG → PNG, GIF → GIF with its palette rebuilt from the
-    * resampled pixels, WebP → VP8L; JPEG → lossless PNG so the
+  /** REAL thumbnail path: BMP24, JPEG, PNG, GIF and lossless-WebP
+    * payloads are pixel-decoded ([[MediaCodec.decodeImage]]),
+    * nearest-neighbor resampled (the [[imageResizeStats]] coordinate
+    * math) and RE-ENCODED in the SOURCE format (PNG → PNG and GIF → GIF
+    * through [[MediaCodec.encodeImage]], the GIF palette rebuilt from
+    * the resampled pixels; WebP → VP8L; JPEG → lossless PNG so the
     * already-lossy content is not degraded a second generation;
     * BMP → BMP) — decode → resample → encode, all byte-level.
     * Lossy-VP8 WebP payloads pass through UNCHANGED with their parsed
@@ -193,34 +177,24 @@ object Multimodal {
       .mapPartitions(_.map { r =>
         val p = if (r.payload == null) Array.emptyByteArray else r.payload
         val fmt = MediaCodec.detect(p)
-        val decoded = fmt match {
-          // isDecodableImage, not magic bytes alone: a header-only
-          // payload (synthesizeBmp/synthesizeJpeg) or truncated upload
-          // must pass through untouched, not crash the pixel decode —
-          // and decodeChecked for the entropy faults the structural
-          // guard can't see.
-          case "bmp" | "jpeg" | "png" | "gif" | "webp"
-              if MediaCodec.isDecodableImage(p) =>
-            decodeChecked(p)
-          case _ => None
-        }
-        decoded match {
+        // a header-only payload (synthesizeBmp/synthesizeJpeg), a
+        // truncated upload or a non-image passes through untouched
+        decodeChecked(p) match {
           case Some(img) =>
             // NN sample in Bmp24 channel order (0 = B)
             def s(x: Int, y: Int, c: Int): Int =
               img(x * img.width / width, y * img.height / height, c)
             // FORMAT-PRESERVING re-encode: the thumbnail ships in the
-            // source's own compressed format through the real
-            // encoders. JPEG is the exception — re-encoding lossy
-            // content a second time compounds generational loss, so
-            // its thumbnail ships as lossless PNG (the standard
-            // quality-preserving downgrade); BMP stays BMP.
+            // source's own compressed format. JPEG is the exception —
+            // re-encoding lossy content a second time compounds
+            // generational loss, so its thumbnail ships as lossless PNG
+            // (the standard quality-preserving downgrade); BMP stays BMP.
+            def png = MediaCodec.encodeImage("png",
+              MediaCodec.bgrImage(width, height, s))
             val out = fmt match {
               case "bmp" =>
                 MediaCodec.synthesizeBmp24(width, height, s)
-              case "png" | "jpeg" =>
-                PngCodec.encode(width, height, 3,
-                  (x, y, c) => s(x, y, 2 - c)) // PNG samples are RGB
+              case "png" | "jpeg" => png
               case "webp" =>
                 VP8LCodec.encode(width, height,
                   (x, y, c) => s(x, y, 2 - c)) // VP8L samples are RGB
@@ -241,14 +215,12 @@ object Multimodal {
                   }
                   y += 1
                 }
-                if (colors.size <= 256) {
-                  val pal = colors.keys.toArray
-                  GifCodec.encode(width, height, pal, (x, y) =>
-                    colors((s(x, y, 2) << 16) | (s(x, y, 1) << 8) |
-                      s(x, y, 0)))
-                } else // unreachable from a GIF source; honest guard
-                  PngCodec.encode(width, height, 3,
-                    (x, y, c) => s(x, y, 2 - c))
+                if (colors.size <= 256)
+                  MediaCodec.encodeImage("gif", MediaCodec.indexedImage(
+                    width, height, colors.keys.toArray, (x, y) =>
+                      colors((s(x, y, 2) << 16) | (s(x, y, 1) << 8) |
+                        s(x, y, 0))))
+                else png // unreachable from a GIF source; honest guard
             }
             ResizedMedia(r.doc_id, r.media_type, out, width, height)
           case None =>
@@ -403,14 +375,13 @@ object Multimodal {
       doc_id: Long, width: Long, height: Long,
       b_sum: Long, g_sum: Long, r_sum: Long, px_min: Long, px_max: Long)
 
-  /** REAL image path: decode 24-bit BMP pixels
-    * ([[MediaCodec.decodeBmp24]] — bottom-up rows, padding, BGR),
-    * nearest-neighbor resize to `outW`×`outH` (source coordinate =
-    * (dst·src)/dst in integer division), and reduce to exact integer
+  /** REAL image path: decode the pixels of any
+    * [[MediaCodec.decodeImage]] format (BMP24, PNG, GIF, JPEG, lossless
+    * WebP), nearest-neighbor resize to `outW`×`outH` (source coordinate
+    * = (dst·src)/dst in integer division), and reduce to exact integer
     * channel statistics of the RESIZED image. With a formula oracle,
     * the hash match proves decode AND resize coordinate math exact —
-    * the image analog of [[audioEnergy]]; the remaining stub surface
-    * is only the non-BMP pixel formats.
+    * the image analog of [[audioEnergy]].
     */
   def imageResizeStats(
       spark: SparkSession, media: DataFrame,
@@ -418,7 +389,7 @@ object Multimodal {
     import spark.implicits._
     media.select("doc_id", "payload").as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, p) =>
-        val img = MediaCodec.decodeImage(p) // BMP24 or baseline JPEG
+        val img = MediaCodec.decodeImage(p)
         var (bs, gs, rs) = (0L, 0L, 0L)
         var mn = 255L
         var mx = 0L

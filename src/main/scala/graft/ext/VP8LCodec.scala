@@ -31,8 +31,8 @@ import scala.collection.mutable.ArrayBuffer
   * conformant decoder (cross-checked against libwebp via
   * `tools/webp_conformance.py`).
   *
-  * Untrusted-bytes contract (same as [[JpegCodec]]/[[PngCodec]]/
-  * [[GifCodec]]): corrupt, truncated, or hostile streams surface as
+  * Untrusted-bytes contract (same as [[MediaCodec.decodeImage]]'s
+  * for every format): corrupt, truncated, or hostile streams surface as
   * IllegalArgumentException — never AIOOBE/OOM — and `maxPixels`
   * caps the canvas allocation before any entropy byte is read.
   *

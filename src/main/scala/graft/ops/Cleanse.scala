@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 
@@ -43,19 +43,6 @@ object Cleanse {
   /** TRY_CAST string→double: null on garbage, never an exception. */
   def tryDouble(c: Column): Column = c.cast("double")
 
-  /** Read a sensor CSV directory/file string-first with header, apply NA
-    * normalization. Keeps the raw string columns (validation needs them).
-    */
-  def readSensorCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .schema(Schemas.sensorCsvRaw)
-      .csv(path)
-    Schemas.sensorColumns.foldLeft(raw)((d, c) =>
-      d.withColumn(c, naNormalize(col(c))))
-  }
-
   /** Bulk cast after validation (`pipeline.py:170-179`): string→timestamp
     * and string→double with null-on-failure semantics.
     */
@@ -64,10 +51,4 @@ object Cleanse {
       .withColumn("temperature", tryDouble(col("temperature")))
       .withColumn("humidity", tryDouble(col("humidity")))
       .withColumn("pressure", tryDouble(col("pressure")))
-
-  /** S6/V6: programmatic required-columns check (missing column ⇒
-    * file-level error, `pipeline.py:100-105`).
-    */
-  def missingColumns(df: DataFrame): Seq[String] =
-    Schemas.sensorColumns.filterNot(df.columns.map(_.toLowerCase).contains)
 }

@@ -387,7 +387,7 @@ object Ingest {
         .filter(p => p.toString.endsWith(".csv"))
         .flatMap { p =>
           val reason =
-            if (countDataLines(p) == 0) Some(FsRouting.EmptyFileReason)
+            if (!hasDataLine(p)) Some(FsRouting.EmptyFileReason)
             else headerTokens(p).flatMap(_.left.toOption)
           reason.map(p -> _)
         }
@@ -553,12 +553,15 @@ object Ingest {
     Some(out.toSeq)
   }
 
-  private def countDataLines(p: Path): Long =
+  /** True iff a non-blank line follows the header; reads only up to
+    * the first one.
+    */
+  private def hasDataLine(p: Path): Boolean =
     try {
       val s = Files.lines(p)
-      try s.skip(1).filter(l => l.trim.nonEmpty).count()
+      try s.skip(1).anyMatch(l => l.trim.nonEmpty)
       finally s.close()
-    } catch { case _: Exception => Long.MaxValue } // unreadable ⇒ don't sweep
+    } catch { case _: Exception => true } // unreadable ⇒ don't sweep
 
   /** Start the streaming query (T1: 5 s trigger; T2: initial backlog is
     * the file source's first batch; T3: checkpointed exactly-once).

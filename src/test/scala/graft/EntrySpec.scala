@@ -14,4 +14,20 @@ class EntrySpec extends SparkSpec {
     assert(df.columns.contains("metric_name"))
     assert(df.columns.contains("record_count"))
   }
+
+  test("prepare fills the skew-join defaults only where the session " +
+    "has no value of its own") {
+    val threshold = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
+    val factor = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+    val tuned = spark.newSession()
+    tuned.conf.set(factor, "7")
+    Tables.prepare(tuned)
+    assert(tuned.conf.get(factor) === "7")
+    assert(tuned.conf.get(threshold) === "32m")
+    val untouched = spark.newSession()
+    assert(!untouched.conf.getAll.contains(factor))
+    Tables.prepare(untouched)
+    assert(untouched.conf.get(threshold) === "32m")
+    assert(untouched.conf.get(factor) === "2")
+  }
 }

@@ -2,17 +2,37 @@ package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GIF codec: EXACT palette roundtrips (the format is
-  * palette-lossless — zero tolerance), both-direction cross-checks
-  * against the JDK's independent ImageIO GIF implementation (whose
-  * writer emits REAL variable-width compressed LZW — our decoder's
-  * dictionary growth, KwKwK case, and width bumps are exercised by
-  * genuinely compressed streams, not just our own literal coding),
-  * interlace, sub-screen frames, and the untrusted-bytes fault
-  * contract.
+/** GIF through [[MediaCodec.decodeImage]] (ImageIO underneath): EXACT
+  * palette roundtrips (the format is palette-lossless — zero
+  * tolerance) over ImageIO's REAL variable-width compressed LZW,
+  * interlace, sub-screen frames composited on the logical screen, and
+  * the untrusted-bytes fault contract. Fixtures are written by
+  * [[MediaCodec.encodeImage]].
   */
 class GifCodecSpec extends AnyFunSuite {
 
+  private def gif(
+      w: Int, h: Int, palette: Array[Int], idx: (Int, Int) => Int,
+      interlaced: Boolean = false): Array[Byte] =
+    MediaCodec.encodeImage("gif",
+      MediaCodec.indexedImage(w, h, palette, idx), interlaced)
+
+  /** Offset of the first image descriptor: past the screen descriptor,
+    * the global color table and any extension blocks.
+    */
+  private def imageDescriptorAt(b: Array[Byte]): Int = {
+    var pos = 13 + 3 * MediaCodec.parseGif(b).gctEntries
+    while ((b(pos) & 0xff) == 0x21) {
+      pos += 2
+      while (b(pos) != 0) pos += 1 + (b(pos) & 0xff)
+      pos += 1
+    }
+    assert((b(pos) & 0xff) === 0x2c)
+    pos
+  }
+
+  // The writer emits compressed LZW; the name's literal coding is not
+  // what these streams hold.
   test("indexed roundtrips BIT-EXACTLY across dims, palette sizes, " +
     "and interlace — literal LZW with periodic clears") {
     for {
@@ -23,10 +43,13 @@ class GifCodecSpec extends AnyFunSuite {
       val palette = Array.tabulate(palSize)(i =>
         ((i * 37 % 256) << 16) | ((i * 59 % 256) << 8) | (i * 83 % 256))
       def idx(x: Int, y: Int): Int = (x * 3 + y * 5) % palSize
-      val gif = GifCodec.encode(w, h, palette, idx, interlaced)
-      assert(MediaCodec.detect(gif) === "gif")
-      assert(GifCodec.isDecodable(gif))
-      val img = GifCodec.decode(gif)
+      val bytes = gif(w, h, palette, idx, interlaced)
+      assert(MediaCodec.detect(bytes) === "gif")
+      // image descriptor packed byte, bit 6: the interlace flag
+      val desc = imageDescriptorAt(bytes)
+      assert(((bytes(desc + 9) & 0x40) != 0) === interlaced)
+      assert(MediaCodec.isDecodableImage(bytes))
+      val img = MediaCodec.decodeImage(bytes)
       assert(img.width === w && img.height === h)
       for (y <- 0 until h; x <- 0 until w) {
         val e = palette(idx(x, y))
@@ -60,8 +83,8 @@ class GifCodecSpec extends AnyFunSuite {
       assert(javax.imageio.ImageIO.write(img, "gif", bos))
       val bytes = bos.toByteArray
       assert(MediaCodec.detect(bytes) === "gif")
-      assert(GifCodec.isDecodable(bytes), s"${w}x$h")
-      val mine = GifCodec.decode(bytes)
+      assert(MediaCodec.isDecodableImage(bytes), s"${w}x$h")
+      val mine = MediaCodec.decodeImage(bytes)
       assert(mine.width === w && mine.height === h)
       for (y <- 0 until h; x <- 0 until w) {
         val i = idx(x, y)
@@ -72,51 +95,18 @@ class GifCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("our encodes decode EXACTLY in ImageIO — the other direction, " +
-    "interlaced and not") {
-    for (interlaced <- Seq(false, true)) {
-      val palette = Array.tabulate(32)(i =>
-        ((i * 11 % 256) << 16) | ((i * 23 % 256) << 8) | (i * 41 % 256))
-      def idx(x: Int, y: Int): Int = (x * 5 + y * 13) % 32
-      val gif = GifCodec.encode(21, 14, palette, idx, interlaced)
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(gif))
-      assert(ref != null, s"ImageIO rejected our GIF (il=$interlaced)")
-      assert(ref.getWidth === 21 && ref.getHeight === 14)
-      for (y <- 0 until 14; x <- 0 until 21) {
-        val rgb = ref.getRGB(x, y)
-        val e = palette(idx(x, y))
-        assert(((rgb >> 16) & 0xff) === ((e >> 16) & 0xff),
-          s"il=$interlaced R ($x,$y)")
-        assert(((rgb >> 8) & 0xff) === ((e >> 8) & 0xff),
-          s"il=$interlaced G ($x,$y)")
-        assert((rgb & 0xff) === (e & 0xff), s"il=$interlaced B ($x,$y)")
-      }
-    }
-  }
-
   test("a frame smaller than the logical screen composites over the " +
     "background color at its (left, top) offset") {
-    // hand-assemble: 10x6 screen, bg index 1, 4x3 frame at (5, 2)
+    // patch in place: 10x6 screen, bg index 1, the 4x3 frame at (5, 2)
     val palette = Array(0x112233, 0xa0b0c0, 0xff0000, 0x00ff00)
-    val inner = GifCodec.encode(4, 3, palette,
-      (x, y) => (x + y) % 4)
-    // splice: rewrite screen dims + bg, shift the image descriptor
-    val out = new java.io.ByteArrayOutputStream
-    out.write(inner, 0, 6)
-    out.write(10); out.write(0); out.write(6); out.write(0) // screen 10x6
-    out.write(inner(10) & 0xff) // GCT flags unchanged
-    out.write(1) // background color index 1
-    out.write(0)
-    val gctLen = 3 * 4
-    out.write(inner, 13, gctLen)
-    val imgDesc = 13 + gctLen
-    assert((inner(imgDesc) & 0xff) === 0x2c)
-    out.write(0x2c)
-    out.write(5); out.write(0); out.write(2); out.write(0) // left=5 top=2
-    out.write(inner, imgDesc + 5, inner.length - imgDesc - 5) // w,h,rest
-    val gif = out.toByteArray
-    val img = GifCodec.decode(gif)
+    val bytes = gif(4, 3, palette, (x, y) => (x + y) % 4)
+    assert(MediaCodec.parseGif(bytes).gctEntries === 4)
+    val desc = imageDescriptorAt(bytes)
+    bytes(6) = 10; bytes(7) = 0; bytes(8) = 6; bytes(9) = 0 // screen 10x6
+    bytes(11) = 1 // background color index 1
+    bytes(desc + 1) = 5; bytes(desc + 2) = 0 // left = 5
+    bytes(desc + 3) = 2; bytes(desc + 4) = 0 // top = 2
+    val img = MediaCodec.decodeImage(bytes)
     assert(img.width === 10 && img.height === 6)
     for (y <- 0 until 6; x <- 0 until 10) {
       val e =
@@ -126,20 +116,23 @@ class GifCodecSpec extends AnyFunSuite {
       assert(img(x, y, 1) === ((e >> 8) & 0xff), s"G ($x,$y)")
       assert(img(x, y, 0) === (e & 0xff), s"B ($x,$y)")
     }
+    // a frame that overruns the screen is a data fault
+    bytes(desc + 1) = 7
+    intercept[IllegalArgumentException](MediaCodec.decodeImage(bytes))
   }
 
   test("byte-fuzzed streams NEVER escape as AIOOBE/OOM — every fault " +
     "is an IllegalArgumentException (untrusted corpus bytes contract)") {
     val rnd = new scala.util.Random(0x61f1L)
     val palette = Array.tabulate(16)(i => i * 0x111111)
-    val base = GifCodec.encode(24, 16, palette,
+    val base = gif(24, 16, palette,
       (x, y) => (x * 7 + y * 5) % 16, interlaced = true)
     for (trial <- 1 to 300) {
       val mutated = base.clone()
       val flips = 1 + rnd.nextInt(4)
       for (_ <- 0 until flips)
         mutated(rnd.nextInt(mutated.length)) = rnd.nextInt(256).toByte
-      try { GifCodec.decode(mutated); () }
+      try { MediaCodec.decodeImage(mutated); () }
       catch {
         case _: IllegalArgumentException => () // the contract
         case e: Throwable =>
@@ -147,7 +140,7 @@ class GifCodecSpec extends AnyFunSuite {
             s"${e.getMessage}")
       }
       val cut = base.take(1 + rnd.nextInt(base.length - 1))
-      try { GifCodec.decode(cut); () }
+      try { MediaCodec.decodeImage(cut); () }
       catch {
         case _: IllegalArgumentException => ()
         case e: Throwable =>
@@ -159,24 +152,24 @@ class GifCodecSpec extends AnyFunSuite {
   test("hostile screen dimensions refuse at the decode cap before " +
     "any allocation; header-only synthesizeGif gates false") {
     val palette = Array(0x000000, 0xffffff)
-    val gif = GifCodec.encode(4, 4, palette, (x, y) => (x + y) % 2)
+    val bytes = gif(4, 4, palette, (x, y) => (x + y) % 2)
     // screen dims are u16le at 6/8 — no CRC in GIF, patch directly
-    gif(6) = 0xff.toByte; gif(7) = 0xff.toByte
-    gif(8) = 0xff.toByte; gif(9) = 0xff.toByte
-    val e = intercept[IllegalArgumentException](GifCodec.decode(gif))
+    bytes(6) = 0xff.toByte; bytes(7) = 0xff.toByte
+    bytes(8) = 0xff.toByte; bytes(9) = 0xff.toByte
+    val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(bytes))
     assert(e.getMessage.contains("decode cap"), e.getMessage)
     val headerOnly = MediaCodec.synthesizeGif(32, 20, gctBits = 4)
     assert(MediaCodec.detect(headerOnly) === "gif")
-    assert(!GifCodec.isDecodable(headerOnly))
+    assert(!MediaCodec.isDecodableImage(headerOnly))
   }
 
   test("decodeImage/isDecodableImage dispatch GIF through the unified " +
     "shape beside BMP, JPEG and PNG") {
     val palette = Array.tabulate(8)(i =>
       ((i * 31 % 256) << 16) | ((i * 63 % 256) << 8) | (i * 15 % 256))
-    val gif = GifCodec.encode(6, 4, palette, (x, y) => (x + y * 2) % 8)
-    assert(MediaCodec.isDecodableImage(gif))
-    val img = MediaCodec.decodeImage(gif)
+    val bytes = gif(6, 4, palette, (x, y) => (x + y * 2) % 8)
+    assert(MediaCodec.isDecodableImage(bytes))
+    val img = MediaCodec.decodeImage(bytes)
     assert(img.width === 6 && img.height === 4)
     val e = palette((3 + 2 * 2) % 8)
     assert(img(3, 2, 2) === ((e >> 16) & 0xff))

@@ -1,31 +1,66 @@
 package graft.ext
 
+import java.awt.image.BufferedImage
+import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Baseline JPEG codec: exact flat-block roundtrips (the oracle
-  * contract), and BOTH-direction cross-checks against the JDK's
-  * independent ImageIO JPEG implementation — our encoder's streams
-  * decoded by ImageIO, ImageIO's streams decoded by us. The JPEG
-  * standard (T.83) permits ±1/pixel IDCT variation between conformant
-  * decoders, so cross-implementation checks use that tolerance
-  * (slightly wider where color conversion differs too).
+/** JPEG through [[MediaCodec.decodeImage]] (ImageIO underneath):
+  * exact flat-block roundtrips at quality 1.0 (the oracle contract),
+  * ImageIO-encoded grayscale, subsampled color and progressive streams
+  * converted exactly from the decoded raster, and the untrusted-bytes
+  * fault contract.
   */
 class JpegCodecSpec extends AnyFunSuite {
 
-  private def imageIoDecode(b: Array[Byte]): java.awt.image.BufferedImage =
-    javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
+  private def imageIoDecode(b: Array[Byte]): BufferedImage =
+    ImageIO.read(new java.io.ByteArrayInputStream(b))
+
+  /** Write `img` with ImageIO's JPEG writer: quality 1.0 with a DRI
+    * restart interval of `restartInterval` MCUs (0 = none), or the
+    * default progressive scan script.
+    */
+  private def writeJpeg(
+      img: BufferedImage, restartInterval: Int = 0,
+      progressive: Boolean = false): Array[Byte] = {
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val param = writer.getDefaultWriteParam
+    val meta = writer.getDefaultImageMetadata(
+      new javax.imageio.ImageTypeSpecifier(img), param)
+    if (progressive)
+      param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    else {
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(1f)
+    }
+    if (restartInterval > 0) {
+      val fmt = "javax_imageio_jpeg_image_1.0"
+      val tree = meta.getAsTree(fmt)
+      val seq = tree.getLastChild // markerSequence
+      val dri = new javax.imageio.metadata.IIOMetadataNode("dri")
+      dri.setAttribute("interval", restartInterval.toString)
+      seq.insertBefore(dri, seq.getFirstChild)
+      meta.setFromTree(fmt, tree)
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = ImageIO.createImageOutputStream(bos)
+    writer.setOutput(out)
+    writer.write(null, new IIOImage(img, null, meta), param)
+    writer.dispose()
+    out.close()
+    bos.toByteArray
+  }
 
   private def maxDiffVsImageIo(
-      mine: MediaCodec.Bmp24, ref: java.awt.image.BufferedImage): Int = {
+      mine: MediaCodec.Bmp24, ref: BufferedImage): Int = {
     assert(mine.width === ref.getWidth && mine.height === ref.getHeight)
     var worst = 0
-    val gray = ref.getType == java.awt.image.BufferedImage.TYPE_BYTE_GRAY
+    val gray = ref.getType == BufferedImage.TYPE_BYTE_GRAY
     for (y <- 0 until mine.height; x <- 0 until mine.width) {
       val d =
         if (gray) {
           // raster sample, NOT getRGB: getRGB gamma-converts linear
           // gray to sRGB (observed +-73 on mid-grays) — a color-space
-          // artifact of the comparison, not of either decoder
+          // artifact of the comparison, not of the decode
           assert(mine(x, y, 0) === mine(x, y, 1))
           math.abs(ref.getRaster.getSample(x, y, 0) - mine(x, y, 0))
         } else {
@@ -48,135 +83,108 @@ class JpegCodecSpec extends AnyFunSuite {
       rst <- Seq(0, 2)
     } {
       def v(x: Int, y: Int): Int = (7 + (x / 8) * 31 + (y / 8) * 101) % 256
-      val jpeg = JpegCodec.encodeBaseline(w, h, 1, (x, y, _) => v(x, y),
-        lumaQuant = JpegCodec.FlatQuant, restartInterval = rst)
-      assert(JpegCodec.isBaselineDecodable(jpeg))
+      val img = MediaCodec.grayImage(w, h, v)
+      val jpeg =
+        if (rst == 0) MediaCodec.encodeImage("jpeg", img)
+        else writeJpeg(img, restartInterval = rst)
+      // FF DD: the DRI segment is present exactly when asked for
+      assert(jpeg.sliding(2).exists(s =>
+        (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xdd) === (rst > 0))
+      assert(MediaCodec.isDecodableImage(jpeg))
       assert(MediaCodec.detect(jpeg) === "jpeg")
-      val img = JpegCodec.decodeBaseline(jpeg)
-      assert(img.width === w && img.height === h)
+      assert(MediaCodec.parseJpeg(jpeg).components === 1)
+      val img2 = MediaCodec.decodeImage(jpeg)
+      assert(img2.width === w && img2.height === h)
       for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
-        assert(img(x, y, c) === v(x, y),
+        assert(img2(x, y, c) === v(x, y),
           s"(${w}x$h rst=$rst) pixel ($x,$y,$c)")
     }
-  }
-
-  test("our grayscale stream decodes identically (+-1 IDCT tolerance) " +
-    "in ImageIO and in our decoder — arbitrary content, lossy quant") {
-    val rnd = new scala.util.Random(20260815L)
-    for ((w, h) <- Seq((16, 16), (13, 9), (40, 25))) {
-      val px = Array.fill(h, w)(rnd.nextInt(256))
-      val jpeg = JpegCodec.encodeBaseline(w, h, 1, (x, y, _) => px(y)(x))
-      val mine = JpegCodec.decodeBaseline(jpeg)
-      val ref = imageIoDecode(jpeg)
-      assert(ref != null, "ImageIO rejected our grayscale stream")
-      val d = maxDiffVsImageIo(mine, ref)
-      assert(d <= 1, s"${w}x$h: max pixel diff vs ImageIO = $d")
-    }
-  }
-
-  test("our 4:4:4 color stream decodes in ImageIO within color-convert " +
-    "tolerance of our decoder") {
-    val rnd = new scala.util.Random(42L)
-    val (w, h) = (24, 18)
-    val px = Array.fill(h, w, 3)(rnd.nextInt(256))
-    val jpeg = JpegCodec.encodeBaseline(w, h, 3, (x, y, c) => px(y)(x)(c))
-    val mine = JpegCodec.decodeBaseline(jpeg)
-    val ref = imageIoDecode(jpeg)
-    assert(ref != null, "ImageIO rejected our color stream")
-    // IDCT (+-1) compounds through two independent YCbCr->RGB
-    // roundings: allow +-3 per channel.
-    val d = maxDiffVsImageIo(mine, ref)
-    assert(d <= 3, s"max pixel diff vs ImageIO = $d")
   }
 
   test("an ImageIO-ENCODED grayscale JPEG decodes in our decoder " +
     "within +-1 of ImageIO's own decode (independent encoder interop)") {
     val (w, h) = (32, 21)
-    val src = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val src = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
     for (y <- 0 until h; x <- 0 until w) {
       val g = (x * 11 + y * 29 + (x * y) % 13) % 256
       src.setRGB(x, y, (g << 16) | (g << 8) | g)
     }
     val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(src, "jpg", bos))
+    assert(ImageIO.write(src, "jpg", bos))
     val jpeg = bos.toByteArray
-    assert(JpegCodec.isBaselineDecodable(jpeg),
-      "ImageIO grayscale output should be baseline-decodable")
-    val mine = JpegCodec.decodeBaseline(jpeg)
+    assert(MediaCodec.isDecodableImage(jpeg))
+    val mine = MediaCodec.decodeImage(jpeg)
     val ref = imageIoDecode(jpeg)
-    assert(maxDiffVsImageIo(mine, ref) <= 1)
+    // one decoder underneath: the raster conversion must be exact
+    assert(maxDiffVsImageIo(mine, ref) === 0)
   }
 
   test("an ImageIO-ENCODED color JPEG (subsampled) decodes in our " +
     "decoder: dims exact, flat-chroma content within tolerance") {
     val (w, h) = (20, 14)
-    val src = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    // luminance gradient with CONSTANT chroma: box-replicate vs fancy
-    // upsampling then agree everywhere (no chroma edges)
+    val src = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    // luminance gradient with CONSTANT chroma
     for (y <- 0 until h; x <- 0 until w) {
       val g = 40 + ((x * 7 + y * 5) % 160)
       src.setRGB(x, y, (g << 16) | (g << 8) | g)
     }
     val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(src, "jpg", bos))
+    assert(ImageIO.write(src, "jpg", bos))
     val jpeg = bos.toByteArray
-    assert(JpegCodec.isBaselineDecodable(jpeg))
-    val mine = JpegCodec.decodeBaseline(jpeg)
+    assert(MediaCodec.parseJpeg(jpeg).components === 3)
+    assert(MediaCodec.isDecodableImage(jpeg))
+    val mine = MediaCodec.decodeImage(jpeg)
     val ref = imageIoDecode(jpeg)
-    assert(maxDiffVsImageIo(mine, ref) <= 3)
+    assert(maxDiffVsImageIo(mine, ref) === 0)
   }
 
-  test("progressive JPEG is refused by the guard, not mis-decoded") {
+  test("progressive JPEG decodes to the same pixels ImageIO reads") {
     val (w, h) = (16, 16)
-    val src = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val src = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
     for (y <- 0 until h; x <- 0 until w) {
       val g = (x * 16 + y) % 256
       src.setRGB(x, y, (g << 16) | (g << 8) | g)
     }
-    val writer = javax.imageio.ImageIO
-      .getImageWritersByFormatName("jpg").next()
-    val param = writer.getDefaultWriteParam
-    param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    val bos = new java.io.ByteArrayOutputStream()
-    writer.setOutput(javax.imageio.ImageIO.createImageOutputStream(bos))
-    writer.write(null,
-      new javax.imageio.IIOImage(src, null, null), param)
-    writer.dispose()
-    val jpeg = bos.toByteArray
+    val jpeg = writeJpeg(src, progressive = true)
     assert(MediaCodec.detect(jpeg) === "jpeg")
-    assert(!JpegCodec.isBaselineDecodable(jpeg),
-      "progressive stream must be refused")
-    intercept[IllegalArgumentException] {
-      JpegCodec.decodeBaseline(jpeg)
-    }
+    // SOF2: a progressive frame header
+    assert(jpeg.sliding(2).exists(s =>
+      (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc2))
+    assert(MediaCodec.isDecodableImage(jpeg))
+    val mine = MediaCodec.decodeImage(jpeg)
+    assert(maxDiffVsImageIo(mine, imageIoDecode(jpeg)) === 0)
   }
 
   test("truncated and corrupt streams fail with a clear error, " +
     "and the guard rejects them or decode throws (never a wrong image)") {
-    val good = JpegCodec.encodeBaseline(16, 16, 1,
-      (x, y, _) => (x * 16 + y) % 256)
+    val good = MediaCodec.encodeImage("jpeg",
+      MediaCodec.grayImage(16, 16, (x, y) => (x * 16 + y) % 256))
     intercept[IllegalArgumentException] {
-      JpegCodec.decodeBaseline(good.take(good.length / 2))
+      MediaCodec.decodeImage(good.take(good.length / 2))
     }
-    assert(!JpegCodec.isBaselineDecodable(good.take(20)))
-    assert(!JpegCodec.isBaselineDecodable(Array[Byte](0x12, 0x34)))
-    assert(!JpegCodec.isBaselineDecodable(null))
+    assert(!MediaCodec.isDecodableImage(good.take(good.length / 2)))
+    // a cut inside the entropy-coded scan: libjpeg pads the missing
+    // rows and only warns, and the warning must fail the decode
+    val sos = good.indices.find(i =>
+      (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xda).get
+    val inScan = good.take((sos + good.length) / 2)
+    intercept[IllegalArgumentException](MediaCodec.decodeImage(inScan))
+    assert(!MediaCodec.isDecodableImage(good.take(20)))
+    assert(!MediaCodec.isDecodableImage(Array[Byte](0x12, 0x34)))
+    assert(!MediaCodec.isDecodableImage(null))
   }
 
   test("byte-fuzzed streams NEVER escape as AIOOBE/OOM — every fault " +
     "is an IllegalArgumentException (untrusted corpus bytes contract)") {
     val rnd = new scala.util.Random(0x1f2e3dL)
-    val base = JpegCodec.encodeBaseline(24, 16, 3,
-      (x, y, c) => (x * 7 + y * 5 + c * 3) % 256)
+    val base = MediaCodec.encodeImage("jpeg", MediaCodec.bgrImage(24, 16,
+      (x, y, c) => (x * 7 + y * 5 + c * 3) % 256))
     for (trial <- 1 to 300) {
       val mutated = base.clone()
       val flips = 1 + rnd.nextInt(4)
       for (_ <- 0 until flips)
         mutated(rnd.nextInt(mutated.length)) = rnd.nextInt(256).toByte
-      try { JpegCodec.decodeBaseline(mutated); () }
+      try { MediaCodec.decodeImage(mutated); () }
       catch {
         case _: IllegalArgumentException => () // the contract
         case e: Throwable =>
@@ -185,7 +193,7 @@ class JpegCodecSpec extends AnyFunSuite {
       }
       // truncations too
       val cut = base.take(1 + rnd.nextInt(base.length - 1))
-      try { JpegCodec.decodeBaseline(cut); () }
+      try { MediaCodec.decodeImage(cut); () }
       catch {
         case _: IllegalArgumentException => ()
         case e: Throwable =>
@@ -201,7 +209,7 @@ class JpegCodecSpec extends AnyFunSuite {
       val m = base.clone()
       m(off) = ((v >> 8) & 0xff).toByte
       m(off + 1) = (v & 0xff).toByte
-      try { JpegCodec.decodeBaseline(m); () }
+      try { MediaCodec.decodeImage(m); () }
       catch {
         case _: IllegalArgumentException => ()
         case e: Throwable =>
@@ -209,22 +217,22 @@ class JpegCodecSpec extends AnyFunSuite {
       }
     }
     // Directed SMALL u16be values: a tiny declared segment length
-    // passes the global truncation check yet every fixed-offset read
-    // in the arm (SOF dims, DQT's 65-byte table, DHT's 17+nv, DRI's
-    // 2, SOS's 1+2ns) lands past segEnd — garbage-in-buffer or AIOOBE
-    // at EOF. The extreme-value pass above can't reach this class.
+    // passes a global truncation check yet every fixed-offset read in
+    // the segment (SOF dims, DQT's 65-byte table, DHT's 17+nv, DRI's
+    // 2, SOS's 1+2ns) lands past its end. The extreme-value pass above
+    // can't reach this class.
     for (off <- 0 until (base.length - 1);
          v <- Seq(2, 3, 4, 8)) {
       val m = base.clone()
       m(off) = ((v >> 8) & 0xff).toByte
       m(off + 1) = (v & 0xff).toByte
-      try { JpegCodec.decodeBaseline(m); () }
+      try { MediaCodec.decodeImage(m); () }
       catch {
         case _: IllegalArgumentException => ()
         case e: Throwable =>
           fail(s"small-u16 $v at $off escaped with ${e.getClass.getName}")
       }
-      try { JpegCodec.isBaselineDecodable(m); () }
+      try { MediaCodec.isDecodableImage(m); () }
       catch {
         case e: Throwable =>
           fail(s"guard small-u16 $v at $off threw ${e.getClass.getName}")
@@ -241,7 +249,8 @@ class JpegCodecSpec extends AnyFunSuite {
         fail(s"FF-fill run escaped with ${e.getClass.getName}")
     }
     // hostile-dims allocation cap: a huge SOF must refuse, not OOM
-    val huge = JpegCodec.encodeBaseline(8, 8, 1, (_, _, _) => 0)
+    val huge = MediaCodec.encodeImage("jpeg",
+      MediaCodec.grayImage(8, 8, (_, _) => 0))
     // patch the SOF dims (height/width u16be right after precision)
     val sofAt = {
       var i = 2
@@ -255,15 +264,15 @@ class JpegCodecSpec extends AnyFunSuite {
     }
     Seq(5, 6, 7, 8).foreach(d => huge(sofAt + d) = 0xff.toByte)
     val e = intercept[IllegalArgumentException] {
-      JpegCodec.decodeBaseline(huge)
+      MediaCodec.decodeImage(huge)
     }
     assert(e.getMessage.contains("decode cap"), e.getMessage)
   }
 
   test("decodeImage dispatches BMP and JPEG through one shape") {
     val bmp = MediaCodec.synthesizeBmp24(5, 4, (x, y, c) => (x + y + c) % 256)
-    val jpg = JpegCodec.encodeBaseline(8, 8, 1, (_, _, _) => 77,
-      lumaQuant = JpegCodec.FlatQuant)
+    val jpg = MediaCodec.encodeImage("jpeg",
+      MediaCodec.grayImage(8, 8, (_, _) => 77))
     assert(MediaCodec.isDecodableImage(bmp))
     assert(MediaCodec.isDecodableImage(jpg))
     assert(MediaCodec.decodeImage(bmp)(2, 3, 1) === (2 + 3 + 1) % 256)

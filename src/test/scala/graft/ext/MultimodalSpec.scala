@@ -432,9 +432,9 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize is FORMAT-PRESERVING: PNG→PNG, GIF→GIF, WebP→WebP, " +
     "JPEG→lossless PNG, BMP→BMP — all real encodes, all pixel-exact") {
-    // one shared BGR-indexed formula; JPEG uses flat 8x8 blocks with
-    // the identity quant so its decode (and thus its thumbnail) is
-    // bit-exact too
+    // one shared BGR-indexed formula; JPEG uses flat 8x8 blocks at
+    // quality 1.0 (all-ones quant) so its decode (and thus its
+    // thumbnail) is bit-exact too
     def f(x: Int, y: Int, c: Int): Int = (x * 13 + y * 31 + c * 5) % 256
     def fj(x: Int, y: Int): Int = ((x / 8) * 7 + (y / 8) * 13) % 256
     val srcW = 12
@@ -445,14 +445,15 @@ class MultimodalSpec extends SparkSpec {
     }
     val media = Seq(
       (1L, "bmp", MediaCodec.synthesizeBmp24(srcW, srcH, f)),
-      (2L, "png", PngCodec.encode(srcW, srcH, 3,
-        (x, y, c) => f(x, y, 2 - c))),
-      (3L, "gif", GifCodec.encode(srcW, srcH, pal,
-        (x, y) => (x * 3 + y * 5) % 64)),
+      (2L, "png", MediaCodec.encodeImage("png",
+        MediaCodec.bgrImage(srcW, srcH, f))),
+      (3L, "gif", MediaCodec.encodeImage("gif",
+        MediaCodec.indexedImage(srcW, srcH, pal,
+          (x, y) => (x * 3 + y * 5) % 64))),
       (4L, "webp", VP8LCodec.encode(srcW, srcH,
         (x, y, c) => f(x, y, 2 - c))),
-      (5L, "jpeg", JpegCodec.encodeBaseline(srcW, srcH, 1,
-        (x, y, _) => fj(x, y), lumaQuant = JpegCodec.FlatQuant)))
+      (5L, "jpeg", MediaCodec.encodeImage("jpeg",
+        MediaCodec.grayImage(srcW, srcH, fj))))
       .toDF("doc_id", "media_type", "payload")
     val out = Multimodal.resize(spark, media, 4, 3).collect()
       .map(r => r.doc_id -> r).toMap

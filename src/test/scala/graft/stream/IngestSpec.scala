@@ -255,6 +255,26 @@ class IngestSpec extends SparkSpec {
       .map(_.getString(0)).toSet === Set("clean.csv"))
   }
 
+  test("NA tokens read as null fields, not as non-numeric ones") {
+    val root = tmp("graft_na")
+    val conf = mkConf(root)
+    val dataDir = Files.createDirectories(root.resolve("data"))
+    writeCsv(dataDir, "na.csv",
+      "2025-05-26 04:36:08,S1,26.41,0.95,1014.74",
+      "2025-05-26 04:37:08,S2,NaN,n/a,")
+
+    val q = Ingest.start(spark, conf, new ParquetSink(
+      root.resolve("raw").toString, root.resolve("agg").toString))
+    try q.processAllAvailable() finally q.stop()
+
+    assert(Files.exists(root.resolve("quarantine/na.csv")))
+    val log = Files.readString(root.resolve("quarantine/quarantine_log.txt"))
+    assert(log.contains("File: na.csv, Reason: Validation failed at row 3: " +
+      "Row 3: 'temperature' is null.; Row 3: 'humidity' is null.; " +
+      "Row 3: 'pressure' is null."), log)
+    assert(!log.contains("not a valid number"), log)
+  }
+
   test("lenient mode commits the valid subset of a mixed file and logs the drop") {
     val root = tmp("graft_lenient")
     val conf = mkConf(root).copy(strictMode = false)
