@@ -45,7 +45,7 @@ object Curation {
     // EAGER: both the pair frame (caller-owned persist from the
     // builder) and clusterPairs' labels are internal here — release
     // them once the disposition is materialized.
-    Dedup.materializeAndRelease(
+    Dedup.withCleanup(
       Sampling.splitAssign(keyed, idCol)
         .select(col(idCol), col("pass").as("quality_pass"), col("is_canonical"),
           when(!col("pass"), lit("rejected_quality"))

@@ -27,9 +27,11 @@ object Dedup {
     * the life of the session accumulates storage across repeated calls.
     * The returned frame is itself persisted (bounded: pair rows only)
     * so the eager materialization isn't wasted; callers that are done
-    * with it can `unpersist()` it.
+    * with it can `unpersist()` it. Also used by the operators outside
+    * this object that consume [[clusterPairs]]' (or a pair builder's)
+    * internal caches.
     */
-  private def withCleanup(result: DataFrame, cached: Seq[DataFrame]): DataFrame = {
+  private[graft] def withCleanup(result: DataFrame, cached: Seq[DataFrame]): DataFrame = {
     val out = result.persist()
     // finally: a failed materialization (executor loss, OOM) must not
     // leak the cached intermediates — or the half-persisted result —
@@ -40,15 +42,6 @@ object Dedup {
     } finally cached.foreach(_.unpersist(blocking = false))
     out
   }
-
-  /** [[withCleanup]] for the operators OUTSIDE this object that
-    * consume [[clusterPairs]]' (or a pair builder's) internal caches:
-    * materialize the result, release the intermediates the caller
-    * never sees a handle to.
-    */
-  private[graft] def materializeAndRelease(
-      result: DataFrame, cached: Seq[DataFrame]): DataFrame =
-    withCleanup(result, cached)
 
   /** The key-cells of `df` holding at least `gridThreshold` rows — the
     * cells whose m² verify work [[gridSelfJoin]] spreads over a salt
@@ -171,20 +164,20 @@ object Dedup {
     // Bounded driver state: ≤ n/gridThreshold hot key tuples (the
     // CollectAuditSpec census entry for this file) — and the bound is
     // ENFORCED, not assumed: at the shipped gates n/gridThreshold is
-    // small, but the env knob lets a deployment re-gate arbitrarily
-    // low (SPARK_GRAFT_GRID_THRESHOLD=2 on 10⁹ banded rows would make
-    // "bounded" mean 5·10⁸ rows), so the collect is capped via
-    // limit(maxHotCells+1) and a cap overflow fails LOUDLY with the
-    // remedy (raise the gate) instead of OOMing the driver. 2²⁰ cells
-    // needs ≥ 2²⁰·gate banded rows to reach — ~8.6·10⁹ at the shipped
-    // 8192 — and stays a few tens of MB of driver heap if it ever does.
+    // small, but a caller may pass an arbitrarily low `gridThreshold`
+    // (2 on 10⁹ banded rows would make "bounded" mean 5·10⁸ rows), so
+    // the collect is capped via limit(maxHotCells+1) and a cap overflow
+    // fails LOUDLY with the remedy (raise the gate) instead of OOMing
+    // the driver. 2²⁰ cells needs ≥ 2²⁰·gate banded rows to reach —
+    // ~8.6·10⁹ at the shipped 8192 — and stays a few tens of MB of
+    // driver heap if it ever does.
     val hotFrame = hotCells(df, keys, gridThreshold)
     val hotList = hotFrame.limit(maxHotCells + 1).collect()
     require(hotList.length <= maxHotCells,
       s"gridSelfJoin: more than $maxHotCells cells hold >= " +
         s"$gridThreshold rows — the gate is mis-tuned for this corpus " +
-        "(the hot list must stay a small broadcast); raise " +
-        "SPARK_GRAFT_GRID_THRESHOLD / the gridThreshold argument")
+        "(the hot list must stay a small broadcast); raise the " +
+        "gridThreshold argument")
     if (hotList.isEmpty) return plainJoin
     val spark = df.sparkSession
     val fanout = math.max(plainFanout.getOrElse(0),
@@ -262,59 +255,93 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     graft.functions.TextExprs.wordShingles(text, n)
 
+  /** (id, __set): each document's distinct word `shingleN`-gram set. */
+  private def shingleSets(
+      docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
+    docs.select(col(idCol), shingles(col(textCol), shingleN).as("__set"))
+
+  /** (id, signature): signature[i] = min of `slots(i)` over the doc's
+    * rows of `exploded` (one row per shingle) — k `min` aggregations,
+    * one hash-shuffle keyed on the doc id, map-side combined. The two
+    * MinHash families differ only in the per-slot hash they pass.
+    */
+  private def minSignatures(
+      exploded: DataFrame, idCol: String, slots: Seq[Column]): DataFrame = {
+    val mins = slots.zipWithIndex.map { case (h, i) => min(h).as(s"__h$i") }
+    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
+      .select(col(idCol),
+        array(slots.indices.map(i => col(s"__h$i")): _*).as("signature"))
+  }
+
   /** MinHash signature: k independent permutations approximated by
     * seeded xxhash64 over each shingle; signature[i] = min hash under
-    * seed i. Computed with explode + k `min` aggregations — one
-    * hash-shuffle keyed on the doc id, map-side combined.
+    * seed i.
     */
   def minHashSignatures(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int): DataFrame =
     signaturesFromShingleSets(
-      docs.select(col(idCol), shingles(col(textCol), shingleN).as("__set")),
-      idCol, numHashes)
+      shingleSets(docs, idCol, textCol, shingleN), idCol, numHashes)
 
   /** Signatures derived from an already-shingled `(id, __set)` frame —
     * lets near-dup pipelines shingle ONCE and reuse the same sets for
     * both signature generation and candidate verification.
     */
   private def signaturesFromShingleSets(
-      sets: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val exploded = sets.select(col(idCol), explode(col("__set")).as("__sh"))
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(col("__sh"), lit(i))).as(s"__h$i"))
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"__h$i")): _*).as("signature"))
+      sets: DataFrame, idCol: String, numHashes: Int): DataFrame =
+    minSignatures(sets.select(col(idCol), explode(col("__set")).as("__sh")),
+      idCol, (0 until numHashes).map(i => xxhash64(col("__sh"), lit(i))))
+
+  /** The band cells of a MinHash signature: one struct(band, `field`)
+    * per band, `field` being `bandKey` over the band's
+    * `numHashes/bands` signature slots — static per band (no HOF
+    * lambdas, no string joins: the band index is known at plan-build
+    * time).
+    */
+  private def minHashBandCells(numHashes: Int, bands: Int, field: String)(
+      bandKey: Seq[Column] => Column): Seq[Column] = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rows = numHashes / bands
+    (0 until bands).map { b =>
+      struct(
+        lit(b).as("band"),
+        bandKey((b * rows until (b + 1) * rows)
+          .map(i => element_at(col("signature"), i + 1))).as(field))
+    }
   }
 
-  /** MinHash LSH candidate pairs: band the signature into `bands` bands
-    * of `numHashes/bands` rows, hash each band, equi-join on
-    * (band_index, band_hash). Returns (id_a, id_b, est_jaccard) with
-    * id_a < id_b; est_jaccard = fraction of matching signature slots.
+  /** One row per (row, band cell) of `df`: the `kept` columns, the band
+    * index as `__band` and the cell's `field` as `keyAs`. The one
+    * banding step of every LSH miner here (MinHash and SimHash alike).
     */
-  /** (id, signature, __band, __bandhash) — one row per (doc, band).
-    * Static band hashes: xxhash64 over the band's signature slots
-    * directly (no HOF lambdas, no string joins — band index is known
-    * at plan-build time).
+  private def explodeBands(
+      df: DataFrame, kept: Seq[String], bandCells: Seq[Column],
+      field: String, keyAs: String): DataFrame = {
+    val keep = kept.map(col)
+    df.select(keep :+ explode(array(bandCells: _*)).as("__bb"): _*)
+      .select(keep ++ Seq(col("__bb.band").as("__band"),
+        col(s"__bb.$field").as(keyAs)): _*)
+  }
+
+  /** (id, signature, __band, __bandhash) — one row per (doc, band),
+    * the band key an xxhash64 over the band's signature slots.
     */
   private def bandExplode(
       signatures: DataFrame, idCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64((b * rows until (b + 1) * rows)
-          .map(i => element_at(col("signature"), i + 1)): _*).as("bandhash"))
-    }
-    signatures
-      .select(col(idCol), col("signature"),
-        explode(array(bandCols: _*)).as("__bb"))
-      .select(col(idCol), col("signature"),
-        col("__bb.band").as("__band"), col("__bb.bandhash").as("__bandhash"))
-  }
+      numHashes: Int, bands: Int): DataFrame =
+    explodeBands(signatures, Seq(idCol, "signature"),
+      minHashBandCells(numHashes, bands, "bandhash")(s => xxhash64(s: _*)),
+      "bandhash", "__bandhash")
+
+  /** Self-join of a banded frame on `keys`: each side projects its
+    * renames (`a`, `b`) plus the keys; keeps id_a < id_b.
+    */
+  private def bandPairs(
+      banded: DataFrame, keys: Seq[String],
+      a: Seq[Column], b: Seq[Column]): DataFrame =
+    banded.select(a ++ keys.map(col): _*)
+      .join(banded.select(b ++ keys.map(col): _*), keys)
+      .filter(col("id_a") < col("id_b"))
 
   /** Static per-slot signature agreement — plain codegen'd expressions,
     * no higher-order functions (HOF lambdas cost seconds of janino
@@ -325,19 +352,47 @@ object Dedup {
       when(element_at(col("__sig_a"), i) === element_at(col("__sig_b"), i),
         1).otherwise(0)).reduce(_ + _).cast("double") / numHashes
 
+  /** MinHash LSH candidate pairs: band the signature into `bands` bands
+    * of `numHashes/bands` rows, hash each band, equi-join on
+    * (band_index, band_hash). Returns (id_a, id_b, est_jaccard) with
+    * id_a < id_b; est_jaccard = fraction of matching signature slots.
+    */
   def minHashCandidatePairs(
       signatures: DataFrame, idCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    val banded = bandExplode(signatures, idCol, numHashes, bands)
-    val a = banded.select(col(idCol).as("id_a"),
-      col("signature").as("__sig_a"), col("__band"), col("__bandhash"))
-    val b = banded.select(col(idCol).as("id_b"),
-      col("signature").as("__sig_b"), col("__band"), col("__bandhash"))
-    a.join(b, Seq("__band", "__bandhash"))
-      .filter(col("id_a") < col("id_b"))
+      numHashes: Int, bands: Int): DataFrame =
+    bandPairs(bandExplode(signatures, idCol, numHashes, bands),
+        Seq("__band", "__bandhash"),
+        Seq(col(idCol).as("id_a"), col("signature").as("__sig_a")),
+        Seq(col(idCol).as("id_b"), col("signature").as("__sig_b")))
       .withColumn("est_jaccard", slotAgreement(numHashes))
       .select("id_a", "id_b", "est_jaccard")
       .dropDuplicates("id_a", "id_b")
+
+  /** The MinHash near-dup pipeline both families share: shingle ONCE —
+    * the persisted sets feed `signatures` and both verification
+    * branches (the signatures are persisted too: they feed the two
+    * banding branches of `candidates`). Both caches are tiny next to
+    * the corpus: k longs / one string-set per doc. Candidate pairs are
+    * verified against the true token-set Jaccard.
+    */
+  private def minHashNearPairs(
+      docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
+      threshold: Double)(
+      signatures: DataFrame => DataFrame,
+      candidates: DataFrame => DataFrame): DataFrame = {
+    val sets = shingleSets(docs, idCol, textCol, shingleN).persist()
+    val sigs = signatures(sets).persist()
+    val cands = candidates(sigs)
+    val inter = graft.functions.ArrayExprs.intersectSize(
+      col("__set_a"), col("__set_b"))
+    val result = cands
+      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__set_a")), "id_a")
+      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__set_b")), "id_b")
+      .withColumn("jaccard", inter.cast("double") /
+        (size(col("__set_a")) + size(col("__set_b")) - inter).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+    withCleanup(result, Seq(sets, sigs))
   }
 
   // ---- Incremental dedup (new batch vs historical corpus) -----------
@@ -544,26 +599,10 @@ object Dedup {
   def minHashNearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.7): DataFrame = {
-    // Shingle ONCE: the persisted sets feed signature generation and
-    // both verification branches (signatures are persisted too — they
-    // feed the two banding branches of the candidate join). Both caches
-    // are tiny next to the corpus: k longs / one string-set per doc.
-    val sets = docs.select(col(idCol),
-      shingles(col(textCol), shingleN).as("__set")).persist()
-    val sigs = signaturesFromShingleSets(sets, idCol, numHashes).persist()
-    val cands = minHashCandidatePairs(sigs, idCol, numHashes, bands)
-    val inter = graft.functions.ArrayExprs.intersectSize(
-      col("__set_a"), col("__set_b"))
-    val result = cands
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__set_b")), "id_b")
-      .withColumn("jaccard", inter.cast("double") /
-        (size(col("__set_a")) + size(col("__set_b")) - inter).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    withCleanup(result, Seq(sets, sigs))
-  }
+      threshold: Double = 0.7): DataFrame =
+    minHashNearPairs(docs, idCol, textCol, shingleN, threshold)(
+      signaturesFromShingleSets(_, idCol, numHashes),
+      minHashCandidatePairs(_, idCol, numHashes, bands))
 
   // ---- Portable (cross-engine) MinHash ------------------------------
   // The xxhash64 family above is Spark-internal; this variant derives
@@ -594,46 +633,34 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int): DataFrame =
     portableSignaturesFromShingleSets(
-      docs.select(col(idCol), shingles(col(textCol), shingleN).as("__set")),
-      idCol, numHashes)
+      shingleSets(docs, idCol, textCol, shingleN), idCol, numHashes)
 
   private def portableSignaturesFromShingleSets(
-      sets: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val exploded = sets.select(col(idCol), explode(col("__set")).as("__sh"))
-      .withColumn("__m", portableBaseHash(col("__sh")))
-    val mins = portableSeeds(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min((col("__m") * a + b) % PortableP).as(s"__h$i")
-    }
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"__h$i")): _*).as("signature"))
-  }
+      sets: DataFrame, idCol: String, numHashes: Int): DataFrame =
+    minSignatures(
+      sets.select(col(idCol), explode(col("__set")).as("__sh"))
+        .withColumn("__m", portableBaseHash(col("__sh"))),
+      idCol,
+      portableSeeds(numHashes).map { case (a, b) =>
+        (col("__m") * a + b) % PortableP
+      })
 
   /** Candidate pairs with engine-portable band keys: the key is the
     * ':'-joined slot values themselves (no engine-specific band hash),
-    * so the candidate SET is identical across engines.
+    * so the candidate SET is identical across engines. Only ids ride
+    * the candidate shuffle.
     */
   def portableCandidatePairs(
       signatures: DataFrame, idCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        concat_ws(":", (b * rows until (b + 1) * rows)
-          .map(i => element_at(col("signature"), i + 1)): _*).as("bk"))
-    }
-    val banded = signatures
-      .select(col(idCol), explode(array(bandCols: _*)).as("__bb"))
-      .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bk").as("__bk"))
-    val a = banded.select(col(idCol).as("id_a"), col("__band"), col("__bk"))
-    val b = banded.select(col(idCol).as("id_b"), col("__band"), col("__bk"))
-    a.join(b, Seq("__band", "__bk"))
-      .filter(col("id_a") < col("id_b"))
+      numHashes: Int, bands: Int): DataFrame =
+    bandPairs(
+        explodeBands(signatures, Seq(idCol),
+          minHashBandCells(numHashes, bands, "bk")(s => concat_ws(":", s: _*)),
+          "bk", "__bk"),
+        Seq("__band", "__bk"),
+        Seq(col(idCol).as("id_a")), Seq(col(idCol).as("id_b")))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-  }
 
   /** Oracle-checkable MinHash near-dup pairs: portable signatures →
     * portable banding → true-jaccard verification.
@@ -644,33 +671,11 @@ object Dedup {
   def portableMinHashNearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    // Shingle ONCE (see minHashNearDuplicates).
-    val sets = docs.select(col(idCol),
-      shingles(col(textCol), shingleN).as("__set")).persist()
-    val sigs = portableSignaturesFromShingleSets(sets, idCol, numHashes).persist()
-    val cands = portableCandidatePairs(sigs, idCol, numHashes, bands)
-    val inter = graft.functions.ArrayExprs.intersectSize(
-      col("__set_a"), col("__set_b"))
-    val result = cands
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__set_b")), "id_b")
-      .withColumn("jaccard", inter.cast("double") /
-        (size(col("__set_a")) + size(col("__set_b")) - inter).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    withCleanup(result, Seq(sets, sigs))
-  }
+      threshold: Double = 0.5): DataFrame =
+    minHashNearPairs(docs, idCol, textCol, shingleN, threshold)(
+      portableSignaturesFromShingleSets(_, idCol, numHashes),
+      portableCandidatePairs(_, idCol, numHashes, bands))
 
-  /** Oracle-checkable SimHash: 60-bit signatures from the md5-derived
-    * token hash (the 60 bits of [[portableBaseHash]] BEFORE the mod-P
-    * reduction), banded 6×10 bits for Hamming distance ≤ 5. Same
-    * pigeonhole guarantee as the 64-bit variant; every step computable
-    * bit-identically in DuckDB.
-    *
-    * EAGER: returns a persisted pair frame the caller owns —
-    * `unpersist()` it when done (see [[withCleanup]]).
-    */
   /** Pair-table evaluation — precision/recall of a CANDIDATE pair set
     * against a TRUTH pair set (both normalized to unordered pairs):
     * the dedup analog of [[Similarity.recallAtK]], closing the
@@ -728,6 +733,30 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
+  /** The SimHash signature table (keyCols..., simhash) both families
+    * share: whitespace tokens hashed to `hashCol` by `tokenHash`; bit i
+    * of the signature is set when `bitSet(i)` holds for more of the
+    * doc's tokens than not — one conditional-sum aggregation per bit,
+    * one shuffle keyed on `keyCols`, the set bits folded by `combine`.
+    */
+  private def simHashTable(
+      docs: DataFrame, keyCols: Seq[String], textCol: String,
+      hashCol: String, tokenHash: Column, bitSet: Seq[Column],
+      combine: (Column, Column) => Column): DataFrame = {
+    val keys = keyCols.map(col)
+    val exploded = docs.select(
+      keys :+ explode(split(trim(lower(col(textCol))), " ")).as("__tok"): _*)
+      .withColumn(hashCol, tokenHash)
+    val bitSums = bitSet.zipWithIndex.map { case (set, i) =>
+      sum(when(set, 1).otherwise(-1)).as(s"__b$i")
+    }
+    val sums = exploded.groupBy(keys: _*).agg(bitSums.head, bitSums.tail: _*)
+    val sig = bitSet.indices.map { i =>
+      when(col(s"__b$i") > 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(combine)
+    sums.select(keys :+ sig.as("simhash"): _*)
+  }
+
   /** The 60-bit portable SimHash signature table (id, simhash): bit i
     * is the sign of Σ_tokens ±1 by bit i of the md5-prefix token hash.
     * Shared by [[portableSimHashNearDuplicates]] and the streaming
@@ -744,23 +773,12 @@ object Dedup {
     * output is (keyCols..., simhash), bit-identical signatures.
     */
   private def portableSimHashSignaturesKeyed(
-      docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame = {
-    val bits = 60
-    val exploded = docs.select(
-      keyCols.map(col) :+
-        explode(split(trim(lower(col(textCol))), " ")).as("__tok"): _*)
-      .withColumn("__m", graft.functions.HashExprs.md5Prefix60(col("__tok")))
-    val bitSums = (0 until bits).map { i =>
-      sum(when(shiftrightunsigned(col("__m"), i).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"__b$i")
-    }
-    val sums = exploded.groupBy(keyCols.map(col): _*)
-      .agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until bits).map { i =>
-      when(col(s"__b$i") > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    sums.select(keyCols.map(col) :+ sig.as("simhash"): _*)
-  }
+      docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
+    simHashTable(docs, keyCols, textCol,
+      "__m", graft.functions.HashExprs.md5Prefix60(col("__tok")),
+      (0 until 60).map(i =>
+        shiftrightunsigned(col("__m"), i).bitwiseAND(lit(1L)) === 1L),
+      _ + _)
 
   /** The pigeonhole band cells of a SimHash signature column: one
     * struct(band, bk) per band, where bk is the band's `width` bits of
@@ -779,29 +797,19 @@ object Dedup {
           .bitwiseAND(lit((1L << width) - 1)).as("bk"))
     }
 
-  /** Hot-cell gate default for the SimHash miners: 8192 unless
-    * overridden via SPARK_GRAFT_GRID_THRESHOLD (a tuning knob: the
-    * shipped default was measured-then-chosen, the env override lets a
-    * deployment or an A/B probe re-gate without a rebuild).
+  /** Hot-cell gate default of the SimHash miners' `gridThreshold`
+    * (measured-then-chosen; a caller re-gates by passing the argument —
+    * [[recommendedGridThreshold]] derives the value from a cell census).
     */
-  private[graft] def defaultGridThreshold: Int =
-    sys.env.get("SPARK_GRAFT_GRID_THRESHOLD").map { v =>
-      val n = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_GRID_THRESHOLD must be an integer >= 2, got: '$v'")
-      }
-      require(n >= 2,
-        s"SPARK_GRAFT_GRID_THRESHOLD must be >= 2, got: $n")
-      n
-    }.getOrElse(8192)
+  private[graft] val defaultGridThreshold: Int = 8192
 
   /** Census-driven per-deployment gate guidance — the committed recipe
     * behind "re-gate from your own cell census" (SCALING.md, r15 gate
     * A/B). Input is the two count-derived statistics `tools.CellDiag`
     * prints for a banding (host-noise-immune): the LARGEST band-cell
     * row count and the TOTAL verify mass Σ n_cell². Returns the gate
-    * the measured A/B table says that shape wants — it does NOT change
-    * any shipped default.
+    * the measured A/B table says that shape wants, for the miners'
+    * `gridThreshold` argument — it does NOT change any shipped default.
     *
     * The rule (pure integer arithmetic, measured-then-chosen on the
     * six (miner, corpus) cells of the r15/r16 A/B —
@@ -838,38 +846,71 @@ object Dedup {
     if (scaleFloor && severity) 1024 else 8192
   }
 
-  def portableSimHashNearDuplicates(
-      docs: DataFrame, idCol: String, textCol: String,
-      gridThreshold: Int = defaultGridThreshold): DataFrame = {
-    val nBands = 6
-    val width = 10
-    val maxDist = nBands - 1
-    val sigs = portableSimHashSignatures(docs, idCol, textCol).persist()
-    // Materializes the cache AND bounds every band cell (a cell can't
-    // hold more rows than there are signatures) — corpora under the
-    // grid threshold skip the hot-cell gate job entirely.
-    val nSigs = sigs.count()
-    val bandCols = simHashBandCells(nBands, width, col("simhash"))
-    val banded = sigs
-      .select(col(idCol), col("simhash"), explode(array(bandCols: _*)).as("__bb"))
-      .select(col(idCol), col("simhash"),
-        col("__bb.band").as("__band"), col("__bb.bk").as("__bk"))
-    // 10-bit bands (1,024 values each): hot band cells are guaranteed
-    // past ~10⁶ docs, so the candidate join runs through the
-    // count-gated salt grid (see [[gridSelfJoin]] — identical pair
-    // multiset, verify work spread over the grid).
-    val result = gridSelfJoin(banded, Seq("__band", "__bk"),
+  /** The SimHash near-dup miner all three variants share: persist the
+    * signature table `sigs` (id, shardCols..., simhash) and count it —
+    * the count materializes the cache AND bounds every band cell (a cell
+    * can't hold more rows than there are signatures), so corpora under
+    * the grid threshold skip the hot-cell gate job entirely. Then band
+    * the signature into `nBands` cells of `width` bits (the cell value
+    * named `bandKey`), self-join on (shardCols, band, value) through the
+    * count-gated salt grid of [[gridSelfJoin]] (identical pair multiset,
+    * verify work spread over the grid), and keep the pairs whose
+    * `distance` is within `maxDist`.
+    *
+    * The Σ n_v² ≈ bands·n²/2^width candidate count is the operator's
+    * distance-`maxDist` recall guarantee (pigeonhole: a pair within
+    * maxDist agrees on at least one full band) and stays — the band
+    * structure cannot grow with the corpus (SCALING.md); what must NOT
+    * stay is every hot band value's m² verifies landing on one reducer.
+    */
+  private def simHashNearPairs(
+      sigs: DataFrame, idCol: String, shardCols: Seq[String],
+      nBands: Int, width: Int, bandKey: String, maxDist: Int,
+      gridThreshold: Int, distance: Column): DataFrame = {
+    val cached = sigs.persist()
+    val nSigs = cached.count()
+    val banded = explodeBands(cached, (idCol +: shardCols) :+ "simhash",
+      simHashBandCells(nBands, width, col("simhash")), "bk", bandKey)
+    val result = gridSelfJoin(banded, shardCols ++ Seq("__band", bandKey),
         Seq(idCol -> "id_a", "simhash" -> "__sig_a"),
         Seq(idCol -> "id_b", "simhash" -> "__sig_b"),
         gridThreshold, maxCellBound = Some(nSigs))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming",
-        bit_count(col("__sig_a").bitwiseXOR(col("__sig_b"))).cast("long"))
+      .withColumn("hamming", distance)
       .filter(col("hamming") <= maxDist)
       .select("id_a", "id_b", "hamming")
       .dropDuplicates("id_a", "id_b")
-    withCleanup(result, Seq(sigs))
+    withCleanup(result, Seq(cached))
   }
+
+  private def sigHamming: Column =
+    bit_count(col("__sig_a").bitwiseXOR(col("__sig_b")))
+
+  /** The portable miner within (shardCols...): 6×10-bit bands of the
+    * 60-bit signature, distance ≤ 5. 10-bit bands (1,024 values each)
+    * make hot band cells certain past ~10⁶ docs.
+    */
+  private def portableSimHashPairs(
+      docs: DataFrame, idCol: String, textCol: String,
+      shardCols: Seq[String], gridThreshold: Int): DataFrame =
+    simHashNearPairs(
+      portableSimHashSignaturesKeyed(docs, idCol +: shardCols, textCol),
+      idCol, shardCols, nBands = 6, width = 10, bandKey = "__bk",
+      maxDist = 5, gridThreshold, sigHamming.cast("long"))
+
+  /** Oracle-checkable SimHash: 60-bit signatures from the md5-derived
+    * token hash (the 60 bits of [[portableBaseHash]] BEFORE the mod-P
+    * reduction), banded 6×10 bits for Hamming distance ≤ 5. Same
+    * pigeonhole guarantee as the 64-bit variant; every step computable
+    * bit-identically in DuckDB.
+    *
+    * EAGER: returns a persisted pair frame the caller owns —
+    * `unpersist()` it when done (see [[withCleanup]]).
+    */
+  def portableSimHashNearDuplicates(
+      docs: DataFrame, idCol: String, textCol: String,
+      gridThreshold: Int = defaultGridThreshold): DataFrame =
+    portableSimHashPairs(docs, idCol, textCol, Nil, gridThreshold)
 
   /** The 100-TB shape of the portable SimHash miner: near-dup pairs
     * WITHIN each shard of a caller-chosen domain column (source, day,
@@ -906,31 +947,8 @@ object Dedup {
     */
   def portableSimHashNearDuplicatesSharded(
       docs: DataFrame, idCol: String, textCol: String, shardCol: String,
-      gridThreshold: Int = defaultGridThreshold): DataFrame = {
-    val nBands = 6
-    val width = 10
-    val maxDist = nBands - 1
-    val sigs = portableSimHashSignaturesKeyed(
-      docs, Seq(idCol, shardCol), textCol).persist()
-    val nSigs = sigs.count()
-    val bandCols = simHashBandCells(nBands, width, col("simhash"))
-    val banded = sigs
-      .select(col(idCol), col(shardCol), col("simhash"),
-        explode(array(bandCols: _*)).as("__bb"))
-      .select(col(idCol), col(shardCol), col("simhash"),
-        col("__bb.band").as("__band"), col("__bb.bk").as("__bk"))
-    val result = gridSelfJoin(banded, Seq(shardCol, "__band", "__bk"),
-        Seq(idCol -> "id_a", "simhash" -> "__sig_a"),
-        Seq(idCol -> "id_b", "simhash" -> "__sig_b"),
-        gridThreshold, maxCellBound = Some(nSigs))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming",
-        bit_count(col("__sig_a").bitwiseXOR(col("__sig_b"))).cast("long"))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
-    withCleanup(result, Seq(sigs))
-  }
+      gridThreshold: Int = defaultGridThreshold): DataFrame =
+    portableSimHashPairs(docs, idCol, textCol, Seq(shardCol), gridThreshold)
 
   /** The corpus-scale near-dup CASCADE, committed as one function
     * (VERDICT r17 #2 — previously a scaladoc recipe every deployment
@@ -985,21 +1003,11 @@ object Dedup {
     * the sign of Σ_tokens (±1 by bit i of xxhash64(token)). Built from
     * 64 conditional-sum aggregations — one shuffle keyed on the doc id.
     */
-  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val exploded = docs.select(
-      col(idCol),
-      explode(split(trim(lower(col(textCol))), " ")).as("__tok"))
-      .withColumn("__h", xxhash64(col("__tok")))
-    val bitSums = (0 until 64).map { i =>
-      sum(when(col("__h").bitwiseAND(lit(1L << i)) =!= 0, 1).otherwise(-1))
-        .as(s"__b$i")
-    }
-    val sums = exploded.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until 64).map { i =>
-      when(col(s"__b$i") > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    sums.select(col(idCol), sig.as("simhash"))
-  }
+  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    simHashTable(docs, Seq(idCol), textCol,
+      "__h", xxhash64(col("__tok")),
+      (0 until 64).map(i => col("__h").bitwiseAND(lit(1L << i)) =!= 0),
+      _.bitwiseOR(_))
 
   /** SimHash near-dup pairs within Hamming distance `maxDist`. The 64
     * bits are banded into `maxDist + 1` bands: any pair within distance
@@ -1025,38 +1033,10 @@ object Dedup {
   def simHashNearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3,
-      gridThreshold: Int = defaultGridThreshold): DataFrame = {
-    val nBands = maxDist + 1
-    val width = 64 / nBands
-    // Both join sides derive from the signature table — persist it so
-    // the 64-column aggregate runs once (8 bytes/doc: tiny at any scale).
-    val sigs = simHash(docs, idCol, textCol).persist()
-    // Materializes the cache AND bounds every band cell (a cell can't
-    // hold more rows than there are signatures) — corpora under the
-    // grid threshold skip the hot-cell gate job entirely.
-    val nSigs = sigs.count()
-    val bandCols = simHashBandCells(nBands, width, col("simhash"))
-    val banded = sigs
-      .select(col(idCol), col("simhash"),
-        explode(array(bandCols: _*)).as("__bb"))
-      .select(col(idCol), col("simhash"),
-        col("__bb.band").as("__band"), col("__bb.bk").as("__bits"))
-    // The Σ n_v² ≈ bands·n²/2^width candidate count is the operator's
-    // distance-`maxDist` recall guarantee and stays (the band structure
-    // cannot grow with the corpus — SCALING.md); what must NOT stay is
-    // every hot band value's m² verifies landing on one reducer, so the
-    // candidate join runs through the count-gated salt grid.
-    val result = gridSelfJoin(banded, Seq("__band", "__bits"),
-        Seq(idCol -> "id_a", "simhash" -> "__sig_a"),
-        Seq(idCol -> "id_b", "simhash" -> "__sig_b"),
-        gridThreshold, maxCellBound = Some(nSigs))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("__sig_a").bitwiseXOR(col("__sig_b"))))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
-    withCleanup(result, Seq(sigs))
-  }
+      gridThreshold: Int = defaultGridThreshold): DataFrame =
+    simHashNearPairs(simHash(docs, idCol, textCol), idCol, Nil,
+      nBands = maxDist + 1, width = 64 / (maxDist + 1), bandKey = "__bits",
+      maxDist, gridThreshold, sigHamming)
 
   /** LSH banding S-curves: P(candidate | jaccard = s) = 1 − (1 − s^r)^b
     * for each (bands b, rows-per-band r) configuration, tabulated over
@@ -1267,19 +1247,21 @@ object Dedup {
   def embeddingNearDuplicates(
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, queryMax: Long): DataFrame = {
-    import graft.functions.VectorExprs.{dot => vdot}
-    val a = emb.filter(col(idCol) < queryMax).select(
-      col(idCol).as("id_a"), col(vecCol).as("__va"))
-      .withColumn("__na", sqrt(vdot(col("__va"), col("__va"))))
-    val b = emb.select(
-      col(idCol).as("id_b"), col(vecCol).as("__vb"))
-      .withColumn("__nb", sqrt(vdot(col("__vb"), col("__vb"))))
-    b.join(broadcast(a), col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        round(vdot(col("__va"), col("__vb")) / (col("__na") * col("__nb")), 6))
+    val a = Similarity.withNorm(emb.filter(col(idCol) < queryMax).select(
+      col(idCol).as("id_a"), col(vecCol).as("__va")), "__va", "__na")
+    val b = Similarity.withNorm(emb.select(
+      col(idCol).as("id_b"), col(vecCol).as("__vb")), "__vb", "__nb")
+    cosinePairs(b.join(broadcast(a), col("id_a") < col("id_b")), threshold)
+  }
+
+  /** (id_a, id_b, cosine) of the joined embedding pairs whose 6-dp
+    * cosine reaches `threshold`.
+    */
+  private def cosinePairs(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("cosine", Similarity.pairCosine("__va", "__na", "__vb", "__nb"))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-  }
 
   /** Embedding-cosine near-dup with BOTH sides unbounded: bucket every
     * vector with [[Similarity.lshBucket]] (sign-LSH — near-identical
@@ -1294,22 +1276,15 @@ object Dedup {
   def embeddingNearDuplicatesLsh(
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, dim: Int, bits: Int = 4): DataFrame = {
-    import graft.functions.VectorExprs.{dot => vdot}
     val bucketed = emb.select(
       col(idCol), col(vecCol),
       Similarity.lshBucket(col(vecCol), dim, bits).as("__bucket"))
-    val a = bucketed.select(col(idCol).as("id_a"),
-      col(vecCol).as("__va"), col("__bucket"))
-      .withColumn("__na", sqrt(vdot(col("__va"), col("__va"))))
-    val b = bucketed.select(col(idCol).as("id_b"),
-      col(vecCol).as("__vb"), col("__bucket"))
-      .withColumn("__nb", sqrt(vdot(col("__vb"), col("__vb"))))
-    a.join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        round(vdot(col("__va"), col("__vb")) / (col("__na") * col("__nb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    val a = Similarity.withNorm(bucketed.select(col(idCol).as("id_a"),
+      col(vecCol).as("__va"), col("__bucket")), "__va", "__na")
+    val b = Similarity.withNorm(bucketed.select(col(idCol).as("id_b"),
+      col(vecCol).as("__vb"), col("__bucket")), "__vb", "__nb")
+    cosinePairs(a.join(b, Seq("__bucket")).filter(col("id_a") < col("id_b")),
+      threshold)
   }
 
   // ---- Pair -> cluster collapse -------------------------------------
@@ -1699,11 +1674,9 @@ object Dedup {
   def semDeDup(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int, iters: Int, threshold: Double): DataFrame = {
-    import graft.functions.VectorExprs.{dot => vdot}
     val (_, assigned) = Embeddings.kmeansSpread(emb, idCol, vecCol, dim, k, iters)
-    val base = assigned
-      .select(col(idCol), col(vecCol), col("cluster"))
-      .withColumn("__nrm", sqrt(vdot(col(vecCol), col(vecCol))))
+    val base = Similarity.withNorm(
+      assigned.select(col(idCol), col(vecCol), col("cluster")), vecCol, "__nrm")
     // Single-eval discipline for the pair-join sides (r18 plan audit):
     // joining on the NULLABLE `cluster` column makes the planner infer
     // `isnotnull(cluster)` and push it below each side's Project, so
@@ -1737,8 +1710,7 @@ object Dedup {
     // (plans/r19/q_semdedup_smj_final_after.txt).
     a.join(b, col("cluster") === col("__cb") && col("__idb") < col("__ida"),
         "left")
-      .withColumn("__cos",
-        round(vdot(col("__va"), col("__vb")) / (col("__na") * col("__nb")), 6))
+      .withColumn("__cos", Similarity.pairCosine("__va", "__na", "__vb", "__nb"))
       .groupBy(col("__ida"), col("cluster"))
       .agg(max(col("__cos")).as("max_prior_sim"))
       .select(col("__ida").as(idCol),

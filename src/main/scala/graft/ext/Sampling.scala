@@ -166,7 +166,7 @@ object Sampling {
       .drop("cluster_rep")
     // EAGER: clusterPairs' labels cache has no caller-visible handle —
     // materialize the split and release it here.
-    graft.ext.Dedup.materializeAndRelease(
+    graft.ext.Dedup.withCleanup(
       splitAssign(keyed, "split_key", trainPct, valPct), Seq(comp))
   }
 

@@ -39,6 +39,58 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** `side` plus the L2 norm of its vector column `vec` as `norm` —
+    * computed once per ROW, so a pair loop over two sides is one
+    * codegen'd dot product per pair.
+    */
+  private[graft] def withNorm(
+      side: DataFrame, vec: String, norm: String): DataFrame =
+    side.withColumn(norm, sqrt(dot(col(vec), col(vec))))
+
+  /** The cosine of a joined pair of normed sides (vectors `va`/`vb`,
+    * norms `na`/`nb`): the oracle's dot/(‖a‖·‖b‖), rounded to 6 dp
+    * BEFORE any threshold or rank so decisions agree across engines.
+    */
+  private[graft] def pairCosine(
+      va: String, na: String, vb: String, nb: String): Column =
+    round(dot(col(va), col(vb)) / (col(na) * col(nb)), 6)
+
+  /** One side of a retrieval join: `cols` of `df`, the norm of its
+    * vector column `vec` as `norm`, zero-norm rows dropped — such a
+    * vector has no cosine direction: 0/0 = NaN and Spark ranks NaN
+    * ABOVE every real sim, so an all-zero embedding would poison rank 1
+    * of every query.
+    */
+  private def retrievalSide(df: DataFrame, vec: String, norm: String)(
+      cols: Column*): DataFrame =
+    withNorm(df.select(cols: _*), vec, norm).filter(col(norm) > 0)
+
+  private def querySide(df: DataFrame, cols: Column*): DataFrame =
+    retrievalSide(df, "__qv", "__qn")(cols: _*)
+
+  private def candidateSide(df: DataFrame, cols: Column*): DataFrame =
+    retrievalSide(df, "__cv", "__cn")(cols: _*)
+
+  private def notSelf: Column = col("query_id") =!= col("neighbor_id")
+
+  /** The shared tail of every cosine retriever: 6-dp cosine of each
+    * joined (query, candidate) row of `pairs`, then the per-query top-k
+    * by (sim desc, neighbor_id asc) — similarities rounded BEFORE
+    * ranking, the id as tiebreaker, so ranks stay deterministic across
+    * engines and partitionings; the rank filter plans as a
+    * WindowGroupLimit (map-side k-prune), never a global sort. Output:
+    * (query_id, neighbor_id, carried..., sim, rnk).
+    */
+  private def rankTopK(pairs: DataFrame, k: Int, carried: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    pairs
+      .withColumn("sim", pairCosine("__qv", "__qn", "__cv", "__cn"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select("query_id", ("neighbor_id" +: carried) ++ Seq("sim", "rnk"): _*)
+  }
+
   /** Per-label centroid in LONG format: one row per (label, dimension)
     * with the mean component value — class prototypes for
     * nearest-centroid classification, cluster drift monitoring, or IVF
@@ -110,30 +162,11 @@ object Similarity {
       maxQueries: Int = 1 << 16): DataFrame = {
     requireBoundedSide(queries, maxQueries,
       "bruteForceTopK query side", "lshBucketedTopK/ivfTopK")
-    // Norms are computed once per ROW (not per pair); the pair loop is
-    // one codegen'd dot product. Arithmetic stays identical to the
-    // oracle formula dot/(sqrt(qq)*sqrt(cc)).
-    val q = queries.select(
+    val q = querySide(queries,
       col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-      // zero-norm vectors have no cosine direction: 0/0 = NaN and
-      // Spark ranks NaN ABOVE every real sim, so an all-zero embedding
-      // would poison rank 1 of every query — exclude them.
-      .filter(col("__qn") > 0)
-    val c = candidates.select(
+    val c = candidateSide(candidates,
       col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
-      .filter(col("__cn") > 0)
-    val pairs = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim",
-        round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "sim", "rnk")
+    rankTopK(c.crossJoin(broadcast(q)).filter(notSelf), k)
   }
 
   /** Recall@k of an approximate retriever against exact ground truth
@@ -174,29 +207,14 @@ object Similarity {
     val bounded = emb.filter(col(idCol) < queryMax)
     requireBoundedSide(bounded, maxQueries,
       "hardNegatives query side", "lshBucket-prefiltered candidates")
-    val q = bounded.select(
+    val q = querySide(bounded,
       col(idCol).as("query_id"), col(labelCol).as("__ql"),
       col(vecCol).as("__qv"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-      // zero-norm vectors have no cosine direction: 0/0 = NaN and
-      // Spark ranks NaN ABOVE every real sim, so an all-zero embedding
-      // would poison rank 1 of every query — exclude them.
-      .filter(col("__qn") > 0)
-    val c = emb.select(
+    val c = candidateSide(emb,
       col(idCol).as("neighbor_id"), col(labelCol).as("neg_label"),
       col(vecCol).as("__cv"))
-      .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
-      .filter(col("__cn") > 0)
-    val pairs = c.crossJoin(broadcast(q))
-      .filter(col("neg_label") =!= col("__ql"))
-      .withColumn("sim",
-        round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "neg_label", "sim", "rnk")
+    rankTopK(c.crossJoin(broadcast(q)).filter(col("neg_label") =!= col("__ql")),
+      k, "neg_label")
   }
 
   /** Deterministic pseudo-random unit-free hyperplanes for sign-LSH:
@@ -252,29 +270,13 @@ object Similarity {
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       dim: Int, bits: Int = 8): DataFrame = {
-    val q = queries.select(
+    val q = querySide(queries,
       col(idCol).as("query_id"), col(vecCol).as("__qv"),
       lshBucket(col(vecCol), dim, bits).as("__bucket"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-      // zero-norm vectors have no cosine direction: 0/0 = NaN and
-      // Spark ranks NaN ABOVE every real sim, so an all-zero embedding
-      // would poison rank 1 of every query — exclude them.
-      .filter(col("__qn") > 0)
-    val c = candidates.select(
+    val c = candidateSide(candidates,
       col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       lshBucket(col(vecCol), dim, bits).as("__bucket"))
-      .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
-      .filter(col("__cn") > 0)
-    val pairs = c.join(q, Seq("__bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim",
-        round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "sim", "rnk")
+    rankTopK(c.join(q, Seq("__bucket")).filter(notSelf), k)
   }
 
   /** IVF-Flat ANN top-k.
@@ -469,10 +471,8 @@ object Similarity {
   private[graft] def ivfAssign(
       candidates: DataFrame, idCol: String, vecCol: String,
       centroids: Array[(Int, Array[Double])]): DataFrame =
-    candidates.select(
+    candidateSide(candidates,
       col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
-      .filter(col("__cn") > 0)
       // coalesce(…, -1): the assignment feeds an equi-join key, and a
       // NULLABLE key makes the join infer `isnotnull(<assignment>)` —
       // which the optimizer pushes into the Filter BELOW the Project,
@@ -499,13 +499,8 @@ object Similarity {
       probeListsCol(centroids, vec, vecNorm, n, useKernel)
 
     val c = ivfAssign(candidates, idCol, vecCol, centroids)
-    val q = queries.select(
+    val q = querySide(queries,
       col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-      // zero-norm vectors have no cosine direction: 0/0 = NaN and
-      // Spark ranks NaN ABOVE every real sim, so an all-zero embedding
-      // would poison rank 1 of every query — exclude them.
-      .filter(col("__qn") > 0)
       .withColumn("__list",
         // probes are capped at the CENTROID count: element_at past the
         // ranked array's end is null (non-ANSI) — null probe lists
@@ -513,26 +508,7 @@ object Similarity {
         // — or an INVALID_ARRAY_INDEX error under ANSI.
         explode(probeLists(col("__qv"), col("__qn"),
           math.min(nprobe, centroids.length))))
-    listJoinTopK(c, q, k)
-  }
-
-  /** The shared tail of every IVF search: equi-join assigned
-    * candidates with exploded query probes on the list id, exact
-    * 6-dp cosine re-rank, per-query top-k. Extracted verbatim from
-    * [[ivfSearch]] (identical Columns → identical plans for the
-    * frozen paths) so the two-level path below reuses it.
-    */
-  private def listJoinTopK(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val pairs = c.join(q, Seq("__list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim",
-        round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "sim", "rnk")
+    rankTopK(c.join(q, Seq("__list")).filter(notSelf), k)
   }
 
   /** Super-centroid count of the two-level quantizer: the smallest
@@ -587,15 +563,12 @@ object Similarity {
     val index = candidates.sparkSession.sparkContext.broadcast(
       graft.functions.TwoLevelIndex.build(seeds, superBound(nlist)))
     val c = ivfAssign2(candidates, idCol, vecCol, index)
-    val q = queries.select(
+    val q = querySide(queries,
       col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-      // zero-norm guard — same reason as ivfSearch.
-      .filter(col("__qn") > 0)
       .withColumn("__list",
         explode(VectorExprs.topCentroidsTwoLevel(
           col("__qv"), index, math.min(nprobe, seeds.length), superProbe)))
-    listJoinTopK(c, q, k)
+    rankTopK(c.join(q, Seq("__list")).filter(notSelf), k)
   }
 
   /** Two-level assignment frame ([[ivfAssign]]'s shape for the
@@ -607,10 +580,8 @@ object Similarity {
       candidates: DataFrame, idCol: String, vecCol: String,
       index: org.apache.spark.broadcast.Broadcast[
         graft.functions.TwoLevelIndex]): DataFrame =
-    candidates.select(
+    candidateSide(candidates,
       col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
-      .filter(col("__cn") > 0)
       // same coalesce(…, -1) single-eval discipline as [[ivfAssign]]
       .withColumn("__list",
         coalesce(

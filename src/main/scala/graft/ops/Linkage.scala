@@ -124,7 +124,7 @@ object Linkage {
     } :+ count(lit(1)).as("n_members")
     // EAGER: clusterPairs' labels cache has no caller-visible handle —
     // materialize the golden records and release it here.
-    graft.ext.Dedup.materializeAndRelease(
+    graft.ext.Dedup.withCleanup(
       keyed.groupBy(col("entity_id")).agg(aggs.head, aggs.tail: _*)
         .select(
           col("entity_id") +: col("n_members") +: fields.map(col): _*),

@@ -50,26 +50,12 @@ trait BatchSink {
 final class ParquetSink(rawDir: String, aggDir: String) extends BatchSink {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[ParquetSink])
 
+  /** One file is a one-file group commit: [[writeAll]] with the file's
+    * name as the `file_name` lineage column.
+    */
   override def write(fileName: String, raw: DataFrame, agg: DataFrame): Boolean =
-    try {
-      // Writer-scoped option, NOT spark.conf.set: mutating the
-      // session-global partitionOverwriteMode would silently change
-      // every later partitioned overwrite in the session (stale
-      // partitions surviving where the caller expected a full wipe).
-      raw.withColumn("file_name", lit(fileName))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("file_name").parquet(rawDir)
-      agg.withColumn("file_name", lit(fileName))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("file_name").parquet(aggDir)
-      true
-    } catch {
-      case e: Exception =>
-        log.error(s"Parquet sink write failed for '$fileName'", e)
-        false
-    }
+    writeAll(Seq(fileName), raw.withColumn("file_name", lit(fileName)),
+      agg.withColumn("file_name", lit(fileName))).isEmpty
 
   /** Group-commit override: ONE dynamic-partition-overwrite write per
     * table for the whole batch, regardless of file count — the lake
@@ -82,6 +68,10 @@ final class ParquetSink(rawDir: String, aggDir: String) extends BatchSink {
   override def writeAll(fileNames: Seq[String], raw: DataFrame,
       agg: DataFrame): Set[String] =
     try {
+      // Writer-scoped option, NOT spark.conf.set: mutating the
+      // session-global partitionOverwriteMode would silently change
+      // every later partitioned overwrite in the session (stale
+      // partitions surviving where the caller expected a full wipe).
       raw.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("file_name").parquet(rawDir)

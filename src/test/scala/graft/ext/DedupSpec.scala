@@ -245,6 +245,53 @@ class DedupSpec extends SparkSpec {
     assert(!got.exists(p => (p._1, p._2) == (0L, 2L)))
   }
 
+  test("simhash miners return EVERY pair a brute-force scan finds within the bound") {
+    // Recall, not only soundness: banding into maxDist+1 cells must find
+    // every pair within maxDist (pigeonhole), so each miner's output must
+    // equal an all-pairs bit_count(xor) <= maxDist scan over the miner's
+    // own signature table. Real documents plus planted one-word edits;
+    // odd planted docs move to a shard of their own, so the sharded
+    // miner has cross-shard pairs to leave out.
+    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"), col("source"))
+    val planted = real.filter(col("doc_id") < 40).select(
+      (col("doc_id") + 1000).as("doc_id"),
+      concat(col("text"), lit(" planted")).as("text"),
+      when(col("doc_id") % 2 === 0, col("source"))
+        .otherwise(lit("planted")).as("source"))
+    val corpus = real.unionByName(planted)
+    def allPairsWithin(sigs: org.apache.spark.sql.DataFrame, maxDist: Int) =
+      sigs.select(col("doc_id").as("id_a"), col("simhash").as("__sa"))
+        .join(sigs.select(col("doc_id").as("id_b"), col("simhash").as("__sb")),
+          col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long").as("h"))
+        .filter(col("h") <= maxDist)
+        .as[(Long, Long, Long)].collect().toSet
+    def mined(pairs: org.apache.spark.sql.DataFrame) =
+      try pairs.select(col("id_a"), col("id_b"), col("hamming").cast("long"))
+        .as[(Long, Long, Long)].collect().toSet
+      finally pairs.unpersist()
+
+    val within3 = allPairsWithin(Dedup.simHash(corpus, "doc_id", "text"), 3)
+    assert(within3.exists(_._3 > 0))
+    assert(mined(Dedup.simHashNearDuplicates(
+      corpus, "doc_id", "text", maxDist = 3)) === within3)
+
+    val within5 = allPairsWithin(
+      Dedup.portableSimHashSignatures(corpus, "doc_id", "text"), 5)
+    assert(within5.exists(_._3 > 0))
+    assert(mined(Dedup.portableSimHashNearDuplicates(
+      corpus, "doc_id", "text")) === within5)
+
+    val shardOf = corpus.select("doc_id", "source")
+      .as[(Long, String)].collect().toMap
+    val sameShard = within5.filter(p => shardOf(p._1) == shardOf(p._2))
+    assert(sameShard.nonEmpty && sameShard.size < within5.size)
+    assert(mined(Dedup.portableSimHashNearDuplicatesSharded(
+      corpus, "doc_id", "text", "source")) === sameShard)
+  }
+
   test("nearDupsSharded cascade: surviving corpus equals the unscoped pipeline's") {
     // Same fixture as the sharded-contract test: near-dups within AND
     // across shards. The committed cascade (sharded SimHash →

@@ -2,9 +2,8 @@ package graft.tools
 
 // Band/variant cell-count census — the count-derived (host-noise-
 // immune) diagnostic behind the grid-gate tuning docs in SCALING.md:
-// run it against a corpus dir to see what a given
-// SPARK_GRAFT_GRID_THRESHOLD would catch before re-gating a
-// deployment. Test scope on purpose: it is a dev/ops probe, not a
+// run it against a corpus dir to see what a given `gridThreshold`
+// argument would catch before re-gating a deployment. Test scope on purpose: it is a dev/ops probe, not a
 // library code path, and its one driver collect is a single
 // aggregated summary row per table.
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -52,7 +51,7 @@ object CellDiag {
       return
     }
     // The committed recipe reads straight off the census: deployments
-    // see the recommended SPARK_GRAFT_GRID_THRESHOLD on the same line
+    // see the recommended `gridThreshold` argument on the same line
     // as the statistics that justify it (SCALING.md r16 section).
     val rec = Dedup.recommendedGridThreshold(
       d.getLong(1), BigInt(d.getLong(3)))
