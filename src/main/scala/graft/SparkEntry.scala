@@ -153,12 +153,10 @@ object SparkEntry {
           valueError(col("line_no")).as("row_errors"))),
 
     // F3: strict per-file (group) verdict with first-error reason.
-    "q_strict_file_flag" -> ((s, dir) => {
-      val validated = eventsWithLineNo(s, dir)
-        .withColumn("is_valid", valueValid)
-        .withColumn("row_errors", valueError(col("line_no")))
-      Validate.strictVerdicts(validated, "event_type")
-    }),
+    "q_strict_file_flag" -> ((s, dir) =>
+      Validate.strictVerdicts(
+        eventsWithLineNo(s, dir).withColumn("is_valid", valueValid),
+        "event_type", col("line_no"), (bad, _) => bad, valueError)),
 
     // F4: rows of all-valid (user, event_type) groups only.
     "q_route_valid_groups" -> ((s, dir) =>

@@ -13,95 +13,96 @@ import graft.config.{PipelineConf, ValueRange}
   * (`pipeline.py:161-165`). Here validation is a single vectorized pass
   * of Column expressions — one `when`-chain per field — so all five
   * predicates run inside whole-stage codegen in one scan; the per-file
-  * verdict is a hash aggregation over the same pass, not a second read.
+  * verdict is one aggregation over the same pass, not a second read, and
+  * the error string is built only for each file's first invalid row.
   *
   * Error strings reproduce the reference byte-for-byte (format evidence:
   * `quarantine/quarantine_log.txt:2-5`, code `pipeline.py:114-166`).
   */
 object Validate {
 
-  /** `Row {n}: 'sensor_id' is null.` (`pipeline.py:117`) */
-  def keyError(field: String, raw: Column, rowNum: Column): Column =
-    when(raw.isNull,
-      concat(lit(s"Row "), rowNum, lit(s": '$field' is null.")))
+  /** `'sensor_id' is null.` (`pipeline.py:117`) */
+  def keyError(field: String, raw: Column): Column =
+    when(raw.isNull, lit(s"'$field' is null."))
 
   /** Timestamp check (`pipeline.py:120-126`): null/empty vs unparsable. */
-  def timestampError(field: String, raw: Column, rowNum: Column): Column =
-    when(raw.isNull,
-      concat(lit("Row "), rowNum, lit(s": '$field' string is null/empty.")))
+  def timestampError(field: String, raw: Column): Column =
+    when(raw.isNull, lit(s"'$field' string is null/empty."))
       .when(Cleanse.tryTimestamp(raw).isNull,
-        concat(lit("Row "), rowNum,
-          lit(s": '$field' ('"), raw, lit("') is unparsable.")))
+        concat(lit(s"'$field' ('"), raw, lit("') is unparsable.")))
 
   /** Numeric check (`pipeline.py:129-159`): null vs non-numeric vs
     * out-of-range, in that order. The out-of-range message renders the
     * PARSED value (reference prints `float(raw)`, not the raw string).
     */
-  def numericError(
-      field: String, raw: Column, range: ValueRange, rowNum: Column): Column = {
+  def numericError(field: String, raw: Column, range: ValueRange): Column = {
     val parsed = Cleanse.tryDouble(raw)
-    when(raw.isNull,
-      concat(lit("Row "), rowNum, lit(s": '$field' is null.")))
+    when(raw.isNull, lit(s"'$field' is null."))
       .when(parsed.isNull,
-        concat(lit("Row "), rowNum,
-          lit(s": '$field' ('"), raw, lit("') is not a valid number.")))
+        concat(lit(s"'$field' ('"), raw, lit("') is not a valid number.")))
       .when(!parsed.between(range.lo, range.hi),
-        concat(lit("Row "), rowNum, lit(s": '$field' ("),
-          parsed.cast("string"),
+        concat(lit(s"'$field' ("), parsed.cast("string"),
           lit(s") out of range [${range.lo}, ${range.hi}].")))
   }
 
-  /** All five field checks in reference order (`pipeline.py:114-159`). */
-  def fieldErrors(conf: PipelineConf, rowNum: Column): Seq[Column] = Seq(
-    keyError("sensor_id", col("sensor_id"), rowNum),
-    timestampError("timestamp", col("timestamp"), rowNum),
-    numericError("temperature", col("temperature"), conf.tempRange, rowNum),
-    numericError("humidity", col("humidity"), conf.humidityRange, rowNum),
-    numericError("pressure", col("pressure"), conf.pressureRange, rowNum))
+  /** All five field checks in reference order (`pipeline.py:114-159`),
+    * each null when its field is valid.
+    */
+  def fieldErrors(conf: PipelineConf): Seq[Column] = Seq(
+    keyError("sensor_id", col("sensor_id")),
+    timestampError("timestamp", col("timestamp")),
+    numericError("temperature", col("temperature"), conf.tempRange),
+    numericError("humidity", col("humidity"), conf.humidityRange),
+    numericError("pressure", col("pressure"), conf.pressureRange))
 
-  /** `"; "`-joined row error string, null when the row is valid. */
+  /** `"; "`-joined row error string, each error prefixed `Row {n}: `;
+    * null when the row is valid. `rowNum` is the CSV line, header = 1
+    * (the reference's `index+2`, `pipeline.py:117`).
+    */
   def rowErrors(conf: PipelineConf, rowNum: Column): Column = {
-    val arr = array_compact(array(fieldErrors(conf, rowNum): _*))
+    val prefix = concat(lit("Row "), rowNum, lit(": "))
+    val arr = array_compact(array(fieldErrors(conf).map(concat(prefix, _)): _*))
     when(size(arr) > 0, array_join(arr, "; "))
   }
 
-  /** Adds `row_errors` and `is_valid` (F1: no field check failed) to an
-    * all-string sensor frame that already carries a deterministic
-    * 1-based data row number in `rowNumCol` (CSV line = rowNum + 1,
-    * header is line 1 — the reference's `index+2`, `pipeline.py:117`).
+  /** Adds `is_valid` (F1: no field check failed) to an all-string
+    * sensor frame. No message is built per row: `strictVerdicts` renders
+    * the first invalid row's errors once per group.
     */
-  def withValidation(
-      df: DataFrame, conf: PipelineConf, rowNumCol: String): DataFrame = {
-    val lineNo = col(rowNumCol) + lit(1) // CSV line number incl. header
-    df.withColumn("row_errors", rowErrors(conf, lineNo))
-      .withColumn("is_valid", col("row_errors").isNull)
-  }
+  def withValidation(df: DataFrame, conf: PipelineConf): DataFrame =
+    df.withColumn("is_valid", fieldErrors(conf).map(_.isNull).reduce(_ && _))
 
-  /** F3: strict per-file verdict. One row per file: row/invalid counts,
-    * clean flag, and the reference's first-error reason string
-    * `"Validation failed at row {N}: {errors}"` (`pipeline.py:164`).
-    * Runs as a single hash aggregation keyed on the file column.
+  /** F3: strict per-group verdict over a frame carrying `is_valid`. One
+    * row per group: row/invalid counts, `first_bad_row`, the reference's
+    * reason `"Validation failed at row {N}: {errors}"` (`pipeline.py:164`)
+    * and the clean flag.
     *
-    * `rowNumCol` must be the same column `withValidation` was given —
-    * it was previously hardcoded to "row_num" while the producer was
-    * parameterized, an implicit contract that broke (or silently
-    * misnumbered first_error) for any other column name.
+    * One aggregation keyed on `groupCol`: the group's first invalid
+    * row in `ord` order rides it whole (`min_by`), so the reason is built
+    * once per group, over that row's own columns. There `line(ord,
+    * least ord of the group)` gives its CSV line N and `errors(N)` its
+    * error string.
     */
   def strictVerdicts(
-      validated: DataFrame, fileCol: String,
-      rowNumCol: String = "row_num"): DataFrame = {
-    val lineNo = col(rowNumCol) + lit(1)
+      validated: DataFrame, groupCol: String, ord: Column,
+      line: (Column, Column) => Column, errors: Column => Column): DataFrame = {
+    val bad = when(!col("is_valid"), ord)
+    val fields = validated.columns.filter(_ != groupCol).map(col)
+    val n = col("first_bad_row")
     validated
-      .groupBy(col(fileCol))
+      .groupBy(col(groupCol))
       .agg(
         count(lit(1)).as("n_rows"),
         count(when(!col("is_valid"), lit(1))).as("n_invalid"),
-        min(when(!col("is_valid"), lineNo)).as("first_bad_row"),
-        min_by(
-          concat(lit("Validation failed at row "), lineNo, lit(": "),
-            col("row_errors")),
-          when(!col("is_valid"), lineNo)).as("first_error"))
-      .withColumn("is_clean", col("n_invalid") === 0)
+        min(ord).as("__least"),
+        min_by(struct(fields: _*), bad).as("__bad"))
+      .select(col(groupCol), col("n_rows"), col("n_invalid"), col("__least"),
+        col("__bad.*"))
+      .withColumn("first_bad_row", line(ord, col("__least")))
+      .select(col(groupCol), col("n_rows"), col("n_invalid"), n,
+        concat(lit("Validation failed at row "), n, lit(": "), errors(n))
+          .as("first_error"),
+        (col("n_invalid") === 0).as("is_clean"))
   }
 
   /** F4: group-gated routing — keep only rows whose whole file (group)

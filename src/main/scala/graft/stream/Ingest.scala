@@ -3,7 +3,6 @@ package graft.stream
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.PipelineConf
@@ -38,8 +37,10 @@ import graft.sink.{BatchSink, FsRouting}
   *
   * Scale note: each file is read whole, into one input partition (the
   * file is the reference's atomic unit), so parallelism is files per
-  * micro-batch. Validation is one distributed pass over the whole
-  * micro-batch, and the commit is ONE group write for every clean file
+  * micro-batch. One distributed pass lists, validates and decides each
+  * file: its verdict aggregate has one row per file that has rows, with
+  * the first invalid row's message built once per file, and the commit
+  * is ONE group write for every clean file
   * (`BatchSink.writeAll` — per-file idempotence preserved through the
   * `file_name` partition/lineage column, per-file transactions kept by
   * the JDBC dialect where the txn boundary IS the reference's K3
@@ -96,9 +97,11 @@ object Ingest {
     // V6: per-file header check (reference `pipeline.py:100-105`) — with
     // an explicit schema Spark's CSV reader matches columns by POSITION
     // and ignores header names, so the header must be classified here
-    // or bad data flows through silently. Three classes:
+    // or bad data flows through silently. Only the files the verdict
+    // rows name are classified, each in one of three classes:
     //   canonical  — exactly the expected columns in order: the
-    //                positional batch read is already correct;
+    //                positional batch read is already correct, so the
+    //                file takes its verdict;
     //   remappable — all required columns present but reordered or
     //                with extras: the POSITIONAL read has the wrong
     //                values under the wrong names (the reference's
@@ -107,28 +110,24 @@ object Ingest {
     //   bad        — required columns missing or header quoting
     //                malformed (tokens Spark's parser would not
     //                reproduce): quarantine.
-    val fileTokens: Map[String, Option[Either[String, Seq[String]]]] = batch
-      .select("__file").distinct().collect().map(_.getString(0))
-      .map(uri => uri -> headerTokens(FsRouting.toLocalPath(uri))).toMap
-    val headerBad: Map[String, String] = fileTokens.flatMap {
-      case (uri, Some(Left(reason))) => Some(uri -> reason)
-      case (uri, Some(Right(tokens))) =>
-        val missing = Schemas.sensorColumns.filterNot(tokens.toSet)
-        if (missing.isEmpty) None
-        else Some(uri ->
-          (s"Missing critical columns: ${missing.mkString(", ")}. " +
-            "Quarantining."))
-      case _ => None // unreadable/moved ⇒ let validation decide
-    }
-    val remappable: Seq[String] = fileTokens.collect {
-      case (uri, Some(Right(tokens)))
-        if !headerBad.contains(uri) && tokens != Schemas.sensorColumns =>
-        uri
-    }.toSeq
-    val excluded = headerBad.keys.toSeq ++ remappable
-    val batchOk =
-      if (excluded.isEmpty) batch
-      else batch.filter(!col("__file").isin(excluded: _*))
+    // `canonical` records the other two classes as it goes; the commit
+    // filter names canonical files only, so the cached rows of the
+    // others are never written.
+    val headerBad = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val remappable = scala.collection.mutable.ArrayBuffer.empty[String]
+    def canonical(uri: String): Boolean =
+      headerTokens(FsRouting.toLocalPath(uri)) match {
+        case Some(Right(tokens)) if tokens == Schemas.sensorColumns => true
+        case Some(Right(tokens)) =>
+          val missing = Schemas.sensorColumns.filterNot(tokens.toSet)
+          if (missing.isEmpty) remappable += uri
+          else headerBad += uri ->
+            (s"Missing critical columns: ${missing.mkString(", ")}. " +
+              "Quarantining.")
+          false
+        case Some(Left(reason)) => headerBad += uri -> reason; false
+        case None => true // unreadable/moved ⇒ let validation decide
+      }
 
     // Physical moves out of data/ are DEFERRED to the end of the
     // batch (None = processed/, Some(reason) = quarantine): any Spark
@@ -140,7 +139,7 @@ object Ingest {
     // so re-committing an already-committed file on replay is safe.
     val pendingMoves =
       scala.collection.mutable.ArrayBuffer.empty[(Path, Option[String])]
-    processValidated(conf, sink, batchOk, outcomes, pendingMoves)
+    processValidated(conf, sink, batch, outcomes, pendingMoves)(canonical)
 
     // Bad-header files quarantine through the same deferred-move
     // buffer (their outcomes/logs at decision time, the move LAST).
@@ -200,7 +199,8 @@ object Ingest {
               Some(reason), 0L)
             None
         }
-      mapped.foreach(processValidated(conf, sink, _, outcomes, pendingMoves))
+      mapped.foreach(
+        processValidated(conf, sink, _, outcomes, pendingMoves)(_ => true))
     }
 
     // All batch actions are done — execute the deferred moves. Each
@@ -236,34 +236,33 @@ object Ingest {
     outcomes.toSeq
   }
 
-  /** The shared validate→route core over a header-clean batch frame
-    * (positional or name-remapped — both arrive in canonical column
-    * order with string-first types).
+  /** The shared validate→route core over a batch frame in canonical
+    * column order with string-first types (positional or name-remapped).
+    * Its verdict rows list the frame's files, one per file with at least
+    * one row; only those that `route` accepts are routed and committed.
     */
   private def processValidated(
-      conf: PipelineConf, sink: BatchSink, batchOk: DataFrame,
+      conf: PipelineConf, sink: BatchSink, batch: DataFrame,
       outcomes: scala.collection.mutable.ArrayBuffer[FileOutcome],
-      pendingMoves: scala.collection.mutable.ArrayBuffer[(Path, Option[String])])
-      : Unit = {
-    // NA normalization (S1) then per-file line numbers: the window is
-    // partitioned per file — parallelism = files per batch, matching
-    // the reference's unit of work. __mono must be added HERE: inside
-    // foreachBatch the frame is a plain batch DF
+      pendingMoves: scala.collection.mutable.ArrayBuffer[(Path, Option[String])])(
+      route: String => Boolean): Unit = {
+    // NA normalization (S1), then validation. __mono must be added HERE:
+    // inside foreachBatch the frame is a plain batch DF
     // (monotonically_increasing_id is rejected on streaming plans).
-    // Every file is read whole into one input partition (`csvOptions`),
-    // so __mono follows record order within each file.
-    val cleaned = Schemas.sensorColumns.foldLeft(
-      batchOk.withColumn("__mono", monotonically_increasing_id()))((d, c) =>
-      d.withColumn(c, Cleanse.naNormalize(col(c))))
-    val w = Window.partitionBy(col("__file"))
-      .orderBy(col("__mono"))
-    val numbered = cleaned
-      .withColumn("row_num", row_number().over(w).cast("long"))
-    val validated = Validate.withValidation(numbered, conf, "row_num")
-      .persist()
+    // Every file is read whole, after the one before it in the same
+    // input partition (`csvOptions`), so __mono follows record order
+    // within each file and a record's CSV line is its __mono minus the
+    // file's least __mono, plus 2.
+    val validated = Validate.withValidation(
+      Schemas.sensorColumns.foldLeft(
+        batch.withColumn("__mono", monotonically_increasing_id()))((d, c) =>
+        d.withColumn(c, Cleanse.naNormalize(col(c)))), conf).persist()
     try {
-      val verdicts = Validate.strictVerdicts(validated, "__file")
+      val verdicts = Validate.strictVerdicts(validated, "__file",
+        col("__mono"), (bad, least) => bad - least + 2,
+        Validate.rowErrors(conf, _))
         .collect() // one row per file — driver-side routing decisions
+        .filter(v => route(v.getAs[String]("__file")))
 
       // Routing decisions stay per-file (quarantine, logs, outcomes);
       // the committable files then GROUP-COMMIT in one sink pass
@@ -435,12 +434,11 @@ object Ingest {
     * quarantined, or externally removed); a still-failing sink keeps
     * it for the next attempt.
     *
-    * `exclude` defers markers whose files the CURRENT micro-batch also
-    * lists: on a checkpoint replay the ledgered file is about to be
-    * re-driven by processBatch itself — re-driving it here first could
-    * commit + move it out from under the replayed batch's own scan
-    * (and double-drives it when the sink is still failing). Deferred
-    * markers simply wait for the next trigger.
+    * `exclude` defers markers for files the CURRENT micro-batch has
+    * just driven itself: a checkpoint replay re-lists a file whose sink
+    * failed on the last attempt, and re-driving it here would write it
+    * twice in one trigger. Deferred markers simply wait for the next
+    * trigger.
     */
   def retryPending(
       spark: SparkSession, conf: PipelineConf, sink: BatchSink,
@@ -599,24 +597,22 @@ object Ingest {
       .trigger(Trigger.ProcessingTime(s"${conf.monitorIntervalSec} seconds"))
       .option("checkpointLocation", conf.checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Ledgered retries ride each data-bearing trigger, oldest
-        // work first — the reference's next-scan ordering — EXCEPT
-        // markers for files the current batch itself lists (a replayed
-        // batch re-lists a file whose sink failed last attempt): those
-        // defer to processBatch, which is about to drive them anyway.
-        // The file list comes from the plan's FileIndex (driver-side,
-        // no scan). The row-less-file sweep runs LAST, after BOTH
-        // processBatch passes: it physically moves files, and a
-        // header-only file discovered in THIS trigger is listed in the
-        // current batch's scan — sweeping it from inside the retry
-        // pass (as processBatch itself once did) made the outer
-        // batch's own actions unreadable on replay.
-        val batchNames =
-          try batch.inputFiles
-            .map(u => FsRouting.toLocalPath(u).getFileName.toString).toSet
-          catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
-        onBatch(retryPending(spark, conf, sink, exclude = batchNames) ++
-          processBatch(conf, sink, batch) ++
+        // The batch's own files first, then the ledgered retries of
+        // each data-bearing trigger, EXCEPT markers for files the batch
+        // has just driven itself (a replayed batch re-lists a file
+        // whose sink failed last attempt): those wait for the next
+        // trigger, so no file is driven twice in one trigger. The file
+        // list is processBatch's outcomes — `batch.inputFiles` is empty
+        // here, as foreachBatch's plan carries no file relation. The
+        // row-less-file sweep runs LAST, after BOTH passes: it
+        // physically moves files, and a header-only file discovered in
+        // THIS trigger is listed in the current batch's scan —
+        // sweeping it from inside the retry pass (as processBatch
+        // itself once did) made the outer batch's own actions
+        // unreadable on replay.
+        val driven = processBatch(conf, sink, batch)
+        onBatch(driven ++
+          retryPending(spark, conf, sink, exclude = driven.map(_.file).toSet) ++
           sweepRowlessFiles(conf)); ()
       }
       .start()

@@ -62,10 +62,9 @@ class CollectAuditSpec extends AnyFunSuite {
       "limit(fbTerms) RM3 expansion terms"),
     "graft/stream/StreamQuality.scala" -> (2,
       "<= |checks| report rows per micro-batch (one aggregate pass)"),
-    "graft/stream/Ingest.scala" -> (2,
-      "one row per FILE in the micro-batch (distinct files, strict " +
-        "verdicts) — driver-side routing decisions are per-file by " +
-        "design"),
+    "graft/stream/Ingest.scala" -> (1,
+      "one verdict row per file in the micro-batch — driver-side " +
+        "routing decisions are per-file by design"),
     "graft/PlanAudit.scala" -> (1,
       "dev CLI only (GRAFT_EXPLAIN_RUN=1 materializes a query to " +
         "print its ADAPTIVE plan) — never a library code path"))

@@ -61,9 +61,10 @@ class FaultTaxonomyPropSpec extends SparkSpec {
     forAllSeeded(fileGen, 15) { case (rows, nBad) =>
       val df = rows.toDF("timestamp", "sensor_id", "temperature", "humidity", "pressure")
         .withColumn("row_num", monotonically_increasing_id() + 1)
-      val v = Validate.withValidation(df, conf, "row_num")
+      val v = Validate.withValidation(df, conf)
         .withColumn("file", lit("f"))
-      val verdict = Validate.strictVerdicts(v, "file")
+      val verdict = Validate.strictVerdicts(v, "file", col("row_num"),
+        (bad, _) => bad + 1, Validate.rowErrors(conf, _))
         .select("n_rows", "n_invalid", "is_clean")
         .as[(Long, Long, Boolean)].head()
       assert(verdict._1 === rows.size.toLong)
@@ -80,7 +81,7 @@ class FaultTaxonomyPropSpec extends SparkSpec {
       val df = rows.toDF("timestamp", "sensor_id", "temperature", "humidity", "pressure")
         .withColumn("row_num", monotonically_increasing_id() + 1)
       val clean = Cleanse.castTyped(
-        Validate.withValidation(df, conf, "row_num").filter(col("is_valid")))
+        Validate.withValidation(df, conf).filter(col("is_valid")))
       val agg = Aggregate.metricAggregates(
         clean, Seq("sensor_id"), Seq("temperature", "humidity", "pressure"),
         "timestamp")

@@ -21,7 +21,8 @@ class ValidateSpec extends SparkSpec {
       .withColumn("row_num",
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(monotonically_increasing_id())).cast("long"))
-    Validate.withValidation(df, conf, "row_num")
+    Validate.withValidation(df, conf)
+      .withColumn("row_errors", Validate.rowErrors(conf, col("row_num") + 1))
   }
 
   test("valid row passes all predicates") {
@@ -84,7 +85,8 @@ class ValidateSpec extends SparkSpec {
       ("2025-05-26 04:36:09", "S1", "abc", "0.95", "1014.74"),
       ("2025-05-26 04:36:10", "S1", null, "0.95", "1014.74"))
       .withColumn("file", lit("f1.csv"))
-    val v = Validate.strictVerdicts(df, "file").as[
+    val v = Validate.strictVerdicts(df, "file", col("row_num"),
+      (bad, _) => bad + 1, Validate.rowErrors(conf, _)).as[
       (String, Long, Long, Option[Long], Option[String], Boolean)].head()
     assert(v === (("f1.csv", 3L, 2L, Some(3L),
       Some("Validation failed at row 3: Row 3: 'temperature' ('abc') is not a valid number."),

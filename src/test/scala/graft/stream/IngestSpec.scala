@@ -61,6 +61,23 @@ class IngestSpec extends SparkSpec {
     events.synchronized(events.toSeq)
   }
 
+  /** Run `body` with the given session confs, restoring them after. */
+  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Run `body` with Spark's CSV split sizes shrunk so far that a
+    * line-mode read would cut even a few-KB file into several splits.
+    */
+  private def withTinySplits(body: => Unit): Unit =
+    withConfs("spark.sql.files.maxPartitionBytes" -> "2048",
+      "spark.sql.files.openCostInBytes" -> "256")(body)
+
   test("the reference flagship loop runs end-to-end against a REAL " +
     "database: watched dir -> validate -> route -> per-file Derby txn") {
     val root = tmp("graft_derby_e2e")
@@ -627,9 +644,13 @@ class IngestSpec extends SparkSpec {
     (1 to 5).foreach(i => writeCsv(dataDir, s"g$i.csv",
       s"2025-05-26 04:36:0$i,S$i,2$i.5,0.65,1013.25",
       s"2025-05-26 04:37:0$i,S$i,2$i.7,0.66,1013.50"))
-    // a dirty file alongside proves quarantine routing stays per-file
+    // two dirty files alongside prove quarantine routing stays per-file,
+    // each naming its own CSV line
     writeCsv(dataDir, "dirty.csv",
       "2025-05-26 04:36:08,S9,abc,0.95,1014.74")
+    writeCsv(dataDir, "dirty2.csv",
+      "2025-05-26 04:36:08,S9,21.5,0.95,1014.74",
+      "2025-05-26 04:36:09,S9,21.5,abc,1014.74")
 
     val writeAllCalls = new java.util.concurrent.atomic.AtomicInteger(0)
     val perFileCalls = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -645,17 +666,53 @@ class IngestSpec extends SparkSpec {
         writeAllCalls.incrementAndGet(); real.writeAll(names, raw, agg)
       }
     }
-    val q = Ingest.start(spark, conf, counting)
-    try { q.processAllAvailable() } finally q.stop()
+    // Spark jobs per streaming query id; a last job tagged "drain"
+    // arrives after every earlier event on the ordered listener bus
+    val jobsByQuery = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => jobsByQuery.merge(id, 1, (a, b) => a + b))
+        if (props.exists(_.getProperty("graft.test.drain") != null))
+          drained.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    var queryId = ""
+    // minPartitionNum = 1 packs every file of this small batch into ONE
+    // input partition, so rows must be numbered per file, not per
+    // partition
+    try withConfs("spark.sql.files.minPartitionNum" -> "1") {
+      val q = Ingest.start(spark, conf, counting)
+      queryId = q.id.toString
+      try { q.processAllAvailable() } finally q.stop()
+      spark.sparkContext.setLocalProperty("graft.test.drain", "1")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.drain", null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
 
     // ONE group write drove all five files — never a per-file loop
     assert(writeAllCalls.get() === 1,
       s"expected 1 group write, got ${writeAllCalls.get()}")
     assert(perFileCalls.get() === 0,
       s"expected no per-file writes, got ${perFileCalls.get()}")
+    // one validation pass lists and decides every file; the rest of the
+    // batch is the group write
+    assert(jobsByQuery.get(queryId) === Integer.valueOf(6),
+      s"expected 6 jobs for the query, got ${jobsByQuery.get(queryId)}")
     (1 to 5).foreach(i =>
       assert(Files.exists(root.resolve(s"processed/g$i.csv"))))
     assert(Files.exists(root.resolve("quarantine/dirty.csv")))
+    assert(Files.exists(root.resolve("quarantine/dirty2.csv")))
+    val log = Files.readString(root.resolve("quarantine/quarantine_log.txt"))
+    assert(log.contains("File: dirty.csv, Reason: Validation failed at " +
+      "row 2: Row 2: 'temperature' ('abc') is not a valid number."), log)
+    assert(log.contains("File: dirty2.csv, Reason: Validation failed at " +
+      "row 3: Row 3: 'humidity' ('abc') is not a valid number."), log)
     // per-file lineage survives the group write
     val raw = spark.read.parquet(rawOut)
     assert(raw.count() === 10)
@@ -665,17 +722,6 @@ class IngestSpec extends SparkSpec {
     val agg = spark.read.parquet(aggOut)
     assert(agg.count() === 15) // 5 files x 1 sensor x 3 metrics
     assert(agg.select("file_name").distinct().count() === 5)
-  }
-
-  /** Run `body` with Spark's CSV split sizes shrunk so far that a
-    * line-mode read would cut even a few-KB file into several splits.
-    */
-  private def withTinySplits(body: => Unit): Unit = {
-    val keys = Seq("spark.sql.files.maxPartitionBytes" -> "2048",
-      "spark.sql.files.openCostInBytes" -> "256")
-    val prev = keys.map { case (k, _) => k -> spark.conf.get(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("a file several times larger than maxPartitionBytes is read " +
@@ -811,6 +857,74 @@ class IngestSpec extends SparkSpec {
     try { q3.processAllAvailable() } finally q3.stop()
     assert(Files.exists(root.resolve("processed/y.csv")))
     assert(spark.read.parquet(rawOut).count() === 2)
+  }
+
+  test("a replayed batch drives its ledgered file ONCE: the retry pass " +
+    "skips the files the batch itself just drove") {
+    val root = tmp("graft_replay_once")
+    val conf = mkConf(root)
+    val dataDir = Files.createDirectories(root.resolve("data"))
+    writeCsv(dataDir, "x.csv",
+      "2025-05-26 04:36:08,S1,26.41,0.95,1014.74")
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val failing = new graft.sink.BatchSink {
+      override def write(f: String, raw: org.apache.spark.sql.DataFrame,
+          agg: org.apache.spark.sql.DataFrame): Boolean = false
+      override def writeAll(names: Seq[String],
+          raw: org.apache.spark.sql.DataFrame,
+          agg: org.apache.spark.sql.DataFrame): Set[String] = {
+        names.foreach(n => calls.merge(n, 1, (a, b) => a + b))
+        names.toSet
+      }
+    }
+    def drives: Int = Option(calls.get("x.csv")).fold(0)(_.intValue)
+    // the batch records x.csv's marker, then an observer crash aborts
+    // the trigger before the checkpoint commits it
+    @volatile var boom = true
+    val q1 = Ingest.start(spark, conf, failing, onBatch = o =>
+      if (boom && o.nonEmpty) { boom = false; throw new RuntimeException("observer crash") })
+    intercept[Exception] { q1.processAllAvailable() }
+    q1.stop()
+    assert(drives === 1)
+    assert(Files.exists(Paths.get(conf.checkpointDir, "graft-retry", "x.csv")))
+
+    // restart, sink still failing: the startup retry drives x.csv once,
+    // then the replayed batch 0 re-lists it and drives it once more
+    val q2 = Ingest.start(spark, conf, failing)
+    try { q2.processAllAvailable() } finally q2.stop()
+    assert(drives === 3, s"x.csv was driven $drives times, expected 3")
+    assert(Files.exists(dataDir.resolve("x.csv")))
+    assert(Files.exists(Paths.get(conf.checkpointDir, "graft-retry", "x.csv")))
+  }
+
+  test("file names with a space, '#', '%' and a non-ASCII letter route " +
+    "under their names on disk: clean, dirty and remapped") {
+    val root = tmp("graft_odd_names")
+    val conf = mkConf(root)
+    val dataDir = Files.createDirectories(root.resolve("data"))
+    val rawOut = root.resolve("raw").toString
+    // input_file_name() URL-encodes each (`a%20b%231%25x%20é.csv`)
+    val (clean, dirty, remap) =
+      ("a b#1%x é.csv", "d b#1%x é.csv", "r b#1%x é.csv")
+    writeCsv(dataDir, clean, "2025-05-26 04:36:08,S1,22.5,0.45,1013.25")
+    writeCsv(dataDir, dirty, "2025-05-26 04:36:08,S1,abc,0.45,1013.25")
+    Files.writeString(dataDir.resolve(remap),
+      "timestamp,sensor_id,humidity,temperature,pressure\n" +
+        "2025-05-26 04:36:08,S2,0.95,26.41,1014.74\n")
+    val logs = capturingLogs {
+      val q = Ingest.start(spark, conf,
+        new ParquetSink(rawOut, root.resolve("agg").toString))
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(Files.exists(root.resolve("processed").resolve(clean)))
+    assert(Files.exists(root.resolve("processed").resolve(remap)))
+    assert(Files.exists(root.resolve("quarantine").resolve(dirty)))
+    assert(logs.contains(s"Strict validation failed for '$dirty'. " +
+      "Quarantining. Summary: Validation failed at row 2: Row 2: " +
+      "'temperature' ('abc') is not a valid number."), logs)
+    assert(spark.read.parquet(rawOut)
+      .select("file_name", "temperature").as[(String, Double)]
+      .collect().toSet === Set(clean -> 22.5, remap -> 26.41))
   }
 
   test("a remappable file whose by-name re-read fails is quarantined " +
