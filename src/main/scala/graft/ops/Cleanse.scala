@@ -13,6 +13,13 @@ import graft.schema.Schemas
   * validation (`pipeline.py:170-179`). All three steps are plain Column
   * expressions here — they stay inside whole-stage codegen and Catalyst
   * still pushes the downstream filters into the scan.
+  *
+  * The cast is defined once, in [[parsers]]. The ingest path parses each
+  * field through it exactly once: `Validate.withValidation` keeps the
+  * parsed value next to the raw string, `Ingest` caches that batch as
+  * rows (uncompressed `UnsafeRow`s that spill through `MEMORY_AND_DISK`,
+  * a batch bounded by `maxFilesPerTrigger`), and the commit reads the
+  * parsed columns back instead of running [[castTyped]] again.
   */
 object Cleanse {
 
@@ -43,12 +50,18 @@ object Cleanse {
   /** TRY_CAST string→double: null on garbage, never an exception. */
   def tryDouble(c: Column): Column = c.cast("double")
 
+  /** Each typed sensor field and its TRY parser: the one definition of
+    * the post-validation cast.
+    */
+  val parsers: Seq[(String, Column => Column)] = Seq(
+    "timestamp" -> (tryTimestamp _), "temperature" -> (tryDouble _),
+    "humidity" -> (tryDouble _), "pressure" -> (tryDouble _))
+
   /** Bulk cast after validation (`pipeline.py:170-179`): string→timestamp
     * and string→double with null-on-failure semantics.
     */
   def castTyped(df: DataFrame): DataFrame =
-    df.withColumn("timestamp", tryTimestamp(col("timestamp")))
-      .withColumn("temperature", tryDouble(col("temperature")))
-      .withColumn("humidity", tryDouble(col("humidity")))
-      .withColumn("pressure", tryDouble(col("pressure")))
+    parsers.foldLeft(df) { case (d, (c, parse)) =>
+      d.withColumn(c, parse(col(c)))
+    }
 }

@@ -2,9 +2,10 @@ package graft.stream
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.config.PipelineConf
 import graft.ops.{Aggregate, Cleanse, Validate}
 import graft.schema.Schemas
@@ -240,6 +241,20 @@ object Ingest {
     * column order with string-first types (positional or name-remapped).
     * Its verdict rows list the frame's files, one per file with at least
     * one row; only those that `route` accepts are routed and committed.
+    *
+    * The batch is parsed once and cached as rows: one projection keeps
+    * `__file`, `__mono`, the NA-normalized raw strings (the reasons quote
+    * them), each field's parsed value and `is_valid`
+    * (`Validate.withValidation`). Its physical RDD is persisted as
+    * copied `UnsafeRow`s and wrapped back as a frame, which the verdict
+    * aggregate, the raw write and the aggregate write all scan; the
+    * commit selects the parsed columns (`Validate.typedColumns`), so no
+    * field is parsed twice. The trade-off against a columnar
+    * `Dataset.persist()`: the rows are stored uncompressed and spill to
+    * disk under `MEMORY_AND_DISK`, so a batch holds its rows in full; its
+    * size is bounded by `maxFilesPerTrigger`. In return no cache-building
+    * job runs, no per-value column statistics are gathered, and no reader
+    * decodes columns back into rows.
     */
   private def processValidated(
       conf: PipelineConf, sink: BatchSink, batch: DataFrame,
@@ -253,10 +268,14 @@ object Ingest {
     // input partition (`csvOptions`), so __mono follows record order
     // within each file and a record's CSV line is its __mono minus the
     // file's least __mono, plus 2.
-    val validated = Validate.withValidation(
+    val projected = Validate.withValidation(
       Schemas.sensorColumns.foldLeft(
         batch.withColumn("__mono", monotonically_increasing_id()))((d, c) =>
-        d.withColumn(c, Cleanse.naNormalize(col(c)))), conf).persist()
+        d.withColumn(c, Cleanse.naNormalize(col(c)))), conf)
+    val rows = GraftExpressionBridge.toInternalRdd(projected).map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val validated = GraftExpressionBridge.internalCreateDataFrame(
+      batch.sparkSession, rows, projected.schema)
     try {
       val verdicts = Validate.strictVerdicts(validated, "__file",
         col("__mono"), (bad, least) => bad - least + 2,
@@ -334,8 +353,8 @@ object Ingest {
           .filter(col("__file").isin(toCommit.map(_.uri).toSeq: _*) &&
             col("is_valid"))
           .withColumn("file_name", element_at(nameByUri, col("__file")))
-        val typedAll = Cleanse.castTyped(committableRows
-          .select((Schemas.sensorColumns :+ "file_name").map(col): _*))
+        val typedAll = committableRows
+          .select(Validate.typedColumns :+ col("file_name"): _*)
         val aggAll = Aggregate.metricAggregates(
           typedAll, Seq("file_name", "sensor_id"),
           Schemas.metricColumns, "timestamp")
@@ -364,7 +383,7 @@ object Ingest {
           }
         }
       }
-    } finally validated.unpersist()
+    } finally rows.unpersist()
   }
 
   /** S5: header-only/zero-line files produce no rows, so they never

@@ -33,6 +33,8 @@ class IngestSpec extends SparkSpec {
 
   /** Capture the Ingest logger's formatted messages while `body` runs
     * (K8 assertions — the structured run log is part of the contract).
+    * The logger is made non-additive while capturing, so its INFO lines
+    * reach only the capture appender, not the suite's console.
     */
   private def capturingLogs(body: => Unit): Seq[String] = {
     import org.apache.logging.log4j.{Level, LogManager}
@@ -50,16 +52,33 @@ class IngestSpec extends SparkSpec {
     val core = LogManager.getLogger("graft.stream.Ingest")
       .asInstanceOf[CoreLogger]
     val prevLevel = core.getLevel
+    val prevAdditive = core.isAdditive
     Configurator.setLevel("graft.stream.Ingest", Level.INFO)
     core.addAppender(appender)
+    core.setAdditive(false)
     try body
     finally {
       core.removeAppender(appender)
+      core.setAdditive(prevAdditive)
       Configurator.setLevel("graft.stream.Ingest", prevLevel)
       appender.stop()
     }
     events.synchronized(events.toSeq)
   }
+
+  /** Every node of an executed plan, through adaptive plans, query
+    * stages and command results.
+    */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      planNodes(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      planNodes(s.plan)
+    case c: org.apache.spark.sql.execution.CommandResultExec =>
+      planNodes(c.commandPhysicalPlan)
+    case o => o.children.flatMap(planNodes)
+  })
 
   /** Run `body` with the given session confs, restoring them after. */
   private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
@@ -680,7 +699,21 @@ class IngestSpec extends SparkSpec {
           drained.countDown()
       }
     }
+    // Every plan the query runs, as its executed physical plan. Its
+    // events share the ordered listener bus with the drain job above.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan)
+    }
     spark.sparkContext.addSparkListener(listener)
+    // registered before the query starts: its session is cloned at start
+    spark.listenerManager.register(planListener)
     var queryId = ""
     // minPartitionNum = 1 packs every file of this small batch into ONE
     // input partition, so rows must be numbered per file, not per
@@ -693,7 +726,10 @@ class IngestSpec extends SparkSpec {
       try spark.range(1).count()
       finally spark.sparkContext.setLocalProperty("graft.test.drain", null)
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(planListener)
+    }
 
     // ONE group write drove all five files — never a per-file loop
     assert(writeAllCalls.get() === 1,
@@ -702,8 +738,23 @@ class IngestSpec extends SparkSpec {
       s"expected no per-file writes, got ${perFileCalls.get()}")
     // one validation pass lists and decides every file; the rest of the
     // batch is the group write
-    assert(jobsByQuery.get(queryId) === Integer.valueOf(6),
-      s"expected 6 jobs for the query, got ${jobsByQuery.get(queryId)}")
+    assert(jobsByQuery.get(queryId) === Integer.valueOf(5),
+      s"expected 5 jobs for the query, got ${jobsByQuery.get(queryId)}")
+    // The batch is cached as rows: no plan scans a columnar table cache
+    // (that cache costs its own building job and a decode per reader).
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val seen = plans.asScala.toSeq.flatMap(planNodes)
+    assert(seen.exists(_.isInstanceOf[DataWritingCommandExec]),
+      "the canary saw none of the sink's writes")
+    val columnar = seen.filter {
+      case _: InMemoryTableScanExec | _: TableCacheQueryStageExec => true
+      case _ => false
+    }.map(_.nodeName)
+    assert(columnar.isEmpty,
+      s"columnar cache nodes in the ingest plans: $columnar")
     (1 to 5).foreach(i =>
       assert(Files.exists(root.resolve(s"processed/g$i.csv"))))
     assert(Files.exists(root.resolve("quarantine/dirty.csv")))
@@ -722,6 +773,121 @@ class IngestSpec extends SparkSpec {
     val agg = spark.read.parquet(aggOut)
     assert(agg.count() === 15) // 5 files x 1 sensor x 3 metrics
     assert(agg.select("file_name").distinct().count() === 5)
+  }
+
+  test("each batch's row cache is released after a clean drain and " +
+    "after a sink-failed one: no persisted RDD or cached table outlives it") {
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    var whileWriting = -1
+    def drain(name: String, sink: graft.sink.BatchSink): Path = {
+      val root = tmp(s"graft_cache_$name")
+      writeCsv(Files.createDirectories(root.resolve("data")), s"$name.csv",
+        "2025-05-26 04:36:08,S1,26.41,0.95,1014.74",
+        "2025-05-26 04:36:09,S1,abc,0.95,1014.74")
+      val q = Ingest.start(spark, mkConf(root).copy(strictMode = false), sink)
+      try {
+        q.processAllAvailable()
+        assert(spark.sparkContext.getPersistentRDDs.size === before,
+          spark.sparkContext.getPersistentRDDs)
+        assert(cacheManager.isEmpty)
+      } finally q.stop()
+      root
+    }
+
+    val clean = drain("clean", new ParquetSink(
+      tmp("graft_cache_raw").toString, tmp("graft_cache_agg").toString))
+    assert(Files.exists(clean.resolve("processed/clean.csv")))
+
+    // the sink reads both frames from the cache, then reports failure
+    val failed = drain("failed", new graft.sink.BatchSink {
+      override def write(f: String, raw: org.apache.spark.sql.DataFrame,
+          agg: org.apache.spark.sql.DataFrame): Boolean = false
+      override def writeAll(names: Seq[String],
+          raw: org.apache.spark.sql.DataFrame,
+          agg: org.apache.spark.sql.DataFrame): Set[String] = {
+        raw.count(); agg.count()
+        whileWriting = spark.sparkContext.getPersistentRDDs.size
+        names.toSet
+      }
+    })
+    assert(whileWriting === before + 1) // the batch was cached meanwhile
+    assert(Files.exists(failed.resolve("data/failed.csv")))
+    assert(Files.exists(failed.resolve("checkpoint/graft-retry/failed.csv")))
+  }
+
+  test("each field is parsed once: the raw table equals castTyped over " +
+    "the valid rows, and the reasons quote the raw strings") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Cleanse, Validate}
+    import graft.schema.Schemas
+    // all six Cleanse.timestampFormats, NA tokens, non-numeric and
+    // out-of-range values; lines 2, 3, 5, 6, 8 and 9 are valid
+    val lines = Seq(
+      "2025-05-26 04:36:01,S1,26.41,0.95,1014.74",
+      "2025-05-26 04:36:02.123456,S1,-50,0.2,980",
+      "not-a-time,NULL,abc,1.50,n/a",
+      "2025-05-26T04:36:03,S2,50,0.99,1050.0",
+      "2025-05-26T04:36:04.500+02:00,S2, 21.5 ,0.5,1001",
+      "2025-05-26 04:36:05.250 +0100,S3,75.00,0.5,1001",
+      "2025-05-27,S3,-10,0.5,1001",
+      "2025-05-26 04:36:05.250 +0100,S3,1e1,0.5,1001",
+      "2025-05-26T04:36:04.500+02:00,S4,NaN,0.5,5000",
+      "#N/A,S4,10,0.5,1000",
+      "2025-05-26 04:36:06,  NA ,10,0.5,1000",
+      "2025-05-26 04:36:07,S5,Infinity,0.5,1000")
+    val reason = "Validation failed at row 4: " +
+      "Row 4: 'sensor_id' is null.; " +
+      "Row 4: 'timestamp' ('not-a-time') is unparsable.; " +
+      "Row 4: 'temperature' ('abc') is not a valid number.; " +
+      "Row 4: 'humidity' (1.5) out of range [0.2, 0.99].; " +
+      "Row 4: 'pressure' is null."
+
+    val root = tmp("graft_parse_once")
+    val conf = mkConf(root).copy(strictMode = false)
+    writeCsv(Files.createDirectories(root.resolve("data")), "parse.csv",
+      lines: _*)
+    val rawOut = root.resolve("raw").toString
+    val logs = capturingLogs {
+      val q = Ingest.start(spark, conf,
+        new ParquetSink(rawOut, root.resolve("agg").toString))
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(logs.contains(
+      "File 'parse.csv': Validation complete. 6 valid rows out of 12."), logs)
+    assert(logs.contains(
+      s"File 'parse.csv': Summary of row-level issues: $reason"), logs)
+
+    // the old path: validity from the error strings, then the bulk cast
+    val file = root.resolve("processed/parse.csv").toString
+    val strings = spark.read.option("header", "true")
+      .schema(Schemas.sensorCsvRaw).csv(file)
+    val normalized = Schemas.sensorColumns.foldLeft(strings)((d, c) =>
+      d.withColumn(c, Cleanse.naNormalize(col(c))))
+    val expected = Cleanse.castTyped(normalized
+      .filter(Validate.fieldErrors(conf).map(_.isNull).reduce(_ && _)))
+    val actual = spark.read.parquet(rawOut).drop("file_name")
+    def types(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(types(actual) === types(expected))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(rows(actual).size === 6)
+    assert(rows(actual) === rows(expected))
+
+    // strict: the same content quarantines with the same reason
+    val strictRoot = tmp("graft_parse_once_strict")
+    writeCsv(Files.createDirectories(strictRoot.resolve("data")), "parse.csv",
+      lines: _*)
+    val q = Ingest.start(spark, mkConf(strictRoot), new ParquetSink(
+      strictRoot.resolve("raw").toString, strictRoot.resolve("agg").toString))
+    try q.processAllAvailable() finally q.stop()
+    val qlog = Files.readString(
+      strictRoot.resolve("quarantine/quarantine_log.txt"))
+    assert(qlog.contains(s"File: parse.csv, Reason: $reason\n"), qlog)
   }
 
   test("a file several times larger than maxPartitionBytes is read " +
