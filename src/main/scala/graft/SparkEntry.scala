@@ -350,8 +350,9 @@ object SparkEntry {
           if (id % 2 == 0) {
             val w = (8 + id % 9).toInt
             val h = (5 + id % 7).toInt
-            (id, "image", ext.MediaCodec.synthesizeBmp24(w, h,
-              (x, y, c) => ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt))
+            (id, "image", ext.MediaCodec.encodeImage("bmp",
+              ext.MediaCodec.bgrImage(w, h, (x, y, c) =>
+                ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt)))
           } else {
             val n = (200 + id % 100).toInt
             val samples = Array.tabulate(n)(i =>
@@ -553,8 +554,9 @@ object SparkEntry {
     // [EXT] REAL audio decode over THREE encodings, doc_id % 3
     // cycling: (0) 16-bit PCM WAVs from a deterministic waveform;
     // (1) μ-law and (2) A-law G.711 WAVs whose 8-bit code bytes
-    // follow a formula and expand through the REAL ITU-T tables
-    // (JDK-cross-checked in G711Spec). All reduced to exact integer
+    // follow a formula and expand through the JDK's G.711 converter
+    // (checked against the ITU-T closed form over all 256 codes in
+    // G711Spec). All reduced to exact integer
     // energy moments; the oracle recomputes from the generator
     // FORMULA (and the closed-form G.711 expansion) — the hash
     // matches only if the byte-level decode is exact.
@@ -589,9 +591,9 @@ object SparkEntry {
     // ids; (3) GIFs with a 64-entry formula palette, 4-pass interlaced
     // on alternating ids (palette-lossless); (4) lossless WebPs — a
     // REAL VP8L prefix-coded bitstream (libwebp-conformance-proven
-    // codec), losslessly carrying the BMP pixel formula. JPEG, PNG and
-    // GIF are written and read through the JDK's ImageIO; BMP and WebP
-    // by the repo's own codecs. All DuckDB-oracle-able. Each is
+    // codec), losslessly carrying the BMP pixel formula. BMP, JPEG, PNG
+    // and GIF are written and read through the JDK's ImageIO; WebP by
+    // the repo's own codec. All DuckDB-oracle-able. Each is
     // decoded, nearest-neighbor resized to 5×3, and reduced to exact
     // channel stats the oracle recomputes from the generator formulas.
     "q_image_resize" -> ((s, dir) => {
@@ -602,9 +604,9 @@ object SparkEntry {
           val h = (5 + id % 7).toInt
           (id % 5) match {
             case 0 =>
-              (id, "image", graft.ext.MediaCodec.synthesizeBmp24(w, h,
-                (x, y, c) =>
-                  ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt))
+              (id, "image", graft.ext.MediaCodec.encodeImage("bmp",
+                graft.ext.MediaCodec.bgrImage(w, h, (x, y, c) =>
+                  ((id * 7 + x * 13 + y * 31 + c * 5) % 256).toInt)))
             case 1 =>
               (id, "image", graft.ext.MediaCodec.encodeImage("jpeg",
                 graft.ext.MediaCodec.grayImage(w, h, (x, y) =>
@@ -647,9 +649,9 @@ object SparkEntry {
         .mapPartitions(_.map { id =>
           val nf = (3 + id % 4).toInt
           val frames = (0 until nf).map(f =>
-            graft.ext.MediaCodec.synthesizeBmp24(4, 3,
-              (x, y, c) =>
-                ((id * 7 + f * 11 + x * 13 + y * 31 + c * 5) % 256).toInt))
+            graft.ext.MediaCodec.encodeImage("bmp",
+              graft.ext.MediaCodec.bgrImage(4, 3, (x, y, c) =>
+                ((id * 7 + f * 11 + x * 13 + y * 31 + c * 5) % 256).toInt)))
           (id, "video", graft.ext.MediaCodec.synthesizeVideo(frames))
         }).toDF("doc_id", "media_type", "payload")
       graft.ext.Multimodal.videoFrameStats(s, media, stride = 2).toDF()

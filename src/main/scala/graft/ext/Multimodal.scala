@@ -9,15 +9,16 @@ import org.apache.spark.sql.functions._
   * reference equivalent.
   *
   * Every path here decodes REAL bytes via [[MediaCodec]]: header
-  * parse for all six formats; full pixel decode for 24-bit BMP and
-  * lossless WebP ([[VP8LCodec]] — conformance-proven against libwebp
-  * fixtures) in the repo, and for PNG, GIF and JPEG (progressive
-  * included) through the JDK's `javax.imageio`; full sample decode for
-  * 16-bit PCM and G.711 WAV; container walk + frame decode for GVID
-  * video. The remaining stub boundary — clearly labeled at each site —
-  * is pixel decode of LOSSY WebP (VP8 boolean-arithmetic coding),
-  * which neither the repo nor the JDK reads: a real deployment swaps
-  * in javacv / a `mapInPandas` PIL worker at exactly that branch.
+  * parse for all six formats; full pixel decode for lossless WebP
+  * ([[VP8LCodec]] — conformance-proven against libwebp fixtures) in
+  * the repo, and for BMP, PNG, GIF and JPEG (progressive included)
+  * through the JDK's `javax.imageio`; full sample decode for 16-bit
+  * PCM and G.711 WAV through the JDK's `javax.sound.sampled`;
+  * container walk + frame decode for GVID video. The remaining stub
+  * boundary — clearly labeled at each site — is pixel decode of LOSSY
+  * WebP (VP8 boolean-arithmetic coding), which neither the repo nor
+  * the JDK reads: a real deployment swaps in javacv / a `mapInPandas`
+  * PIL worker at exactly that branch.
   *
   * Design for 100 TB: payloads are decoded per-partition via
   * `mapPartitions` over a typed Dataset, so one task holds one batch of
@@ -40,20 +41,20 @@ object Multimodal {
       width: Int, height: Int)
   final case class Frame(doc_id: Long, frame_idx: Int, payload: Array[Byte])
 
+  /** Pixel or sample decode of untrusted bytes: every decode fault is
+    * an IllegalArgumentException, so a header-only, truncated or
+    * corrupt payload yields None (the caller's header-dims fallback),
+    * never a task-killing escape.
+    */
+  private def decodeChecked[T](decode: => T): Option[T] =
+    try Some(decode)
+    catch { case _: IllegalArgumentException => None }
+
   /** Real header-level dimensions per format: (width, height,
     * channels). Audio has no spatial dims (0, 0, channels); WebP's
     * header variants carry no depth (channels 0 — honest, not
     * invented); unknown payloads are all-zero.
     */
-  /** Pixel decode of untrusted bytes: every decode fault is an
-    * IllegalArgumentException, so a header-only, truncated or corrupt
-    * payload yields None (the caller's header-dims fallback), never a
-    * task-killing escape.
-    */
-  private def decodeChecked(p: Array[Byte]): Option[MediaCodec.Bmp24] =
-    try Some(MediaCodec.decodeImage(p))
-    catch { case _: IllegalArgumentException => None }
-
   private def headerDims(payload: Array[Byte]): (String, Int, Int, Int) =
     MediaCodec.detect(payload) match {
       case "bmp" =>
@@ -101,62 +102,61 @@ object Multimodal {
           // A header-only or truncated payload (valid magic, missing
           // pixels/samples) routes to the header-dims fallback instead
           // of killing the task — corpus bytes are untrusted.
-          val stats: Array[Float] = MediaCodec.detect(p) match {
+          val decoded: Option[Array[Float]] = MediaCodec.detect(p) match {
             case "bmp" | "jpeg" | "png" | "gif" | "webp" =>
-              decodeChecked(p) match {
-                case Some(img) =>
-                  val npx = math.max(1, img.width * img.height)
-                  var (bs, gs, rs) = (0L, 0L, 0L)
-                  var mn = 255
-                  var mx = 0
-                  var i = 0
-                  while (i < img.pixels.length) {
-                    val v = img.pixels(i)
-                    (i % 3) match {
-                      case 0 => bs += v
-                      case 1 => gs += v
-                      case _ => rs += v
-                    }
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                    i += 1
+              decodeChecked(MediaCodec.decodeImage(p)).map { img =>
+                val npx = math.max(1, img.width * img.height)
+                var (bs, gs, rs) = (0L, 0L, 0L)
+                var mn = 255
+                var mx = 0
+                var i = 0
+                while (i < img.pixels.length) {
+                  val v = img.pixels(i)
+                  (i % 3) match {
+                    case 0 => bs += v
+                    case 1 => gs += v
+                    case _ => rs += v
                   }
-                  Array(img.width.toFloat, img.height.toFloat,
-                    bs.toFloat / npx, gs.toFloat / npx, rs.toFloat / npx,
-                    mn.toFloat, mx.toFloat, npx.toFloat)
-                case None =>
-                  val (_, w, h, c) = headerDims(p)
-                  Array(w.toFloat, h.toFloat, c.toFloat, 0f, 0f, 0f, 0f, 0f)
+                  if (v < mn) mn = v
+                  if (v > mx) mx = v
+                  i += 1
+                }
+                Array(img.width.toFloat, img.height.toFloat,
+                  bs.toFloat / npx, gs.toFloat / npx, rs.toFloat / npx,
+                  mn.toFloat, mx.toFloat, npx.toFloat)
               }
-            case "wav" if MediaCodec.isDecodableAudio(p) =>
-              val s = MediaCodec.decodeAudio(p) // PCM16 or G.711
-              var peak = 0L
-              var sum = 0L
-              var ss = 0L
-              var i = 0
-              while (i < s.length) {
-                val v = s(i).toLong
-                if (math.abs(v) > peak) peak = math.abs(v)
-                sum += v
-                ss += v * v
-                i += 1
+            case "wav" =>
+              decodeChecked(MediaCodec.decodeAudio(p)).map { s =>
+                var peak = 0L
+                var sum = 0L
+                var ss = 0L
+                var i = 0
+                while (i < s.length) {
+                  val v = s(i).toLong
+                  if (math.abs(v) > peak) peak = math.abs(v)
+                  sum += v
+                  ss += v * v
+                  i += 1
+                }
+                val n = math.max(1, s.length)
+                Array(s.length.toFloat, peak.toFloat,
+                  math.sqrt(ss.toDouble / n).toFloat, sum.toFloat / n,
+                  0f, 0f, 0f, 0f)
               }
-              val n = math.max(1, s.length)
-              Array(s.length.toFloat, peak.toFloat,
-                math.sqrt(ss.toDouble / n).toFloat, sum.toFloat / n,
-                0f, 0f, 0f, 0f)
-            case _ =>
-              // compressed pixels / unknown codec: header dims only —
-              // STUB boundary (external codec library required)
-              val (_, w, h, c) = headerDims(p)
-              Array(w.toFloat, h.toFloat, c.toFloat, 0f, 0f, 0f, 0f, 0f)
+            case _ => None
+          }
+          // undecodable or compressed-without-a-decoder payloads: header
+          // dims only — STUB boundary (external codec library required)
+          val stats = decoded.getOrElse {
+            val (_, w, h, c) = headerDims(p)
+            Array(w.toFloat, h.toFloat, c.toFloat, 0f, 0f, 0f, 0f, 0f)
           }
           MediaFeatures(r.doc_id, stats.padTo(dim, 0f).take(dim))
         }
       }
   }
 
-  /** REAL thumbnail path: BMP24, JPEG, PNG, GIF and lossless-WebP
+  /** REAL thumbnail path: BMP, JPEG, PNG, GIF and lossless-WebP
     * payloads are pixel-decoded ([[MediaCodec.decodeImage]]),
     * nearest-neighbor resampled (the [[imageResizeStats]] coordinate
     * math) and RE-ENCODED in the SOURCE format (PNG → PNG and GIF → GIF
@@ -179,7 +179,7 @@ object Multimodal {
         val fmt = MediaCodec.detect(p)
         // a header-only payload (synthesizeBmp/synthesizeJpeg), a
         // truncated upload or a non-image passes through untouched
-        decodeChecked(p) match {
+        decodeChecked(MediaCodec.decodeImage(p)) match {
           case Some(img) =>
             // NN sample in Bmp24 channel order (0 = B)
             def s(x: Int, y: Int, c: Int): Int =
@@ -189,11 +189,11 @@ object Multimodal {
             // re-encoding lossy content a second time compounds
             // generational loss, so its thumbnail ships as lossless PNG
             // (the standard quality-preserving downgrade); BMP stays BMP.
-            def png = MediaCodec.encodeImage("png",
+            def encoded(fmt: String) = MediaCodec.encodeImage(fmt,
               MediaCodec.bgrImage(width, height, s))
+            def png = encoded("png")
             val out = fmt match {
-              case "bmp" =>
-                MediaCodec.synthesizeBmp24(width, height, s)
+              case "bmp" => encoded("bmp")
               case "png" | "jpeg" => png
               case "webp" =>
                 VP8LCodec.encode(width, height,
@@ -338,11 +338,12 @@ object Multimodal {
   final case class AudioEnergy(
       doc_id: Long, n_samples: Long, peak: Long, sum_sq: Long)
 
-  /** REAL audio feature extraction (not the stub codec): decode the
-    * 16-bit PCM data chunk byte-for-byte ([[MediaCodec.decodePcm16]],
-    * chunk-walking) and reduce each clip to exact integer moments —
-    * sample count, peak |amplitude|, sum of squares — plus the RMS as
-    * a floor-quantized correctly-rounded sqrt of the exact ratio.
+  /** REAL audio feature extraction (not the stub codec): decode each
+    * WAV's 16-bit PCM or G.711 samples ([[MediaCodec.decodeAudio]],
+    * through the JDK's `javax.sound.sampled`) and reduce each clip to
+    * exact integer moments — sample count, peak |amplitude|, sum of
+    * squares — plus the RMS as a floor-quantized correctly-rounded sqrt
+    * of the exact ratio.
     * Same partition-parallel mapPartitions shape as
     * [[parseMediaHeaders]]: one pass, no shuffle; the oracle
     * recomputes the moments from the sample-generator formula, so the
@@ -376,7 +377,7 @@ object Multimodal {
       b_sum: Long, g_sum: Long, r_sum: Long, px_min: Long, px_max: Long)
 
   /** REAL image path: decode the pixels of any
-    * [[MediaCodec.decodeImage]] format (BMP24, PNG, GIF, JPEG, lossless
+    * [[MediaCodec.decodeImage]] format (BMP, PNG, GIF, JPEG, lossless
     * WebP), nearest-neighbor resize to `outW`×`outH` (source coordinate
     * = (dst·src)/dst in integer division), and reduce to exact integer
     * channel statistics of the RESIZED image. With a formula oracle,
@@ -425,8 +426,8 @@ object Multimodal {
 
   /** REAL video path: decode the GVID container, keep every
     * `stride`-th frame (the frame-sampling a vision pipeline does
-    * before the expensive encoder), decode each kept frame's BMP24
-    * pixels, and reduce to exact per-frame channel sums. flatMap
+    * before the expensive encoder), decode each kept frame's pixels
+    * ([[MediaCodec.decodeImage]]), and reduce to exact per-frame channel sums. flatMap
     * 1→N/stride shape, partition-parallel, no shuffle; with the
     * pixel-formula oracle the hash proves container walk + frame
     * decode + stride math all exact. Completes the image/audio/video
@@ -440,7 +441,7 @@ object Multimodal {
       .flatMap { case (id, p) =>
         val frames = MediaCodec.decodeVideoFrames(p)
         frames.indices.collect { case f if f % stride == 0 =>
-          val img = MediaCodec.decodeBmp24(frames(f))
+          val img = MediaCodec.decodeImage(frames(f))
           var (bs, gs, rs) = (0L, 0L, 0L)
           var i = 0
           while (i < img.pixels.length) {

@@ -270,7 +270,8 @@ class JpegCodecSpec extends AnyFunSuite {
   }
 
   test("decodeImage dispatches BMP and JPEG through one shape") {
-    val bmp = MediaCodec.synthesizeBmp24(5, 4, (x, y, c) => (x + y + c) % 256)
+    val bmp = MediaCodec.encodeImage("bmp",
+      MediaCodec.bgrImage(5, 4, (x, y, c) => (x + y + c) % 256))
     val jpg = MediaCodec.encodeImage("jpeg",
       MediaCodec.grayImage(8, 8, (_, _) => 77))
     assert(MediaCodec.isDecodableImage(bmp))

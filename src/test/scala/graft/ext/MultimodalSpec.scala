@@ -6,8 +6,14 @@ import graft.SparkSpec
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A 24-bit BMP whose channel c ∈ {0=B, 1=G, 2=R} at top-down (x, y)
+    * is `f(x, y, c)`.
+    */
+  private def bmp24(w: Int, h: Int, f: (Int, Int, Int) => Int): Array[Byte] =
+    MediaCodec.encodeImage("bmp", MediaCodec.bgrImage(w, h, f))
+
   test("decodeMetadata: real format detect + header dims + content digest") {
-    val bmp = MediaCodec.synthesizeBmp24(3, 2, (x, y, c) => x + y + c)
+    val bmp = bmp24(3, 2, (x, y, c) => x + y + c)
     val wav = MediaCodec.synthesizeWavPcm16(16000, Array(1, -2, 3))
     val media = Seq(
       (1L, "image", bmp), (2L, "audio", wav),
@@ -38,7 +44,7 @@ class MultimodalSpec extends SparkSpec {
   test("extractFeatures: real pixel/sample statistics, header-dim " +
     "fallback for compressed formats") {
     // 2x1 BMP, known channel bytes: f(x,0,c) = 10c + x
-    val bmp = MediaCodec.synthesizeBmp24(2, 1, (x, _, c) => 10 * c + x)
+    val bmp = bmp24(2, 1, (x, _, c) => 10 * c + x)
     val wav = MediaCodec.synthesizeWavPcm16(8000, Array(3, -4, 0, 12))
     val png = MediaCodec.synthesizePng(512, 384) // header-only: stub path
     val media = Seq(
@@ -62,7 +68,7 @@ class MultimodalSpec extends SparkSpec {
   test("resize: BMP payloads are really resampled and re-encoded; " +
     "non-BMP passes through untouched") {
     def f(x: Int, y: Int, c: Int): Int = 100 * c + 10 * y + x
-    val bmp = MediaCodec.synthesizeBmp24(3, 2, f)
+    val bmp = bmp24(3, 2, f)
     val wav = MediaCodec.synthesizeWavPcm16(8000, Array(5, 6))
     val media = Seq((1L, "image", bmp), (2L, "audio", wav))
       .toDF("doc_id", "media_type", "payload")
@@ -71,7 +77,7 @@ class MultimodalSpec extends SparkSpec {
     assert((out(1L).width, out(1L).height) === ((2, 1)))
     // the output payload is a REAL BMP: decode it and check the NN
     // source pixels (srcX = x*3/2 in {0,1}, srcY = 0)
-    val img = MediaCodec.decodeBmp24(out(1L).payload)
+    val img = MediaCodec.decodeImage(out(1L).payload)
     assert((img.width, img.height) === ((2, 1)))
     for (x <- 0 until 2; c <- 0 until 3)
       assert(img(x, 0, c) === f(x * 3 / 2, 0, c), s"($x,$c)")
@@ -82,7 +88,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("sampleFrames: real GVID frame grab at a stride; non-video " +
     "yields no frames") {
-    def frame(f: Int) = MediaCodec.synthesizeBmp24(2, 2,
+    def frame(f: Int) = bmp24(2, 2,
       (x, y, c) => (f * 50 + 10 * y + x + c) % 256)
     val vid = MediaCodec.synthesizeVideo((0 until 5).map(frame))
     val media = Seq(
@@ -126,27 +132,23 @@ class MultimodalSpec extends SparkSpec {
       def safe(body: => Any): Unit =
         try { body; () } catch { case _: IllegalArgumentException => () }
       MediaCodec.detect(b)
-      safe(MediaCodec.decodeBmp24(b))
-      safe(MediaCodec.decodePcm16(b))
-      safe(MediaCodec.decodeG711(b))
+      safe(MediaCodec.decodeImage(b))
       safe(MediaCodec.decodeAudio(b))
       safe(MediaCodec.decodeVideoFrames(b))
-      safe(MediaCodec.isCompleteBmp24(b))
-      safe(MediaCodec.isCompletePcm16(b))
-      safe(MediaCodec.isCompleteG711(b))
-      safe(MediaCodec.isDecodableAudio(b))
+      MediaCodec.isDecodableImage(b)
+      MediaCodec.isDecodableAudio(b)
     }
     // pure noise, all sizes around the header boundaries
     for (_ <- 1 to 400) poke(Array.fill(rnd.nextInt(120))(rnd.nextInt().toByte))
     // valid magic + corrupted header/payload bytes: hits the deep
     // parse branches the random-magic path never reaches
     val seeds = Seq(
-      MediaCodec.synthesizeBmp24(4, 3, (x, y, c) => x + y + c),
+      bmp24(4, 3, (x, y, c) => x + y + c),
       MediaCodec.synthesizeWav(2, 8000),
       MediaCodec.synthesizeWavG711(8000,
         Array.tabulate(16)(i => i * 17 % 256), ulaw = true),
       MediaCodec.synthesizeVideo(
-        Seq(MediaCodec.synthesizeBmp24(2, 2, (_, _, _) => 7))))
+        Seq(bmp24(2, 2, (_, _, _) => 7))))
     for (seed <- seeds; _ <- 1 to 400) {
       val m = seed.clone()
       for (_ <- 0 to rnd.nextInt(4))
@@ -171,20 +173,36 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("decodeBmp24 rejects a hostile header width that wraps the Int " +
-    "row stride, with the truncation message — not an allocation crash") {
-    // width 800M: 3*width wraps negative in Int; the Long stride must
-    // keep the truncation require in force
-    val hostile = MediaCodec.synthesizeBmp(2, 3)
-    val w = 800000000
-    hostile(18) = (w & 0xff).toByte
-    hostile(19) = ((w >> 8) & 0xff).toByte
-    hostile(20) = ((w >> 16) & 0xff).toByte
-    hostile(21) = ((w >> 24) & 0xff).toByte
-    val e = intercept[IllegalArgumentException](
-      MediaCodec.decodeBmp24(hostile))
-    assert(e.getMessage.contains("truncated"))
-    assert(!MediaCodec.isCompleteBmp24(hostile))
+  test("decodeImage refuses hostile BMP header sizes before the JDK " +
+    "reader allocates — not an allocation crash") {
+    def hostile(off: Int, v: Int): Array[Byte] = {
+      val b = MediaCodec.synthesizeBmp(2, 3)
+      for (i <- 0 until 4) b(off + i) = ((v >> (8 * i)) & 0xff).toByte
+      b
+    }
+    // width 800M: 3*width wraps negative in Int. Height Int.MinValue:
+    // its absolute value is negative as an Int. Both are far over the
+    // pixel cap once taken as Longs.
+    for (b <- Seq(hostile(18, 800000000), hostile(22, Int.MinValue))) {
+      val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(b))
+      assert(e.getMessage.contains("decode cap"), e.getMessage)
+      assert(!MediaCodec.isDecodableImage(b))
+    }
+    // what the JDK's reader would allocate before it reads: the 2 GB an
+    // embedded-JPEG BMP (compression 4) declares; the raster of an RLE8
+    // BMP (compression 1, image size 0, file size 2 GB), which no
+    // payload length bounds; and the 62 MB raster of an uncompressed
+    // 4×5,177,347 header inside the pixel cap that 54 bytes cannot fill
+    val embedded = hostile(34, Int.MaxValue)
+    embedded(30) = 4
+    val rle = hostile(2, 0x7ffffff0)
+    rle(30) = 1
+    val headerOnly = MediaCodec.synthesizeBmp(4, 5177347)
+    for ((b, why) <- Seq(embedded -> "compression 4", rle -> "compression 1",
+      headerOnly -> "truncated: the pixel array ends at byte 62128218")) {
+      val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(b))
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
   }
 
   test("MediaCodec parses golden WAV bytes and round-trips synthesis") {
@@ -333,7 +351,7 @@ class MultimodalSpec extends SparkSpec {
     "past inserted chunks") {
     val samples = Array(0, 1, -1, 32767, -32768, 12345, -12345)
     val wav = MediaCodec.synthesizeWavPcm16(8000, samples)
-    assert(MediaCodec.decodePcm16(wav).toList === samples.toList)
+    assert(MediaCodec.decodeAudio(wav).toList === samples.toList)
     // splice a LIST chunk (odd size -> pad byte) between fmt and data
     val extra = Array[Byte]('L', 'I', 'S', 'T', 3, 0, 0, 0, 9, 9, 9, 0)
     val spliced = wav.take(36) ++ extra ++ wav.drop(36)
@@ -342,7 +360,7 @@ class MultimodalSpec extends SparkSpec {
     val riff = 36 + extra.length + samples.length * 2
     b(4) = (riff & 0xff).toByte; b(5) = ((riff >> 8) & 0xff).toByte
     b(6) = ((riff >> 16) & 0xff).toByte; b(7) = ((riff >> 24) & 0xff).toByte
-    assert(MediaCodec.decodePcm16(b).toList === samples.toList)
+    assert(MediaCodec.decodeAudio(b).toList === samples.toList)
   }
 
   test("audioEnergy: exact integer moments and quantized RMS") {
@@ -360,8 +378,8 @@ class MultimodalSpec extends SparkSpec {
     "correctly; resize hits the exact source pixels") {
     // 3x2 -> rowBytes = 12 (9 data + 3 pad): padding exercised
     def f(x: Int, y: Int, c: Int): Int = 100 * c + 10 * y + x
-    val bmp = MediaCodec.synthesizeBmp24(3, 2, f)
-    val img = MediaCodec.decodeBmp24(bmp)
+    val bmp = bmp24(3, 2, f)
+    val img = MediaCodec.decodeImage(bmp)
     assert((img.width, img.height) === ((3, 2)))
     for (y <- 0 until 2; x <- 0 until 3; c <- 0 until 3)
       assert(img(x, y, c) === f(x, y, c), s"($x,$y,$c)")
@@ -375,9 +393,38 @@ class MultimodalSpec extends SparkSpec {
     assert(st.px_min === 0L && st.px_max === 201L)
   }
 
+  test("BMP decodes through the colour model: a top-down BMP equals " +
+    "its bottom-up twin, and an 8-bit palette BMP is looked up") {
+    def f(x: Int, y: Int, c: Int): Int = 100 * c + 10 * y + x
+    val bottomUp = bmp24(3, 2, f)
+    // the top-down twin: the same rows in stored order reversed, and
+    // the height negated (rows are 12 bytes: 9 of pixels, 3 of padding)
+    val topDown = bottomUp.clone()
+    for (r <- 0 until 2)
+      System.arraycopy(bottomUp, 54 + (1 - r) * 12, topDown, 54 + r * 12, 12)
+    for (i <- 0 until 4) topDown(22 + i) = ((-2 >> (8 * i)) & 0xff).toByte
+    assert(MediaCodec.parseBmp(topDown).height === -2)
+    val a = MediaCodec.decodeImage(bottomUp)
+    val b = MediaCodec.decodeImage(topDown)
+    assert((b.width, b.height) === ((3, 2)))
+    assert(b.pixels.toList === a.pixels.toList)
+    // 8 bits per pixel (more than 16 entries) over a palette whose
+    // entry i is (R, G, B) = (3i, 5i, 7i)
+    val pal = Array.tabulate(20)(i => (3 * i << 16) | (5 * i << 8) | 7 * i)
+    val indexed = MediaCodec.encodeImage("bmp",
+      MediaCodec.indexedImage(4, 3, pal, (x, y) => (x + 4 * y) % 20))
+    assert(MediaCodec.parseBmp(indexed).bitsPerPixel === 8)
+    val img = MediaCodec.decodeImage(indexed)
+    for (y <- 0 until 3; x <- 0 until 4) {
+      val i = (x + 4 * y) % 20
+      assert((img(x, y, 0), img(x, y, 1), img(x, y, 2)) ===
+        ((7 * i, 5 * i, 3 * i)), s"($x,$y)")
+    }
+  }
+
   test("GVID container round-trips frames; stride sampling keeps " +
     "exactly the even frames") {
-    def frame(f: Int) = MediaCodec.synthesizeBmp24(2, 2,
+    def frame(f: Int) = bmp24(2, 2,
       (x, y, c) => (f * 50 + 10 * y + x + c) % 256)
     val vid = MediaCodec.synthesizeVideo((0 until 5).map(frame))
     val back = MediaCodec.decodeVideoFrames(vid)
@@ -391,18 +438,18 @@ class MultimodalSpec extends SparkSpec {
 
   test("truncated/corrupt payloads fail loudly in the decoders and " +
     "route to honest fallbacks in the operators") {
-    // header-only BMP (valid magic, no pixel array): complete=false,
+    // header-only BMP (valid magic, no pixel array): not decodable,
     // decode refuses with a clear message instead of AIOOBE
     val headerOnly = MediaCodec.synthesizeBmp(4, 3)
-    assert(!MediaCodec.isCompleteBmp24(headerOnly))
+    assert(!MediaCodec.isDecodableImage(headerOnly))
     val e1 = intercept[IllegalArgumentException](
-      MediaCodec.decodeBmp24(headerOnly))
-    assert(e1.getMessage.contains("truncated"))
-    val full = MediaCodec.synthesizeBmp24(4, 3, (x, y, c) => x + y + c)
-    assert(MediaCodec.isCompleteBmp24(full))
+      MediaCodec.decodeImage(headerOnly))
+    assert(e1.getMessage.contains("truncated"), e1.getMessage)
+    val full = bmp24(4, 3, (x, y, c) => x + y + c)
+    assert(MediaCodec.isDecodableImage(full))
     // truncated GVID: in-bounds magic, frame length past the end
     val vid = MediaCodec.synthesizeVideo(
-      Seq(MediaCodec.synthesizeBmp24(2, 2, (_, _, _) => 1)))
+      Seq(bmp24(2, 2, (_, _, _) => 1)))
     val cut = java.util.Arrays.copyOf(vid, vid.length - 3)
     assert(MediaCodec.isCompleteGvid(vid) && !MediaCodec.isCompleteGvid(cut))
     val e2 = intercept[IllegalArgumentException](
@@ -411,9 +458,9 @@ class MultimodalSpec extends SparkSpec {
     // truncated WAV data chunk
     val wav = MediaCodec.synthesizeWavPcm16(8000, Array(1, -2, 3, -4))
     val wcut = java.util.Arrays.copyOf(wav, wav.length - 2)
-    assert(MediaCodec.isCompletePcm16(wav) && !MediaCodec.isCompletePcm16(wcut))
+    assert(MediaCodec.isDecodableAudio(wav) && !MediaCodec.isDecodableAudio(wcut))
     val e3 = intercept[IllegalArgumentException](
-      MediaCodec.decodePcm16(wcut))
+      MediaCodec.decodeAudio(wcut))
     assert(e3.getMessage.contains("truncated"))
     // operator surfaces: header-only BMP passes through resize
     // untouched; truncated GVID yields honest-empty frames; the
@@ -444,7 +491,7 @@ class MultimodalSpec extends SparkSpec {
       (pf(2) << 16) | (pf(1) << 8) | pf(0)
     }
     val media = Seq(
-      (1L, "bmp", MediaCodec.synthesizeBmp24(srcW, srcH, f)),
+      (1L, "bmp", bmp24(srcW, srcH, f)),
       (2L, "png", MediaCodec.encodeImage("png",
         MediaCodec.bgrImage(srcW, srcH, f))),
       (3L, "gif", MediaCodec.encodeImage("gif",
