@@ -144,13 +144,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     // Job-launch counter (many-job weather detection): onJobStart is
     // posted at submission, long before the blocking action returns,
     // so a snapshot after each query is an accurate per-query count.
@@ -162,7 +156,6 @@ object Bench {
           jobCounter.incrementAndGet(); ()
         }
       })
-    Tables.prepare(spark)
     // Untimed warmup: pay JVM/JIT/codegen base cost and fault the input
     // files into page cache once, so per-query timings measure the
     // queries rather than cold-start overhead. Running the whole
@@ -484,12 +477,7 @@ object Bench {
     // Reference-parity core (SURVEY §2 non-[EXT] keys): the subtotal
     // comparable against BASELINE.md — the rest of the inventory is
     // [EXT] capability the reference does not have.
-    val coreKeys = Set(
-      "q_scan_cast", "q_rename_project", "q_roundrobin_tag",
-      "q_ts_parse_format", "q_validate_filter", "q_invalid_rows",
-      "q_strict_file_flag", "q_route_valid_groups", "q_dropna",
-      "q_agg_metrics", "q_unpivot_agg", "q_empty_check",
-      "q_upsert_latest", "q_chunk_split")
+    val coreKeys = graft.queries.ReferenceQueries.defs.map(_.name).toSet
     val coreTotal = results.collect {
       case (k, v, _) if coreKeys.contains(k) => v
     }.sum

@@ -170,7 +170,6 @@ object IngestBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val files = sys.env.getOrElse("SPARK_GRAFT_INGEST_FILES", "20").toInt
     val rowsPerFile = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "5000").toInt
     // The reference's 20th file has 1,453 rows; that tail only applies
@@ -195,28 +194,13 @@ object IngestBench {
       !sys.env.contains("SPARK_GRAFT_INGEST_FILES") &&
         !sys.env.contains("SPARK_GRAFT_INGEST_ROWS") && badPct == 0 && !strict
     val lastFileRows = if (isReferenceWorkload) 1453 else rowsPerFile
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = Tables.localSession()
 
-    // Warmup matches the timed run's MODE (dirty files + strict
-    // verdicts included) so the quarantine/routing code path is as
-    // JIT-warm as the commit path when the probe measures it.
-    val warmRoot = Files.createTempDirectory("graft_ingest_warm")
-    // 10 warm files at a warm-only pct floor of 10 when dirty: the
-    // stripe's first dirty index for pct p is ceil(100/p)-ish, so a
-    // low timed pct (1-9) over 10 warm files would seed none and
-    // leave the quarantine path cold in exactly the runs the warmup
-    // exists for. The warm workload is independent — what matters is
-    // that BOTH routing paths are JIT-warm, not that its mix matches.
-    runOnce(spark, warmRoot, files = if (badPct > 0) 10 else 3,
-      rowsPerFile = 500, lastFileRows = 500,
-      badPct = if (badPct > 0) math.max(badPct, 10) else 0,
-      strict = strict)
+    // One untimed drain at the timed shape (files, rows, dirty share
+    // and verdict mode), so every path the timed drains take has run
+    // before timing starts.
+    runOnce(spark, Files.createTempDirectory("graft_ingest_warm"),
+      files, rowsPerFile, lastFileRows, badPct, strict)
 
     // Each drain gets a fresh root and its own routing and row checks.
     // The deferred per-file move loop is the one O(files) driver-side

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -182,14 +181,7 @@ WHERE rnk <= $k"""
     require(args.length >= 2,
       "usage: IvfProbe <corpusDir> <outDir> [embFactor]")
     val (baseDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = Tables.localSession()
 
     // Optional third arg: build (once, version-markered) an
     // EMBEDDINGS-ONLY factor-x corpus from baseDir via Scaling's own

@@ -191,18 +191,10 @@ object Scaling {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_${factor}x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // At scale factors >= 30 the default cpus-sized shuffle can leave a
     // single skewed reducer grinding; allow overriding independently to
     // probe partition-granularity effects.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = Tables.localSession(sys.env.get("SPARK_GRAFT_SHUFFLE"))
 
     // The marker records the GENERATOR VERSION, not just existence: a
     // corpus built by an older construction (e.g. the degenerate

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
@@ -24,14 +23,7 @@ object SimHashShardProbe {
     require(args.length >= 1,
       "usage: SimHashShardProbe <corpusDir> [docFactor]")
     val baseDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = Tables.localSession()
 
     // Optional second arg: build (once, version-markered) a
     // DOCUMENTS-ONLY factor-x corpus via Scaling's own v4 Caesar

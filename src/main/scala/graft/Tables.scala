@@ -55,6 +55,24 @@ object Tables {
     graft.functions.GraftFunctions.registerAll(spark)
   }
 
+  /** The session of the local-mode mains: `local[N]` with N from
+    * `SPARK_GRAFT_CPUS`, or this JVM's available processors when it is
+    * unset; N shuffle partitions unless `shufflePartitions` is given;
+    * no UI; WARN logging; and [[prepare]]'s confs.
+    */
+  def localSession(shufflePartitions: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    prepare(spark)
+    spark
+  }
+
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

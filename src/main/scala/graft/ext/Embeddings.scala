@@ -380,7 +380,8 @@ object Embeddings {
 
   /** PCA whose every decision is EXACT-integer or
     * exactly-representable-double arithmetic, so an independent engine
-    * (the DuckDB oracle, `pcaOracleSql`) reproduces the model
+    * (the DuckDB oracle, [[graft.queries.EmbeddingQueries]]'s
+    * `pcaOracleSql`) reproduces the model
     * BIT-FOR-BIT — the [[kmeans]] quantization discipline applied to
     * eigendecomposition, closing the one "not oracle-able" claim this
     * module used to carry:

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * exact power-of-two scaling, in a FIXED evaluation order. Any
   * engine evaluating this formula over binary64 produces the
   * bit-identical double, so downstream floors/rounds can never
-  * straddle. The DuckDB mirror is [[graft.SparkEntry]]'s `lnSqlChain`
+  * straddle. The DuckDB mirror is [[graft.queries.Shared]]'s `lnSqlChain`
   * — op-for-op the same tree (constants written in scientific
   * notation there so DuckDB parses them as DOUBLE, not DECIMAL).
   *
@@ -112,7 +112,7 @@ object DetMath {
     * few ulps identically in every engine. Domain |x| ≲ 700.
     *
     * Coefficients are compile-time double quotients (1.0/6.0, …); the
-    * SQL mirror ([[graft.SparkEntry]]'s expSqlChain) writes
+    * SQL mirror ([[graft.queries.Shared]]'s expSqlChain) writes
     * (1e0/6e0) so DuckDB types them DOUBLE.
     */
   def expq(x: Column): Column =
@@ -141,7 +141,7 @@ object DetMath {
   val FpQ: Long = 1000000000000000000L
 
   /** ⌊ln2 · 10¹⁸⌋ — pinned INTEGER constant, mirrored verbatim in the
-    * oracle SQL ([[graft.SparkEntry]]'s `lnRatioFpSql`).
+    * oracle SQL ([[graft.queries.DriftQueries]]'s `lnRatioFpSql`).
     */
   val Ln2Fp: Long = 693147180559945309L
 
@@ -261,7 +261,7 @@ object DetMath {
       LnqExpr(org.apache.spark.sql.GraftExpressionBridge.expression(x)))
 
   /** [[lnq]]'s op tree in Column form — the literal mirror of the SQL
-    * chain ([[graft.SparkEntry]]'s lnSqlChain), kept as the spec
+    * chain ([[graft.queries.Shared]]'s lnSqlChain), kept as the spec
     * vehicle proving tree ≡ scalar bit-for-bit (hence DuckDB chain ≡
     * scalar). Queries use [[lnq]] (one CodegenFallback node
     * evaluating [[lnqDouble]]): inlining this ~80-node tree at every

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{QueryDef, ReferenceQueries}
+
 /** Inventory contract: every declared query has an oracle and every
   * oracle has a query — the driver records a weaker rows-only check
   * for any gap, and a mismatched key silently orphans an oracle. The
@@ -8,10 +10,17 @@ package graft
   */
 class InventorySpec extends SparkSpec {
   test("queries and oracles are exactly 1:1") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
-    assert(q.size === 200, s"inventory size changed: ${q.size} — update SURVEY.md totals")
+    val names = SparkEntry.definitions.map(_.name)
+    assert(names.size === 200, s"inventory size changed: ${names.size} — update SURVEY.md totals")
+    assert(names.distinct.size === names.size)
+    assert(SparkEntry.queries.keySet === names.toSet)
+    assert(SparkEntry.oracleSql.keySet === names.toSet)
+  }
+
+  test("a query name defined twice is refused, not silently collapsed") {
+    val d = ReferenceQueries.defs.head
+    val e = intercept[IllegalArgumentException](
+      QueryDef.byName(Seq(d, d.copy(oracleSql = "SELECT 1"))))
+    assert(e.getMessage.contains(d.name))
   }
 }

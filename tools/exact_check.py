@@ -11,7 +11,7 @@ still fail the driver's hash on a 1-ulp float divergence — this tool
 catches that class locally. With -v it prints the first few differing
 cells (column, row, both values, hex bit patterns). Dev tool only.
 """
-import json, sys, glob, os, struct, math
+import argparse, json, sys, glob, os, struct, math
 import duckdb
 
 
@@ -60,6 +60,9 @@ def main(sf_dir, out_dir, only=None, verbose=False):
         con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for q in sorted((only or set()) - oracle.keys()):
+        print(f"FAIL {q}: no entry in oracle_sql.json")
+        n_fail += 1
     for q, sql in sorted(oracle.items()):
         if only is not None and q not in only:
             continue
@@ -160,10 +163,11 @@ def main(sf_dir, out_dir, only=None, verbose=False):
 
 
 if __name__ == "__main__":
-    args = [a for a in sys.argv[1:] if not a.startswith("-")]
-    only = None
-    verbose = "-v" in sys.argv
-    for i, a in enumerate(sys.argv):
-        if a == "--only":
-            only = set(sys.argv[i + 1].split(","))
-    sys.exit(main(args[0], args[1], only, verbose))
+    ap = argparse.ArgumentParser(description="Bit-exact oracle check of a Verify dump.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--only", type=lambda v: set(v.split(",")),
+                    help="comma-separated query keys to check")
+    ap.add_argument("-v", action="store_true", help="print differing cells")
+    a = ap.parse_args()
+    sys.exit(main(a.sf_dir, a.out_dir, a.only, a.v))

@@ -2,7 +2,7 @@
 """Cross-engine probe for the exact-integer fixed-point ln chain.
 
 The pure-integer PSI contract rests on one claim: DuckDB evaluating
-`lnRatioFpSql` (graft/SparkEntry.scala) produces the IDENTICAL integer
+`lnRatioFpSql` (graft/queries/DriftQueries.scala) produces the IDENTICAL integer
 as `DetMath.lnRatioFpBig` for every ratio of positive BIGINTs in the
 domain. The per-query exact gate only exercises the (a, b) pairs the
 current testdata happens to produce; this probe sweeps the DOMAIN —
@@ -12,7 +12,7 @@ count-shaped random pairs — so a DuckDB behavior change in bin()/<<//
 // would be caught here before an external compare sees it.
 
 The Python model below mirrors DetMath.lnRatioFpBig; the SQL text
-mirrors SparkEntry.lnRatioFpSql. All three share the pinned constants
+mirrors DriftQueries.lnRatioFpSql. All three share the pinned constants
 (Q = 10^18, LN2_FP, the 12 Horner coefficients) — keep in sync.
 
 Usage: python3 tools/lnfp_check.py    (exit 0 = all pairs agree)
