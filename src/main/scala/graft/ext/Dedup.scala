@@ -234,7 +234,7 @@ object Dedup {
     * Single definition on purpose: incremental dedup only works if the
     * batch-side fingerprint matches how history digests were persisted,
     * so every digest-keyed operator (exact dedup, textDigests,
-    * incremental, streaming dedup) must share this exact expression.
+    * incremental) must share this exact expression.
     */
   def textDigest(text: Column): Column = unhex(md5(text.cast("binary")))
 
@@ -759,9 +759,8 @@ object Dedup {
 
   /** The 60-bit portable SimHash signature table (id, simhash): bit i
     * is the sign of Σ_tokens ±1 by bit i of the md5-prefix token hash.
-    * Shared by [[portableSimHashNearDuplicates]] and the streaming
-    * gate ([[graft.stream.StreamNearDup]] matches it bit-for-bit via
-    * the scalar model — spec-pinned).
+    * The near-duplicate miners build on its keyed form; specs use it
+    * as the brute-force reference for their pairs.
     */
   def portableSimHashSignatures(
       docs: DataFrame, idCol: String, textCol: String): DataFrame =

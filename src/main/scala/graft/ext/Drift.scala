@@ -69,33 +69,6 @@ object Drift {
     */
   def psi(
       ref: DataFrame, cur: DataFrame, valueCol: String,
-      width: Long, eps: Double = 1e-6): DataFrame =
-    psiFromBinnedRef(binCounts(ref, valueCol, width, "n_ref"),
-      cur, valueCol, width, eps)
-
-  /** The per-bin count aggregate [[psi]] runs on each side:
-    * (bin = ⌊value/width⌋, count). Public so a STATIC reference can
-    * be binned ONCE and reused across many comparisons — a streaming
-    * monitor must not rescan the training corpus every trigger.
-    */
-  def binCounts(
-      df: DataFrame, valueCol: String, width: Long,
-      countName: String): DataFrame = {
-    require(width > 0, s"width must be positive: $width")
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(floor(col(valueCol) / lit(width.toDouble)).cast("long")
-        .as("bin"))
-      .agg(count(lit(1)).as(countName))
-  }
-
-  /** [[psi]] against an already-binned reference — `refBins` must be
-    * the exact [[binCounts]] shape (bin, n_ref) at the SAME width.
-    * Values are identical to [[psi]] by construction (psi delegates
-    * here); what changes is the plan: the reference aggregate becomes
-    * a reusable (persistable) table instead of a per-call rescan.
-    */
-  def psiFromBinnedRef(
-      refBins: DataFrame, cur: DataFrame, valueCol: String,
       width: Long, eps: Double = 1e-6): DataFrame = {
     require(width > 0, s"width must be positive: $width")
     val epsDen = math.round(1.0 / eps)
@@ -106,7 +79,7 @@ object Drift {
     // input), not as a wrapped task failure once data shows up.
     require(epsDen <= (1L << 30),
       s"psi eps too fine for exact Long terms: 1/$epsDen")
-    val r = refBins
+    val r = binCounts(ref, valueCol, width, "n_ref")
     val c = binCounts(cur, valueCol, width, "n_cur")
     // Totals are a one-row aggregate broadcast back over the bin
     // table — NEVER a collect of the bins themselves, whose count is
@@ -142,6 +115,17 @@ object Drift {
       .agg(sum(term.cast("decimal(20,0)")).cast("long").as("psi_micro12"))
       .select("psi_micro12", "n_bins", "n_ref", "n_cur")
   }
+
+  /** The per-bin count aggregate [[psi]] runs on each side:
+    * (bin = ⌊value/width⌋, count).
+    */
+  private def binCounts(
+      df: DataFrame, valueCol: String, width: Long,
+      countName: String): DataFrame =
+    df.filter(col(valueCol).isNotNull)
+      .groupBy(floor(col(valueCol) / lit(width.toDouble)).cast("long")
+        .as("bin"))
+      .agg(count(lit(1)).as(countName))
 
   /** PSI TREND: one PSI row per `groupCol` value (typically the day),
     * each against the same fixed reference — the monitoring TABLE a

@@ -270,14 +270,12 @@ object Embeddings {
       assign: Array[Array[Double]] => Column)
       : (Array[Array[Double]], DataFrame) = {
     var centroids = init
-    val qsums = (0 until dim).map(i =>
-      sum(floor(col(vecCol).getItem(i).cast("double") * lit(1e6))
-        .cast("long")).as(s"__s$i"))
+    val aggs = lloydPassAggs(vecCol, dim)
     var it = 0
     while (it < iters) {
       val states = df
         .groupBy(assign(centroids).as("cluster"))
-        .agg(count(lit(1)).as("__n"), qsums: _*)
+        .agg(aggs.head, aggs.tail: _*)
         .collect()
         .map(r => r.getInt(0) -> r).toMap
       centroids = centroids.zipWithIndex.map { case (old, j) =>
@@ -293,6 +291,14 @@ object Embeddings {
     }
     (centroids, df.withColumn("cluster", assign(centroids)))
   }
+
+  /** One [[lloyd]] pass's aggregate columns: the member count `__n`,
+    * then the exact integer centroid sums `__s0`…`__s(dim-1)`.
+    */
+  private[graft] def lloydPassAggs(vecCol: String, dim: Int): Seq[Column] =
+    count(lit(1)).as("__n") +: (0 until dim).map(i =>
+      sum(floor(col(vecCol).getItem(i).cast("double") * lit(1e6))
+        .cast("long")).as(s"__s$i"))
 
   /** Deterministic pseudo-random (Forgy) init for CORPUS-SIZED k:
     * the k vectors with the smallest portable 60-bit md5 prefix of

@@ -115,83 +115,3 @@ object CovAgg {
   def covState(vec: Column, dim: Int): Column =
     column(CovAgg(expression(vec), dim).toAggregateExpression())
 }
-
-/** First-moment sibling of [[CovAgg]]: (n, Σv) with d+1 doubles of
-  * state — the mergeable per-group vector mean, e.g. one k-means
-  * centroid update per cluster per pass.
-  */
-case class VecSumAgg(
-    vec: Expression, dim: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
-
-  require(dim >= 1, s"dim must be positive: $dim")
-  private val stateLen = 1 + dim
-
-  override def children: Seq[Expression] = Seq(vec)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Double] =
-    new Array[Double](stateLen)
-
-  override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
-    val raw = vec.eval(input)
-    if (raw == null) return buf
-    val arr = raw.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"vec_sum_agg(dim=$dim) got a vector of ${arr.numElements()} elements")
-    buf(0) += 1.0
-    var i = 0
-    while (i < dim) {
-      buf(1 + i) += (vec.dataType match {
-        case ArrayType(FloatType, _) => arr.getFloat(i).toDouble
-        case _ => arr.getDouble(i)
-      })
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Double], other: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < stateLen) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Double]): Any =
-    new GenericArrayData(buf.map(d => d: Any))
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bytes = new ByteArrayOutputStream(8 * stateLen)
-    val out = new DataOutputStream(bytes)
-    var i = 0
-    while (i < stateLen) { out.writeDouble(buf(i)); i += 1 }
-    out.flush()
-    bytes.toByteArray
-  }
-
-  override def deserialize(storage: Array[Byte]): Array[Double] = {
-    val in = new DataInputStream(new ByteArrayInputStream(storage))
-    val buf = new Array[Double](stateLen)
-    var i = 0
-    while (i < stateLen) { buf(i) = in.readDouble(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): VecSumAgg =
-    copy(vec = newChildren(0))
-  override def prettyName: String = "graft_vec_sum_agg"
-}
-
-object VecSumAgg {
-  /** Aggregate Column: result layout [n, sums(d)]. */
-  def vecSum(vec: Column, dim: Int): Column =
-    column(VecSumAgg(expression(vec), dim).toAggregateExpression())
-}

@@ -65,14 +65,6 @@ object Schemas {
     "1.#IND", "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN", "None",
     "n/a", "nan", "null")
 
-  /** Typed row for the validated sensor path. */
-  final case class SensorReading(
-      timestamp: java.sql.Timestamp,
-      sensor_id: String,
-      temperature: Option[Double],
-      humidity: Option[Double],
-      pressure: Option[Double])
-
   /** Multimodal document row: media payloads are opaque binary columns
     * with typed metadata travelling beside them (north-star extension;
     * no reference equivalent).

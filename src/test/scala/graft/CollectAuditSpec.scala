@@ -32,10 +32,6 @@ class CollectAuditSpec extends AnyFunSuite {
       "toLocalIterator STREAMS one file's rows/aggregates into JDBC " +
         "batches inside the per-file txn — iterator pull, one " +
         "partition resident at a time, never a materialized array"),
-    "graft/sink/GraftLake.scala" -> (3,
-      "manifest reads: one row per DATA FILE (the Delta-log bounded-" +
-        "driver-state contract) and <= |distinct bloom words| rows " +
-        "per file for the sidecar probe"),
     "graft/ext/Dedup.scala" -> (2,
       "gridSelfJoin hot-cell gate: <= n/gridThreshold key tuples " +
         "(each hot cell holds >= gridThreshold rows by definition) — " +
@@ -60,8 +56,6 @@ class CollectAuditSpec extends AnyFunSuite {
         "the bin-universe bound is ENFORCED, not assumed"),
     "graft/ext/Vocab.scala" -> (1,
       "limit(fbTerms) RM3 expansion terms"),
-    "graft/stream/StreamQuality.scala" -> (2,
-      "<= |checks| report rows per micro-batch (one aggregate pass)"),
     "graft/stream/Ingest.scala" -> (1,
       "one verdict row per file in the micro-batch — driver-side " +
         "routing decisions are per-file by design"),

@@ -90,9 +90,11 @@ class EmbeddingsSpec extends SparkSpec {
     val init = emb.orderBy("vec_id").limit(4)
       .select(col("embedding").cast("array<double>")).collect()
       .map(_.getSeq[Double](0).toArray)
+    val aggs = Embeddings.lloydPassAggs("embedding", 64)
     val pass = emb
-      .groupBy(Embeddings.nearestCentroid(col("embedding"), init).as("c"))
-      .agg(graft.functions.VecSumAgg.vecSum(col("embedding"), 64))
+      .groupBy(Embeddings.nearestCentroidQuantized(col("embedding"), init)
+        .as("cluster"))
+      .agg(aggs.head, aggs.tail: _*)
     val plan = pass.queryExecution.executedPlan.toString
     assert(!plan.contains("Window") && !plan.toLowerCase.contains("join")
       && !plan.contains("Generate"), s"unexpected operators:\n$plan")

@@ -1,48 +1,14 @@
 package graft.stream
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ext.{TextClean, TextStats}
 
-/** The curation operators are plain Column expressions + stateful
-  * dedup, so the batch pipeline (scrub → quality gate → exact dedup)
-  * composes unchanged on a STREAM — this spec is the proof.
+/** The stateless curation operators are plain Column expressions, so
+  * the batch pipeline (sample gate → split → chunking) composes
+  * unchanged on a STREAM — this spec is the proof.
   */
 class CurateStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  test("streaming curation: scrub -> quality gate -> dedup, incremental") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-
-    val curated = StreamDedup.exact(
-      docs
-        .withColumn("clean_text", TextClean.scrub(col("text")))
-        .withColumn("n_tokens", TextStats.tokenCount(col("clean_text")))
-        .filter(col("n_tokens") >= 4),
-      "clean_text")
-
-    val q = curated.writeStream.outputMode("append")
-      .format("memory").queryName("curated_out").start()
-    try {
-      mem.addData(
-        (1L, "the quick   brown fox jumps over it"), // messy spacing
-        (2L, "too short"),                           // fails the gate
-        (3L, "the quick brown fox jumps over it"))   // dup of 1 after scrub
-      q.processAllAvailable()
-      mem.addData(
-        (4L, "the quick brown fox jumps over it"),   // dup in later batch
-        (5L, "a genuinely different long document here"))
-      q.processAllAvailable()
-
-      val out = spark.table("curated_out")
-        .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
-      assert(out.keySet === Set(1L, 5L))
-      assert(out(1L) === "the quick brown fox jumps over it")
-    } finally q.stop()
-  }
 
   test("streaming chunk + sample + split: stateless curation ops on a stream") {
     implicit val sqlCtx = spark.sqlContext

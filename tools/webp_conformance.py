@@ -2,7 +2,7 @@
 """Cross-check graft's VP8L ENCODER against libwebp's decoder.
 
 Usage:
-  sbt -batch "runMain graft.ext.WebpConformanceDump /tmp/webp_dump"
+  sbt -batch "Test/runMain graft.ext.WebpConformanceDump /tmp/webp_dump"
   python3 tools/webp_conformance.py /tmp/webp_dump
 
 The Scala main writes `<name>_<w>x<h>.webp` files encoded by
