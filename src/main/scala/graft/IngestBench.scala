@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import graft.config.PipelineConf
 import graft.sink.ParquetSink
@@ -113,9 +114,20 @@ object IngestBench {
     * quarantined is the verified on-disk count, not the seeded dirty
     * count (lenient mode routes zero files for the same seeding).
     */
-  private def runOnce(spark: SparkSession, root: Path,
+  /** One drain over a fresh temp root (CSV inputs, lake, checkpoint),
+    * deleted once its routing and row checks have run.
+    */
+  private def runOnce(spark: SparkSession, prefix: String,
       files: Int, rowsPerFile: Int, lastFileRows: Int,
-      badPct: Int = 0, strict: Boolean = false): (Long, Long, Int, Double) = {
+      badPct: Int, strict: Boolean): (Long, Long, Int, Double) = {
+    val root = Files.createTempDirectory(prefix)
+    try drain(spark, root, files, rowsPerFile, lastFileRows, badPct, strict)
+    finally FileUtils.deleteDirectory(root.toFile)
+  }
+
+  private def drain(spark: SparkSession, root: Path,
+      files: Int, rowsPerFile: Int, lastFileRows: Int,
+      badPct: Int, strict: Boolean): (Long, Long, Int, Double) = {
     val dataDir = Files.createDirectories(root.resolve("data"))
     val conf = PipelineConf(
       dataDir = dataDir.toString,
@@ -214,7 +226,7 @@ object IngestBench {
       math.abs(a - b) <= WarmAgreement * math.max(a, b)
     }
     while (!agreed && warm.size < MaxWarmDrains)
-      warm += runOnce(spark, Files.createTempDirectory("graft_ingest_warm"),
+      warm += runOnce(spark, "graft_ingest_warm",
         files, rowsPerFile, lastFileRows, badPct, strict)._4
 
     // Each drain gets a fresh root and its own routing and row checks.
@@ -223,9 +235,8 @@ object IngestBench {
     // probe shows whether the sequential renames ever dominate.
     val drains = (1 to TimedDrains).map { _ =>
       Ingest.moveLoopNanos.set(0L)
-      val root = Files.createTempDirectory("graft_ingest_bench")
-      val (rows, sunk, quarantined, sec) =
-        runOnce(spark, root, files, rowsPerFile, lastFileRows, badPct, strict)
+      val (rows, sunk, quarantined, sec) = runOnce(spark, "graft_ingest_bench",
+        files, rowsPerFile, lastFileRows, badPct, strict)
       (rows, sunk, quarantined, sec, Ingest.moveLoopNanos.get() / 1e9)
     }
     val (rows, sunk, filesQuarantined, sec, moveSec) =

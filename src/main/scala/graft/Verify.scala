@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,6 +37,9 @@ object Verify {
       // Progress marker BEFORE the run: correlates any Spark warning in
       // the log with the query that emitted it.
       System.err.println(s"[verify] running $name")
+      // A query that fails must leave no result behind: an earlier
+      // dump's directory would be compared as if this run produced it.
+      FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

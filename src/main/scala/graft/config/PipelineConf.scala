@@ -48,8 +48,6 @@ final case class PipelineConf(
 )
 
 object PipelineConf {
-  val default: PipelineConf = PipelineConf()
-
   /** JDBC settings come exclusively from the environment (never from a
     * checked-in config file). Returns None when unset → tests and the
     * lake-native mode run without any database.

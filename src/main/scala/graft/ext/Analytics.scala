@@ -160,27 +160,6 @@ object Analytics {
       .select(outCols: _*)
   }
 
-  /** The sketch path of [[valueQuantiles]]: `approx_percentile` (a
-    * mergeable quantile sketch) holds CONSTANT memory per group instead
-    * of buffering the value multiset — the form that survives
-    * billion-row groups. `accuracy` bounds the rank error at
-    * 1/accuracy (default 1e-4 of the group size).
-    */
-  def valueQuantilesApprox(
-      df: DataFrame, groupCols: Seq[String], valueCol: String,
-      quantiles: Seq[(String, Double)] =
-        Seq("p50" -> 0.5, "p95" -> 0.95, "p99" -> 0.99),
-      accuracy: Int = 10000): DataFrame = {
-    require(quantiles.nonEmpty, "need at least one quantile")
-    val ps = array(quantiles.map(q => lit(q._2)): _*)
-    val outCols = groupCols.map(col) ++ quantiles.zipWithIndex.map {
-      case ((name, _), i) => element_at(col("__qs"), i + 1).as(name)
-    }
-    df.groupBy(groupCols.map(col): _*)
-      .agg(approx_percentile(col(valueCol), ps, lit(accuracy)).as("__qs"))
-      .select(outCols: _*)
-  }
-
   /** The ORACLE-ABLE scale path of [[valueQuantiles]]: fixed-width-bin
     * histogram quantiles. One aggregate pass builds per-bin counts
     * (memory bounded by value-range / `width`, independent of row
@@ -189,8 +168,8 @@ object Analytics {
     * requested quantile locates its bin and interpolates uniformly
     * within it.
     *
-    * Against [[valueQuantilesApprox]]: approx_percentile's t-digest has
-    * tighter rank error but its merge is partition-order-dependent —
+    * Against Spark's `approx_percentile`: its t-digest has tighter
+    * rank error but its merge is partition-order-dependent —
     * impossible to oracle. Here every count is an exact integer, the
     * rank `r = p·(n−1)` and the interpolation
     * `binLo + width·(r − cumBefore)/cnt` are IEEE double ops on exact

@@ -50,14 +50,9 @@ import org.apache.spark.sql.functions._
   * long tail of hapax words costs rows in every one of the 32k window
   * passes while contributing ~nothing to any argmax) and to run the
   * loop on that bounded table, which for a capped vocab fits a single
-  * beefy driver/worker as easily as a cluster.
-  * [[learnMergesCapped]] commits the capping half of that posture:
-  * deterministic top-`maxVocab` words by (freq desc, word asc) — a
-  * bounded-heap TakeOrdered, one extra distributed pass, after which
-  * every iteration's tables shrink from |vocab| to maxVocab. The
-  * inventory queries stay at the frozen uncapped rung (numMerges = 6,
-  * tiny test vocab); the capped variant is spec-proven equivalent to
-  * learning on the physically-truncated corpus.
+  * beefy driver/worker as easily as a cluster. This library learns
+  * on the full vocabulary; the inventory queries stay at the frozen
+  * rung (numMerges = 6, tiny test vocab).
   */
 object Bpe {
 
@@ -78,22 +73,6 @@ object Bpe {
       docs: DataFrame, textCol: String, numMerges: Int): DataFrame =
     learn(docs, textCol, numMerges)._2.get // needVocab=true: always Some
 
-  /** [[learnMerges]] on the `maxVocab` most frequent distinct words
-    * (ties by word, ascending — a total order, so the cap is
-    * deterministic and cross-engine reproducible): the committed
-    * production-merge-count posture (object scaladoc). Only the merge
-    * TABLE is exposed — token pricing of a corpus must see the full
-    * vocabulary, so [[vocabAfterMerges]] deliberately has no capped
-    * sibling (apply the learned merges instead).
-    */
-  def learnMergesCapped(
-      docs: DataFrame, textCol: String, numMerges: Int,
-      maxVocab: Int): DataFrame = {
-    require(maxVocab >= 1, s"maxVocab must be >= 1: $maxVocab")
-    learn(docs, textCol, numMerges, maxVocab = Some(maxVocab),
-      needVocab = false)._1
-  }
-
   /** `needVocab = false` (the merge-table-only callers) skips the
     * post-merge vocab aggregate entirely — its persist+count is a full
     * extra job over the final symbol generation whose result would be
@@ -104,19 +83,14 @@ object Bpe {
     */
   private def learn(
       docs: DataFrame, textCol: String, numMerges: Int,
-      maxVocab: Option[Int] = None, needVocab: Boolean = true)
+      needVocab: Boolean = true)
       : (DataFrame, Option[DataFrame]) = {
     require(numMerges >= 1, s"numMerges must be >= 1: $numMerges")
     val spark = docs.sparkSession
-    val allWords = docs.filter(col(textCol).isNotNull)
+    val words = docs.filter(col(textCol).isNotNull)
       .select(explode(split(trim(lower(col(textCol))), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    // Frequency cap (production posture): top-maxVocab by (freq desc,
-    // word asc) is a TakeOrderedAndProject — bounded heap per
-    // partition, never a global sort of the vocabulary.
-    val words = maxVocab.fold(allWords)(m =>
-      allWords.orderBy(col("freq").desc, col("word").asc).limit(m))
     val byWord = Window.partitionBy(col("word")).orderBy(col("pos"))
     var syms = words
       .select(col("word"), col("freq"),

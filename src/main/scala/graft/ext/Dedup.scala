@@ -238,16 +238,6 @@ object Dedup {
     */
   def textDigest(text: Column): Column = unhex(md5(text.cast("binary")))
 
-  /** Exact dedup on a large text column via md5 digest: grouping key is
-    * 16 bytes instead of the document, so the shuffle stays small at
-    * 100 TB. Collision probability is negligible (2^-64 at petascale).
-    */
-  def exactByDigest(df: DataFrame, textCol: String, repCol: String): DataFrame =
-    df.withColumn("__fp", textDigest(col(textCol)))
-      .groupBy(col("__fp"))
-      .agg(min(col(repCol)).as(repCol), count(lit(1)).as("n_copies"))
-      .drop("__fp")
-
   /** Distinct word n-gram shingles — the custom codegen'd
     * [[graft.functions.WordShingles]] expression (the HOF formulation
     * costs ~15 s of lambda codegen per query plus ~10x slower eval).
@@ -272,16 +262,6 @@ object Dedup {
       .select(col(idCol),
         array(slots.indices.map(i => col(s"__h$i")): _*).as("signature"))
   }
-
-  /** MinHash signature: k independent permutations approximated by
-    * seeded xxhash64 over each shingle; signature[i] = min hash under
-    * seed i.
-    */
-  def minHashSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame =
-    signaturesFromShingleSets(
-      shingleSets(docs, idCol, textCol, shingleN), idCol, numHashes)
 
   /** Signatures derived from an already-shingled `(id, __set)` frame —
     * lets near-dup pipelines shingle ONCE and reuse the same sets for
@@ -525,71 +505,13 @@ object Dedup {
       .drop("__fp", "__maybe", "__rn")
   }
 
-  /** Incremental MinHash candidates: pairs involving at least one NEW
-    * document, probed against a PERSISTED signature table — the
-    * historical corpus is never re-shingled or re-signed, and old×old
-    * pairs are never generated (the join is new-banded vs
-    * (history ∪ new)-banded, not all-vs-all). Output ids are
-    * normalized (id_a < id_b) and deduped, so new-vs-new pairs appear
-    * once. `est_jaccard` = signature slot agreement; verify against
-    * true token sets downstream if exactness is required.
-    */
-  def incrementalMinHashCandidatePairs(
-      newSigs: DataFrame, historySigs: DataFrame, idCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    // Fail fast on a signature-width mismatch: probing a history table
-    // persisted with a different numHashes would otherwise return
-    // silently-wrong buckets (element_at past the end is null under
-    // ANSI-off) and deflated est_jaccard.
-    def widthChecked(sigs: DataFrame, side: String) = sigs.withColumn(
-      "signature",
-      when(size(col("signature")) === numHashes, col("signature"))
-        .otherwise(raise_error(concat(
-          lit(s"$side signature width != $numHashes slots: "),
-          size(col("signature"))))))
-    // new-vs-new via the standard pair generator (new side banded once,
-    // each pair evaluated once) + new-vs-HISTORY-ONLY join. "History
-    // only" is enforced with an anti-join, not assumed: a re-ingested
-    // id present on BOTH sides would otherwise emit its pairs from
-    // both parts (with different est_jaccard when its signatures
-    // differ) — the new side's signature is authoritative for such
-    // ids. With the exclusion the parts are disjoint by construction
-    // and no cross-part dedup is needed.
-    val nsigs = widthChecked(newSigs, "new")
-    val newNew = minHashCandidatePairs(nsigs, idCol, numHashes, bands)
-    val bandedNew = bandExplode(nsigs, idCol, numHashes, bands)
-      .select(col(idCol).as("__id_n"), col("signature").as("__sig_n"),
-        col("__band"), col("__bandhash"))
-    val bandedHist = bandExplode(
-      widthChecked(historySigs, "history")
-        .join(nsigs.select(col(idCol)), Seq(idCol), "left_anti"),
-      idCol, numHashes, bands)
-      .select(col(idCol).as("__id_o"), col("signature").as("__sig_o"),
-        col("__band"), col("__bandhash"))
-    val newHist = bandedNew.join(bandedHist, Seq("__band", "__bandhash"))
-      // belt-and-braces: the anti-join above already removed shared
-      // ids, so this self-pair filter is vacuous but cheap
-      .filter(col("__id_n") =!= col("__id_o"))
-      .select(
-        least(col("__id_n"), col("__id_o")).as("id_a"),
-        greatest(col("__id_n"), col("__id_o")).as("id_b"),
-        when(col("__id_n") < col("__id_o"), col("__sig_n"))
-          .otherwise(col("__sig_o")).as("__sig_a"),
-        when(col("__id_n") < col("__id_o"), col("__sig_o"))
-          .otherwise(col("__sig_n")).as("__sig_b"))
-      .withColumn("est_jaccard", slotAgreement(numHashes))
-      .select("id_a", "id_b", "est_jaccard")
-      .dropDuplicates("id_a", "id_b")
-    newNew.unionByName(newHist)
-  }
-
   /** Near-duplicate pairs via MinHash LSH, verified against the true
     * token-set Jaccard of the candidate pairs only.
     *
     * NOTE: documents shorter than `shingleN` tokens have no shingles
     * (matching the oracle's n-gram semantics) and are therefore
     * invisible to the MinHash family — route short docs through
-    * [[exact]]/[[exactByDigest]] (or [[jaccardPairs]], which uses
+    * [[exact]] (or [[jaccardPairs]], which uses
     * single tokens) if they must be deduplicated too.
     *
     * EAGER: runs the full near-dup job at call time and returns a
@@ -628,12 +550,6 @@ object Dedup {
     */
   def portableBaseHash(sh: Column): Column =
     graft.functions.HashExprs.md5Prefix60(sh) % PortableP
-
-  def portableMinHashSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame =
-    portableSignaturesFromShingleSets(
-      shingleSets(docs, idCol, textCol, shingleN), idCol, numHashes)
 
   private def portableSignaturesFromShingleSets(
       sets: DataFrame, idCol: String, numHashes: Int): DataFrame =
@@ -757,21 +673,14 @@ object Dedup {
     sums.select(keys :+ sig.as("simhash"): _*)
   }
 
-  /** The 60-bit portable SimHash signature table (id, simhash): bit i
-    * is the sign of Σ_tokens ±1 by bit i of the md5-prefix token hash.
-    * The near-duplicate miners build on its keyed form; specs use it
-    * as the brute-force reference for their pairs.
+  /** The 60-bit portable SimHash signature table (keyCols..., simhash):
+    * bit i is the sign of Σ_tokens ±1 by bit i of the md5-prefix token
+    * hash. Extra key columns ride the same one-pass aggregate (each
+    * must be functionally dependent on the id — e.g. the shard of
+    * [[portableSimHashNearDuplicatesSharded]]). Specs use it keyed by
+    * the id alone as the brute-force reference for the miners' pairs.
     */
-  def portableSimHashSignatures(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    portableSimHashSignaturesKeyed(docs, Seq(idCol), textCol)
-
-  /** [[portableSimHashSignatures]] with extra carry columns riding the
-    * same one-pass aggregate (each must be functionally dependent on
-    * the id — e.g. the shard of [[portableSimHashNearDuplicatesSharded]]);
-    * output is (keyCols..., simhash), bit-identical signatures.
-    */
-  private def portableSimHashSignaturesKeyed(
+  private[graft] def portableSimHashSignaturesKeyed(
       docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
     simHashTable(docs, keyCols, textCol,
       "__m", graft.functions.HashExprs.md5Prefix60(col("__tok")),
@@ -798,52 +707,9 @@ object Dedup {
 
   /** Hot-cell gate default of the SimHash miners' `gridThreshold`
     * (measured-then-chosen; a caller re-gates by passing the argument —
-    * [[recommendedGridThreshold]] derives the value from a cell census).
+    * `tools.CellDiag` derives the value from a cell census).
     */
   private[graft] val defaultGridThreshold: Int = 8192
-
-  /** Census-driven per-deployment gate guidance — the committed recipe
-    * behind "re-gate from your own cell census" (SCALING.md, r15 gate
-    * A/B). Input is the two count-derived statistics `tools.CellDiag`
-    * prints for a banding (host-noise-immune): the LARGEST band-cell
-    * row count and the TOTAL verify mass Σ n_cell². Returns the gate
-    * the measured A/B table says that shape wants, for the miners'
-    * `gridThreshold` argument — it does NOT change any shipped default.
-    *
-    * The rule (pure integer arithmetic, measured-then-chosen on the
-    * six (miner, corpus) cells of the r15/r16 A/B —
-    * `SCALING_100x_ab_T{8192,4096,1024}.jsonl`, `SCALING_30x_ab_T1024
-    * .jsonl`, censuses in SCALING.md): recommend the low 1024 gate iff
-    * BOTH hold, else keep the shipped 8192 —
-    *
-    *   (a) scale floor: Σn²/fanout ≥ 2²² — the balanced per-reducer
-    *       verify share is big enough that a straggler costs seconds
-    *       (portable@100× 15.9M ✓; portable@30× 1.45M ✗ — there the
-    *       1024 gate measured 6.93 s vs 3.61 s shipped: machinery);
-    *   (b) straggler severity: maxN² ≥ 6 · Σn²/fanout — the one
-    *       hottest cell alone out-weighs six balanced reducers, so the
-    *       tail is a genuine single-cell straggler the grid can slice
-    *       (portable@100× 8.3× ✓ — 1024 measured 12.2 s vs 14.0;
-    *       fast@100× 4.0× ✗ — its mass sits in a thousand warm cells
-    *       the 256-way fan-out already balances statistically, and
-    *       1024 measured 17.0 s vs 11.9 shipped).
-    *
-    * Why not the tempting mass-share rule ("gate low when most Σn²
-    * sits below 8192"): fast@100× holds MORE sub-8192 mass (89.6% at
-    * ≥1024) than portable@100× (78.6%) yet measured best at the HIGH
-    * gate — caught mass does not discriminate; concentration does.
-    * BigInt for the severity product: maxN² · fanout overflows Long
-    * already at maxN ≈ 2³¹ with fanout 256.
-    */
-  def recommendedGridThreshold(
-      maxCellN: Long, sumN2: BigInt, fanout: Int = 256): Int = {
-    require(maxCellN >= 0 && sumN2 >= 0 && fanout >= 1,
-      s"bad census: maxCellN=$maxCellN sumN2=$sumN2 fanout=$fanout")
-    val scaleFloor = sumN2 >= BigInt(1L << 22) * fanout
-    val severity =
-      BigInt(maxCellN) * BigInt(maxCellN) * fanout >= sumN2 * 6
-    if (scaleFloor && severity) 1024 else 8192
-  }
 
   /** The SimHash near-dup miner all three variants share: persist the
     * signature table `sigs` (id, shardCols..., simhash) and count it —

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Determinism contract (cross-engine oracle-able): [[psi]] is
   * computed in PURE INTEGER arithmetic end-to-end — exact rational
   * proportions, the fixed-point exact-integer log
-  * [[graft.functions.DetMath.lnRatioFp]], truncating divides on
+  * [[graft.functions.DetMath.lnRatioFpBig]], truncating divides on
   * non-negative operands, and an integer `psi_micro12` output (PSI =
   * psi_micro12/1e12 if a float read is wanted). History: libm `log`
   * diverged between JVM and C (r06–r08), the IEEE-fixed-order
@@ -48,7 +48,7 @@ object Drift {
     * term (q−p)·ln(q/p) is mathematically ≥ 0 and is computed as
     *   A = qn·pd, B = pn·qd, d = |A−B|, M = pd·qd
     *   term12 = (d · lnRatioFp(max(A,B), min(A,B))) div (M·10⁶)
-    * with [[graft.functions.DetMath.lnRatioFp]] the exact-integer
+    * with [[graft.functions.DetMath.lnRatioFpBig]] the exact-integer
     * fixed-point ln — every step is integer multiply / truncating
     * divide on non-negative operands, so ANY engine or engine
     * VERSION reproduces the sum bit-for-bit. (The previous contract

@@ -3,155 +3,20 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CovAgg, HashExprs, VectorExprs}
+import graft.functions.{HashExprs, VectorExprs}
 
 /** [EXT] Distributed embedding analytics: PCA over an embedding column
   * with the scale-correct split of work — ONE mergeable-aggregate pass
-  * over the data ([[graft.functions.CovAgg]], constant state), then
-  * d×d eigen-math on the DRIVER (d=64: microseconds), then a
+  * over the data ([[graft.functions.IntMomentsAgg]], constant state),
+  * then d×d eigen-math on the DRIVER (d=64: milliseconds), then a
   * distributed projection that is a pure codegen'd expression per row.
   * The corpus is read exactly twice (moments, projection) and never
   * shuffled.
   */
 object Embeddings {
 
-  /** Jacobi eigensolver for a symmetric matrix (driver-side; d ≤ a few
-    * hundred). Returns (eigenvalues desc, eigenvectors as rows,
-    * matching the eigenvalue order).
-    */
-  private[ext] def symmetricEigen(
-      a: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
-    val n = a.length
-    val m = Array.tabulate(n, n)((i, j) => a(i)(j))
-    val v = Array.tabulate(n, n)((i, j) => if (i == j) 1.0 else 0.0)
-    var sweep = 0
-    var off = offDiagNorm(m)
-    while (off > 1e-12 && sweep < 100) {
-      var p = 0
-      while (p < n - 1) {
-        var q = p + 1
-        while (q < n) {
-          if (math.abs(m(p)(q)) > 1e-15) rotate(m, v, p, q)
-          q += 1
-        }
-        p += 1
-      }
-      off = offDiagNorm(m)
-      sweep += 1
-    }
-    val order = (0 until n).sortBy(i => -m(i)(i))
-    val evals = order.map(i => m(i)(i)).toArray
-    val evecs = order.map(i => Array.tabulate(n)(j => v(j)(i))).toArray
-    (evals, evecs)
-  }
-
-  private def offDiagNorm(m: Array[Array[Double]]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < m.length) {
-      var j = i + 1
-      while (j < m.length) { s += m(i)(j) * m(i)(j); j += 1 }
-      i += 1
-    }
-    math.sqrt(s)
-  }
-
-  private def rotate(
-      m: Array[Array[Double]], v: Array[Array[Double]], p: Int, q: Int): Unit = {
-    val n = m.length
-    val theta = (m(q)(q) - m(p)(p)) / (2.0 * m(p)(q))
-    // sign(0) must be +1 here: theta == 0 (equal diagonal entries)
-    // needs the full 45-degree rotation, not a no-op — math.signum
-    // would return 0 and silently never converge on such matrices.
-    val sign = if (theta >= 0.0) 1.0 else -1.0
-    val t = sign / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
-    val c = 1.0 / math.sqrt(t * t + 1.0)
-    val s = t * c
-    var k = 0
-    while (k < n) {
-      val mkp = m(k)(p); val mkq = m(k)(q)
-      m(k)(p) = c * mkp - s * mkq
-      m(k)(q) = s * mkp + c * mkq
-      k += 1
-    }
-    k = 0
-    while (k < n) {
-      val mpk = m(p)(k); val mqk = m(q)(k)
-      m(p)(k) = c * mpk - s * mqk
-      m(q)(k) = s * mpk + c * mqk
-      k += 1
-    }
-    k = 0
-    while (k < n) {
-      val vkp = v(k)(p); val vkq = v(k)(q)
-      v(k)(p) = c * vkp - s * vkq
-      v(k)(q) = s * vkp + c * vkq
-      k += 1
-    }
-  }
-
-  /** The fitted model: sample mean, top-k principal axes (rows,
-    * orthonormal), and ALL eigenvalues of the sample covariance
-    * (descending — `explainedVariance(k)` = leading-k sum / total).
-    */
-  final case class PcaModel(
-      mean: Array[Double], components: Array[Array[Double]],
-      eigenvalues: Array[Double]) {
-    def explainedVariance(k: Int): Double =
-      eigenvalues.take(k).sum / eigenvalues.sum
-  }
-
-  /** Fit PCA from one aggregate pass (see object doc). `vecCol` is an
-    * `array<float|double>` column of fixed dimension `dim`.
-    */
-  def fitPca(df: DataFrame, vecCol: String, dim: Int, k: Int): PcaModel = {
-    require(k >= 1 && k <= dim, s"k=$k out of range for dim=$dim")
-    val state = df
-      .agg(CovAgg.covState(col(vecCol), dim).as("s"))
-      .head().getSeq[Double](0).toArray
-    val n = state(0)
-    require(n > 1, s"PCA needs at least 2 vectors, got $n")
-    val mean = Array.tabulate(dim)(i => state(1 + i) / n)
-    // sample covariance from the merged moments:
-    // cov(i,j) = (Σ v_i v_j - n μ_i μ_j) / (n - 1)
-    val cov = Array.ofDim[Double](dim, dim)
-    var t = 1 + dim
-    var i = 0
-    while (i < dim) {
-      var j = i
-      while (j < dim) {
-        val c = (state(t) - n * mean(i) * mean(j)) / (n - 1.0)
-        cov(i)(j) = c
-        cov(j)(i) = c
-        t += 1
-        j += 1
-      }
-      i += 1
-    }
-    val (evals, evecs) = symmetricEigen(cov)
-    PcaModel(mean, evecs.take(k), evals)
-  }
-
-  /** Nearest-centroid id for a vector column against literal
-    * `centroids`: squared-L2 argmin via `least` over
-    * (−2·v·c_j + |c_j|², j) structs — |v|² is constant across j and
-    * drops out. Codegen'd dot products; ties break to the lower id.
-    */
-  def nearestCentroid(vecCol: Column, centroids: Array[Array[Double]]): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val cands = centroids.zipWithIndex.map { case (c, j) =>
-      val c2 = c.map(x => x * x).sum
-      struct(
-        (VectorExprs.dot(vecCol, array(c.map(lit): _*)) * -2.0 + lit(c2))
-          .as("d"),
-        lit(j).as("j"))
-    }
-    (if (cands.length == 1) cands.head else least(cands: _*)).getField("j")
-  }
-
   /** Squared L2 distance of a vector column to the nearest literal
-    * centroid (the value twin of [[nearestCentroid]]; needs the |v|²
-    * term the argmin could drop).
+    * centroid.
     */
   def nearestCentroidDist(
       vecCol: Column, centroids: Array[Array[Double]]): Column = {
@@ -181,8 +46,7 @@ object Embeddings {
   }
 
   /** Nearest-centroid id by QUANTIZED distance (see [[quantizedDist]]),
-    * ties to the lower id — the cross-engine-reproducible sibling of
-    * [[nearestCentroid]].
+    * ties to the lower id.
     */
   def nearestCentroidQuantized(
       vecCol: Column, centroids: Array[Array[Double]]): Column = {
@@ -341,23 +205,6 @@ object Embeddings {
       cs => VectorExprs.nearestCentroidQ(col(vecCol), cs))
   }
 
-  /** Project the embedding column onto the model's axes: for each
-    * component, one codegen'd dot product against a literal axis minus
-    * the (precomputed scalar) centered offset. Pure projection — no
-    * shuffle, no UDF, broadcast-free (the axes ride inside the plan).
-    */
-  def project(
-      df: DataFrame, vecCol: String, model: PcaModel,
-      outPrefix: String = "pc"): DataFrame = {
-    val comps = model.components.zipWithIndex.map { case (axis, idx) =>
-      val axisCol = array(axis.map(lit): _*)
-      val offset = axis.zip(model.mean).map { case (a, m) => a * m }.sum
-      (VectorExprs.dot(col(vecCol), axisCol) - lit(offset))
-        .as(s"$outPrefix${idx + 1}")
-    }
-    df.select(df.columns.map(col) ++ comps: _*)
-  }
-
   // ── Deterministic (cross-engine bit-reproducible) PCA ─────────────
 
   /** Vector quantization scale shared by the deterministic PCA fit,
@@ -369,10 +216,11 @@ object Embeddings {
   /** Fixed power-iteration budget per component. Sized for the
     * shallow eigengaps of real embedding spectra: the testdata corpus
     * has λ₂/λ₁ ≈ 0.93, so 300 halvings leave a (0.93)³⁰⁰ ≈ 1e-9
-    * residual — axis alignment with the adaptive Jacobi solver is
-    * |cos| > 0.99999 (spec-asserted). The budget is part of the
-    * deterministic CONTRACT (the oracle unrolls exactly this many
-    * steps); the driver cost is d²·iters integer ops — microseconds.
+    * residual — each axis is an eigenvector of the driver-side
+    * covariance to a small residual (spec-asserted). The budget is
+    * part of the deterministic CONTRACT (the oracle unrolls exactly
+    * this many steps); the driver cost is d²·iters integer ops —
+    * microseconds.
     */
   val DetIters = 300
 
@@ -414,11 +262,11 @@ object Embeddings {
     * past double precision ((λ₂/λ₁)⁴⁰); for gapless spectra the
     * result is still the SAME deterministic vector in every engine —
     * the contract is bit-reproducibility, accuracy follows from the
-    * budget (spec'd against the Jacobi [[fitPca]] on planted axes).
+    * budget (spec'd as an eigenpair residual on the real corpus).
     *
-    * Scale shape: identical to [[fitPca]] — one constant-state
-    * aggregate pass over the corpus, O(d²·iters·k) integer math on
-    * the driver (d=64: milliseconds), distributed projection.
+    * Scale shape: one constant-state aggregate pass over the corpus,
+    * O(d²·iters·k) integer math on the driver (d=64: milliseconds),
+    * distributed projection.
     */
   def fitPcaDeterministic(
       df: DataFrame, vecCol: String, dim: Int, k: Int,

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
 
 /** [EXT] JSON property extraction over string columns (`events.props`).
   * `get_json_object` is a codegen'd Catalyst expression — no UDF, no
@@ -10,18 +9,6 @@ import org.apache.spark.sql.types.{MapType, StringType}
   */
 object JsonOps {
 
-  def extractString(json: Column, path: String): Column =
-    get_json_object(json, path)
-
   def extractLong(json: Column, path: String): Column =
     get_json_object(json, path).cast("long")
-
-  def extractDouble(json: Column, path: String): Column =
-    get_json_object(json, path).cast("double")
-
-  /** Full parse to map<string,string> when many keys are needed at once
-    * (one parse instead of N `get_json_object` passes).
-    */
-  def asMap(json: Column): Column =
-    from_json(json, MapType(StringType, StringType))
 }

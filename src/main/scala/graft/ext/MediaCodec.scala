@@ -256,29 +256,6 @@ object MediaCodec {
     def apply(x: Int, y: Int, c: Int): Int = pixels(3 * (y * width + x) + c)
   }
 
-  /** True iff `b` is a GVID container whose frame count and every
-    * frame length are in-bounds — the dispatch guard of frame-walking
-    * paths.
-    */
-  def isCompleteGvid(b: Array[Byte]): Boolean =
-    b.length >= 8 && b(0) == 'G' && b(1) == 'V' &&
-      b(2) == 'I' && b(3) == 'D' && {
-        val n = le32(b, 4)
-        var ok = n >= 0 && n.toLong <= (b.length - 8L) / 4L
-        var off = 8
-        var i = 0
-        while (ok && i < n) {
-          if (off + 4 > b.length) ok = false
-          else {
-            val len = le32(b, off)
-            if (len < 0 || off + 4L + len > b.length) ok = false
-            else off += 4 + len
-          }
-          i += 1
-        }
-        ok
-      }
-
   /** The pixel-count cap of every decode, checked against the
     * header's dimensions before any pixel is allocated: a hostile
     * 65535×65535 header would otherwise demand ~13 G ints.
@@ -297,13 +274,6 @@ object MediaCodec {
     case other => throw new IllegalArgumentException(
       s"no pixel decoder for format '$other'")
   }
-
-  /** True iff [[decodeImage]] succeeds on `b` (a full decode: a
-    * header can be valid while the pixel data is not).
-    */
-  def isDecodableImage(b: Array[Byte]): Boolean =
-    try { decodeImage(b); true }
-    catch { case _: IllegalArgumentException => false }
 
   /** Decode the first image of a BMP, PNG, GIF or JPEG stream with one
     * ImageIO reader. Both the header's dimensions (for GIF the logical
@@ -719,11 +689,6 @@ object MediaCodec {
       Array.tabulate(n.toInt)(i => (buf(2 * i) & 0xff) | (buf(2 * i + 1) << 8))
     }
   }
-
-  /** True iff [[decodeAudio]] succeeds on `b`. */
-  def isDecodableAudio(b: Array[Byte]): Boolean =
-    try { decodeAudio(b); true }
-    catch { case _: IllegalArgumentException => false }
 
   /** Minimal spec-valid PNG: signature + IHDR chunk (with a real
     * CRC-32 over type+data — readers that check it must accept the

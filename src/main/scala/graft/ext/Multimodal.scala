@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** [EXT] Multimodal columns: image/audio/video travel as opaque `binary`
-  * payloads with typed metadata beside them (schema
-  * [[graft.schema.Schemas.multimodal]]). North-star extension; no
-  * reference equivalent.
+  * payloads (`doc_id`, `media_type`, `payload`) with typed metadata
+  * beside them. North-star extension; no reference equivalent.
   *
   * Every path here decodes REAL bytes via [[MediaCodec]]: header
   * parse for all six formats; full pixel decode for lossless WebP
@@ -34,21 +33,6 @@ object Multimodal {
   final case class DecodedMedia(
       doc_id: Long, media_type: String, format: String, size_bytes: Long,
       width: Int, height: Int, channels: Int, checksum: String)
-
-  final case class MediaFeatures(doc_id: Long, feature: Array[Float])
-  final case class ResizedMedia(
-      doc_id: Long, media_type: String, payload: Array[Byte],
-      width: Int, height: Int)
-  final case class Frame(doc_id: Long, frame_idx: Int, payload: Array[Byte])
-
-  /** Pixel or sample decode of untrusted bytes: every decode fault is
-    * an IllegalArgumentException, so a header-only, truncated or
-    * corrupt payload yields None (the caller's header-dims fallback),
-    * never a task-killing escape.
-    */
-  private def decodeChecked[T](decode: => T): Option[T] =
-    try Some(decode)
-    catch { case _: IllegalArgumentException => None }
 
   /** Real header-level dimensions per format: (width, height,
     * channels). Audio has no spatial dims (0, 0, channels); WebP's
@@ -79,180 +63,6 @@ object Multimodal {
         ("webp", h.width, h.height, 0)
       case _ => ("unknown", 0, 0, 0)
     }
-
-  /** Feature extraction over REAL decoded content — the fixed-width
-    * float vector a downstream [[Similarity]] index consumes, one
-    * encoder pass per partition. BMP, JPEG, PNG, GIF and
-    * lossless-WebP features come from the actual pixel decode (dims +
-    * exact per-channel means + min/max); WAV features from the actual
-    * PCM samples (count, peak, RMS, mean); the remaining compressed
-    * format (lossy-VP8 WebP) gets header dims only, zero-padded — the
-    * LABELED STUB boundary:
-    * replacing the zeros with learned-encoder output is exactly where
-    * a PIL/torchvision `mapInPandas` worker plugs in.
-    */
-  def extractFeatures(
-      spark: SparkSession, media: DataFrame, dim: Int = 8): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select("doc_id", "media_type", "payload").as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition "model load" happens here in a real codec
-        rows.map { r =>
-          val p = if (r.payload == null) Array.emptyByteArray else r.payload
-          // A header-only or truncated payload (valid magic, missing
-          // pixels/samples) routes to the header-dims fallback instead
-          // of killing the task — corpus bytes are untrusted.
-          val decoded: Option[Array[Float]] = MediaCodec.detect(p) match {
-            case "bmp" | "jpeg" | "png" | "gif" | "webp" =>
-              decodeChecked(MediaCodec.decodeImage(p)).map { img =>
-                val npx = math.max(1, img.width * img.height)
-                var (bs, gs, rs) = (0L, 0L, 0L)
-                var mn = 255
-                var mx = 0
-                var i = 0
-                while (i < img.pixels.length) {
-                  val v = img.pixels(i)
-                  (i % 3) match {
-                    case 0 => bs += v
-                    case 1 => gs += v
-                    case _ => rs += v
-                  }
-                  if (v < mn) mn = v
-                  if (v > mx) mx = v
-                  i += 1
-                }
-                Array(img.width.toFloat, img.height.toFloat,
-                  bs.toFloat / npx, gs.toFloat / npx, rs.toFloat / npx,
-                  mn.toFloat, mx.toFloat, npx.toFloat)
-              }
-            case "wav" =>
-              decodeChecked(MediaCodec.decodeAudio(p)).map { s =>
-                var peak = 0L
-                var sum = 0L
-                var ss = 0L
-                var i = 0
-                while (i < s.length) {
-                  val v = s(i).toLong
-                  if (math.abs(v) > peak) peak = math.abs(v)
-                  sum += v
-                  ss += v * v
-                  i += 1
-                }
-                val n = math.max(1, s.length)
-                Array(s.length.toFloat, peak.toFloat,
-                  math.sqrt(ss.toDouble / n).toFloat, sum.toFloat / n,
-                  0f, 0f, 0f, 0f)
-              }
-            case _ => None
-          }
-          // undecodable or compressed-without-a-decoder payloads: header
-          // dims only — STUB boundary (external codec library required)
-          val stats = decoded.getOrElse {
-            val (_, w, h, c) = headerDims(p)
-            Array(w.toFloat, h.toFloat, c.toFloat, 0f, 0f, 0f, 0f, 0f)
-          }
-          MediaFeatures(r.doc_id, stats.padTo(dim, 0f).take(dim))
-        }
-      }
-  }
-
-  /** REAL thumbnail path: BMP, JPEG, PNG, GIF and lossless-WebP
-    * payloads are pixel-decoded ([[MediaCodec.decodeImage]]),
-    * nearest-neighbor resampled (the [[imageResizeStats]] coordinate
-    * math) and RE-ENCODED in the SOURCE format (PNG → PNG and GIF → GIF
-    * through [[MediaCodec.encodeImage]], the GIF palette rebuilt from
-    * the resampled pixels; WebP → VP8L; JPEG → lossless PNG so the
-    * already-lossy content is not degraded a second generation;
-    * BMP → BMP) — decode → resample → encode, all byte-level.
-    * Lossy-VP8 WebP payloads pass through UNCHANGED with their parsed
-    * header dimensions: resampling those needs an external codec (the
-    * labeled stub boundary), and an untouched payload is the honest
-    * fallback — never a fabricated one.
-    */
-  def resize(
-      spark: SparkSession, media: DataFrame,
-      width: Int, height: Int): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    media.select("doc_id", "media_type", "payload").as[MediaRow]
-      .mapPartitions(_.map { r =>
-        val p = if (r.payload == null) Array.emptyByteArray else r.payload
-        val fmt = MediaCodec.detect(p)
-        // a header-only payload (synthesizeBmp/synthesizeJpeg), a
-        // truncated upload or a non-image passes through untouched
-        decodeChecked(MediaCodec.decodeImage(p)) match {
-          case Some(img) =>
-            // NN sample in Bmp24 channel order (0 = B)
-            def s(x: Int, y: Int, c: Int): Int =
-              img(x * img.width / width, y * img.height / height, c)
-            // FORMAT-PRESERVING re-encode: the thumbnail ships in the
-            // source's own compressed format. JPEG is the exception —
-            // re-encoding lossy content a second time compounds
-            // generational loss, so its thumbnail ships as lossless PNG
-            // (the standard quality-preserving downgrade); BMP stays BMP.
-            def encoded(fmt: String) = MediaCodec.encodeImage(fmt,
-              MediaCodec.bgrImage(width, height, s))
-            def png = encoded("png")
-            val out = fmt match {
-              case "bmp" => encoded("bmp")
-              case "png" | "jpeg" => png
-              case "webp" =>
-                VP8LCodec.encode(width, height,
-                  (x, y, c) => s(x, y, 2 - c)) // VP8L samples are RGB
-              case _ => // gif
-                // NN resampling of palette content cannot introduce
-                // colors, so the thumbnail's distinct-color set stays
-                // within the source's ≤256-entry table
-                val colors = scala.collection.mutable.LinkedHashMap
-                  .empty[Int, Int]
-                var y = 0
-                while (y < height) {
-                  var x = 0
-                  while (x < width) {
-                    val rgb = (s(x, y, 2) << 16) | (s(x, y, 1) << 8) |
-                      s(x, y, 0)
-                    if (!colors.contains(rgb)) colors(rgb) = colors.size
-                    x += 1
-                  }
-                  y += 1
-                }
-                if (colors.size <= 256)
-                  MediaCodec.encodeImage("gif", MediaCodec.indexedImage(
-                    width, height, colors.keys.toArray, (x, y) =>
-                      colors((s(x, y, 2) << 16) | (s(x, y, 1) << 8) |
-                        s(x, y, 0))))
-                else png // unreachable from a GIF source; honest guard
-            }
-            ResizedMedia(r.doc_id, r.media_type, out, width, height)
-          case None =>
-            val (_, w, h, _) = headerDims(p)
-            ResizedMedia(r.doc_id, r.media_type, p, w, h)
-        }
-      })
-  }
-
-  /** REAL frame grab: walk the GVID container
-    * ([[MediaCodec.decodeVideoFrames]]) and emit every `stride`-th
-    * frame's actual bytes — the 1→N flatMap shape of video decode,
-    * partition parallel, no driver involvement. Non-video payloads
-    * produce no frames (honest empty, not fabricated slices).
-    */
-  def sampleFrames(
-      spark: SparkSession, media: DataFrame, stride: Int): Dataset[Frame] = {
-    require(stride >= 1, s"stride must be >= 1: $stride")
-    import spark.implicits._
-    media.select("doc_id", "media_type", "payload").as[MediaRow]
-      .flatMap { r =>
-        val p = if (r.payload == null) Array.emptyByteArray else r.payload
-        // isCompleteGvid: corrupt counts/lengths in untrusted corpus
-        // bytes produce the honest empty, never a task-killing AIOOBE
-        if (MediaCodec.isCompleteGvid(p)) {
-          val frames = MediaCodec.decodeVideoFrames(p)
-          frames.indices.collect {
-            case i if i % stride == 0 => Frame(r.doc_id, i, frames(i))
-          }
-        } else Seq.empty
-      }
-  }
 
   final case class ParsedHeader(
       doc_id: Long, format: String,

@@ -29,12 +29,6 @@ object Sampling {
   def hashGate(key: Column, pct: Column): Column =
     (HashExprs.md5Prefix60(key.cast("string")) % 100) < pct
 
-  /** Keep a deterministic ~`pct`% of rows keyed by `keyCol`. */
-  def hashSample(df: DataFrame, keyCol: String, pct: Int): DataFrame = {
-    require(pct >= 0 && pct <= 100, s"pct out of range: $pct")
-    df.filter(hashGate(col(keyCol), lit(pct)))
-  }
-
   /** Stratified deterministic sampling: each stratum (e.g. language,
     * source domain) gets its own keep-rate — the up/down-weighting step
     * of every corpus-mixing recipe.
@@ -85,7 +79,7 @@ object Sampling {
     * that up-weights small sources (languages, minor crawls) without
     * letting any giant source dominate the mix. Each stratum's keep
     * rate is min(1, target_s / n_s) with target_s = ⌊total·√n_s/Σ√n⌋,
-    * applied as the same portable md5 gate as [[hashSample]] at
+    * applied as the same portable md5 gate as [[hashGate]] at
     * micro-rate (1e-6) resolution — membership stays re-derivable
     * from the key alone.
     *
@@ -546,7 +540,7 @@ object Sampling {
   }
 
   /** EXACTLY-k deterministic uniform sample: the k keys with the
-    * smallest portable md5 hashes. [[hashSample]]'s gate gives a
+    * smallest portable md5 hashes. [[hashGate]] gives a
     * BINOMIAL size (±√n) — fine for rates, wrong when the contract is
     * "give me exactly 10 000 eval docs"; ordering by the hash makes
     * size exact while keeping membership key-derivable, stable under

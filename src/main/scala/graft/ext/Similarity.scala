@@ -23,21 +23,12 @@ import graft.functions.VectorExprs
   */
 object Similarity {
 
-  /** Widen array<float> → array<double>. */
-  def asDouble(v: Column): Column = transform(v, _.cast("double"))
-
   /** Sequential dot product — the codegen'd [[graft.functions.DotProduct]]
     * expression (the higher-order-function formulation
     * `aggregate(zip_with(a,b,_*_),0.0,_+_)` is interpreted per element:
     * measured ~50x slower on the pair scans below).
     */
   def dot(a: Column, b: Column): Column = VectorExprs.dot(a, b)
-
-  /** Cosine similarity = dot / (||a|| * ||b||), computed exactly like
-    * the DuckDB oracle formula so cross-engine rounding agrees.
-    */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** `side` plus the L2 norm of its vector column `vec` as `norm` —
     * computed once per ROW, so a pair loop over two sides is one

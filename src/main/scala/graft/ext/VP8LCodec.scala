@@ -607,9 +607,8 @@ object VP8LCodec {
 
   /** Decode a lossless WebP (VP8L) to 3-channel pixels
     * ([[MediaCodec.Bmp24]] layout, alpha dropped). Throws
-    * IllegalArgumentException on unsupported or corrupt streams —
-    * gate with [[isDecodable]] on untrusted bytes. `maxPixels` caps
-    * the decode allocation.
+    * IllegalArgumentException on unsupported or corrupt streams.
+    * `maxPixels` caps the decode allocation.
     */
   def decode(
       b: Array[Byte], maxPixels: Int = 1 << 25): MediaCodec.Bmp24 =
@@ -664,15 +663,6 @@ object VP8LCodec {
     }
     MediaCodec.Bmp24(width, height, out)
   }
-
-  /** Guard for [[decode]] on untrusted corpus bytes: full decode
-    * under the fault contract (the bitstream has no CRC; entropy
-    * completeness is only provable by decoding, and corpus payloads
-    * are small).
-    */
-  def isDecodable(b: Array[Byte]): Boolean =
-    try { decode(b); true }
-    catch { case _: IllegalArgumentException => false }
 
   // ---------------------------------------------------------------
   // encode: simplest spec-valid stream — no transforms, no cache,

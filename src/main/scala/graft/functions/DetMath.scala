@@ -119,25 +119,7 @@ object DetMath {
     org.apache.spark.sql.GraftExpressionBridge.column(
       ExpqExpr(org.apache.spark.sql.GraftExpressionBridge.expression(x)))
 
-  /** [[expq]]'s op tree in Column form — the literal mirror of the
-    * SQL chain, kept as the spec vehicle proving tree ≡ scalar
-    * (hence DuckDB chain ≡ scalar). Queries use [[expq]] (one
-    * expression node): inlining this tree per call made runtime
-    * codegen the dominant cost of bounded-grid queries.
-    */
-  def expqTree(x: Column): Column = {
-    val k = floor(x * lit(1.0 / Ln2) + lit(0.5))
-    val r = x - k * lit(Ln2)
-    val s = lit(1.0) + r * (lit(1.0) + r * (lit(1.0 / 2.0) +
-      r * (lit(1.0 / 6.0) + r * (lit(1.0 / 24.0) + r * (lit(1.0 / 120.0) +
-        r * (lit(1.0 / 720.0) + r * (lit(1.0 / 5040.0) +
-          r * (lit(1.0 / 40320.0) + r * (lit(1.0 / 362880.0) +
-            r * (lit(1.0 / 3628800.0) + r * (lit(1.0 / 39916800.0) +
-              r * lit(1.0 / 479001600.0))))))))))))
-    s * pow(lit(2.0), k)
-  }
-
-  /** Fixed-point scale for [[lnRatioFp]]: Q = 10¹⁸. */
+  /** Fixed-point scale for [[lnRatioFpBig]]: Q = 10¹⁸. */
   val FpQ: Long = 1000000000000000000L
 
   /** ⌊ln2 · 10¹⁸⌋ — pinned INTEGER constant, mirrored verbatim in the
@@ -183,31 +165,10 @@ object DetMath {
     * (accuracy bounds metric error; determinism is exact).
     *
     * Domain: 1 ≤ b ≤ a < 2⁶¹ (callers order the ratio ≥ 1 and carry
-    * the sign; intermediates stay within decimal(38,0)/HUGEINT).
-    * Returns decimal; a = b returns exactly 0.
-    */
-  def lnRatioFp(a: Column, b: Column): Column = {
-    def dec(c: Column, p: Int): Column = c.cast(s"decimal($p,0)")
-    def idiv(x: Column, y: Column): Column = call_function("div", x, y)
-    val q = lit(FpQ)
-    val k0 = (length(bin(a)) - length(bin(b))).cast("int")
-    val k = when(a >= call_function("shiftleft", b, k0), k0)
-      .otherwise(k0 - lit(1))
-    val b2 = call_function("shiftleft", b, k)
-    val t = idiv(dec(a - b2, 19) * dec(q, 19), a + b2)
-    val u = idiv(dec(t, 18) * dec(t, 18), q)
-    val acc = LnFpCoeffs.init.foldRight(lit(LnFpCoeffs.last)) {
-      (c, accCol) => lit(c) + idiv(dec(u, 18) * dec(accCol, 19), q)
-    }
-    val s = idiv(dec(t, 18) * dec(acc, 19), q)
-    dec(s, 19) + dec(k, 3) * dec(lit(Ln2Fp), 18)
-  }
-
-  /** Scalar reference model of [[lnRatioFp]] — the same integer
-    * program in BigInt (BigInt `/` truncates toward zero = `div`;
-    * all operands here are non-negative so floor = trunc). Specs pin
-    * Column ≡ scalar; bounded driver-side evaluations may use it
-    * directly (the [[lnqDouble]] precedent).
+    * the sign; intermediates stay within decimal(38,0)/HUGEINT in the
+    * SQL mirror, [[graft.queries.DriftQueries]]'s `lnRatioFpSql`).
+    * a = b returns exactly 0. BigInt `/` truncates toward zero = `div`;
+    * all operands here are non-negative so floor = trunc.
     */
   def lnRatioFpBig(a: Long, b: Long): BigInt = {
     require(b >= 1 && a >= b && a < (1L << 61),
@@ -259,40 +220,10 @@ object DetMath {
   def lnq(x: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       LnqExpr(org.apache.spark.sql.GraftExpressionBridge.expression(x)))
-
-  /** [[lnq]]'s op tree in Column form — the literal mirror of the SQL
-    * chain ([[graft.queries.Shared]]'s lnSqlChain), kept as the spec
-    * vehicle proving tree ≡ scalar bit-for-bit (hence DuckDB chain ≡
-    * scalar). Queries use [[lnq]] (one CodegenFallback node
-    * evaluating [[lnqDouble]]): inlining this ~80-node tree at every
-    * call site made runtime CODEGEN dominate bounded-grid queries
-    * (q_psi_daily 26 s, q_js_drift ~5 s of 6) — the scalar is
-    * bit-identical by the pin, so the swap is free.
-    */
-  def lnqTree(x: Column): Column = {
-    val k0 = floor(log2(x)).cast("long")
-    val m0 = x * pow(lit(2.0), (-k0).cast("double"))
-    val k = when(m0 >= 2.0, k0 + lit(1L))
-      .when(m0 < 1.0, k0 - lit(1L))
-      .otherwise(k0)
-    val m = when(m0 >= 2.0, m0 * lit(0.5))
-      .when(m0 < 1.0, m0 * lit(2.0))
-      .otherwise(m0)
-    val t = (m - lit(1.0)) / (m + lit(1.0))
-    val u = t * t
-    // 2·atanh(t): t·(2 + t²·(2/3 + t²·(2/5 + …))) — Horner, fixed
-    // order, coefficients as correctly-rounded compile-time quotients.
-    val s = t * (lit(2.0) + u * (lit(2.0 / 3.0) + u * (lit(2.0 / 5.0) +
-      u * (lit(2.0 / 7.0) + u * (lit(2.0 / 9.0) + u * (lit(2.0 / 11.0) +
-        u * (lit(2.0 / 13.0) + u * (lit(2.0 / 15.0) + u * (lit(2.0 / 17.0) +
-          u * (lit(2.0 / 19.0) + u * (lit(2.0 / 21.0) + u * lit(2.0 / 23.0)
-            )))))))))))
-    s + k.cast("double") * lit(Ln2)
-  }
 }
 
 /** `lnq(x)` as ONE expression node computing [[DetMath.lnqDouble]] —
-  * bit-identical to [[DetMath.lnqTree]] by DetMathSpec's pin. Codegen
+  * bit-identical to the SQL chain's op tree by DetMathSpec's pin. Codegen
   * emits a single static call to the scalar kernel (a Scala top-level
   * object compiles with static forwarders), so every caller gets BOTH
   * a tiny plan (what the inlined ~80-node tree cost was per-query
@@ -347,14 +278,14 @@ case class ExpqExpr(
   * [[DetMath.psiTermMicro12]]).
   *
   * Exists for PLAN size, not semantics: the equivalent Column form
-  * ([[DetMath.lnRatioFp]] + decimal divides) inlines a ~200-node
+  * (the fixed-point ln series + decimal divides) inlines a ~200-node
   * decimal tree whose runtime codegen dominated the whole query
   * (measured 5.5 s of a 6.5 s sf0.1 PSI — the term stage runs over
   * ~32 bin rows). Deliberately CodegenFallback: one interpreted call
   * per BIN (not per input row) is nanoseconds, and it keeps the
-  * generated stage method small. Bit-identical to the Column form by
-  * shared-scalar construction; the DuckDB oracle mirrors the same
-  * integer program in SQL.
+  * generated stage method small. It evaluates the shared scalar, so
+  * it is bit-identical to the driver-side grid by construction; the
+  * DuckDB oracle mirrors the same integer program in SQL.
   */
 case class PsiTermMicro12(
     br: org.apache.spark.sql.catalyst.expressions.Expression,

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.IntegerType
   * non-literal argument is an analysis-time error, not a silent
   * per-row reinterpretation.
   *
-  * Aggregates (TopKAgg, IntMomentsAgg, CovAgg) stay Column-API-only:
+  * Aggregates (TopKAgg, IntMomentsAgg) stay Column-API-only:
   * their state schemas are type-parameterized in ways SQL argument
   * lists don't express cleanly, and their callers are operators, not
   * ad-hoc queries.

@@ -11,15 +11,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** EXACT-integer second-moment aggregate over a fixed-dimension vector
-  * column — [[CovAgg]]'s deterministic sibling. Each vector is
-  * quantized ONCE at the source (`qxᵢ = ⌊xᵢ·10⁷⌋`, a floor of a
+  * column. Each vector is quantized ONCE at the source
+  * (`qxᵢ = ⌊xᵢ·10⁷⌋`, a floor of a
   * correctly-rounded product — identical in any IEEE engine) and the
   * state accumulates (n, Σqx, upper-triangle Σqx·qxᵀ) as EXACT
   * integers, so the merged result is independent of partitioning and
   * accumulation order — the property that lets a downstream consumer
   * (deterministic PCA, the DuckDB oracle) reproduce it bit-for-bit,
-  * where [[CovAgg]]'s float sums carry last-ulp partition wobble by
-  * contract.
+  * where float sums would carry last-ulp partition wobble.
   *
   * Scale shape: CONSTANT state (1 + d + d(d+1)/2 entries ≈ 2,145 at
   * d=64), map-side partial aggregation, associative merge — one pass,
@@ -40,8 +39,6 @@ case class IntMomentsAgg(
 
   require(dim >= 1, s"dim must be positive: $dim")
   require(scale >= 1, s"scale must be positive: $scale")
-
-  private val triLen = dim * (dim + 1) / 2
 
   override def children: Seq[Expression] = Seq(vec)
   override def nullable: Boolean = false

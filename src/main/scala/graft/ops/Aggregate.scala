@@ -99,22 +99,6 @@ object Aggregate {
       // groups whose values are ALL null still appear, with 0 — exactly
       // COUNT(DISTINCT x)'s contract.
 
-  /** The sketch path of [[countDistinctScalable]]: HyperLogLog++
-    * (`approx_count_distinct`). The exact form shuffles one row per
-    * DISTINCT value; at billions of distinct keys that intermediate
-    * dominates the job. The HLL sketch is constant-size per group
-    * (~1.5 KB at 2% rsd), merges associatively in partial aggregation,
-    * and never materializes the distinct set — the only form that
-    * survives "count distinct users over the full history" at 100 TB.
-    * `rsd` is the target relative standard deviation (default 0.05;
-    * 0.02 ≈ 4× the sketch memory).
-    */
-  def countDistinctApprox(
-      df: DataFrame, groupCols: Seq[String], valueCol: String,
-      rsd: Double = 0.05, outCol: String = "n_distinct_approx"): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(approx_count_distinct(col(valueCol), rsd).as(outCol))
-
   /** Mergeable per-group aggregate STATE over `valueCol` — the unit of
     * incremental view maintenance: (n, sum, min, max), i.e. exactly
     * the fields a later [[mergeAggStates]] can combine associatively.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 
@@ -19,7 +19,7 @@ import graft.schema.Schemas
   * parsed value next to the raw string, `Ingest` caches that batch as
   * rows (uncompressed `UnsafeRow`s that spill through `MEMORY_AND_DISK`,
   * a batch bounded by `maxFilesPerTrigger`), and the commit reads the
-  * parsed columns back instead of running [[castTyped]] again.
+  * parsed columns back instead of parsing again.
   */
 object Cleanse {
 
@@ -56,12 +56,4 @@ object Cleanse {
   val parsers: Seq[(String, Column => Column)] = Seq(
     "timestamp" -> (tryTimestamp _), "temperature" -> (tryDouble _),
     "humidity" -> (tryDouble _), "pressure" -> (tryDouble _))
-
-  /** Bulk cast after validation (`pipeline.py:170-179`): string→timestamp
-    * and string→double with null-on-failure semantics.
-    */
-  def castTyped(df: DataFrame): DataFrame =
-    parsers.foldLeft(df) { case (d, (c, parse)) =>
-      d.withColumn(c, parse(col(c)))
-    }
 }

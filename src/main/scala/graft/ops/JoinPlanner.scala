@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * runtime, but both reason from byte statistics; this planner reasons
   * from KEY statistics (per-key row counts — the thing that actually
   * explodes a join) collected with one bounded aggregate per side, and
-  * returns both the DECISION TABLE (auditable, oracle-checkable
-  * integers) and a DataFrame joined by the chosen strategy.
+  * returns the DECISION TABLE (auditable, oracle-checkable integers)
+  * for the caller to act on.
   *
   * Decision rule, in order:
   *  1. build side has ≤ `broadcastMaxRows` rows → `broadcast`
@@ -29,10 +29,6 @@ import org.apache.spark.sql.functions._
   * this one acts on the answer).
   */
 object JoinPlanner {
-
-  final case class JoinPlan(
-      strategy: String, buildRows: Long, probeRows: Long,
-      probeKeys: Long, probeMaxKeyRows: Long)
 
   /** The decision as a ONE-ROW DataFrame — fully declarative (two
     * bounded aggregates + a CASE on exact integers), so the decision
@@ -58,35 +54,5 @@ object JoinPlanner {
           .when(col("probe_max_key_rows") * col("probe_keys") >=
             lit(skewRatio) * col("probe_rows"), lit("salted"))
           .otherwise(lit("shuffle")))
-  }
-
-  /** Compute the plan decision for joining `probe ⋈ build` on `keys`. */
-  def plan(
-      probe: DataFrame, build: DataFrame, keys: Seq[String],
-      broadcastMaxRows: Long = 1000000L,
-      skewRatio: Long = 16L): JoinPlan = {
-    val r = planReport(probe, build, keys, broadcastMaxRows, skewRatio)
-      .collect()(0)
-    JoinPlan(r.getAs[String]("strategy"), r.getAs[Long]("build_rows"),
-      r.getAs[Long]("probe_rows"), r.getAs[Long]("probe_keys"),
-      r.getAs[Long]("probe_max_key_rows"))
-  }
-
-  /** Join `probe ⋈ build` with the strategy [[plan]] chose. Returns
-    * (joined, plan) so callers can log the decision. Inner joins only
-    * (the salted path's contract).
-    */
-  def adaptiveJoin(
-      probe: DataFrame, build: DataFrame, keys: Seq[String],
-      broadcastMaxRows: Long = 1000000L,
-      skewRatio: Long = 16L,
-      salts: Int = 8): (DataFrame, JoinPlan) = {
-    val p = plan(probe, build, keys, broadcastMaxRows, skewRatio)
-    val joined = p.strategy match {
-      case "broadcast" => probe.join(broadcast(build), keys)
-      case "salted" => SkewJoin.saltedJoin(probe, build, keys, salts)
-      case _ => probe.join(build, keys)
-    }
-    (joined, p)
   }
 }

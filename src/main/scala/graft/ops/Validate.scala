@@ -104,8 +104,8 @@ object Validate {
 
   /** The typed sensor row over a [[withValidation]] frame, in canonical
     * column order: each parsed field read from its [[parsedName]] column,
-    * `sensor_id` as it is. Equal to `Cleanse.castTyped` of the raw strings,
-    * without parsing them again.
+    * `sensor_id` as it is. Equal to re-parsing the raw strings through
+    * [[Cleanse.parsers]], without parsing them again.
     */
   def typedColumns: Seq[Column] = Schemas.sensorColumns.map(c =>
     if (Cleanse.parsers.exists(_._1 == c)) col(parsedName(c)).as(c) else col(c))

@@ -12,7 +12,7 @@ import Shared.{valueValid, lnSqlChain}
 object DriftQueries {
 
   /** DuckDB lateral-alias chain mirroring
-    * [[graft.functions.DetMath.lnRatioFp]] — the EXACT-INTEGER
+    * [[graft.functions.DetMath.lnRatioFpBig]] — the EXACT-INTEGER
     * fixed-point ⌊ln(a/b)·10¹⁸⌋-class kernel — over prior aliases
     * `a`, `b` (positive BIGINTs, a ≥ b ≥ 1), emitting HUGEINT alias
     * `out`. Every op is an integer compare / multiply / truncating

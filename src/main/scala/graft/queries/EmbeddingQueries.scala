@@ -285,8 +285,7 @@ FROM q CROSS JOIN mu
     // exact-integer or exactly-representable-double arithmetic, so the
     // oracle reproduces the fit bit-for-bit with a recursive CTE
     // (pcaOracleSql) — the kmeans quantization discipline applied to
-    // eigendecomposition. The adaptive Jacobi fitPca remains for
-    // library use (spec'd: planted-axis recovery, orthonormality).
+    // eigendecomposition.
     QueryDef("q_pca_project", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = graft.ext.Embeddings.fitPcaDeterministic(

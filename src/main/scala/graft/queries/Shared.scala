@@ -18,8 +18,8 @@ object Shared {
     col("value").isNotNull && col("value").between(ValueLo, ValueHi)
 
   /** DuckDB oracle for q_dedup_minhash, generated from the SAME hash
-    * family as [[Dedup.portableMinHashSignatures]] (seeds inlined below
-    * via [[Dedup.portableSeeds]]).
+    * family as [[Dedup.portableMinHashNearDuplicates]]'s signatures
+    * (seeds inlined below via [[Dedup.portableSeeds]]).
     */
   private[queries] def minHashOracleSql: String = {
     val P = Dedup.PortableP

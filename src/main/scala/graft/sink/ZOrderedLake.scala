@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.BitExprs
 
-/** [EXT] Z-ordered lake layout: cluster a table on the Morton curve of
-  * two dimensions before writing, so per-file (and per-row-group)
-  * min/max statistics prune scans filtered on EITHER dimension.
+/** [EXT] Z-ordered lake layout: the Morton key ([[zKey]]) a writer
+  * clusters a table on, so per-file (and per-row-group) min/max
+  * statistics prune scans filtered on EITHER dimension, and the zone
+  * map ([[zoneMap]]) that shows the payoff per Morton cell.
   *
   * A linear sort by (a, b) packs files by `a` only — a `b = ?` filter
   * still opens every file. Range-partitioning + sorting by
-  * `zOrder2(a, b)` bounds both dimensions inside each file, so parquet
+  * `zKey(a, b)` bounds both dimensions inside each file, so parquet
   * footer stats skip most files for either predicate. At 100 TB the
   * difference is reading 1% vs 100% of the files for the non-leading
   * dimension.
@@ -61,43 +62,5 @@ object ZOrderedLake {
         max(col(dimA)).as(s"${dimA}_max"),
         min(col(dimB)).as(s"${dimB}_min"),
         max(col(dimB)).as(s"${dimB}_max"))
-  }
-
-  /** Merge zone-map states ([[zoneMap]] outputs over disjoint row
-    * sets) into the zone map of their union — count sums, bounds
-    * min/max: all three mergeable, so the skipping index maintains
-    * incrementally per ingested batch instead of rescanning the lake
-    * (spec asserts merge(zoneMap(A), zoneMap(B)) == zoneMap(A ∪ B)).
-    */
-  def mergeZoneMaps(maps: Seq[DataFrame]): DataFrame = {
-    require(maps.nonEmpty, "mergeZoneMaps needs at least one input")
-    val all = maps.reduce(_ unionByName _)
-    val Seq(zone, n, aMin, aMax, bMin, bMax) = all.columns.toSeq
-    all.groupBy(col(zone))
-      .agg(
-        sum(col(n)).as(n),
-        min(col(aMin)).as(aMin),
-        max(col(aMax)).as(aMax),
-        min(col(bMin)).as(bMin),
-        max(col(bMax)).as(bMax))
-  }
-
-  /** Write `df` parquet, clustered on the Z-curve of the (integral)
-    * `dimA`/`dimB` columns. `files` controls layout granularity: more
-    * files → tighter per-file bounds → better skipping, at the price
-    * of more tasks/footers. The range partitioner samples the z-key
-    * distribution, so file sizes stay balanced even when the dims are
-    * skewed.
-    */
-  def writeZOrdered(
-      df: DataFrame, path: String, dimA: String, dimB: String,
-      files: Int, bits: Int = 16): Unit = {
-    require(files >= 1, s"files must be >= 1: $files")
-    df
-      .withColumn("__z", zKey(col(dimA), col(dimB), bits))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 }

@@ -25,9 +25,6 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/plans/Prefix.scala" -> (1,
       "one k-long partial-sum array PER PARTITION (k = #prefix " +
         "columns) — #partitions rows, never data rows"),
-    "graft/ops/JoinPlanner.scala" -> (1,
-      "single-row join-plan report (full aggregate of both sides' " +
-        "stats)"),
     "graft/sink/Sinks.scala" -> (3,
       "toLocalIterator STREAMS one file's rows/aggregates into JDBC " +
         "batches inside the per-file txn — iterator pull, one " +

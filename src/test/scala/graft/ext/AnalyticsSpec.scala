@@ -44,18 +44,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(totals.sorted.reverse.toSeq === totals.toSeq)
   }
 
-  test("approx quantile sketch tracks the exact percentiles within rank error") {
-    val df = (1 to 10000).map(i => ("g", i.toDouble)).toDF("k", "v")
-    val exact = Analytics.valueQuantiles(df, Seq("k"), "v")
-      .select("p50", "p95", "p99").as[(Double, Double, Double)].head()
-    val approx = Analytics.valueQuantilesApprox(df, Seq("k"), "v")
-      .select("p50", "p95", "p99").as[(Double, Double, Double)].head()
-    // accuracy=10000 over 10000 rows -> rank error <= ~1 row = 1.0 in value
-    assert(math.abs(approx._1 - exact._1) <= 2.0)
-    assert(math.abs(approx._2 - exact._2) <= 2.0)
-    assert(math.abs(approx._3 - exact._3) <= 2.0)
-  }
-
   test("histogramQuantiles interpolates exactly on a uniform histogram") {
     // values 0..99, width 10: bins 0..9 of 10 each. r(p) = p*99; the
     // uniform in-bin interpolation reproduces quantile_cont exactly.

@@ -36,28 +36,6 @@ class BpeSpec extends SparkSpec {
       (2L, "aa", "aa", 3L)))
   }
 
-  test("learnMergesCapped == learnMerges on the physically-truncated corpus, " +
-    "and a loose cap is a no-op") {
-    val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val docs = Seq((1L, text)).toDF("doc_id", "text")
-    def merges(df: org.apache.spark.sql.DataFrame, cap: Option[Int]) =
-      cap.fold(Bpe.learnMerges(df, "text", numMerges = 4))(m =>
-          Bpe.learnMergesCapped(df, "text", numMerges = 4, maxVocab = m))
-        .as[(Long, String, String, Long)].collect().sortBy(_._1).toList
-    // cap >= vocab size: identical to the uncapped table
-    assert(merges(docs, Some(10)) === merges(docs, None))
-    // cap = 2 keeps newest(6) and low(5) — freq desc, word asc is the
-    // total order — and must equal learning on a corpus that only
-    // contains those words with the same frequencies
-    val truncated = Seq(
-      (1L, (Seq.fill(6)("newest") ++ Seq.fill(5)("low")).mkString(" ")))
-      .toDF("doc_id", "text")
-    assert(merges(docs, Some(2)) === merges(truncated, None))
-    // the cap genuinely changed the outcome (the fixture is not vacuous)
-    assert(merges(docs, Some(2)) !== merges(docs, None))
-  }
-
   test("vocabAfterMerges prices each word in learned tokens") {
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")

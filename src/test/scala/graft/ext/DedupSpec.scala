@@ -98,25 +98,6 @@ class DedupSpec extends SparkSpec {
     assert(out === Set(2L))
   }
 
-  test("incremental MinHash candidates == full candidates minus old-old pairs") {
-    val history = docs.filter(col("doc_id") < 3)
-    val batch = docs.filter(col("doc_id") >= 3)
-      .union(Seq((9L, "the quick brown fox jumps over the lazy dog near an old river bank"))
-        .toDF("doc_id", "text"))
-    def sigs(d: org.apache.spark.sql.DataFrame) =
-      Dedup.minHashSignatures(d, "doc_id", "text", shingleN = 3, numHashes = 16)
-    val full = Dedup.minHashCandidatePairs(
-      sigs(history.union(batch)), "doc_id", 16, 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val oldIds = Set(0L, 1L, 2L)
-    val expected = full.filterNot { case (a, b) => oldIds(a) && oldIds(b) }
-    val got = Dedup.incrementalMinHashCandidatePairs(
-      sigs(batch), sigs(history), "doc_id", 16, 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(got === expected)
-    assert(expected.nonEmpty) // doc 9 is a near-dup of history doc 0
-  }
-
   test("clusterPairs: transitive closure with min-id representatives") {
     // components: {1,2,3} via chain, {10,11}, and a 0..9-style long
     // chain {20..27} exercising multi-round propagation (diameter 7)
@@ -138,14 +119,6 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     // {0,1,2} -> 0; {4,5} -> 4; 3 and 6 unpaired
     assert(kept === Set(0L, 3L, 4L, 6L))
-  }
-
-  test("exactByDigest agrees with exact dedup") {
-    val a = Dedup.exact(docs, Seq("text"), "doc_id")
-      .select("doc_id", "n_copies").as[(Long, Long)].collect().toSet
-    val b = Dedup.exactByDigest(docs, "text", "doc_id")
-      .select("doc_id", "n_copies").as[(Long, Long)].collect().toSet
-    assert(a === b)
   }
 
   test("shingles produce distinct word n-grams") {
@@ -279,7 +252,7 @@ class DedupSpec extends SparkSpec {
       corpus, "doc_id", "text", maxDist = 3)) === within3)
 
     val within5 = allPairsWithin(
-      Dedup.portableSimHashSignatures(corpus, "doc_id", "text"), 5)
+      Dedup.portableSimHashSignaturesKeyed(corpus, Seq("doc_id"), "text"), 5)
     assert(within5.exists(_._3 > 0))
     assert(mined(Dedup.portableSimHashNearDuplicates(
       corpus, "doc_id", "text")) === within5)
@@ -672,23 +645,6 @@ class DedupSpec extends SparkSpec {
     // doc_a is the query-side id, doc_b the corpus-side id — the old
     // doc_a < doc_b dedup filter silently returned EMPTY here
     assert(out === Set((100L, 1L)))
-  }
-
-  test("incrementalMinHashCandidatePairs emits each pair once when an " +
-    "id is re-ingested on both sides") {
-    val text = "the quick brown fox jumps over the lazy dog near the river"
-    val history = Seq((5L, text), (1L, "unrelated completely different " +
-      "terms about databases and engines")).toDF("doc_id", "text")
-    // id 5 re-ingested in the new batch alongside a near-dup new doc 9
-    val batch = Seq((5L, text), (9L, text)).toDF("doc_id", "text")
-    def sigs(d: org.apache.spark.sql.DataFrame) =
-      Dedup.minHashSignatures(d, "doc_id", "text", shingleN = 3, numHashes = 16)
-    val got = Dedup.incrementalMinHashCandidatePairs(
-      sigs(batch), sigs(history), "doc_id", 16, 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toList
-    // (5,9) must appear exactly ONCE (new-side signature authoritative),
-    // not once per part
-    assert(got.count(_ == ((5L, 9L))) === 1, got.toString)
   }
 
   test("clusterPairs rejects non-integral ids loudly instead of " +

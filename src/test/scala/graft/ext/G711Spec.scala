@@ -55,11 +55,11 @@ class G711Spec extends AnyFunSuite {
     "one shape; non-audio format tags reject clearly") {
     val pcm = MediaCodec.synthesizeWavPcm16(16000,
       Array.tabulate(50)(i => i * 100 - 2500))
-    assert(MediaCodec.isDecodableAudio(pcm))
+    assert(DecodeChecks.isDecodableAudio(pcm))
     assert(MediaCodec.decodeAudio(pcm).length === 50)
     val codes = Array.tabulate(30)(i => (i * 17) % 256)
     val ulaw = MediaCodec.synthesizeWavG711(8000, codes, ulaw = true)
-    assert(MediaCodec.isDecodableAudio(ulaw))
+    assert(DecodeChecks.isDecodableAudio(ulaw))
     assert(MediaCodec.decodeAudio(ulaw).toList === codes.map(ulawToPcm).toList)
     val alaw = MediaCodec.synthesizeWavG711(8000,
       Array.tabulate(30)(i => (i * 29) % 256), ulaw = false)
@@ -67,7 +67,7 @@ class G711Spec extends AnyFunSuite {
     // an ADPCM format tag (0x11) is honestly undecodable
     val adpcm = ulaw.clone()
     adpcm(20) = 0x11
-    assert(!MediaCodec.isDecodableAudio(adpcm))
+    assert(!DecodeChecks.isDecodableAudio(adpcm))
     val e = intercept[IllegalArgumentException](MediaCodec.decodeAudio(adpcm))
     assert(e.getMessage.contains("unsupported format"), e.getMessage)
   }
@@ -83,7 +83,7 @@ class G711Spec extends AnyFunSuite {
       putLe32(huge, 40, 0x7ffffff0)
       for (cut <- Seq(wav.take(80), wav.dropRight(14), huge)) {
         assert(MediaCodec.detect(cut) === "wav")
-        assert(!MediaCodec.isDecodableAudio(cut), s"ulaw=$ulaw")
+        assert(!DecodeChecks.isDecodableAudio(cut), s"ulaw=$ulaw")
         val e = intercept[IllegalArgumentException](MediaCodec.decodeAudio(cut))
         assert(e.getMessage.contains("truncated data chunk"), e.getMessage)
       }
@@ -121,7 +121,7 @@ class G711Spec extends AnyFunSuite {
       wav(1, 8, data) -> "no sample decoder for PCM_UNSIGNED 8000.0 Hz, 8 bit",
       wav(1, 24, data) -> "no sample decoder for PCM_SIGNED 8000.0 Hz, 24 bit",
       wav(3, 32, data) -> "wav: unsupported format")) {
-      assert(!MediaCodec.isDecodableAudio(b), why)
+      assert(!DecodeChecks.isDecodableAudio(b), why)
       val e = intercept[IllegalArgumentException](MediaCodec.decodeAudio(b))
       assert(e.getMessage.contains(why), e.getMessage)
     }
@@ -143,13 +143,13 @@ class G711Spec extends AnyFunSuite {
     val g711 = nearMaxChunk(MediaCodec.synthesizeWavG711(8000,
       Array.tabulate(64)(i => (i * 13) % 256), ulaw = true))
     assert(MediaCodec.detect(g711) === "wav")
-    assert(!MediaCodec.isDecodableAudio(g711))
+    assert(!DecodeChecks.isDecodableAudio(g711))
     val e1 = intercept[IllegalArgumentException](MediaCodec.decodeAudio(g711))
     assert(e1.getMessage.contains("unsupported format"), e1.getMessage)
 
     val pcm = nearMaxChunk(MediaCodec.synthesizeWavPcm16(16000,
       Array.tabulate(64)(i => i * 100 - 3200)))
-    assert(!MediaCodec.isDecodableAudio(pcm))
+    assert(!DecodeChecks.isDecodableAudio(pcm))
     val e2 = intercept[IllegalArgumentException](MediaCodec.decodeAudio(pcm))
     assert(e2.getMessage.contains("unsupported format"), e2.getMessage)
   }

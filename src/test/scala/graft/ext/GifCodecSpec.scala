@@ -48,7 +48,7 @@ class GifCodecSpec extends AnyFunSuite {
       // image descriptor packed byte, bit 6: the interlace flag
       val desc = imageDescriptorAt(bytes)
       assert(((bytes(desc + 9) & 0x40) != 0) === interlaced)
-      assert(MediaCodec.isDecodableImage(bytes))
+      assert(DecodeChecks.isDecodableImage(bytes))
       val img = MediaCodec.decodeImage(bytes)
       assert(img.width === w && img.height === h)
       for (y <- 0 until h; x <- 0 until w) {
@@ -83,7 +83,7 @@ class GifCodecSpec extends AnyFunSuite {
       assert(javax.imageio.ImageIO.write(img, "gif", bos))
       val bytes = bos.toByteArray
       assert(MediaCodec.detect(bytes) === "gif")
-      assert(MediaCodec.isDecodableImage(bytes), s"${w}x$h")
+      assert(DecodeChecks.isDecodableImage(bytes), s"${w}x$h")
       val mine = MediaCodec.decodeImage(bytes)
       assert(mine.width === w && mine.height === h)
       for (y <- 0 until h; x <- 0 until w) {
@@ -160,7 +160,7 @@ class GifCodecSpec extends AnyFunSuite {
     assert(e.getMessage.contains("decode cap"), e.getMessage)
     val headerOnly = MediaCodec.synthesizeGif(32, 20, gctBits = 4)
     assert(MediaCodec.detect(headerOnly) === "gif")
-    assert(!MediaCodec.isDecodableImage(headerOnly))
+    assert(!DecodeChecks.isDecodableImage(headerOnly))
   }
 
   test("decodeImage/isDecodableImage dispatch GIF through the unified " +
@@ -168,7 +168,7 @@ class GifCodecSpec extends AnyFunSuite {
     val palette = Array.tabulate(8)(i =>
       ((i * 31 % 256) << 16) | ((i * 63 % 256) << 8) | (i * 15 % 256))
     val bytes = gif(6, 4, palette, (x, y) => (x + y * 2) % 8)
-    assert(MediaCodec.isDecodableImage(bytes))
+    assert(DecodeChecks.isDecodableImage(bytes))
     val img = MediaCodec.decodeImage(bytes)
     assert(img.width === 6 && img.height === 4)
     val e = palette((3 + 2 * 2) % 8)

@@ -90,7 +90,7 @@ class JpegCodecSpec extends AnyFunSuite {
       // FF DD: the DRI segment is present exactly when asked for
       assert(jpeg.sliding(2).exists(s =>
         (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xdd) === (rst > 0))
-      assert(MediaCodec.isDecodableImage(jpeg))
+      assert(DecodeChecks.isDecodableImage(jpeg))
       assert(MediaCodec.detect(jpeg) === "jpeg")
       assert(MediaCodec.parseJpeg(jpeg).components === 1)
       val img2 = MediaCodec.decodeImage(jpeg)
@@ -112,7 +112,7 @@ class JpegCodecSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     assert(ImageIO.write(src, "jpg", bos))
     val jpeg = bos.toByteArray
-    assert(MediaCodec.isDecodableImage(jpeg))
+    assert(DecodeChecks.isDecodableImage(jpeg))
     val mine = MediaCodec.decodeImage(jpeg)
     val ref = imageIoDecode(jpeg)
     // one decoder underneath: the raster conversion must be exact
@@ -132,7 +132,7 @@ class JpegCodecSpec extends AnyFunSuite {
     assert(ImageIO.write(src, "jpg", bos))
     val jpeg = bos.toByteArray
     assert(MediaCodec.parseJpeg(jpeg).components === 3)
-    assert(MediaCodec.isDecodableImage(jpeg))
+    assert(DecodeChecks.isDecodableImage(jpeg))
     val mine = MediaCodec.decodeImage(jpeg)
     val ref = imageIoDecode(jpeg)
     assert(maxDiffVsImageIo(mine, ref) === 0)
@@ -150,7 +150,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // SOF2: a progressive frame header
     assert(jpeg.sliding(2).exists(s =>
       (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc2))
-    assert(MediaCodec.isDecodableImage(jpeg))
+    assert(DecodeChecks.isDecodableImage(jpeg))
     val mine = MediaCodec.decodeImage(jpeg)
     assert(maxDiffVsImageIo(mine, imageIoDecode(jpeg)) === 0)
   }
@@ -162,16 +162,16 @@ class JpegCodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       MediaCodec.decodeImage(good.take(good.length / 2))
     }
-    assert(!MediaCodec.isDecodableImage(good.take(good.length / 2)))
+    assert(!DecodeChecks.isDecodableImage(good.take(good.length / 2)))
     // a cut inside the entropy-coded scan: libjpeg pads the missing
     // rows and only warns, and the warning must fail the decode
     val sos = good.indices.find(i =>
       (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xda).get
     val inScan = good.take((sos + good.length) / 2)
     intercept[IllegalArgumentException](MediaCodec.decodeImage(inScan))
-    assert(!MediaCodec.isDecodableImage(good.take(20)))
-    assert(!MediaCodec.isDecodableImage(Array[Byte](0x12, 0x34)))
-    assert(!MediaCodec.isDecodableImage(null))
+    assert(!DecodeChecks.isDecodableImage(good.take(20)))
+    assert(!DecodeChecks.isDecodableImage(Array[Byte](0x12, 0x34)))
+    assert(!DecodeChecks.isDecodableImage(null))
   }
 
   test("byte-fuzzed streams NEVER escape as AIOOBE/OOM — every fault " +
@@ -232,7 +232,7 @@ class JpegCodecSpec extends AnyFunSuite {
         case e: Throwable =>
           fail(s"small-u16 $v at $off escaped with ${e.getClass.getName}")
       }
-      try { MediaCodec.isDecodableImage(m); () }
+      try { DecodeChecks.isDecodableImage(m); () }
       catch {
         case e: Throwable =>
           fail(s"guard small-u16 $v at $off threw ${e.getClass.getName}")
@@ -274,10 +274,10 @@ class JpegCodecSpec extends AnyFunSuite {
       MediaCodec.bgrImage(5, 4, (x, y, c) => (x + y + c) % 256))
     val jpg = MediaCodec.encodeImage("jpeg",
       MediaCodec.grayImage(8, 8, (_, _) => 77))
-    assert(MediaCodec.isDecodableImage(bmp))
-    assert(MediaCodec.isDecodableImage(jpg))
+    assert(DecodeChecks.isDecodableImage(bmp))
+    assert(DecodeChecks.isDecodableImage(jpg))
     assert(MediaCodec.decodeImage(bmp)(2, 3, 1) === (2 + 3 + 1) % 256)
     assert(MediaCodec.decodeImage(jpg)(4, 4, 0) === 77)
-    assert(!MediaCodec.isDecodableImage(Array[Byte](1, 2, 3)))
+    assert(!DecodeChecks.isDecodableImage(Array[Byte](1, 2, 3)))
   }
 }

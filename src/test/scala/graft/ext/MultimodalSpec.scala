@@ -41,67 +41,6 @@ class MultimodalSpec extends SparkSpec {
     assert(again(2L) === rows(2L).checksum)
   }
 
-  test("extractFeatures: real pixel/sample statistics, header-dim " +
-    "fallback for compressed formats") {
-    // 2x1 BMP, known channel bytes: f(x,0,c) = 10c + x
-    val bmp = bmp24(2, 1, (x, _, c) => 10 * c + x)
-    val wav = MediaCodec.synthesizeWavPcm16(8000, Array(3, -4, 0, 12))
-    val png = MediaCodec.synthesizePng(512, 384) // header-only: stub path
-    val media = Seq(
-      (1L, "image", bmp), (2L, "audio", wav), (3L, "image", png))
-      .toDF("doc_id", "media_type", "payload").repartition(2)
-    val f = Multimodal.extractFeatures(spark, media, dim = 8).collect()
-      .map(r => r.doc_id -> r.feature.toSeq).toMap
-    // bmp: [w, h, bMean, gMean, rMean, min, max, npx]
-    assert(f(1L) === Seq(2f, 1f, 0.5f, 10.5f, 20.5f, 0f, 21f, 2f))
-    // wav: [n, peak, rms, mean, 0, 0, 0, 0]; ss = 9+16+0+144 = 169
-    assert(f(2L) === Seq(4f, 12f, math.sqrt(169.0 / 4).toFloat,
-      11f / 4, 0f, 0f, 0f, 0f))
-    // png: header dims + channels, zero-padded (labeled stub boundary)
-    assert(f(3L) === Seq(512f, 384f, 3f, 0f, 0f, 0f, 0f, 0f))
-    // deterministic across runs
-    val again = Multimodal.extractFeatures(spark, media, dim = 8).collect()
-      .map(r => r.doc_id -> r.feature.toSeq).toMap
-    assert(f === again)
-  }
-
-  test("resize: BMP payloads are really resampled and re-encoded; " +
-    "non-BMP passes through untouched") {
-    def f(x: Int, y: Int, c: Int): Int = 100 * c + 10 * y + x
-    val bmp = bmp24(3, 2, f)
-    val wav = MediaCodec.synthesizeWavPcm16(8000, Array(5, 6))
-    val media = Seq((1L, "image", bmp), (2L, "audio", wav))
-      .toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.resize(spark, media, 2, 1).collect()
-      .map(r => r.doc_id -> r).toMap
-    assert((out(1L).width, out(1L).height) === ((2, 1)))
-    // the output payload is a REAL BMP: decode it and check the NN
-    // source pixels (srcX = x*3/2 in {0,1}, srcY = 0)
-    val img = MediaCodec.decodeImage(out(1L).payload)
-    assert((img.width, img.height) === ((2, 1)))
-    for (x <- 0 until 2; c <- 0 until 3)
-      assert(img(x, 0, c) === f(x * 3 / 2, 0, c), s"($x,$c)")
-    // non-BMP: payload byte-identical, dims 0 (audio has none)
-    assert(out(2L).payload.toList === wav.toList)
-    assert((out(2L).width, out(2L).height) === ((0, 0)))
-  }
-
-  test("sampleFrames: real GVID frame grab at a stride; non-video " +
-    "yields no frames") {
-    def frame(f: Int) = bmp24(2, 2,
-      (x, y, c) => (f * 50 + 10 * y + x + c) % 256)
-    val vid = MediaCodec.synthesizeVideo((0 until 5).map(frame))
-    val media = Seq(
-      (1L, "video", vid), (2L, "junk", Array[Byte](9, 9)))
-      .toDF("doc_id", "media_type", "payload")
-    val frames = Multimodal.sampleFrames(spark, media, stride = 2).collect()
-    assert(frames.forall(_.doc_id == 1L))
-    assert(frames.map(_.frame_idx).sorted.toList === List(0, 2, 4))
-    // the grabbed payloads are the REAL frame bytes
-    frames.foreach(fr =>
-      assert(fr.payload.toList === frame(fr.frame_idx).toList))
-  }
-
   test("metadata-only reads never deserialize payload column (pruning-friendly schema)") {
     val media = Seq((1L, "image", MediaCodec.synthesizeBmp(2, 2)))
       .toDF("doc_id", "media_type", "payload")
@@ -135,8 +74,8 @@ class MultimodalSpec extends SparkSpec {
       safe(MediaCodec.decodeImage(b))
       safe(MediaCodec.decodeAudio(b))
       safe(MediaCodec.decodeVideoFrames(b))
-      MediaCodec.isDecodableImage(b)
-      MediaCodec.isDecodableAudio(b)
+      DecodeChecks.isDecodableImage(b)
+      DecodeChecks.isDecodableAudio(b)
     }
     // pure noise, all sizes around the header boundaries
     for (_ <- 1 to 400) poke(Array.fill(rnd.nextInt(120))(rnd.nextInt().toByte))
@@ -186,7 +125,7 @@ class MultimodalSpec extends SparkSpec {
     for (b <- Seq(hostile(18, 800000000), hostile(22, Int.MinValue))) {
       val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(b))
       assert(e.getMessage.contains("decode cap"), e.getMessage)
-      assert(!MediaCodec.isDecodableImage(b))
+      assert(!DecodeChecks.isDecodableImage(b))
     }
     // what the JDK's reader would allocate before it reads: the 2 GB an
     // embedded-JPEG BMP (compression 4) declares; the raster of an RLE8
@@ -441,86 +380,35 @@ class MultimodalSpec extends SparkSpec {
     // header-only BMP (valid magic, no pixel array): not decodable,
     // decode refuses with a clear message instead of AIOOBE
     val headerOnly = MediaCodec.synthesizeBmp(4, 3)
-    assert(!MediaCodec.isDecodableImage(headerOnly))
+    assert(!DecodeChecks.isDecodableImage(headerOnly))
     val e1 = intercept[IllegalArgumentException](
       MediaCodec.decodeImage(headerOnly))
     assert(e1.getMessage.contains("truncated"), e1.getMessage)
     val full = bmp24(4, 3, (x, y, c) => x + y + c)
-    assert(MediaCodec.isDecodableImage(full))
+    assert(DecodeChecks.isDecodableImage(full))
     // truncated GVID: in-bounds magic, frame length past the end
     val vid = MediaCodec.synthesizeVideo(
       Seq(bmp24(2, 2, (_, _, _) => 1)))
     val cut = java.util.Arrays.copyOf(vid, vid.length - 3)
-    assert(MediaCodec.isCompleteGvid(vid) && !MediaCodec.isCompleteGvid(cut))
     val e2 = intercept[IllegalArgumentException](
       MediaCodec.decodeVideoFrames(cut))
     assert(e2.getMessage.contains("truncated"))
     // truncated WAV data chunk
     val wav = MediaCodec.synthesizeWavPcm16(8000, Array(1, -2, 3, -4))
     val wcut = java.util.Arrays.copyOf(wav, wav.length - 2)
-    assert(MediaCodec.isDecodableAudio(wav) && !MediaCodec.isDecodableAudio(wcut))
+    assert(DecodeChecks.isDecodableAudio(wav) && !DecodeChecks.isDecodableAudio(wcut))
     val e3 = intercept[IllegalArgumentException](
       MediaCodec.decodeAudio(wcut))
     assert(e3.getMessage.contains("truncated"))
-    // operator surfaces: header-only BMP passes through resize
-    // untouched; truncated GVID yields honest-empty frames; the
-    // truncated WAV routes to the header fallback — no task death
+    // operator surface: the metadata inventory reads headers only, so
+    // all three route to header-level rows — no task death
     val media = Seq(
       (1L, "image", headerOnly), (2L, "video", cut), (3L, "audio", wcut))
       .toDF("doc_id", "media_type", "payload")
-    val rs = Multimodal.resize(spark, media, 2, 2).collect()
-      .map(r => r.doc_id -> r.payload.length).toMap
-    assert(rs(1L) === headerOnly.length) // pass-through, not re-encoded
-    assert(Multimodal.sampleFrames(spark, media, 1).collect().isEmpty)
-    val feats = Multimodal.extractFeatures(spark, media).collect()
-      .map(f => f.doc_id -> f.feature).toMap
-    assert(feats(3L)(3) === 0f) // header fallback shape, not samples
-  }
-
-  test("resize is FORMAT-PRESERVING: PNG→PNG, GIF→GIF, WebP→WebP, " +
-    "JPEG→lossless PNG, BMP→BMP — all real encodes, all pixel-exact") {
-    // one shared BGR-indexed formula; JPEG uses flat 8x8 blocks at
-    // quality 1.0 (all-ones quant) so its decode (and thus its
-    // thumbnail) is bit-exact too
-    def f(x: Int, y: Int, c: Int): Int = (x * 13 + y * 31 + c * 5) % 256
-    def fj(x: Int, y: Int): Int = ((x / 8) * 7 + (y / 8) * 13) % 256
-    val srcW = 12
-    val srcH = 9
-    val pal = Array.tabulate(64) { i =>
-      def pf(c: Int) = (i * 13 + c * 5) % 256
-      (pf(2) << 16) | (pf(1) << 8) | pf(0)
-    }
-    val media = Seq(
-      (1L, "bmp", bmp24(srcW, srcH, f)),
-      (2L, "png", MediaCodec.encodeImage("png",
-        MediaCodec.bgrImage(srcW, srcH, f))),
-      (3L, "gif", MediaCodec.encodeImage("gif",
-        MediaCodec.indexedImage(srcW, srcH, pal,
-          (x, y) => (x * 3 + y * 5) % 64))),
-      (4L, "webp", VP8LCodec.encode(srcW, srcH,
-        (x, y, c) => f(x, y, 2 - c))),
-      (5L, "jpeg", MediaCodec.encodeImage("jpeg",
-        MediaCodec.grayImage(srcW, srcH, fj))))
-      .toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.resize(spark, media, 4, 3).collect()
+    val meta = Multimodal.decodeMetadata(spark, media).collect()
       .map(r => r.doc_id -> r).toMap
-    val wantFormat = Map(1L -> "bmp", 2L -> "png", 3L -> "gif",
-      4L -> "webp", 5L -> "png")
-    (1L to 5L).foreach { id =>
-      val r = out(id)
-      assert((r.width, r.height) === ((4, 3)), s"doc $id")
-      assert(MediaCodec.detect(r.payload) === wantFormat(id), s"doc $id")
-      val thumb = MediaCodec.decodeImage(r.payload)
-      for (y <- 0 until 3; x <- 0 until 4; c <- 0 until 3) {
-        val sx = x * srcW / 4
-        val sy = y * srcH / 3
-        val want = id match {
-          case 3L => (((sx * 3 + sy * 5) % 64) * 13 + c * 5) % 256
-          case 5L => fj(sx, sy) // grayscale: B=G=R
-          case _ => f(sx, sy, c)
-        }
-        assert(thumb(x, y, c) === want, s"doc $id ($x,$y,$c)")
-      }
-    }
+    assert(meta.size === 3)
+    assert((meta(1L).format, meta(1L).width, meta(1L).height) === (("bmp", 4, 3)))
+    assert((meta(3L).format, meta(3L).channels) === (("wav", 1)))
   }
 }

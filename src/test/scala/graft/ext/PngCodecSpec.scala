@@ -47,7 +47,7 @@ class PngCodecSpec extends AnyFunSuite {
       assert(MediaCodec.detect(bytes) === "png")
       assert(MediaCodec.parsePng(bytes) === MediaCodec.PngHeader(w, h, 8, 2))
       assert(((bytes(28) & 0xff) == 1) === interlaced) // IHDR interlace
-      assert(MediaCodec.isDecodableImage(bytes))
+      assert(DecodeChecks.isDecodableImage(bytes))
       val img = MediaCodec.decodeImage(bytes)
       assert(img.width === w && img.height === h)
       for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
@@ -115,7 +115,7 @@ class PngCodecSpec extends AnyFunSuite {
         }
       val bytes = png(img, interlaced)
       assert(MediaCodec.parsePng(bytes) === MediaCodec.PngHeader(11, 7, depth, 3))
-      assert(MediaCodec.isDecodableImage(bytes))
+      assert(DecodeChecks.isDecodableImage(bytes))
       val out = MediaCodec.decodeImage(bytes)
       for (y <- 0 until 7; x <- 0 until 11) {
         val e = palette(idx(x, y))
@@ -147,7 +147,7 @@ class PngCodecSpec extends AnyFunSuite {
       assert(javax.imageio.ImageIO.write(img, "png", bos))
       val bytes = bos.toByteArray
       assert(MediaCodec.detect(bytes) === "png", name)
-      assert(MediaCodec.isDecodableImage(bytes), name)
+      assert(DecodeChecks.isDecodableImage(bytes), name)
       val mine = MediaCodec.decodeImage(bytes)
       if (name == "gray")
         // getRGB gamma-converts linear gray; compare raster samples
@@ -212,7 +212,7 @@ class PngCodecSpec extends AnyFunSuite {
     reCrcIhdr(huge)
     val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(huge))
     assert(e.getMessage.contains("decode cap"), e.getMessage)
-    assert(!MediaCodec.isDecodableImage(huge))
+    assert(!DecodeChecks.isDecodableImage(huge))
     // a real 16-bit gray PNG: sample v reads back as v·255/65535
     val deep = new BufferedImage(6, 4, BufferedImage.TYPE_USHORT_GRAY)
     def v16(x: Int, y: Int): Int = (x * 9001 + y * 15013) % 65536
@@ -260,7 +260,7 @@ class PngCodecSpec extends AnyFunSuite {
     "correctly: guard false / decode IAE, never a crash") {
     val headerOnly = MediaCodec.synthesizePng(32, 20)
     assert(MediaCodec.detect(headerOnly) === "png")
-    assert(!MediaCodec.isDecodableImage(headerOnly)) // no IDAT
+    assert(!DecodeChecks.isDecodableImage(headerOnly)) // no IDAT
     intercept[IllegalArgumentException](MediaCodec.decodeImage(headerOnly))
     // structurally valid chunks, truncated zlib payload: decode faults
     // as IAE, so the guard (a full decode) is false as well
@@ -307,7 +307,7 @@ class PngCodecSpec extends AnyFunSuite {
       }
       out.toByteArray
     }
-    assert(!MediaCodec.isDecodableImage(cutZlib))
+    assert(!DecodeChecks.isDecodableImage(cutZlib))
     val e = intercept[IllegalArgumentException](MediaCodec.decodeImage(cutZlib))
     assert(e.getMessage.toLowerCase.contains("end of zlib"), e.getMessage)
   }
@@ -315,7 +315,7 @@ class PngCodecSpec extends AnyFunSuite {
   test("decodeImage/isDecodableImage dispatch PNG through the unified " +
     "shape beside BMP and JPEG") {
     val bytes = png(MediaCodec.bgrImage(6, 4, (x, y, c) => (x + y * 2 + c) % 256))
-    assert(MediaCodec.isDecodableImage(bytes))
+    assert(DecodeChecks.isDecodableImage(bytes))
     val img = MediaCodec.decodeImage(bytes)
     assert(img.width === 6 && img.height === 4)
     assert(img(3, 2, 2) === (3 + 2 * 2 + 2) % 256)

@@ -12,10 +12,15 @@ class SamplingSpec extends SparkSpec {
       (i * 37) % 500))
     .toDF("doc_id", "lang", "score")
 
+  /** A deterministic ~`pct`% of rows: the flat [[Sampling.hashGate]]. */
+  private def hashSample(
+      df: org.apache.spark.sql.DataFrame, keyCol: String, pct: Int) =
+    df.filter(Sampling.hashGate(col(keyCol), lit(pct)))
+
   test("hashSample is deterministic and near the requested rate") {
-    val a = Sampling.hashSample(docs, "doc_id", 30)
+    val a = hashSample(docs, "doc_id", 30)
       .select("doc_id").as[Long].collect().toSet
-    val b = Sampling.hashSample(docs, "doc_id", 30)
+    val b = hashSample(docs, "doc_id", 30)
       .select("doc_id").as[Long].collect().toSet
     assert(a === b)
     // md5 is uniform: 1000 keys at 30% ± a loose binomial bound
@@ -129,13 +134,13 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("hashSample is monotone in pct: 10% subset of 40% subset of 100%") {
-    val p10 = Sampling.hashSample(docs, "doc_id", 10).select("doc_id").as[Long].collect().toSet
-    val p40 = Sampling.hashSample(docs, "doc_id", 40).select("doc_id").as[Long].collect().toSet
-    val p100 = Sampling.hashSample(docs, "doc_id", 100).select("doc_id").as[Long].collect().toSet
+    val p10 = hashSample(docs, "doc_id", 10).select("doc_id").as[Long].collect().toSet
+    val p40 = hashSample(docs, "doc_id", 40).select("doc_id").as[Long].collect().toSet
+    val p100 = hashSample(docs, "doc_id", 100).select("doc_id").as[Long].collect().toSet
     assert(p10.subsetOf(p40))
     assert(p40.subsetOf(p100))
     assert(p100.size === 1000)
-    assert(Sampling.hashSample(docs, "doc_id", 0).count() === 0)
+    assert(hashSample(docs, "doc_id", 0).count() === 0)
   }
 
   test("stratifiedHashSample applies per-stratum rates") {
@@ -147,7 +152,7 @@ class SamplingSpec extends SparkSpec {
     val fr = byLang("fr")
     assert(fr > 120 && fr < 215, s"fr=$fr") // ~50% of 333
     // stratum gate uses the SAME hash as the flat gate
-    val flat = Sampling.hashSample(docs.filter($"lang" === "fr"), "doc_id", 50)
+    val flat = hashSample(docs.filter($"lang" === "fr"), "doc_id", 50)
       .select("doc_id").as[Long].collect().toSet
     assert(out.filter($"lang" === "fr").select("doc_id").as[Long].collect().toSet === flat)
   }
@@ -162,7 +167,7 @@ class SamplingSpec extends SparkSpec {
     // the train split is EXACTLY the 80% hash sample (same gate)
     val train = Sampling.splitAssign(docs, "doc_id")
       .filter($"split" === "train").select("doc_id").as[Long].collect().toSet
-    val gate80 = Sampling.hashSample(docs, "doc_id", 80)
+    val gate80 = hashSample(docs, "doc_id", 80)
       .select("doc_id").as[Long].collect().toSet
     assert(train === gate80)
   }

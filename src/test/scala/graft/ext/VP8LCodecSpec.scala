@@ -85,7 +85,7 @@ class VP8LCodecSpec extends AnyFunSuite {
     fx.foreach { case (fn, name, w, h, _) =>
       val bytes = fixtureBytes(fn)
       assert(MediaCodec.detect(bytes) === "webp", fn)
-      assert(VP8LCodec.isDecodable(bytes), fn)
+      assert(DecodeChecks.isDecodableWebp(bytes), fn)
       val img = VP8LCodec.decode(bytes)
       assert(img.width === w && img.height === h, fn)
       for (y <- 0 until h; x <- 0 until w) {
@@ -183,13 +183,13 @@ class VP8LCodecSpec extends AnyFunSuite {
     // header-only synthesizeWebp (no pixel data)
     val headerOnly = MediaCodec.synthesizeWebp(32, 20, lossless = true)
     assert(MediaCodec.detect(headerOnly) === "webp")
-    assert(!VP8LCodec.isDecodable(headerOnly))
+    assert(!DecodeChecks.isDecodableWebp(headerOnly))
   }
 
   test("decodeImage/isDecodableImage dispatch WebP through the " +
     "unified shape beside BMP, JPEG, PNG and GIF") {
     val webp = VP8LCodec.encode(6, 4, (x, y, c) => (x + y * 2 + c) % 256)
-    assert(MediaCodec.isDecodableImage(webp))
+    assert(DecodeChecks.isDecodableImage(webp))
     val img = MediaCodec.decodeImage(webp)
     assert(img.width === 6 && img.height === 4)
     assert(img(3, 2, 2) === (3 + 2 * 2 + 0) % 256) // R = c 0

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -15,6 +16,54 @@ class DetMathSpec extends SparkSpec {
   import spark.implicits._
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** [[DetMath.lnq]]'s op tree in Column form — the literal mirror of
+    * the SQL chain ([[graft.queries.Shared]]'s lnSqlChain), the vehicle
+    * proving tree ≡ scalar bit-for-bit (hence DuckDB chain ≡ scalar).
+    * Queries use [[DetMath.lnq]] (one expression node evaluating
+    * [[DetMath.lnqDouble]]): inlining this ~80-node tree at every call
+    * site made runtime CODEGEN dominate bounded-grid queries
+    * (q_psi_daily 26 s, q_js_drift ~5 s of 6).
+    */
+  private def lnqTree(x: Column): Column = {
+    val k0 = floor(log2(x)).cast("long")
+    val m0 = x * pow(lit(2.0), (-k0).cast("double"))
+    val k = when(m0 >= 2.0, k0 + lit(1L))
+      .when(m0 < 1.0, k0 - lit(1L))
+      .otherwise(k0)
+    val m = when(m0 >= 2.0, m0 * lit(0.5))
+      .when(m0 < 1.0, m0 * lit(2.0))
+      .otherwise(m0)
+    val t = (m - lit(1.0)) / (m + lit(1.0))
+    val u = t * t
+    // 2·atanh(t): t·(2 + t²·(2/3 + t²·(2/5 + …))) — Horner, fixed
+    // order, coefficients as correctly-rounded compile-time quotients.
+    val s = t * (lit(2.0) + u * (lit(2.0 / 3.0) + u * (lit(2.0 / 5.0) +
+      u * (lit(2.0 / 7.0) + u * (lit(2.0 / 9.0) + u * (lit(2.0 / 11.0) +
+        u * (lit(2.0 / 13.0) + u * (lit(2.0 / 15.0) + u * (lit(2.0 / 17.0) +
+          u * (lit(2.0 / 19.0) + u * (lit(2.0 / 21.0) + u * lit(2.0 / 23.0)
+            )))))))))))
+    s + k.cast("double") * lit(DetMath.Ln2)
+  }
+
+  /** [[DetMath.expq]]'s op tree in Column form — the literal mirror of
+    * the SQL chain ([[graft.queries.Shared]]'s expSqlChain), the
+    * vehicle proving tree ≡ scalar (hence DuckDB chain ≡ scalar).
+    * Queries use [[DetMath.expq]] (one expression node): inlining this
+    * tree per call made runtime codegen the dominant cost of
+    * bounded-grid queries.
+    */
+  private def expqTree(x: Column): Column = {
+    val k = floor(x * lit(1.0 / DetMath.Ln2) + lit(0.5))
+    val r = x - k * lit(DetMath.Ln2)
+    val s = lit(1.0) + r * (lit(1.0) + r * (lit(1.0 / 2.0) +
+      r * (lit(1.0 / 6.0) + r * (lit(1.0 / 24.0) + r * (lit(1.0 / 120.0) +
+        r * (lit(1.0 / 720.0) + r * (lit(1.0 / 5040.0) +
+          r * (lit(1.0 / 40320.0) + r * (lit(1.0 / 362880.0) +
+            r * (lit(1.0 / 3628800.0) + r * (lit(1.0 / 39916800.0) +
+              r * lit(1.0 / 479001600.0))))))))))))
+    s * pow(lit(2.0), k)
+  }
 
   test("lnq(1) is exactly 0 and powers of two are exactly k*ln2") {
     assert(bits(DetMath.lnqDouble(1.0)) == bits(0.0))
@@ -37,7 +86,7 @@ class DetMathSpec extends SparkSpec {
     // the TREE pin proves the SQL-chain mirror ≡ scalar; the lnq
     // (expression-node) pin proves queries compute the same thing
     val got = xs.toDF("x")
-      .select(col("x"), DetMath.lnqTree(col("x")).as("tree"),
+      .select(col("x"), lnqTree(col("x")).as("tree"),
         DetMath.lnq(col("x")).as("lnx"))
       .as[(Double, Double, Double)].collect()
     got.foreach { case (x, tree, lnx) =>
@@ -76,7 +125,7 @@ class DetMathSpec extends SparkSpec {
         (i % 1400).toDouble / 2.0 - 350.0)  // wide-exponent sweep
     }
     val got = xs.toDF("x")
-      .select(col("x"), DetMath.expqTree(col("x")).as("tree"),
+      .select(col("x"), expqTree(col("x")).as("tree"),
         DetMath.expq(col("x")).as("ex"))
       .as[(Double, Double, Double)].collect()
     got.foreach { case (x, tree, ex) =>
@@ -96,25 +145,6 @@ class DetMathSpec extends SparkSpec {
       val x = i.toDouble / 3.7
       val rt = DetMath.expqDouble(DetMath.lnqDouble(x))
       assert(math.abs(rt - x) / x < 1e-12, s"x=$x")
-    }
-  }
-
-  test("Column lnRatioFp equals the BigInt scalar model on " +
-    "count-ratio-shaped inputs") {
-    val pairs = ((1 to 3000).map { i =>
-      val a = 1L + (i.toLong * 2654435761L) % 999999937L
-      val b = 1L + (i.toLong * 40503L) % (a)
-      (a max b, a min b)
-    } ++ Seq(
-      (1L, 1L), (2L, 1L), (3L, 2L), (1000000L, 1L),
-      (999999999999L, 1L), (1L << 60, 1L), (1L << 60, (1L << 60) - 1),
-      ((1L << 60) + 12345L, 977L))).distinct
-    val got = pairs.toDF("a", "b")
-      .select(col("a"), col("b"),
-        DetMath.lnRatioFp(col("a"), col("b")).cast("string").as("fp"))
-      .as[(Long, Long, String)].collect()
-    got.foreach { case (a, b, fp) =>
-      assert(BigInt(fp) == DetMath.lnRatioFpBig(a, b), s"a=$a b=$b")
     }
   }
 

@@ -84,24 +84,6 @@ class AggregateSpec extends SparkSpec {
     assert(out === builtin)
   }
 
-  test("countDistinctApprox tracks the exact count within the rsd bound") {
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    val exact = Aggregate.countDistinctScalable(ev, Seq("event_type"), "user_id")
-      .as[(String, Long)].collect().toMap
-    val approx = Aggregate.countDistinctApprox(ev, Seq("event_type"), "user_id", rsd = 0.02)
-      .as[(String, Long)].collect().toMap
-    assert(approx.keySet == exact.keySet)
-    exact.foreach { case (k, n) =>
-      val a = approx(k)
-      assert(math.abs(a - n) <= math.max(3, (n * 0.10).toLong),
-        s"approx $a too far from exact $n for $k")
-    }
-    // sketch plan: ONE aggregate pass, no distinct-expansion shuffle
-    val plan = Aggregate.countDistinctApprox(ev, Seq("event_type"), "user_id")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Expand"))
-  }
-
   test("mergeAggStates(prev, delta) equals the direct full aggregate") {
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
     def canon(df: org.apache.spark.sql.DataFrame) = df

@@ -35,7 +35,7 @@ class CleanseSpec extends SparkSpec {
   test("castTyped bulk-casts all-string frame to the typed schema") {
     val df = Seq(("2025-05-26 04:36:08", "S1", "26.41", "0.95", "1014.74"))
       .toDF("timestamp", "sensor_id", "temperature", "humidity", "pressure")
-    val out = Cleanse.castTyped(df)
+    val out = CleanseReference.castTyped(df)
     assert(out.schema("timestamp").dataType.typeName === "timestamp")
     assert(out.schema("temperature").dataType.typeName === "double")
     assert(out.head().getAs[Double]("temperature") === 26.41)

@@ -23,7 +23,7 @@ class FaultTaxonomyPropSpec extends SparkSpec {
       body(gen.pureApply(Gen.Parameters.default, Seed(i.toLong)))
     }
 
-  private val conf = PipelineConf.default
+  private val conf = PipelineConf()
 
   private val sensorIds =
     Seq("Kaggle_Sim_A01", "Kaggle_Sim_B02", "Kaggle_Sim_C03", "Weather_Station_Main")
@@ -80,7 +80,7 @@ class FaultTaxonomyPropSpec extends SparkSpec {
     forAllSeeded(fileGen, 10) { case (rows, _) =>
       val df = rows.toDF("timestamp", "sensor_id", "temperature", "humidity", "pressure")
         .withColumn("row_num", monotonically_increasing_id() + 1)
-      val clean = Cleanse.castTyped(
+      val clean = CleanseReference.castTyped(
         Validate.withValidation(df, conf).filter(col("is_valid")))
       val agg = Aggregate.metricAggregates(
         clean, Seq("sensor_id"), Seq("temperature", "humidity", "pressure"),

@@ -10,7 +10,7 @@ import graft.config.PipelineConf
 class ValidateSpec extends SparkSpec {
   import spark.implicits._
 
-  private val conf = PipelineConf.default
+  private val conf = PipelineConf()
 
   /** All-string sensor rows as the reference reads them (dtype=str). */
   private def sensorDf(rows: (String, String, String, String, String)*) =

@@ -21,6 +21,16 @@ class ZOrderedLakeSpec extends SparkSpec {
     df.repartitionByRange(files, col(byCol)).sortWithinPartitions(byCol)
       .write.mode("overwrite").parquet(path)
 
+  /** The z-ordered layout: range-partition and sort on the Morton key. */
+  private def writeZOrdered(
+      df: DataFrame, path: String, dimA: String, dimB: String,
+      files: Int, bits: Int): Unit =
+    df.withColumn("__z", ZOrderedLake.zKey(col(dimA), col(dimB), bits))
+      .repartitionByRange(files, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+      .write.mode("overwrite").parquet(path)
+
   test("z-ordered files bound BOTH dims; linear sort only bounds its leading dim") {
     import spark.implicits._
     // 128x128 grid: both dims comparable cardinality (the layout's
@@ -31,7 +41,7 @@ class ZOrderedLakeSpec extends SparkSpec {
     val zDir = java.nio.file.Files.createTempDirectory("graft_z").toString
     val linDir = java.nio.file.Files.createTempDirectory("graft_lin").toString
     val files = 16
-    ZOrderedLake.writeZOrdered(grid, zDir, "dim_a", "dim_b", files, bits = 7)
+    writeZOrdered(grid, zDir, "dim_a", "dim_b", files, bits = 7)
     writeLinear(grid, linDir, "dim_a", files)
 
     // same data in both layouts
@@ -75,9 +85,13 @@ class ZOrderedLakeSpec extends SparkSpec {
     import spark.implicits._
     val df = (0L until 2048L).map(i => (i % 64, i / 32)).toDF("a", "b")
     val (h1, h2) = (df.filter($"a" < 32), df.filter($"a" >= 32))
-    val merged = graft.sink.ZOrderedLake.mergeZoneMaps(Seq(
-      graft.sink.ZOrderedLake.zoneMap(h1, "a", "b", 16, 26),
-      graft.sink.ZOrderedLake.zoneMap(h2, "a", "b", 16, 26)))
+    // count sums, bounds min/max: the merge a batch-incremental index runs
+    val merged = graft.sink.ZOrderedLake.zoneMap(h1, "a", "b", 16, 26)
+      .unionByName(graft.sink.ZOrderedLake.zoneMap(h2, "a", "b", 16, 26))
+      .groupBy("zone")
+      .agg(sum("n_rows").as("n_rows"), min("a_min").as("a_min"),
+        max("a_max").as("a_max"), min("b_min").as("b_min"),
+        max("b_max").as("b_max"))
     val full = graft.sink.ZOrderedLake.zoneMap(df, "a", "b", 16, 26)
     assert(merged.except(full).isEmpty && full.except(merged).isEmpty)
   }

@@ -20,7 +20,9 @@ class CurateStreamSpec extends SparkSpec {
     // deterministic sample gate -> split assignment -> token chunking.
     val prepped = graft.ext.TextStats.tokenWindowChunks(
       graft.ext.Sampling.splitAssign(
-        graft.ext.Sampling.hashSample(docs, "doc_id", 100), "doc_id"),
+        docs.filter(graft.ext.Sampling.hashGate(
+          org.apache.spark.sql.functions.col("doc_id"),
+          org.apache.spark.sql.functions.lit(100))), "doc_id"),
       "doc_id", "text", chunkSize = 4, overlap = 1)
 
     val q = prepped.writeStream.outputMode("append")

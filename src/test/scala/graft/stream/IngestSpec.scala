@@ -867,7 +867,7 @@ class IngestSpec extends SparkSpec {
       .schema(Schemas.sensorCsvRaw).csv(file)
     val normalized = Schemas.sensorColumns.foldLeft(strings)((d, c) =>
       d.withColumn(c, Cleanse.naNormalize(col(c))))
-    val expected = Cleanse.castTyped(normalized
+    val expected = graft.ops.CleanseReference.castTyped(normalized
       .filter(Validate.fieldErrors(conf).map(_.isNull).reduce(_ && _)))
     val actual = spark.read.parquet(rawOut).drop("file_name")
     def types(df: org.apache.spark.sql.DataFrame) =

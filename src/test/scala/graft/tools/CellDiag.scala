@@ -12,6 +12,49 @@ import graft.Tables
 import graft.ext.Dedup
 
 object CellDiag {
+  /** Census-driven per-deployment gate guidance — the committed recipe
+    * behind "re-gate from your own cell census" (SCALING.md, r15 gate
+    * A/B). Input is the two count-derived statistics [[dist]] prints
+    * for a banding (host-noise-immune): the LARGEST band-cell
+    * row count and the TOTAL verify mass Σ n_cell². Returns the gate
+    * the measured A/B table says that shape wants, for the miners'
+    * `gridThreshold` argument — it does NOT change any shipped default.
+    *
+    * The rule (pure integer arithmetic, measured-then-chosen on the
+    * six (miner, corpus) cells of the r15/r16 A/B —
+    * `SCALING_100x_ab_T{8192,4096,1024}.jsonl`, `SCALING_30x_ab_T1024
+    * .jsonl`, censuses in SCALING.md): recommend the low 1024 gate iff
+    * BOTH hold, else keep the shipped 8192 —
+    *
+    *   (a) scale floor: Σn²/fanout ≥ 2²² — the balanced per-reducer
+    *       verify share is big enough that a straggler costs seconds
+    *       (portable@100× 15.9M ✓; portable@30× 1.45M ✗ — there the
+    *       1024 gate measured 6.93 s vs 3.61 s shipped: machinery);
+    *   (b) straggler severity: maxN² ≥ 6 · Σn²/fanout — the one
+    *       hottest cell alone out-weighs six balanced reducers, so the
+    *       tail is a genuine single-cell straggler the grid can slice
+    *       (portable@100× 8.3× ✓ — 1024 measured 12.2 s vs 14.0;
+    *       fast@100× 4.0× ✗ — its mass sits in a thousand warm cells
+    *       the 256-way fan-out already balances statistically, and
+    *       1024 measured 17.0 s vs 11.9 shipped).
+    *
+    * Why not the tempting mass-share rule ("gate low when most Σn²
+    * sits below 8192"): fast@100× holds MORE sub-8192 mass (89.6% at
+    * ≥1024) than portable@100× (78.6%) yet measured best at the HIGH
+    * gate — caught mass does not discriminate; concentration does.
+    * BigInt for the severity product: maxN² · fanout overflows Long
+    * already at maxN ≈ 2³¹ with fanout 256.
+    */
+  def recommendedGridThreshold(
+      maxCellN: Long, sumN2: BigInt, fanout: Int = 256): Int = {
+    require(maxCellN >= 0 && sumN2 >= 0 && fanout >= 1,
+      s"bad census: maxCellN=$maxCellN sumN2=$sumN2 fanout=$fanout")
+    val scaleFloor = sumN2 >= BigInt(1L << 22) * fanout
+    val severity =
+      BigInt(maxCellN) * BigInt(maxCellN) * fanout >= sumN2 * 6
+    if (scaleFloor && severity) 1024 else 8192
+  }
+
   private def dist(name: String, cells: DataFrame): Unit = {
     val d = cells.groupBy()
       .agg(count(lit(1)).as("cells"), max("n").as("maxN"),
@@ -33,7 +76,7 @@ object CellDiag {
         sum(when(col("n") >= 512, col("n") * col("n")).otherwise(lit(0L)))
           .as("n2_ge512"),
         // Per-tier CELL counts alongside the n² mass: the gate recipe
-        // (Dedup.recommendedGridThreshold) needs both — mass says how
+        // (recommendedGridThreshold) needs both — mass says how
         // much verify work a gate would catch, count says whether it
         // is straggler relief (few huge cells) or machinery (hundreds
         // of warm ones).
@@ -53,7 +96,7 @@ object CellDiag {
     // The committed recipe reads straight off the census: deployments
     // see the recommended `gridThreshold` argument on the same line
     // as the statistics that justify it (SCALING.md r16 section).
-    val rec = Dedup.recommendedGridThreshold(
+    val rec = recommendedGridThreshold(
       d.getLong(1), BigInt(d.getLong(3)))
     println(s"[celldiag] $name cells=${d.get(0)} maxN=${d.get(1)} " +
       s"p50/90/99/999=${d.get(2)} sumN2=${d.get(3)} " +
@@ -80,7 +123,7 @@ object CellDiag {
 
     // q_dedup_simhash: portable miner, 6 bands x 10 bits
     dist("portable(6x10b)", bandCells(
-      Dedup.portableSimHashSignatures(docs, "doc_id", "text"), 6, 10))
+      Dedup.portableSimHashSignaturesKeyed(docs, Seq("doc_id"), "text"), 6, 10))
     // q_dedup_simhash_fast: 64-bit miner at maxDist=6 -> 7 bands x 9 bits
     dist("fast(7x9b)", bandCells(
       Dedup.simHash(docs, "doc_id", "text"), 7, 64 / 7))
