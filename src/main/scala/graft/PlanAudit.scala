@@ -53,8 +53,7 @@ object PlanAudit {
     def line: String = columns.map(apply).mkString(" ")
   }
 
-  private val centroidKernels =
-    Set("NearestCentroidQ", "TopCentroidsBySim", "TopCentroidsTwoLevel")
+  private val centroidKernels = Set("NearestCentroidQ")
   private val kernels = centroidKernels + "BloomFilterMightContain"
 
   private val sharedStrata = "ranks one row per source after a full " +

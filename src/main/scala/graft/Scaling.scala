@@ -55,15 +55,11 @@ object Scaling {
     if (k == 0) c else translate(c, lo + hi, rot(lo) + rot(hi))
   }
 
-  /** Copy k of the embeddings table — THE one v4 signed-permutation
-    * transform (scaladoc above), shared by [[buildScaled]] and the
-    * embeddings-only rung corpora (`graft.IvfProbe --factor`) so the
-    * two can never drift onto different geometries (the v1/v3
-    * constructions were both replaced for degenerate geometry; a
-    * second copy of this code would re-open that door).
+  /** Copy k of the embeddings table — the v4 signed-permutation
+    * transform (the v1/v3 constructions were both replaced for
+    * degenerate geometry; see [[buildScaled]]).
     */
-  private[graft] def embeddingCopy(
-      d: DataFrame, k: Int, off: Long = 1000000000000L): DataFrame = {
+  private def embeddingCopy(d: DataFrame, k: Int, off: Long): DataFrame = {
     val dim = 64
     val r = (7 * k) % dim
     val rot =
@@ -84,22 +80,18 @@ object Scaling {
 
   /** Copy k of the documents table — the v4 Caesar construction
     * (bijective char map: in-copy edit distances and shingle overlap
-    * preserved exactly, copies content-disjoint on letters), shared by
-    * [[buildScaled]] and the documents-only rung corpora
-    * (`graft.SimHashShardProbe --factor`) for the same
-    * no-construction-drift reason as [[embeddingCopy]].
+    * preserved exactly, copies content-disjoint on letters).
     */
-  private[graft] def documentCopy(
-      d: DataFrame, k: Int, off: Long = 1000000000000L): DataFrame =
+  private def documentCopy(d: DataFrame, k: Int, off: Long): DataFrame =
     d.select(
       (col("doc_id") + lit(k * off)).as("doc_id"),
       caesar(col("text"), k).as("text"),
       col("lang"), col("source"), col("n_chars"))
 
-  /** Generator version marker shared by every scaled-corpus builder —
-    * bump on ANY change to the construction.
+  /** Generator version marker of the scaled corpus — bump on ANY
+    * change to the construction.
     */
-  private[graft] val generatorVersion = "v4-signed-permutation"
+  private val generatorVersion = "v4-signed-permutation"
 
   private def buildScaled(
       spark: SparkSession, base: String, out: String, factor: Int): Unit = {

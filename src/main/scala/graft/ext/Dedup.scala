@@ -649,40 +649,36 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  /** The SimHash signature table (keyCols..., simhash) both families
-    * share: whitespace tokens hashed to `hashCol` by `tokenHash`; bit i
-    * of the signature is set when `bitSet(i)` holds for more of the
-    * doc's tokens than not — one conditional-sum aggregation per bit,
-    * one shuffle keyed on `keyCols`, the set bits folded by `combine`.
+  /** The SimHash signature table (id, simhash) both families share:
+    * whitespace tokens hashed to `hashCol` by `tokenHash`; bit i of the
+    * signature is set when `bitSet(i)` holds for more of the doc's
+    * tokens than not — one conditional-sum aggregation per bit, one
+    * shuffle keyed on `idCol`, the set bits folded by `combine`.
     */
   private def simHashTable(
-      docs: DataFrame, keyCols: Seq[String], textCol: String,
+      docs: DataFrame, idCol: String, textCol: String,
       hashCol: String, tokenHash: Column, bitSet: Seq[Column],
       combine: (Column, Column) => Column): DataFrame = {
-    val keys = keyCols.map(col)
     val exploded = docs.select(
-      keys :+ explode(split(trim(lower(col(textCol))), " ")).as("__tok"): _*)
+      col(idCol), explode(split(trim(lower(col(textCol))), " ")).as("__tok"))
       .withColumn(hashCol, tokenHash)
     val bitSums = bitSet.zipWithIndex.map { case (set, i) =>
       sum(when(set, 1).otherwise(-1)).as(s"__b$i")
     }
-    val sums = exploded.groupBy(keys: _*).agg(bitSums.head, bitSums.tail: _*)
+    val sums = exploded.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
     val sig = bitSet.indices.map { i =>
       when(col(s"__b$i") > 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(combine)
-    sums.select(keys :+ sig.as("simhash"): _*)
+    sums.select(col(idCol), sig.as("simhash"))
   }
 
-  /** The 60-bit portable SimHash signature table (keyCols..., simhash):
-    * bit i is the sign of Σ_tokens ±1 by bit i of the md5-prefix token
-    * hash. Extra key columns ride the same one-pass aggregate (each
-    * must be functionally dependent on the id — e.g. the shard of
-    * [[portableSimHashNearDuplicatesSharded]]). Specs use it keyed by
-    * the id alone as the brute-force reference for the miners' pairs.
+  /** The 60-bit portable SimHash signature table (id, simhash): bit i
+    * is the sign of Σ_tokens ±1 by bit i of the md5-prefix token hash.
+    * Specs use it as the brute-force reference for the miners' pairs.
     */
-  private[graft] def portableSimHashSignaturesKeyed(
-      docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
-    simHashTable(docs, keyCols, textCol,
+  private[graft] def portableSimHashSignatures(
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    simHashTable(docs, idCol, textCol,
       "__m", graft.functions.HashExprs.md5Prefix60(col("__tok")),
       (0 until 60).map(i =>
         shiftrightunsigned(col("__m"), i).bitwiseAND(lit(1L)) === 1L),
@@ -711,13 +707,13 @@ object Dedup {
     */
   private[graft] val defaultGridThreshold: Int = 8192
 
-  /** The SimHash near-dup miner all three variants share: persist the
-    * signature table `sigs` (id, shardCols..., simhash) and count it —
+  /** The SimHash near-dup miner both variants share: persist the
+    * signature table `sigs` (id, simhash) and count it —
     * the count materializes the cache AND bounds every band cell (a cell
     * can't hold more rows than there are signatures), so corpora under
     * the grid threshold skip the hot-cell gate job entirely. Then band
     * the signature into `nBands` cells of `width` bits (the cell value
-    * named `bandKey`), self-join on (shardCols, band, value) through the
+    * named `bandKey`), self-join on (band, value) through the
     * count-gated salt grid of [[gridSelfJoin]] (identical pair multiset,
     * verify work spread over the grid), and keep the pairs whose
     * `distance` is within `maxDist`.
@@ -729,14 +725,14 @@ object Dedup {
     * stay is every hot band value's m² verifies landing on one reducer.
     */
   private def simHashNearPairs(
-      sigs: DataFrame, idCol: String, shardCols: Seq[String],
+      sigs: DataFrame, idCol: String,
       nBands: Int, width: Int, bandKey: String, maxDist: Int,
       gridThreshold: Int, distance: Column): DataFrame = {
     val cached = sigs.persist()
     val nSigs = cached.count()
-    val banded = explodeBands(cached, (idCol +: shardCols) :+ "simhash",
+    val banded = explodeBands(cached, Seq(idCol, "simhash"),
       simHashBandCells(nBands, width, col("simhash")), "bk", bandKey)
-    val result = gridSelfJoin(banded, shardCols ++ Seq("__band", bandKey),
+    val result = gridSelfJoin(banded, Seq("__band", bandKey),
         Seq(idCol -> "id_a", "simhash" -> "__sig_a"),
         Seq(idCol -> "id_b", "simhash" -> "__sig_b"),
         gridThreshold, maxCellBound = Some(nSigs))
@@ -751,23 +747,12 @@ object Dedup {
   private def sigHamming: Column =
     bit_count(col("__sig_a").bitwiseXOR(col("__sig_b")))
 
-  /** The portable miner within (shardCols...): 6×10-bit bands of the
-    * 60-bit signature, distance ≤ 5. 10-bit bands (1,024 values each)
-    * make hot band cells certain past ~10⁶ docs.
-    */
-  private def portableSimHashPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shardCols: Seq[String], gridThreshold: Int): DataFrame =
-    simHashNearPairs(
-      portableSimHashSignaturesKeyed(docs, idCol +: shardCols, textCol),
-      idCol, shardCols, nBands = 6, width = 10, bandKey = "__bk",
-      maxDist = 5, gridThreshold, sigHamming.cast("long"))
-
   /** Oracle-checkable SimHash: 60-bit signatures from the md5-derived
     * token hash (the 60 bits of [[portableBaseHash]] BEFORE the mod-P
     * reduction), banded 6×10 bits for Hamming distance ≤ 5. Same
     * pigeonhole guarantee as the 64-bit variant; every step computable
-    * bit-identically in DuckDB.
+    * bit-identically in DuckDB. 10-bit bands (1,024 values each) make
+    * hot band cells certain past ~10⁶ docs.
     *
     * EAGER: returns a persisted pair frame the caller owns —
     * `unpersist()` it when done (see [[withCleanup]]).
@@ -775,101 +760,17 @@ object Dedup {
   def portableSimHashNearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       gridThreshold: Int = defaultGridThreshold): DataFrame =
-    portableSimHashPairs(docs, idCol, textCol, Nil, gridThreshold)
-
-  /** The 100-TB shape of the portable SimHash miner: near-dup pairs
-    * WITHIN each shard of a caller-chosen domain column (source, day,
-    * crawl snapshot...) — the posture SCALING.md names for the
-    * intrinsic banded-SimHash quadratic, committed as code.
-    *
-    * Why sharding must be explicit semantics, not a hidden
-    * optimization: 6×10-bit distance-5 banding is the operator's
-    * recall GUARANTEE — 60 bits and maxDist fix the band structure, so
-    * every same-band-value pair must be verified and Σ n_cell² ≈
-    * n²/2¹⁰ is intrinsic. No rearrangement can cut that term while
-    * returning the same corpus-wide pair multiset ([[gridSelfJoin]]
-    * only BALANCES it). What a real deployment actually wants at
-    * corpus scale is near-dups within a locality domain where dups
-    * live (plus a cross-shard pass on the much smaller survivor set):
-    * scoping the key to (shard, band, value) divides every cell
-    * population by the shard count, so the verify mass drops ~S× for
-    * S balanced shards — n²/(S·2¹⁰) — and keeps dropping as the
-    * domain grows with the corpus (shards-per-day × days), which is
-    * exactly the property the unscoped miner cannot have.
-    *
-    * CONTRACT: returns same-shard pairs ONLY — the pair multiset
-    * equals [[portableSimHashNearDuplicates]] filtered to pairs whose
-    * docs share `shardCol` (spec-pinned). For the corpus-wide recipe
-    * — collapse within shards first, then the cross-shard pass on
-    * survivors — use [[nearDupsSharded]], which commits exactly that
-    * composition; [[minHashNearDuplicates]] is the right cross-shard
-    * tool (its band key is a tuple of 60-bit minhash slots, a domain
-    * that grows with content instead of SimHash's fixed 2¹⁰ values
-    * per band); unscoped banded SimHash stays the fixed-recall
-    * small-domain (≲10⁶ docs) instrument. `shardCol` must be
-    * functionally dependent on the id (it rides the signature
-    * aggregate's group key).
-    */
-  def portableSimHashNearDuplicatesSharded(
-      docs: DataFrame, idCol: String, textCol: String, shardCol: String,
-      gridThreshold: Int = defaultGridThreshold): DataFrame =
-    portableSimHashPairs(docs, idCol, textCol, Seq(shardCol), gridThreshold)
-
-  /** The corpus-scale near-dup CASCADE, committed as one function
-    * (VERDICT r17 #2 — previously a scaladoc recipe every deployment
-    * had to re-plumb, with the collapse-before-cross-shard order easy
-    * to get wrong):
-    *
-    *   1. [[portableSimHashNearDuplicatesSharded]] — same-shard pairs
-    *      with (shard, band, value) keys, verify mass n²/(S·2¹⁰);
-    *   2. collapse WITHIN shards ([[collapseNearDuplicates]], min-id
-    *      representative) — the survivor set is the corpus minus its
-    *      within-shard near-dup mass, the only set the cross-shard
-    *      pass may legally see (skipping the collapse re-inflates the
-    *      cross-shard join with documents the within pass already
-    *      condemned);
-    *   3. [[minHashNearDuplicates]] over the survivors — the right
-    *      cross-shard tool: its band key is a tuple of 60-bit minhash
-    *      slots, a domain that grows with content instead of
-    *      SimHash's fixed 2¹⁰ values per band, so the cross-shard
-    *      pass has no intrinsic quadratic;
-    *   4. union of the two pair frames, distinct (id_a, id_b).
-    *
-    * Scale shape: stage 1 is the linear sharded miner; stage 3 runs
-    * on survivors only. The two stages use DIFFERENT similarity
-    * measures (Hamming ≤ 5 on 60-bit SimHash within shards; true
-    * Jaccard ≥ `threshold` across), which is the honest production
-    * posture, not a bit-equal refactor of the unscoped miner — the
-    * spec pins that the FINAL surviving corpus (collapse over the
-    * returned pairs) matches the unscoped pipeline's on the
-    * cross-shard fixture. Ids must cast to long exactly
-    * ([[clusterPairs]]' contract). EAGER persisted result, caller
-    * `unpersist()`s; every intermediate cache is released here.
-    */
-  def nearDupsSharded(
-      docs: DataFrame, idCol: String, textCol: String, shardCol: String,
-      gridThreshold: Int = defaultGridThreshold,
-      shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.7): DataFrame = {
-    val within = portableSimHashNearDuplicatesSharded(
-      docs, idCol, textCol, shardCol, gridThreshold)
-    val survivors = collapseNearDuplicates(
-      docs, idCol, within, "id_a", "id_b")
-    val cross = minHashNearDuplicates(
-      survivors, idCol, textCol, shingleN, numHashes, bands, threshold)
-    withCleanup(
-      within.select(col("id_a"), col("id_b"))
-        .union(cross.select(col("id_a"), col("id_b")))
-        .dropDuplicates("id_a", "id_b"),
-      Seq(within, survivors, cross))
-  }
+    simHashNearPairs(
+      portableSimHashSignatures(docs, idCol, textCol),
+      idCol, nBands = 6, width = 10, bandKey = "__bk",
+      maxDist = 5, gridThreshold, sigHamming.cast("long"))
 
   /** 64-bit SimHash over whitespace tokens: bit i of the signature is
     * the sign of Σ_tokens (±1 by bit i of xxhash64(token)). Built from
     * 64 conditional-sum aggregations — one shuffle keyed on the doc id.
     */
   def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    simHashTable(docs, Seq(idCol), textCol,
+    simHashTable(docs, idCol, textCol,
       "__h", xxhash64(col("__tok")),
       (0 until 64).map(i => col("__h").bitwiseAND(lit(1L << i)) =!= 0),
       _.bitwiseOR(_))
@@ -885,11 +786,11 @@ object Dedup {
     * intrinsic collision term is n²/2¹⁶ instead of n²/2¹⁰ — the
     * quadratic bites at ~8× the corpus size (measured: 4.2× at 30×
     * where the portable miner read 22×) but it bites, because the
-    * band structure is pinned by the distance guarantee exactly as
-    * [[portableSimHashNearDuplicatesSharded]]'s scaladoc explains.
-    * Deployments past that point shard the same way (clone this
-    * miner's banding with `shardCol` in the group/join keys — the
-    * sharded portable miner is the committed template) or run
+    * band structure is pinned by the distance guarantee: signature
+    * width and maxDist fix the bands, every same-band-value pair must
+    * be verified, and [[gridSelfJoin]] only balances that work.
+    * Deployments past that point scope the band key to a locality
+    * domain (source, day) where dups live, or run
     * [[minHashNearDuplicates]] corpus-wide.
     *
     * EAGER: returns a persisted pair frame the caller owns —
@@ -899,7 +800,7 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3,
       gridThreshold: Int = defaultGridThreshold): DataFrame =
-    simHashNearPairs(simHash(docs, idCol, textCol), idCol, Nil,
+    simHashNearPairs(simHash(docs, idCol, textCol), idCol,
       nBands = maxDist + 1, width = 64 / (maxDist + 1), bandKey = "__bits",
       maxDist, gridThreshold, sigHamming)
 

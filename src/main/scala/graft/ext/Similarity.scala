@@ -287,9 +287,9 @@ object Similarity {
     * per-list population — and with it the candidate join — grow
     * linearly with the corpus (pair work ~n²·nprobe/nlist). The
     * default 16 is sized for the test corpus (this method is the
-    * frozen-oracle inventory shape); production callers use
-    * [[ivfTopKSpread]] with [[adaptiveNlist]] — corpus-derived rung,
-    * md5-rank seeding instead of the first-by-id seeds kept here.
+    * frozen-oracle inventory shape, `q_sim_ivf`). First-`nlist`-by-id
+    * seeding is a known recall trap when adjacent ids share a cluster
+    * (`Embeddings.scala` kmeans doc); the frozen oracle keeps it.
     */
   def ivfTopK(
       candidates: DataFrame, queries: DataFrame,
@@ -301,100 +301,26 @@ object Similarity {
       ivfSeedsById(candidates, idCol, vecCol, nlist))
   }
 
-  /** The frozen-oracle seed rule of [[ivfTopK]]: first `nlist` corpus
-    * vectors by id. Package-private so diagnostics measure the exact
-    * seed set the search uses.
+  /** Deterministic centroid table for the IVF coarse quantizer: the
+    * first `nlist` corpus vectors by id (the frozen-oracle seed rule of
+    * [[ivfTopK]]), collected once (`nlist` rows, the ONE bounded driver
+    * collect of this module) and inlined as literals so assignment
+    * stays pure projection; cid = row position in id order. Zero-norm
+    * seeds are dropped AFTER indexing (cids keep their positions, gaps
+    * allowed) — such a centroid would make every row's sim to it NaN
+    * and the struct argmax would always pick it.
     */
-  private[graft] def ivfSeedsById(
+  private def ivfSeedsById(
       candidates: DataFrame, idCol: String, vecCol: String,
-      nlist: Int): Array[(Int, Array[Double])] =
-    seedVectors(candidates.orderBy(col(idCol).asc).limit(nlist)
-      .select(col(vecCol)), "ivfTopK")
-
-  /** List-count ladder for corpus-sized IVF: `nlist` =
-    * min(n, max(16, ⌈n/4096⌉)) pins E[list size] ≈ 4096, so the
-    * candidate equi-join stays ~n·4096·nprobe/nlist ≈ linear however
-    * large the corpus — the [[adaptiveLshBits]] / `Dedup.semDeDupK`
-    * discipline applied to IVF lists (a PINNED nlist makes pair work
-    * n²·nprobe/nlist, quadratic). Pure integer arithmetic so a SQL
-    * oracle derives the identical rung from COUNT(*):
-    * `LEAST(n, GREATEST(16, (n + 4095) // 4096))`. 4096 (not LSH's
-    * 256) because IVF probes `nprobe` lists per query instead of one
-    * bucket, and the per-row assignment cost is nlist dot products —
-    * a larger target population keeps the quantizer pass cheap while
-    * the probed candidate set stays nprobe·4096.
-    */
-  def adaptiveNlist(n: Long): Int = {
-    require(n >= 1, s"adaptiveNlist needs a non-empty corpus, got $n")
-    // Clamped at Int.MaxValue: past n ≈ 8.8e12 the rung itself exceeds
-    // Int (a bare .toInt would wrap NEGATIVE and fail ivfTopKSpread's
-    // require with a misleading message — or worse, truncate to a
-    // small positive rung and silently re-create the quadratic). Ceil
-    // via n/4096 + remainder test, NOT (n + 4095)/4096: the addition
-    // itself overflows near Long.MaxValue and the wrapped NEGATIVE
-    // quotient would fall through max(16,·) to a silent rung of 16.
-    val ceil = n / 4096L + (if (n % 4096L == 0L) 0L else 1L)
-    math.min(math.min(n, math.max(16L, ceil)), Int.MaxValue.toLong).toInt
-  }
-
-  /** [[ivfTopK]] with PRODUCTION seeding: list centroids are the
-    * `nlist` corpus vectors with the smallest portable 60-bit md5
-    * prefix of their id (ties by id), cid = position in that rank
-    * order — the `Embeddings.kmeansSpread` Forgy discipline.
-    * First-`nlist`-by-id (what [[ivfTopK]] keeps for its frozen
-    * oracle) is the documented trap (`Embeddings.scala` kmeans doc):
-    * adjacent ids routinely share a source/shard/cluster, so the
-    * whole quantizer lands inside one blob — every far-from-the-blob
-    * vector piles into that blob's edge lists (hot lists → the
-    * quadratic join this family exists to avoid) and cross-blob
-    * recall collapses. md5-rank is a uniform draw over the corpus, id
-    * order can't bias it, and one TakeOrdered pass finds the seeds —
-    * O(n) at any nlist. Callers size `nlist` with [[adaptiveNlist]]
-    * (corpus count in, rung out); both the rank order and the rung
-    * are SQL-reproducible, so the DuckDB oracle proves this path at
-    * any corpus size (`graft.IvfProbe` is the harness).
-    */
-  def ivfTopKSpread(
-      candidates: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int, nprobe: Int = 4): DataFrame = {
-    require(nlist >= 1 && nprobe >= 1,
-      s"nlist/nprobe must be >= 1: nlist=$nlist nprobe=$nprobe")
-    ivfSearch(candidates, queries, idCol, vecCol, k, nprobe,
-      ivfSeedsSpread(candidates, idCol, vecCol, nlist))
-  }
-
-  /** [[ivfTopKSpread]]'s seed rule: the `nlist` smallest portable md5
-    * ranks (ties by id), cid = rank position. Package-private for the
-    * same diagnostic reason as [[ivfSeedsById]].
-    */
-  private[graft] def ivfSeedsSpread(
-      candidates: DataFrame, idCol: String, vecCol: String,
-      nlist: Int): Array[(Int, Array[Double])] =
-    seedVectors(candidates.orderBy(
-        graft.functions.HashExprs
-          .md5Prefix60(col(idCol).cast("string")).asc,
-        col(idCol).asc)
-      .limit(nlist).select(col(vecCol)), "ivfTopKSpread")
-
-  /** Deterministic centroid table for the IVF coarse quantizer,
-    * collected once (`nlist` rows, the ONE bounded driver collect of
-    * this module) and inlined as literals so assignment stays pure
-    * projection. `ordered` must already be ordered and limited; cid =
-    * row position in that order. Zero-norm seeds are dropped AFTER
-    * indexing (cids keep their positions, gaps allowed) — such a
-    * centroid would make every row's sim to it NaN and the struct
-    * argmax would always pick it.
-    */
-  private def seedVectors(
-      ordered: DataFrame, what: String): Array[(Int, Array[Double])] = {
-    val centroids = ordered.collect()
+      nlist: Int): Array[(Int, Array[Double])] = {
+    val centroids = candidates.orderBy(col(idCol).asc).limit(nlist)
+      .select(col(vecCol)).collect()
       .zipWithIndex.map { case (r, i) =>
         i -> r.getSeq[Float](0).map(_.toDouble).toArray
       }
       .filter { case (_, c) => c.exists(_ != 0.0) }
     require(centroids.nonEmpty,
-      s"$what: no nonzero centroid seeds in the candidate set")
+      "ivfTopK: no nonzero centroid seeds in the candidate set")
     centroids
   }
 
@@ -415,51 +341,33 @@ object Similarity {
         lit(cid).as("cid"))
     }: _*)
 
-  /** Past this centroid count the quantizer switches from the
-    * composable struct-sort tree (which grows ~10 expression nodes
-    * per centroid and falls out of whole-stage codegen past a few
-    * dozen — the [[graft.functions.NearestCentroidQ]] lesson) to the
-    * codegen'd [[graft.functions.TopCentroidsBySim]] kernel. Both
-    * produce bit-identical list ids (spec-pinned per row; the kernel
-    * rung oracle-proven by `graft.IvfProbe` at nlist=147). 64 keeps
-    * every frozen-inventory plan (nlist=16) and the proven 49-rung
-    * plan byte-for-byte on the tree path.
+  /** Nearest-list id for one vector: the argmax of the struct-sort
+    * tree. The tree grows ~10 expression nodes per centroid, which is
+    * fine at the frozen inventory's nlist = 16; a corpus-sized nlist
+    * would need a codegen'd kernel (the [[graft.functions.NearestCentroidQ]]
+    * lesson).
     */
-  private[graft] val quantizerKernelThreshold = 64
-
-  /** Nearest-list id for one vector — tree or kernel by `useKernel`
-    * (exposed so the parity spec can force both paths on one corpus).
-    */
-  private[graft] def nearestListCol(
+  private def nearestListCol(
       centroids: Array[(Int, Array[Double])],
-      vec: Column, vecNorm: Column, useKernel: Boolean): Column =
-    if (useKernel)
-      VectorExprs.topCentroidsBySim(vec, centroids, 1).getItem(0)
-    else
-      element_at(array_sort(simsTo(centroids, vec, vecNorm)), -1)
-        .getField("cid")
+      vec: Column, vecNorm: Column): Column =
+    element_at(array_sort(simsTo(centroids, vec, vecNorm)), -1)
+      .getField("cid")
 
   /** The `n` probe-list ids for one query vector, (sim DESC, cid
-    * DESC) — tree or kernel by `useKernel`.
+    * DESC).
     */
-  private[graft] def probeListsCol(
+  private def probeListsCol(
       centroids: Array[(Int, Array[Double])],
-      vec: Column, vecNorm: Column, n: Int, useKernel: Boolean): Column =
-    if (useKernel)
-      VectorExprs.topCentroidsBySim(vec, centroids, n)
-    else {
-      val ranked = reverse(array_sort(simsTo(centroids, vec, vecNorm)))
-      array((1 to n).map(i => element_at(ranked, i).getField("cid")): _*)
-    }
+      vec: Column, vecNorm: Column, n: Int): Column = {
+    val ranked = reverse(array_sort(simsTo(centroids, vec, vecNorm)))
+    array((1 to n).map(i => element_at(ranked, i).getField("cid")): _*)
+  }
 
   /** The coarse-quantizer assignment frame: every nonzero-norm
     * candidate with its vector, norm, and nearest-centroid list id —
-    * the first half of [[ivfTopK]]/[[ivfTopKSpread]], exposed
-    * package-private so diagnostics (`graft.IvfProbe`'s list-balance
-    * report) measure the EXACT assignment the search joins on rather
-    * than re-deriving it.
+    * the first half of [[ivfTopK]].
     */
-  private[graft] def ivfAssign(
+  private def ivfAssign(
       candidates: DataFrame, idCol: String, vecCol: String,
       centroids: Array[(Int, Array[Double])]): DataFrame =
     candidateSide(candidates,
@@ -469,26 +377,19 @@ object Similarity {
       // which the optimizer pushes into the Filter BELOW the Project,
       // so the whole quantizer expression (nlist dot products!) ran
       // TWICE per candidate row (measured r18: the Filter+Project pair
-      // both carried the kernel at every rung, ~2× the assignment
-      // cost). The sentinel makes the column non-nullable, the
-      // inferred isnotnull folds to true, and the kernel evaluates
-      // once; -1 is no centroid id, so a (theoretical) null
-      // assignment still matches no probe list — row semantics are
-      // bit-identical (oracle re-proven).
+      // both carried it, ~2× the assignment cost). The sentinel makes
+      // the column non-nullable, the inferred isnotnull folds to true,
+      // and the quantizer evaluates once; -1 is no centroid id, so a
+      // (theoretical) null assignment still matches no probe list —
+      // row semantics are bit-identical (oracle re-proven).
       .withColumn("__list",
-        coalesce(
-          nearestListCol(centroids, col("__cv"), col("__cn"),
-            centroids.length > quantizerKernelThreshold),
+        coalesce(nearestListCol(centroids, col("__cv"), col("__cn")),
           lit(-1)))
 
   private def ivfSearch(
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       centroids: Array[(Int, Array[Double])]): DataFrame = {
-    val useKernel = centroids.length > quantizerKernelThreshold
-    def probeLists(vec: Column, vecNorm: Column, n: Int): Column =
-      probeListsCol(centroids, vec, vecNorm, n, useKernel)
-
     val c = ivfAssign(candidates, idCol, vecCol, centroids)
     val q = querySide(queries,
       col(idCol).as("query_id"), col(vecCol).as("__qv"))
@@ -497,88 +398,10 @@ object Similarity {
         // ranked array's end is null (non-ANSI) — null probe lists
         // would silently vanish in the join (lost recall, no warning)
         // — or an INVALID_ARRAY_INDEX error under ANSI.
-        explode(probeLists(col("__qv"), col("__qn"),
+        explode(probeListsCol(centroids, col("__qv"), col("__qn"),
           math.min(nprobe, centroids.length))))
     rankTopK(c.join(q, Seq("__list")).filter(notSelf), k)
   }
-
-  /** Super-centroid count of the two-level quantizer: the smallest
-    * integer g with g² ≥ nlist (⌈√nlist⌉). IEEE sqrt is exact on
-    * perfect squares and the gap to the next integer (2g−1) is far
-    * above sqrt's half-ulp for any Int, so `CEIL(SQRT(nlist))` in SQL
-    * derives the identical bound — the rung stays cross-engine.
-    */
-  def superBound(nlist: Int): Int = {
-    require(nlist >= 1, s"nlist must be >= 1: $nlist")
-    math.ceil(math.sqrt(nlist.toDouble)).toInt
-  }
-
-  /** [[ivfTopKSpread]] with the TWO-LEVEL (hierarchical) coarse
-    * quantizer — the corpus-sized shape. Same md5-rank seeds and the
-    * same candidate join/re-rank; only HOW each vector finds its
-    * list(s) changes:
-    *
-    * Under [[adaptiveNlist]] (nlist = ⌈n/4096⌉) the FLAT quantizer
-    * computes nlist dot products per row — Θ(n²/4096) total, the one
-    * quadratic left in this family (traced at rung 147: 600k×147 =
-    * 88M dots; 10× the corpus is 100× the work). Here the ⌈√nlist⌉
-    * seeds with the smallest md5 ranks (cid < [[superBound]]) act as
-    * super-centroids; every centroid belongs to its nearest super
-    * ([[graft.functions.TwoLevelIndex.build]], driver-side, same
-    * 6-dp/tie arithmetic); a row ranks the supers first, then scans
-    * only the `superProbe` nearest supers' member groups — expected
-    * (superProbe+1)·√nlist dots per row, Θ(n·√n) total: the curve
-    * stays sub-quadratic at any corpus.
-    *
-    * NOT bit-identical to the flat argmax (a row whose true nearest
-    * centroid lives in an unprobed super group lands elsewhere), so
-    * this is a SEPARATE operator with its own DuckDB oracle
-    * (`graft.IvfProbe` derives the same two-level assignment in SQL)
-    * and a measured recall A/B vs the flat path — the frozen
-    * `q_sim_ivf` and [[ivfTopKSpread]] are untouched.
-    *
-    * `superProbe` (queries only; candidate ASSIGNMENT always probes 1
-    * super, the standard IVF two-level shape) widens the phase-1 beam:
-    * 2 recovers most boundary-of-group recall loss for ~√nlist extra
-    * dots per query row. The centroid matrix ships as a real
-    * `Broadcast` (once per executor) instead of expression literals —
-    * the plan-state residual VERDICT r17 #1(a) named.
-    */
-  def ivfTopKSpread2(
-      candidates: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int, nprobe: Int = 4, superProbe: Int = 2): DataFrame = {
-    require(nlist >= 1 && nprobe >= 1 && superProbe >= 1,
-      s"nlist/nprobe/superProbe must be >= 1: $nlist/$nprobe/$superProbe")
-    val seeds = ivfSeedsSpread(candidates, idCol, vecCol, nlist)
-    val index = candidates.sparkSession.sparkContext.broadcast(
-      graft.functions.TwoLevelIndex.build(seeds, superBound(nlist)))
-    val c = ivfAssign2(candidates, idCol, vecCol, index)
-    val q = querySide(queries,
-      col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__list",
-        explode(VectorExprs.topCentroidsTwoLevel(
-          col("__qv"), index, math.min(nprobe, seeds.length), superProbe)))
-    rankTopK(c.join(q, Seq("__list")).filter(notSelf), k)
-  }
-
-  /** Two-level assignment frame ([[ivfAssign]]'s shape for the
-    * hierarchical quantizer): nearest list id via 1-super probe.
-    * Package-private so `graft.IvfProbe` measures list balance on the
-    * EXACT assignment the search joins on.
-    */
-  private[graft] def ivfAssign2(
-      candidates: DataFrame, idCol: String, vecCol: String,
-      index: org.apache.spark.broadcast.Broadcast[
-        graft.functions.TwoLevelIndex]): DataFrame =
-    candidateSide(candidates,
-      col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      // same coalesce(…, -1) single-eval discipline as [[ivfAssign]]
-      .withColumn("__list",
-        coalesce(
-          VectorExprs.topCentroidsTwoLevel(col("__cv"), index, 1, 1)
-            .getItem(0),
-          lit(-1)))
 
   /** Reciprocal-rank fusion of two retrievers' ranked lists — the
     * standard score-free way to combine heterogeneous retrieval

@@ -238,421 +238,6 @@ case class NearestCentroidQ(
       newChild: Expression): NearestCentroidQ = copy(child = newChild)
 }
 
-/** Top-`n` centroid ids by cosine similarity against a FIXED
-  * (cid, vector) table — the corpus-sized-`nlist` kernel of the IVF
-  * coarse quantizer ([[graft.ext.Similarity]]).
-  *
-  * Why an expression: the composable formulation —
-  * `element_at(array_sort(array(struct(round(sim,6), cid) × nlist)), …)`
-  * — builds an expression tree that grows ~10 nodes per centroid and
-  * falls out of whole-stage codegen past a few dozen (the same
-  * pathology [[NearestCentroidQ]] closed for k-means; measured ~20 s
-  * for a 600k×147 assignment where this kernel is sub-second work).
-  * One expression holds the centroid matrix flat and runs two tight
-  * primitive loops per row.
-  *
-  * BIT-PARITY CONTRACT with the tree formulation (and with the DuckDB
-  * oracle both are proven against): per centroid,
-  * sim = round(dot(vec, c) / (normC · sqrt(dot(vec, vec))), 6), where
-  * every dot is the left-to-right double accumulation of
-  * [[DotProduct]] over the common prefix (null elements = 0), normC
-  * is the driver-side sqrt of the left-to-right self-dot, and round
-  * is EXACTLY Spark's codegen'd double rounding —
-  * `java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP)` — then the
-  * top `n` by (sim DESC, cid DESC), the `reverse(array_sort(...))`
-  * struct order. Spec-pinned equal to the tree per row
-  * ([[graft.ext.SimilaritySpec]]); oracle-proven at rung 147 by
-  * `graft.IvfProbe`.
-  *
-  * Zero-norm input vectors yield an EMPTY array (cosine undefined —
-  * callers filter them before the quantizer; empty keeps the kernel
-  * total rather than NaN-poisoned).
-  */
-case class TopCentroidsBySim(
-    child: Expression, cids: IndexedSeq[Int],
-    centroids: IndexedSeq[IndexedSeq[Double]], n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  require(centroids.nonEmpty, "need at least one centroid")
-  require(cids.length == centroids.length, "cids/centroids length mismatch")
-  require(centroids.forall(_.length == centroids.head.length),
-    "ragged centroid matrix")
-  require(n >= 1 && n <= centroids.length,
-    s"n must be in [1, ${centroids.length}]: $n")
-
-  private def dim: Int = centroids.head.length
-  private def k: Int = centroids.length
-
-  @transient private lazy val flat: Array[Double] = {
-    val a = new Array[Double](k * dim)
-    var j = 0
-    while (j < k) {
-      var i = 0
-      while (i < dim) { a(j * dim + i) = centroids(j)(i); i += 1 }
-      j += 1
-    }
-    a
-  }
-  // driver-side centroid norms, computed EXACTLY like the tree's
-  // literal: sqrt of the left-to-right self-dot
-  @transient private lazy val norms: Array[Double] =
-    Array.tabulate(k) { j =>
-      var s = 0.0
-      var i = 0
-      while (i < dim) { val x = centroids(j)(i); s += x * x; i += 1 }
-      math.sqrt(s)
-    }
-  @transient private lazy val cidArr: Array[Int] = cids.toArray
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_centroids_by_sim needs array<float|double>, got ${t.simpleString}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  /** The whole per-row kernel, shared verbatim by eval and codegen
-    * (codegen calls it through a reference object — one virtual call
-    * per row keeps the stage inside whole-stage codegen without
-    * inlining two loops of generated source per centroid).
-    */
-  def compute(arr: ArrayData): ArrayData = {
-    val nElems = arr.numElements()
-    val lf = isFloat
-    val buf = new Array[Double](nElems)
-    var xx = 0.0
-    var i = 0
-    while (i < nElems) {
-      val x =
-        if (arr.isNullAt(i)) 0.0
-        else if (lf) arr.getFloat(i).toDouble else arr.getDouble(i)
-      buf(i) = x
-      xx += x * x
-      i += 1
-    }
-    val vecNorm = math.sqrt(xx)
-    if (vecNorm == 0.0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Int])
-    val m = math.min(nElems, dim)
-    // top-n by (sim desc, cid desc): insertion into parallel arrays —
-    // n is small (assignment 1, probes ~4), so O(k·n) beats any heap.
-    val topSim = Array.fill(n)(Double.NegativeInfinity)
-    val topCid = Array.fill(n)(Int.MinValue)
-    var j = 0
-    while (j < k) {
-      var xc = 0.0
-      i = 0
-      while (i < m) { xc += buf(i) * flat(j * dim + i); i += 1 }
-      val sim = java.math.BigDecimal
-        .valueOf(xc / (norms(j) * vecNorm))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      val cid = cidArr(j)
-      var p = 0
-      while (p < n &&
-          (topSim(p) > sim || (topSim(p) == sim && topCid(p) > cid))) p += 1
-      if (p < n) {
-        var q = n - 1
-        while (q > p) {
-          topSim(q) = topSim(q - 1); topCid(q) = topCid(q - 1); q -= 1
-        }
-        topSim(p) = sim
-        topCid(p) = cid
-      }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(topCid)
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val kernel = ctx.addReferenceObj("topCentroidsKernel", this,
-        classOf[TopCentroidsBySim].getName)
-      s"${ev.value} = $kernel.compute($v);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TopCentroidsBySim = copy(child = newChild)
-}
-
-/** The driver-built index of the TWO-LEVEL coarse quantizer
-  * ([[TopCentroidsTwoLevel]]): ⌈√nlist⌉ super-centroids plus the full
-  * centroid set grouped by nearest super. Built once by
-  * [[TwoLevelIndex.build]] with arithmetic bit-identical to the row
-  * kernel (left-to-right double dots, HALF_UP 6-dp rounding, ties by
-  * cid DESC) so a SQL oracle derives the SAME grouping; shipped to
-  * executors as a real `Broadcast` (once per executor) instead of
-  * riding flat inside the expression/task binary — at corpus-sized
-  * nlist (10⁵+) the matrix is MBs–GBs and per-task-binary shipping is
-  * the scale residual VERDICT r17 named.
-  *
-  * Flat layout: `superVecs` is superCount×dim row-major;
-  * `centroidVecs` is nlist×dim row-major ordered so each super's
-  * group is CONTIGUOUS — `groupStart(g) until groupStart(g+1)` are
-  * the members of super g, `centroidCids` their cids in that order
-  * (ascending within a group, making per-group scan order
-  * deterministic; the top-n insertion ranks on (sim, cid) so scan
-  * order never changes results).
-  */
-class TwoLevelIndex(
-    val dim: Int,
-    val superCids: Array[Int], val superVecs: Array[Double],
-    val groupStart: Array[Int],
-    val centroidCids: Array[Int], val centroidVecs: Array[Double])
-    extends Serializable {
-  def superCount: Int = superCids.length
-  def centroidCount: Int = centroidCids.length
-  @transient lazy val superNorms: Array[Double] =
-    Array.tabulate(superCount) { g =>
-      var s = 0.0; var i = 0
-      while (i < dim) { val x = superVecs(g * dim + i); s += x * x; i += 1 }
-      math.sqrt(s)
-    }
-  @transient lazy val centroidNorms: Array[Double] =
-    Array.tabulate(centroidCount) { j =>
-      var s = 0.0; var i = 0
-      while (i < dim) { val x = centroidVecs(j * dim + i); s += x * x; i += 1 }
-      math.sqrt(s)
-    }
-}
-
-object TwoLevelIndex {
-  private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Group `centroids` (cid → vector, zero-norm already dropped) under
-    * the supers = the centroids whose cid < `superBound` (the first
-    * ⌈√nlist⌉ seed ranks — same md5-rank seeding, so one SQL predicate
-    * `cid < superBound` reproduces the super set). Each centroid joins
-    * the super with the highest round6(cosine), ties by super cid
-    * DESC — the [[TopCentroidsBySim]] tie order, bit-reproducible as
-    * `ROW_NUMBER() OVER (PARTITION BY cid ORDER BY sim DESC, scid
-    * DESC)` in the oracle. O(nlist·√nlist) driver work — ~3·10⁹ mults
-    * at nlist=2·10⁶, a one-off index build, vs the Θ(n·nlist)
-    * PER-ROW cluster work this index removes.
-    */
-  def build(
-      centroids: Array[(Int, Array[Double])], superBound: Int): TwoLevelIndex = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val dim = centroids.head._2.length
-    require(centroids.forall(_._2.length == dim), "ragged centroid matrix")
-    val supers = centroids.filter(_._1 < superBound)
-    require(supers.nonEmpty,
-      s"no super-centroids under cid bound $superBound")
-    val sNorm = supers.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < dim) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    // nearest super per centroid: left-to-right dots, round6, tie by
-    // super cid DESC — exactly the row kernel's phase-1 rule.
-    val groupOf = centroids.map { case (_, v) =>
-      var cc = 0.0
-      var i = 0
-      while (i < dim) { cc += v(i) * v(i); i += 1 }
-      val cNorm = math.sqrt(cc)
-      var bestSim = Double.NegativeInfinity
-      var bestG = -1
-      var g = 0
-      while (g < supers.length) {
-        var xc = 0.0
-        i = 0
-        while (i < dim) { xc += v(i) * supers(g)._2(i); i += 1 }
-        val sim = round6(xc / (sNorm(g) * cNorm))
-        if (sim > bestSim ||
-            (sim == bestSim && bestG >= 0 &&
-              supers(g)._1 > supers(bestG)._1)) {
-          bestSim = sim; bestG = g
-        }
-        g += 1
-      }
-      bestG
-    }
-    val order = centroids.indices.sortBy(idx => (groupOf(idx), centroids(idx)._1))
-    val groupStart = new Array[Int](supers.length + 1)
-    order.foreach(idx => groupStart(groupOf(idx) + 1) += 1)
-    var g = 0
-    while (g < supers.length) { groupStart(g + 1) += groupStart(g); g += 1 }
-    val cids = order.map(idx => centroids(idx)._1).toArray
-    val flat = new Array[Double](centroids.length * dim)
-    order.zipWithIndex.foreach { case (idx, pos) =>
-      System.arraycopy(centroids(idx)._2, 0, flat, pos * dim, dim)
-    }
-    val sFlat = new Array[Double](supers.length * dim)
-    supers.zipWithIndex.foreach { case ((_, v), pos) =>
-      System.arraycopy(v, 0, sFlat, pos * dim, dim)
-    }
-    new TwoLevelIndex(dim, supers.map(_._1), sFlat, groupStart, cids, flat)
-  }
-}
-
-/** Two-level (hierarchical) top-`n` centroid probe — the
-  * O(√nlist)-per-row coarse quantizer for corpus-sized IVF
-  * ([[graft.ext.Similarity.ivfTopKSpread2]]).
-  *
-  * Why: [[TopCentroidsBySim]] scans all `nlist` centroids per row;
-  * under the `adaptiveNlist` ladder (nlist = ⌈n/4096⌉) that makes the
-  * ASSIGNMENT pass Θ(n²/4096) total dot products — the one quadratic
-  * left in the IVF family (VERDICT r17 #1). This kernel first ranks
-  * the ⌈√nlist⌉ super-centroids (phase 1), then scans only the
-  * `superProbe` nearest supers' member groups (phase 2): expected
-  * per-row work superProbe·√nlist + √nlist dots instead of nlist.
-  *
-  * SAME per-sim arithmetic as [[TopCentroidsBySim]] (left-to-right
-  * double dots over the common prefix, null elements 0, HALF_UP 6-dp
-  * round, top-n by (sim DESC, cid DESC)) so the SQL oracle proves the
-  * whole path; the SELECTION is two-level and therefore NOT
-  * bit-identical to the flat argmax — it is a new operator with its
-  * own oracle (`graft.IvfProbe` derives the identical two-level
-  * assignment in SQL), never a swap-in under a frozen query.
-  *
-  * Returns up to `n` cids; FEWER when the probed groups hold fewer
-  * members. Zero-norm inputs yield an empty array (callers filter).
-  * The index rides in a `Broadcast`, so plan/task state is a handle.
-  */
-case class TopCentroidsTwoLevel(
-    child: Expression,
-    index: org.apache.spark.broadcast.Broadcast[TwoLevelIndex],
-    n: Int, superProbe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  require(n >= 1, s"n must be >= 1: $n")
-  require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_centroids_two_level needs array<float|double>, got ${t.simpleString}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Shared eval/codegen kernel (reference-object call — the
-    * [[TopCentroidsBySim]] discipline keeps the stage inside
-    * whole-stage codegen with one virtual call per row).
-    */
-  def compute(arr: ArrayData): ArrayData = {
-    val ix = index.value
-    val dim = ix.dim
-    val nElems = arr.numElements()
-    val lf = isFloat
-    val buf = new Array[Double](nElems)
-    var xx = 0.0
-    var i = 0
-    while (i < nElems) {
-      val x =
-        if (arr.isNullAt(i)) 0.0
-        else if (lf) arr.getFloat(i).toDouble else arr.getDouble(i)
-      buf(i) = x
-      xx += x * x
-      i += 1
-    }
-    val vecNorm = math.sqrt(xx)
-    if (vecNorm == 0.0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Int])
-    val m = math.min(nElems, dim)
-    // phase 1: top-superProbe supers by (sim DESC, super-cid DESC) —
-    // the TopCentroidsBySim insertion over the super table.
-    val sp = math.min(superProbe, ix.superCount)
-    val topSSim = Array.fill(sp)(Double.NegativeInfinity)
-    val topSIdx = Array.fill(sp)(-1)
-    var g = 0
-    while (g < ix.superCount) {
-      var xc = 0.0
-      i = 0
-      while (i < m) { xc += buf(i) * ix.superVecs(g * dim + i); i += 1 }
-      val sim = round6(xc / (ix.superNorms(g) * vecNorm))
-      val cid = ix.superCids(g)
-      var p = 0
-      while (p < sp && (topSSim(p) > sim ||
-          (topSSim(p) == sim && topSIdx(p) >= 0 &&
-            ix.superCids(topSIdx(p)) > cid))) p += 1
-      if (p < sp) {
-        var q = sp - 1
-        while (q > p) {
-          topSSim(q) = topSSim(q - 1); topSIdx(q) = topSIdx(q - 1); q -= 1
-        }
-        topSSim(p) = sim
-        topSIdx(p) = g
-      }
-      g += 1
-    }
-    // phase 2: top-n centroids by (sim DESC, cid DESC) over the probed
-    // groups' members only.
-    val topSim = Array.fill(n)(Double.NegativeInfinity)
-    val topCid = Array.fill(n)(Int.MinValue)
-    var filled = 0
-    var s = 0
-    while (s < sp) {
-      val gi = topSIdx(s)
-      if (gi >= 0) {
-        var j = ix.groupStart(gi)
-        val end = ix.groupStart(gi + 1)
-        while (j < end) {
-          var xc = 0.0
-          i = 0
-          while (i < m) { xc += buf(i) * ix.centroidVecs(j * dim + i); i += 1 }
-          val sim = round6(xc / (ix.centroidNorms(j) * vecNorm))
-          val cid = ix.centroidCids(j)
-          var p = 0
-          while (p < n && (topSim(p) > sim ||
-              (topSim(p) == sim && topCid(p) > cid))) p += 1
-          if (p < n) {
-            var q = n - 1
-            while (q > p) {
-              topSim(q) = topSim(q - 1); topCid(q) = topCid(q - 1); q -= 1
-            }
-            topSim(p) = sim
-            topCid(p) = cid
-            if (filled < n) filled += 1
-          }
-          j += 1
-        }
-      }
-      s += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(topCid, filled))
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val kernel = ctx.addReferenceObj("twoLevelKernel", this,
-        classOf[TopCentroidsTwoLevel].getName)
-      s"${ev.value} = $kernel.compute($v);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TopCentroidsTwoLevel = copy(child = newChild)
-}
-
 object VectorExprs {
   import org.apache.spark.sql.GraftExpressionBridge._
 
@@ -668,23 +253,4 @@ object VectorExprs {
   def nearestCentroidQ(vec: Column, centroids: Array[Array[Double]]): Column =
     column(NearestCentroidQ(
       expression(vec), centroids.map(_.toIndexedSeq).toIndexedSeq))
-
-  /** Top-`n` centroid ids by rounded cosine (sim DESC, cid DESC) as an
-    * `array<int>` Column — see [[TopCentroidsBySim]].
-    */
-  def topCentroidsBySim(
-      vec: Column, centroids: Array[(Int, Array[Double])], n: Int): Column =
-    column(TopCentroidsBySim(
-      expression(vec),
-      centroids.map(_._1).toIndexedSeq,
-      centroids.map(_._2.toIndexedSeq).toIndexedSeq, n))
-
-  /** Two-level top-`n` centroid ids against a broadcast
-    * [[TwoLevelIndex]] — see [[TopCentroidsTwoLevel]].
-    */
-  def topCentroidsTwoLevel(
-      vec: Column,
-      index: org.apache.spark.broadcast.Broadcast[TwoLevelIndex],
-      n: Int, superProbe: Int): Column =
-    column(TopCentroidsTwoLevel(expression(vec), index, n, superProbe))
 }

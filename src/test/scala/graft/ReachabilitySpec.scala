@@ -56,8 +56,7 @@ class ReachabilitySpec extends AnyFunSuite {
     */
   private val mains: Set[String] = Set(
     "graft.PipelineMain", "graft.Bench", "graft.Verify", "graft.PlanAudit",
-    "graft.IngestBench", "graft.Scaling", "graft.IvfProbe",
-    "graft.SimHashShardProbe")
+    "graft.IngestBench", "graft.Scaling")
   private val libraryRoots: Set[String] =
     Set("graft.SparkEntry", "graft.plans.GraftExtensions")
 

@@ -186,52 +186,16 @@ class DedupSpec extends SparkSpec {
     assert(out.forall(_._3 <= 5))
   }
 
-  test("sharded portable simhash == unsharded pairs restricted to same-shard") {
-    // A corpus with near-dups BOTH within and across shards: the
-    // sharded miner must return exactly the unsharded pair multiset
-    // filtered to same-shard pairs — cross-shard pairs are out of
-    // scope BY CONTRACT, not lost by accident.
-    val sharded = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog near the old river bank", "s0"),
-      (1L, "the quick brown fox leaps over the lazy dog near the old river bank", "s0"),
-      (2L, "the quick brown fox jumps over the lazy dog near the old river bank", "s1"), // cross-shard dup of 0
-      (3L, "the quick brown fox jumps over the lazy dog near the old river bank", "s1"), // same-shard dup of 2
-      (4L, "completely different content about spark query engines and data", "s0"),
-      (5L, "another unrelated document mentioning aggregation shuffles and joins", "s1"))
-      .toDF("doc_id", "text", "shard")
-    val unsharded = Dedup.portableSimHashNearDuplicates(
-      sharded, "doc_id", "text")
-      .select("id_a", "id_b", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
-    val shardOf = sharded.select("doc_id", "shard")
-      .as[(Long, String)].collect().toMap
-    val expected = unsharded.filter(p => shardOf(p._1) == shardOf(p._2))
-    val got = Dedup.portableSimHashNearDuplicatesSharded(
-      sharded, "doc_id", "text", "shard")
-      .select("id_a", "id_b", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === expected)
-    // the fixture genuinely exercises both directions of the contract:
-    // a cross-shard dup was present and excluded, a same-shard one kept
-    assert(unsharded.exists(p => shardOf(p._1) != shardOf(p._2)))
-    assert(got.contains((2L, 3L, 0L)))
-    assert(!got.exists(p => (p._1, p._2) == (0L, 2L)))
-  }
-
   test("simhash miners return EVERY pair a brute-force scan finds within the bound") {
     // Recall, not only soundness: banding into maxDist+1 cells must find
     // every pair within maxDist (pigeonhole), so each miner's output must
     // equal an all-pairs bit_count(xor) <= maxDist scan over the miner's
-    // own signature table. Real documents plus planted one-word edits;
-    // odd planted docs move to a shard of their own, so the sharded
-    // miner has cross-shard pairs to leave out.
+    // own signature table. Real documents plus planted one-word edits.
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"), col("source"))
+      .select(col("doc_id"), col("text"))
     val planted = real.filter(col("doc_id") < 40).select(
       (col("doc_id") + 1000).as("doc_id"),
-      concat(col("text"), lit(" planted")).as("text"),
-      when(col("doc_id") % 2 === 0, col("source"))
-        .otherwise(lit("planted")).as("source"))
+      concat(col("text"), lit(" planted")).as("text"))
     val corpus = real.unionByName(planted)
     def allPairsWithin(sigs: org.apache.spark.sql.DataFrame, maxDist: Int) =
       sigs.select(col("doc_id").as("id_a"), col("simhash").as("__sa"))
@@ -252,50 +216,10 @@ class DedupSpec extends SparkSpec {
       corpus, "doc_id", "text", maxDist = 3)) === within3)
 
     val within5 = allPairsWithin(
-      Dedup.portableSimHashSignaturesKeyed(corpus, Seq("doc_id"), "text"), 5)
+      Dedup.portableSimHashSignatures(corpus, "doc_id", "text"), 5)
     assert(within5.exists(_._3 > 0))
     assert(mined(Dedup.portableSimHashNearDuplicates(
       corpus, "doc_id", "text")) === within5)
-
-    val shardOf = corpus.select("doc_id", "source")
-      .as[(Long, String)].collect().toMap
-    val sameShard = within5.filter(p => shardOf(p._1) == shardOf(p._2))
-    assert(sameShard.nonEmpty && sameShard.size < within5.size)
-    assert(mined(Dedup.portableSimHashNearDuplicatesSharded(
-      corpus, "doc_id", "text", "source")) === sameShard)
-  }
-
-  test("nearDupsSharded cascade: surviving corpus equals the unscoped pipeline's") {
-    // Same fixture as the sharded-contract test: near-dups within AND
-    // across shards. The committed cascade (sharded SimHash →
-    // within-shard collapse → MinHash over survivors → pair union)
-    // must converge to the SAME surviving corpus as the unscoped
-    // miner + collapse — the cross-shard dup is recovered by the
-    // MinHash stage, not lost to the shard scoping.
-    val docs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog near the old river bank", "s0"),
-      (1L, "the quick brown fox leaps over the lazy dog near the old river bank", "s0"),
-      (2L, "the quick brown fox jumps over the lazy dog near the old river bank", "s1"), // cross-shard dup of 0
-      (3L, "the quick brown fox jumps over the lazy dog near the old river bank", "s1"), // same-shard dup of 2
-      (4L, "completely different content about spark query engines and data", "s0"),
-      (5L, "another unrelated document mentioning aggregation shuffles and joins", "s1"))
-      .toDF("doc_id", "text", "shard")
-    val cascade = Dedup.nearDupsSharded(docs, "doc_id", "text", "shard")
-    val cascadePairs = cascade.as[(Long, Long)].collect().toSet
-    // stage 1 found the same-shard pairs, stage 3 the cross-shard dup
-    assert(cascadePairs.contains((2L, 3L)))
-    assert(cascadePairs.contains((0L, 1L)))
-    assert(cascadePairs.exists { case (a, b) => (a, b) == (0L, 2L) })
-    val collA = Dedup.collapseNearDuplicates(
-      docs, "doc_id", cascade, "id_a", "id_b")
-    val survCascade = collA.select("doc_id").as[Long].collect().toSet
-    val unscoped = Dedup.portableSimHashNearDuplicates(docs, "doc_id", "text")
-    val collB = Dedup.collapseNearDuplicates(
-      docs, "doc_id", unscoped, "id_a", "id_b")
-    val survUnscoped = collB.select("doc_id").as[Long].collect().toSet
-    assert(survCascade === survUnscoped)
-    assert(survCascade === Set(0L, 4L, 5L))
-    Seq(cascade, collA, unscoped, collB).foreach(_.unpersist())
   }
 
   test("jaccardPairs computes token-set jaccard with threshold") {

@@ -71,220 +71,6 @@ class SimilaritySpec extends SparkSpec {
     assert(ivf.map(_._1).distinct.length === 10)
   }
 
-  test("adaptiveNlist ladder: E[list]≈4096 with floor 16 and cap n, " +
-      "pure integer rungs") {
-    assert(Similarity.adaptiveNlist(1) === 1)        // capped at n
-    assert(Similarity.adaptiveNlist(15) === 15)      // capped at n
-    assert(Similarity.adaptiveNlist(16) === 16)
-    assert(Similarity.adaptiveNlist(2000) === 16)    // sf0.1 corpus
-    assert(Similarity.adaptiveNlist(60000) === 16)   // 30x: ceil=15, floor 16
-    assert(Similarity.adaptiveNlist(65536) === 16)
-    assert(Similarity.adaptiveNlist(65537) === 17)   // first rung past floor
-    assert(Similarity.adaptiveNlist(200000) === 49)  // 100x sf0.1
-    assert(Similarity.adaptiveNlist(4096L * 4096L) === 4096)
-    // past ~8.8e12 the rung exceeds Int — clamped, never wrapped
-    assert(Similarity.adaptiveNlist(10000000000000L) === Int.MaxValue)
-    assert(Similarity.adaptiveNlist(Long.MaxValue) === Int.MaxValue)
-    intercept[IllegalArgumentException](Similarity.adaptiveNlist(0))
-  }
-
-  test("ivfTopKSpread seeds by md5 rank: nlist=1 collapses to brute force, " +
-      "and the seed is the smallest-md5-rank vector, not the smallest id") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val q = emb.filter(col("vec_id") < 10)
-    // nlist=1: one list holds every candidate, so the search IS brute
-    // force — exactness anchor for the whole spread path.
-    val brute = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Long)].collect().toSet
-    val spread = Similarity.ivfTopKSpread(
-      emb, q, "vec_id", "embedding", 5, nlist = 1, nprobe = 4)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(spread === brute)
-  }
-
-  test("ivfTopKSpread escapes the adjacent-id seed trap ivfTopK documents") {
-    // Two well-separated orthogonal blobs; ids 0..15 ALL in blob A (the
-    // adjacent-ids-share-a-cluster layout). ivfTopK's first-16-by-id
-    // quantizer then has no blob-B centroid, while md5-rank seeding
-    // draws uniformly over ids and lands seeds in both blobs, so the
-    // coarse lists separate the blobs.
-    def v(hot: Int, eps: Int): Array[Float] = {
-      val a = Array.fill(8)(0.0f)
-      a(hot) = 1.0f
-      a((hot + 1) % 8) = 0.01f * eps // in-blob spread
-      a
-    }
-    val rows = (0L until 16L).map(i => (i, v(0, (i % 7).toInt + 1))) ++
-      (16L until 64L).map(i => (i, v(4, (i % 7).toInt + 1)))
-    val emb = rows.toDF("vec_id", "embedding")
-    val nlist = 16
-    val byIdSeeds = emb.orderBy(col("vec_id")).limit(nlist)
-    // precondition: the trap layout really puts all by-id seeds in blob A
-    assert(byIdSeeds.filter(col("vec_id") >= 16L).count() === 0)
-    val spreadSeedIds = emb.orderBy(
-        graft.functions.HashExprs.md5Prefix60(col("vec_id").cast("string")),
-        col("vec_id"))
-      .limit(nlist).select("vec_id").as[Long].collect()
-    // md5-rank draws from the WHOLE id space: some seed lands in blob B
-    assert(spreadSeedIds.exists(_ >= 16L))
-    val q = emb // all vectors as queries
-    val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
-    def meanRecall(approx: org.apache.spark.sql.DataFrame): Double =
-      Similarity.recallAtK(exact, approx, 5)
-        .agg(avg(col("recall"))).as[Double].head()
-    val rById = meanRecall(Similarity.ivfTopK(
-      emb, q, "vec_id", "embedding", 5, nlist = nlist, nprobe = 2))
-    val rSpread = meanRecall(Similarity.ivfTopKSpread(
-      emb, q, "vec_id", "embedding", 5, nlist = nlist, nprobe = 2))
-    assert(rSpread > rById,
-      s"spread recall $rSpread should beat by-id recall $rById on the trap layout")
-    assert(rSpread > 0.9, s"spread recall $rSpread should be near-exact here")
-  }
-
-  test("quantizer kernel == struct-sort tree bit-for-bit: assignment and " +
-      "probe lists, including rounded-sim ties") {
-    // 100 centroids (> quantizerKernelThreshold — the rung where the
-    // production path actually switches) over the real embeddings
-    // corpus: the codegen'd TopCentroidsBySim kernel must reproduce
-    // the tree's (round(sim,6) DESC, cid DESC) order on EVERY row.
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val seeds = Similarity.ivfSeedsSpread(emb, "vec_id", "embedding", 100)
-    assert(seeds.length === 100)
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("__n",
-        sqrt(VectorExprs.dot(col("embedding"), col("embedding"))))
-      .filter(col("__n") > 0)
-    def both(mk: Boolean => org.apache.spark.sql.Column) = base.select(
-      col("vec_id"), mk(false).as("tree"), mk(true).as("kernel"))
-    val assignDiff = both(k => Similarity.nearestListCol(
-        seeds, col("embedding"), col("__n"), k))
-      .filter(col("tree") =!= col("kernel"))
-    assert(assignDiff.count() === 0)
-    val probeDiff = both(k => Similarity.probeListsCol(
-        seeds, col("embedding"), col("__n"), 5, k))
-      .filter(col("tree") =!= col("kernel"))
-    assert(probeDiff.count() === 0)
-    // tie exercise: duplicate centroid VECTORS (distinct cids) force
-    // exactly-equal rounded sims — the cid DESC tiebreak must agree.
-    val dupSeeds = seeds.take(50).map(_._2).zipWithIndex.flatMap {
-      case (v, i) => Seq((2 * i, v), (2 * i + 1, v))
-    }
-    val tieDiff = both(k => Similarity.probeListsCol(
-        dupSeeds, col("embedding"), col("__n"), 4, k))
-      .filter(col("tree") =!= col("kernel"))
-    assert(tieDiff.count() === 0)
-  }
-
-  test("two-level kernel with a full super beam == flat kernel bit-for-bit") {
-    // superProbe = superCount makes phase 2 scan EVERY group — the
-    // union is the whole centroid table, so the two-level top-n must
-    // equal the flat TopCentroidsBySim top-n on every row (proves the
-    // phase-2 sim/tie arithmetic is the same code path the oracle
-    // already certifies).
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val seeds = Similarity.ivfSeedsSpread(emb, "vec_id", "embedding", 100)
-    val index = spark.sparkContext.broadcast(
-      graft.functions.TwoLevelIndex.build(seeds, Similarity.superBound(100)))
-    assert(index.value.superCount === 10) // ⌈√100⌉
-    assert(index.value.centroidCount === seeds.length)
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("__n",
-        sqrt(VectorExprs.dot(col("embedding"), col("embedding"))))
-      .filter(col("__n") > 0)
-    val diff = base.select(
-      col("vec_id"),
-      VectorExprs.topCentroidsBySim(col("embedding"), seeds, 5).as("flat"),
-      VectorExprs.topCentroidsTwoLevel(
-        col("embedding"), index, 5, index.value.superCount).as("two"))
-      .filter(col("flat") =!= col("two"))
-    assert(diff.count() === 0)
-  }
-
-  test("two-level beam-1 assignment matches an independent reimplementation") {
-    // The hierarchical SELECTION (super grouping + beam) re-derived
-    // from collected vectors in plain Scala — an independent check of
-    // TwoLevelIndex.build's grouping and the kernel's two-phase walk
-    // (the full-beam test above is blind to grouping by construction).
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val nlist = 100
-    val seeds = Similarity.ivfSeedsSpread(emb, "vec_id", "embedding", nlist)
-    val g = Similarity.superBound(nlist)
-    val index = spark.sparkContext.broadcast(
-      graft.functions.TwoLevelIndex.build(seeds, g))
-    def r6(d: Double): Double = java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    def dotLR(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def norm(a: Array[Double]) = math.sqrt(dotLR(a, a))
-    val supers = seeds.filter(_._1 < g)
-    // nearest super of every centroid, (sim DESC, scid DESC)
-    val groupOf: Map[Int, Int] = seeds.map { case (cid, v) =>
-      cid -> supers.map { case (scid, sv) =>
-        (r6(dotLR(v, sv) / (norm(sv) * norm(v))), scid)
-      }.maxBy { case (sim, scid) => (sim, scid) }._2
-    }.toMap
-    val expected: Map[Long, Int] = emb
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect().flatMap { case (id, vf) =>
-        val v = vf.map(_.toDouble)
-        if (norm(v) == 0.0) None
-        else {
-          val bestSuper = supers.map { case (scid, sv) =>
-            (r6(dotLR(v, sv) / (norm(sv) * norm(v))), scid)
-          }.maxBy { case (sim, scid) => (sim, scid) }._2
-          val members = seeds.filter { case (cid, _) => groupOf(cid) == bestSuper }
-          val best = members.map { case (cid, cv) =>
-            (r6(dotLR(v, cv) / (norm(cv) * norm(v))), cid)
-          }.maxBy { case (sim, cid) => (sim, cid) }._2
-          Some(id -> best)
-        }
-      }.toMap
-    val got = Similarity.ivfAssign2(emb, "vec_id", "embedding", index)
-      .select(col("neighbor_id"), col("__list"))
-      .as[(Long, Int)].collect().toMap
-    assert(got === expected)
-  }
-
-  test("two-level kernel edges: zero-norm empty; short union returns fewer") {
-    // 2 orthogonal supers each with a singleton group: probing 1 super
-    // can only ever surface that group's single member, so n=3 must
-    // return a 1-element array; a zero vector returns empty.
-    val seeds = Array(
-      (0, Array(1.0, 0.0, 0.0, 0.0)),
-      (1, Array(0.0, 1.0, 0.0, 0.0)))
-    val index = spark.sparkContext.broadcast(
-      graft.functions.TwoLevelIndex.build(seeds, 2))
-    val rows = Seq(
-      (0L, Array(0.9f, 0.1f, 0f, 0f)),
-      (1L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
-    val out = rows.select(col("vec_id"),
-      VectorExprs.topCentroidsTwoLevel(col("embedding"), index, 3, 1).as("p"))
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(out(0L) === Seq(0))
-    assert(out(1L) === Seq.empty)
-  }
-
-  test("ivfTopKSpread2 on one list degenerates to exact brute force") {
-    // nlist=1 (single centroid, single super): every vector lands in
-    // list 0 and every query probes it — identical guarantee to the
-    // flat path's nlist=1 degeneracy test above.
-    val emb = vecs
-    val q = emb.filter(col("vec_id") === 0)
-    val brute = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Long)].collect().toSet
-    val two = Similarity.ivfTopKSpread2(
-      emb, q, "vec_id", "embedding", 5, nlist = 1, nprobe = 4)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(two === brute)
-  }
-
   test("IntersectSize counts common elements without double counting") {
     val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d", "e"))).toDF("x", "y")
     val n = df.select(ArrayExprs.intersectSize(col("x"), col("y")).as("n"))

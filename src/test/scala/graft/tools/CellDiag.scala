@@ -123,7 +123,7 @@ object CellDiag {
 
     // q_dedup_simhash: portable miner, 6 bands x 10 bits
     dist("portable(6x10b)", bandCells(
-      Dedup.portableSimHashSignaturesKeyed(docs, Seq("doc_id"), "text"), 6, 10))
+      Dedup.portableSimHashSignatures(docs, "doc_id", "text"), 6, 10))
     // q_dedup_simhash_fast: 64-bit miner at maxDist=6 -> 7 bands x 9 bits
     dist("fast(7x9b)", bandCells(
       Dedup.simHash(docs, "doc_id", "text"), 7, 64 / 7))
