@@ -90,8 +90,14 @@ object Ingest {
   /** One micro-batch: validate every file's rows in a single distributed
     * pass, then route file-by-file. Returns per-file outcomes (for logs
     * and tests).
+    *
+    * Every frame the batch runs is built in `spark`, the session given
+    * to `start`, never in `batch.sparkSession`, the clone of it that
+    * each `start` makes anew: generated code is cached per executor
+    * classloader, one per session, so jobs run in the clone would
+    * compile and load again every class the last drain compiled.
     */
-  def processBatch(
+  private def processBatch(spark: SparkSession,
       conf: PipelineConf, sink: BatchSink, batch: DataFrame): Seq[FileOutcome] = {
     val outcomes = scala.collection.mutable.ArrayBuffer.empty[FileOutcome]
 
@@ -140,7 +146,8 @@ object Ingest {
     // so re-committing an already-committed file on replay is safe.
     val pendingMoves =
       scala.collection.mutable.ArrayBuffer.empty[(Path, Option[String])]
-    processValidated(conf, sink, batch, outcomes, pendingMoves)(canonical)
+    processValidated(spark, conf, sink, batch, outcomes, pendingMoves)(
+      canonical)
 
     // Bad-header files quarantine through the same deferred-move
     // buffer (their outcomes/logs at decision time, the move LAST).
@@ -174,7 +181,6 @@ object Ingest {
       // invariant below).
       val mapped: Option[DataFrame] =
         try {
-          val spark = batch.sparkSession
           val byName = spark.read
             .options(csvOptions(ignoreMissingFiles = false))
             .csv(path.toString)
@@ -200,8 +206,8 @@ object Ingest {
               Some(reason), 0L)
             None
         }
-      mapped.foreach(
-        processValidated(conf, sink, _, outcomes, pendingMoves)(_ => true))
+      mapped.foreach(processValidated(
+        spark, conf, sink, _, outcomes, pendingMoves)(_ => true))
     }
 
     // All batch actions are done — execute the deferred moves. Each
@@ -255,8 +261,13 @@ object Ingest {
     * size is bounded by `maxFilesPerTrigger`. In return no cache-building
     * job runs, no per-value column statistics are gathered, and no reader
     * decodes columns back into rows.
+    *
+    * The cached rows are wrapped in `spark`, the caller's session, not
+    * in `batch.sparkSession`, so the verdict aggregate and both sink
+    * writes run under the caller's executor classloader and reuse the
+    * generated classes of earlier drains (see `processBatch`).
     */
-  private def processValidated(
+  private def processValidated(spark: SparkSession,
       conf: PipelineConf, sink: BatchSink, batch: DataFrame,
       outcomes: scala.collection.mutable.ArrayBuffer[FileOutcome],
       pendingMoves: scala.collection.mutable.ArrayBuffer[(Path, Option[String])])(
@@ -275,7 +286,7 @@ object Ingest {
     val rows = GraftExpressionBridge.toInternalRdd(projected).map(_.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)
     val validated = GraftExpressionBridge.internalCreateDataFrame(
-      batch.sparkSession, rows, projected.schema)
+      spark, rows, projected.schema)
     try {
       val verdicts = Validate.strictVerdicts(validated, "__file",
         col("__mono"), (bad, least) => bad - least + 2,
@@ -483,7 +494,7 @@ object Ingest {
       .schema(Schemas.sensorCsvRaw)
       .csv(files: _*)
       .withColumn("__file", input_file_name())
-    val outcomes = processBatch(conf, sink, batch)
+    val outcomes = processBatch(spark, conf, sink, batch)
     live.foreach { m =>
       if (!Files.exists(Paths.get(conf.dataDir).resolve(m.getFileName)))
         Files.deleteIfExists(m)
@@ -588,6 +599,12 @@ object Ingest {
     * them. The outcome list is bounded by `maxFilesPerTrigger` when
     * set, which is the backpressure contract the file-count-scale spec
     * pins.
+    *
+    * Every batch job runs in `spark` itself, not in the clone of it that
+    * the stream runs in: each `start` clones the session afresh, each
+    * session has its own executor classloader, and Spark's
+    * generated-code cache is keyed by that classloader, so jobs run in
+    * the clone would recompile their classes on every restart.
     */
   def start(spark: SparkSession, conf: PipelineConf, sink: BatchSink,
       onBatch: Seq[FileOutcome] => Unit = _ => ()): StreamingQuery = {
@@ -629,7 +646,7 @@ object Ingest {
         // sweeping it from inside the retry pass (as processBatch
         // itself once did) made the outer batch's own actions
         // unreadable on replay.
-        val driven = processBatch(conf, sink, batch)
+        val driven = processBatch(spark, conf, sink, batch)
         onBatch(driven ++
           retryPending(spark, conf, sink, exclude = driven.map(_.file).toSet) ++
           sweepRowlessFiles(conf)); ()

@@ -819,6 +819,31 @@ class IngestSpec extends SparkSpec {
     assert(Files.exists(failed.resolve("checkpoint/graft-retry/failed.csv")))
   }
 
+  test("a restarted stream compiles no generated class on its second drain") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Two directories of the same shape, each drained by its own query
+    // with a fresh checkpoint: the same file count keeps the commit
+    // filter's `isin` planned alike, so only the session a batch job
+    // runs in could make the second drain compile again.
+    def drain(name: String): Unit = {
+      val root = tmp(s"graft_codegen_$name")
+      val dataDir = Files.createDirectories(root.resolve("data"))
+      (1 to 3).foreach(i => writeCsv(dataDir, s"$name$i.csv",
+        s"2025-05-26 04:36:0$i,S$i,2$i.5,0.65,1013.25",
+        s"2025-05-26 04:37:0$i,S$i,abc,0.66,1013.50"))
+      val q = Ingest.start(spark, mkConf(root).copy(strictMode = false),
+        new ParquetSink(root.resolve("raw").toString,
+          root.resolve("agg").toString))
+      try q.processAllAvailable() finally q.stop()
+      (1 to 3).foreach(i =>
+        assert(Files.exists(root.resolve(s"processed/$name$i.csv"))))
+    }
+    drain("first")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drain("second")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+  }
+
   test("each field is parsed once: the raw table equals castTyped over " +
     "the valid rows, and the reasons quote the raw strings") {
     import org.apache.spark.sql.functions.col
