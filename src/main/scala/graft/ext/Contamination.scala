@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object Contamination {
 
-  // WordShingles trims + lowercases internally (Locale.ROOT).
+  // The shingle kernel trims + lowercases internally (Locale.ROOT).
   private def grams(text: Column, n: Int): Column =
     graft.functions.TextExprs.wordShingles(text, n)
 
@@ -36,7 +36,7 @@ object Contamination {
       idCol: String, textCol: String, n: Int): DataFrame = {
     // Shingle each corpus document ONCE: n_ngrams rides through the
     // explode next to each gram (a separate totals branch would re-run
-    // the WordShingles kernel over the whole corpus — exchange reuse
+    // the shingle kernel over the whole corpus — exchange reuse
     // does not dedupe independent subtrees). explode_outer keeps
     // gram-less (too-short) docs as a single null-gram row, which can
     // never join, so every corpus doc still appears exactly once.

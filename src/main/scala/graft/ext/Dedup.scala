@@ -239,7 +239,7 @@ object Dedup {
   def textDigest(text: Column): Column = unhex(md5(text.cast("binary")))
 
   /** Distinct word n-gram shingles — the custom codegen'd
-    * [[graft.functions.WordShingles]] expression (the HOF formulation
+    * [[graft.functions.WordShingleOps]] kernel (the HOF formulation
     * costs ~15 s of lambda codegen per query plus ~10x slower eval).
     */
   def shingles(text: Column, n: Int): Column =
@@ -544,7 +544,7 @@ object Dedup {
 
   /** 60-bit integer from the md5 of a shingle, reduced mod P — the
     * portable base hash (`('0x' || substr(md5(s),1,15))::BIGINT` in
-    * DuckDB; here the codegen'd [[graft.functions.Md5Prefix60]],
+    * DuckDB; here the codegen'd [[graft.functions.Md5Ops]],
     * which reads the digest bytes directly instead of allocating and
     * re-parsing a hex string per shingle).
     */
@@ -843,7 +843,7 @@ object Dedup {
     * dup_share 6 dp).
     *
     * Scale shape: one shingle explode (the codegen'd
-    * [[graft.functions.WordShingles]] kernel, distinct per doc), a
+    * [[graft.functions.WordShingleOps]] kernel, distinct per doc), a
     * shingle-keyed document-frequency aggregate (map-side combinable),
     * a co-keyed join back, one doc-keyed aggregate. Everything joins
     * on the shingle or the doc id — never a pair space.
@@ -1315,7 +1315,7 @@ object Dedup {
     * re-expression is a k-gram inverted index, the same recall for
     * spans >= k tokens without a global sort.)
     *
-    * Method: positional k-grams per doc ([[graft.functions.WordShinglesAll]],
+    * Method: positional k-grams per doc ([[graft.functions.WordShingleAllOps]],
     * one codegen'd pass) → a gram is REPEATED if it occurs in >=
     * `minDocs` distinct docs → each doc's repeated-gram start positions
     * merge into maximal spans (classic gaps-and-islands: a new span

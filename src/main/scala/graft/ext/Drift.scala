@@ -100,13 +100,8 @@ object Drift {
     // inline decimal ln tree (~200 nodes) made runtime CODEGEN the
     // cost of the whole query: 5.5 s of a 6.5 s sf0.1 run spent
     // compiling a projection that executes over ~32 bin rows.
-    val term = {
-      import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
-      column(graft.functions.PsiTermMicro12(
-        expression(col("br")), expression(col("bc")),
-        expression(col("n_ref")), expression(col("n_cur")),
-        expression(lit(epsDen))))
-    }
+    val term = graft.functions.DetMath.psiTerm(
+      col("br"), col("bc"), col("n_ref"), col("n_cur"), lit(epsDen))
     // Terms sum in DECIMAL (the oracle sums HUGEINT): ~41e12 per term
     // would overflow a Long sum past ~2·10⁵ bins, and the bin count is
     // value-range/width — unbounded by design.

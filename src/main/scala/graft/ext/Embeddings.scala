@@ -28,35 +28,6 @@ object Embeddings {
     if (dists.length == 1) dists.head else least(dists: _*)
   }
 
-  /** 10⁶-quantized squared-L2 distance to a literal centroid:
-    * ⌊(|v|² − 2·v·c + |c|²)·10⁶⌋ as LONG. All argmin/argmax decisions
-    * in [[kmeans]] compare these quantized integers (ties → lower
-    * cluster id), NOT raw doubles — raw-double comparisons are
-    * ulp-fragile across engines and round() half-ties are
-    * engine-specific, while floor has no tie to break and identical
-    * doubles floor identically everywhere (the [[Graph.pageRank]]
-    * discipline). The inner dot products are [[VectorExprs.dot]],
-    * bit-identical to DuckDB's `list_inner_product`.
-    */
-  private def quantizedDist(vecCol: Column, c: Array[Double]): Column = {
-    val c2 = c.map(x => x * x).sum
-    floor((VectorExprs.dot(vecCol, vecCol)
-      - VectorExprs.dot(vecCol, array(c.map(lit): _*)) * 2.0 + lit(c2))
-      * lit(1e6)).cast("long")
-  }
-
-  /** Nearest-centroid id by QUANTIZED distance (see [[quantizedDist]]),
-    * ties to the lower id.
-    */
-  def nearestCentroidQuantized(
-      vecCol: Column, centroids: Array[Array[Double]]): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val cands = centroids.zipWithIndex.map { case (c, j) =>
-      struct(quantizedDist(vecCol, c).as("d"), lit(j).as("j"))
-    }
-    (if (cands.length == 1) cands.head else least(cands: _*)).getField("j")
-  }
-
   /** Deterministic farthest-point init: seed with the lowest-id
     * vector, then k-1 times take the vector farthest from its nearest
     * chosen seed (ties by id). One TakeOrdered pass per seed — k scans
@@ -93,7 +64,12 @@ object Embeddings {
     * frame with `cluster`).
     *
     * Determinism contract (cross-engine oracle-able): assignments
-    * compare ⌊dist·10⁶⌋ integers ([[quantizedDist]]); centroid updates
+    * compare ⌊dist·10⁶⌋ integers, ties to the lower cluster id
+    * ([[graft.functions.NearestCentroidQ]]) — raw-double comparisons
+    * are ulp-fragile across engines and round() half-ties are
+    * engine-specific, while floor has no tie to break and identical
+    * doubles floor identically everywhere (the [[Graph.pageRank]]
+    * discipline); centroid updates
     * sum ⌊v_i·10⁶⌋ as exact LONGs per dimension (map-side combinable,
     * partial-aggregation order CANNOT perturb them — the bound is
     * n·max|v|·10⁶ per cluster-dim, far inside 2⁶³ for unit-scale
@@ -116,14 +92,17 @@ object Embeddings {
     require(k >= 1 && iters >= 1, s"bad kmeans params: k=$k iters=$iters")
     val init = farthestPointInit(df, idCol, vecCol, k)
     require(init.length == k, s"need >= $k vectors for init")
+    // a null vector goes to cluster 0, where the oracle's ROW_NUMBER
+    // (all-null distances, ties by cid) puts it
     lloyd(df, vecCol, dim, iters, init,
-      cs => nearestCentroidQuantized(col(vecCol), cs))
+      cs => coalesce(VectorExprs.nearestCentroidQ(col(vecCol), cs), lit(0)))
   }
 
   /** The shared Lloyd iteration body (ONE copy — [[kmeans]] and
-    * [[kmeansSpread]] differ only in init and assignment kernel, and
-    * both must stay bit-identical to the oracle's unrolled CTE chain):
-    * per pass, one hash aggregate with exact integer centroid sums
+    * [[kmeansSpread]] differ only in init and null handling, and both
+    * must stay bit-identical to the oracle's unrolled CTE chain): per
+    * pass, one [[graft.functions.NearestCentroidQ]] assignment and one
+    * hash aggregate with exact integer centroid sums
     * (⌊v_i·10⁶⌋ as long — partition order cannot perturb them), new
     * centroid = sum / (n·10⁶) as the one IEEE division, empty
     * clusters keep their previous centroid.
@@ -188,12 +167,9 @@ object Embeddings {
     * iteration contract to [[kmeans]] (quantized assignments, exact
     * integer centroid sums, empty clusters keep their centroid — the
     * same cross-engine determinism, oracle-able by the same unrolled
-    * CTE chain), with the two pieces that break at large k swapped:
-    * [[hashSpreadInit]] instead of farthest-point (O(n) vs O(n·k²)),
-    * and the codegen'd [[graft.functions.NearestCentroidQ]] kernel
-    * instead of a `least(struct...)` tree that falls out of codegen
-    * past a few dozen centroids. cid j = the j-th seed in md5-rank
-    * order.
+    * CTE chain), with the init that breaks at large k swapped:
+    * [[hashSpreadInit]] instead of farthest-point (O(n) vs O(n·k²)).
+    * cid j = the j-th seed in md5-rank order.
     */
   def kmeansSpread(
       df: DataFrame, idCol: String, vecCol: String, dim: Int, k: Int,

@@ -16,7 +16,7 @@ import graft.functions.HashExprs
   * filter: zero shuffles, pushdown-friendly, identical on every engine
   * that can compute the hash.
   *
-  * The hash is the portable [[graft.functions.Md5Prefix60]] (60 bits of
+  * The hash is the portable [[graft.functions.Md5Ops]] (60 bits of
   * md5), so the gate is bit-identically computable in DuckDB:
   * `('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15))::BIGINT % 100`.
   */

@@ -163,7 +163,7 @@ object TextStats {
     * (k-gram lead, count, row_number, min-over-frame) shares that
     * partitioning, and partitions are single documents — bounded work
     * per doc at any corpus size. The gram hash is the portable
-    * [[graft.functions.Md5Prefix60]], so the whole operator is
+    * [[graft.functions.Md5Ops]], so the whole operator is
     * oracle-checkable in DuckDB.
     *
     * Output: (idCol, fp) — one row per distinct selected hash. Documents
@@ -173,7 +173,7 @@ object TextStats {
     * Splits each document into `chunkSize`-token windows advancing by
     * `chunkSize - overlap` tokens, so neighbors share `overlap` tokens
     * of context. Pure projection + explode (the chunker is the
-    * codegen'd [[graft.functions.TokenChunks]] expression): no
+    * codegen'd [[graft.functions.TokenChunkOps]] kernel): no
     * shuffle, corpus chunking parallelizes with the scan.
     *
     * Output: every input column (chunks inherit their document's

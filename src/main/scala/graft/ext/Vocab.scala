@@ -369,7 +369,7 @@ object Vocab {
     *
     * Scale shape: one tokenize+explode pass keyed on (doc, w₁, w₂)
     * with map-side combine — bigram generation is the codegen'd
-    * [[graft.functions.WordBigrams]] kernel (ONE tokenize per doc; the
+    * [[graft.functions.WordBigramOps]] kernel (ONE tokenize per doc; the
     * composable transform/sequence/element_at form is an interpreted
     * HOF that re-splits the text three times per row); C(w₁,w₂) and
     * the context total C(w₁·) are two sum-windows over that tf frame —
@@ -402,7 +402,7 @@ object Vocab {
     * compares the ROUNDED score with a full lexical tie-break, so a
     * cross-engine ln() ulp cannot flip the ordering.
     *
-    * Scale shape: one codegen'd bigram explode ([[graft.functions.WordBigrams]],
+    * Scale shape: one codegen'd bigram explode ([[graft.functions.WordBigramOps]],
     * ONE tokenize per doc) → hash aggregate keyed on (w₁,w₂) — bounded
     * by distinct pairs, map-side combinable. Marginals are two
     * sum-windows over that collapsed pair frame (vocabulary-bounded,

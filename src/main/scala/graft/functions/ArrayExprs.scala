@@ -1,18 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static helpers the generated Java calls into — one virtual-free call
-  * per row instead of the CodegenFallback path's per-row InternalRow
-  * boxing and interpreted dispatch.
+/** |a ∩ b| over two string arrays, without materializing the
+  * intersection.
   */
 object ArrayIntersectOps {
-  /** |a ∩ b|, set semantics, null elements ignored. */
+  /** |a ∩ b|, set semantics, null elements ignored.
+    *
+    * Why a kernel: `size(array_intersect(a, b))` builds the intersected
+    * array per pair only to count it, and on a Jaccard pair scan the
+    * expression appears in both the similarity and the threshold
+    * filter — Catalyst duplicates it after predicate pushdown, so the
+    * intersection was computed (and allocated) twice per pair. This is
+    * a single hash-set probe, O(|a|+|b|), no allocation beyond the set.
+    * Duplicate elements count once (inputs are expected to be distinct
+    * token/shingle sets).
+    */
   def hashIntersectSize(aa: ArrayData, bb: ArrayData): Int = {
     val (small, big) =
       if (aa.numElements() <= bb.numElements()) (aa, bb) else (bb, aa)
@@ -31,7 +38,13 @@ object ArrayIntersectOps {
     n
   }
 
-  /** |a ∩ b| for sorted+distinct inputs: single merge walk. */
+  /** |a ∩ b| for two string arrays that are ALREADY sorted ascending
+    * and distinct: a single merge walk, no hash set, no per-pair
+    * allocation. On a pair scan the per-row sort happens once per
+    * document (in the projection feeding the join), while the merge
+    * runs per pair — the right place to spend the work. Results are
+    * undefined if inputs are unsorted (callers own the contract).
+    */
   def sortedIntersectSize(aa: ArrayData, bb: ArrayData): Int = {
     val (na, nb) = (aa.numElements(), bb.numElements())
     var i = 0
@@ -47,103 +60,19 @@ object ArrayIntersectOps {
   }
 }
 
-/** |a ∩ b| over two string arrays, without materializing the
-  * intersection.
-  *
-  * Why a custom Expression: `size(array_intersect(a, b))` builds the
-  * intersected array per pair only to count it, and on a Jaccard pair
-  * scan the expression appears in both the similarity and the threshold
-  * filter — Catalyst duplicates it after predicate pushdown, so the
-  * intersection was computed (and allocated) twice per pair. This is a
-  * single hash-set probe, O(|a|+|b|), no allocation beyond the set.
-  * Generates code (a static call) so the surrounding stage stays in
-  * whole-stage codegen with no per-row fallback boxing.
-  *
-  * Duplicate elements count once (set semantics — inputs are expected
-  * to be distinct token/shingle sets); null elements are ignored.
-  */
-case class IntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"intersect_size needs array<string> inputs, got " +
-          s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayIntersectOps.hashIntersectSize(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ArrayIntersectOps.hashIntersectSize($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntersectSize =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |a ∩ b| for two string arrays that are ALREADY sorted ascending and
-  * distinct: a single merge walk, no hash set, no per-pair allocation.
-  * On a pair scan the per-row sort happens once per document (in the
-  * projection feeding the join), while the merge runs per pair — the
-  * right place to spend the work. Results are undefined if inputs are
-  * unsorted (callers own the contract).
-  *
-  * Deliberately CodegenFallback: this sits in the (huge) verification
-  * stage of the set-similarity join, and inlining the call there pushes
-  * the generated method past JIT-friendly size — measured ~15% SLOWER
-  * than the fallback path on a 713k-pair scan at sf0.1. The fallback
-  * keeps the merge in one small, hot, well-JIT'd method.
-  */
-case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_size needs array<string> inputs, got " +
-          s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayIntersectOps.sortedIntersectSize(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectSize =
-    copy(left = newLeft, right = newRight)
-}
-
 object ArrayExprs {
-  import org.apache.spark.sql.GraftExpressionBridge._
+  import org.apache.spark.sql.GraftExpressionBridge.kernel
+
+  private val stringArrays = Seq.fill(2)(ArrayType(StringType))
 
   /** `intersect_size(a, b)` as a Column. */
   def intersectSize(a: Column, b: Column): Column =
-    column(IntersectSize(expression(a), expression(b)))
+    kernel("intersectsize", "graft.functions.ArrayIntersectOps.hashIntersectSize",
+      IntegerType, stringArrays, Seq(a, b))
 
   /** `sorted_intersect_size(a, b)` — inputs must be sorted + distinct. */
   def sortedIntersectSize(a: Column, b: Column): Column =
-    column(SortedIntersectSize(expression(a), expression(b)))
+    kernel("sortedintersectsize",
+      "graft.functions.ArrayIntersectOps.sortedIntersectSize",
+      IntegerType, stringArrays, Seq(a, b))
 }

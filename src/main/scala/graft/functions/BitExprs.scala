@@ -1,12 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
-/** Static Morton-interleave kernel (same static-call codegen pattern
-  * as [[WordShingleOps]]).
+/** Z-order (Morton) curve key over two integral columns — the
+  * multi-dimensional clustering key for data-skipping layouts.
+  *
+  * Sorting (or range-partitioning) a table by `zOrder2(a, b)` keeps
+  * rows close in BOTH dimensions close in file order, so per-file
+  * min/max statistics prune scans filtered on either column — the
+  * layout trick behind Delta/Iceberg Z-ordering, usable here with
+  * plain `df.sortWithinPartitions(zval)` before a parquet write.
+  * A plain sort by (a, b) clusters only the leading column; at 100 TB
+  * the difference is whether a `b = ?` filter reads 1% or 100% of the
+  * files.
   */
 object ZOrderOps {
   /** Interleave the low `bits` bits of x (even positions) and y (odd
@@ -28,59 +34,14 @@ object ZOrderOps {
   }
 }
 
-/** Z-order (Morton) curve key over two integral columns — the
-  * multi-dimensional clustering key for data-skipping layouts.
-  *
-  * Sorting (or range-partitioning) a table by `zOrder2(a, b)` keeps
-  * rows close in BOTH dimensions close in file order, so per-file
-  * min/max statistics prune scans filtered on either column — the
-  * layout trick behind Delta/Iceberg Z-ordering, usable here with
-  * plain `df.sortWithinPartitions(zval)` before a parquet write.
-  * A plain sort by (a, b) clusters only the leading column; at 100 TB
-  * the difference is whether a `b = ?` filter reads 1% or 100% of the
-  * files.
-  */
-case class ZOrder2(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-
-  require(bits >= 1 && bits <= 32, s"bits must be in [1,32]: $bits")
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"z_order_2 needs integral inputs, got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
-  private def asLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-  }
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    ZOrderOps.interleave2(asLong(x), asLong(y), bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.ZOrderOps.interleave2((long)$x, (long)$y, $bits);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZOrder2 =
-    copy(left = newLeft, right = newRight)
-}
-
 object BitExprs {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+  import org.apache.spark.sql.GraftExpressionBridge.{integralInput, kernel}
 
-  def zOrder2(x: Column, y: Column, bits: Int = 16): Column =
-    column(ZOrder2(expression(x), expression(y), bits))
+  /** Any integral inputs; they widen to long. */
+  def zOrder2(x: Column, y: Column, bits: Int = 16): Column = {
+    require(bits >= 1 && bits <= 32, s"bits must be in [1,32]: $bits")
+    kernel("zorder2", "graft.functions.ZOrderOps.interleave2", LongType,
+      Seq(integralInput, integralInput), Seq(x, y), bits)
+  }
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression, kernel}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Cross-engine DETERMINISTIC transcendental kernels.
   *
@@ -115,9 +117,8 @@ object DetMath {
     * SQL mirror ([[graft.queries.Shared]]'s expSqlChain) writes
     * (1e0/6e0) so DuckDB types them DOUBLE.
     */
-  def expq(x: Column): Column =
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      ExpqExpr(org.apache.spark.sql.GraftExpressionBridge.expression(x)))
+  def expq(x: Column): Column = kernel("expqexpr",
+    "graft.functions.DetMath.expqDouble", DoubleType, Seq(DoubleType), Seq(asDouble(x)))
 
   /** Fixed-point scale for [[lnRatioFpBig]]: Q = 10¹⁸. */
   val FpQ: Long = 1000000000000000000L
@@ -187,7 +188,7 @@ object DetMath {
   }
 
   /** One PSI grid-cell term ·10¹², exact: the scalar shared by the
-    * [[PsiTermMicro12]] expression (distributed form) and
+    * [[psiTerm]] kernel (distributed form) and
     * [[graft.ext.Drift.psiTrend]]'s driver-side grid — ONE
     * implementation, so the pair alarm and the trend can never
     * disagree by construction. Math is the documented rational
@@ -214,115 +215,35 @@ object DetMath {
       (BigInt(pd) * BigInt(qd) * 1000000L)).toLong
   }
 
-  /** Deterministic natural log; see object doc. Bit-identical in any
-    * IEEE-754 engine evaluating the mirrored formula.
+  /** `psi_term_micro12(br, bc, n_ref, n_cur, eps_den)` over five BIGINT
+    * columns: [[psiTermMicro12]] per row, so it is bit-identical to the
+    * driver-side grid by construction; the DuckDB oracle mirrors the
+    * same integer program in SQL.
+    *
+    * A kernel for PLAN size, not semantics: the equivalent Column form
+    * (the fixed-point ln series + decimal divides) inlines a ~200-node
+    * decimal tree whose runtime codegen dominated the whole query
+    * (measured 5.5 s of a 6.5 s sf0.1 PSI — the term stage runs over
+    * ~32 bin rows).
     */
-  def lnq(x: Column): Column =
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      LnqExpr(org.apache.spark.sql.GraftExpressionBridge.expression(x)))
-}
+  def psiTerm(br: Column, bc: Column, nRef: Column, nCur: Column,
+      epsDen: Column): Column =
+    kernel("psitermmicro12", "graft.functions.DetMath.psiTermMicro12",
+      LongType, Seq.fill(5)(LongType), Seq(br, bc, nRef, nCur, epsDen))
 
-/** `lnq(x)` as ONE expression node computing [[DetMath.lnqDouble]] —
-  * bit-identical to the SQL chain's op tree by DetMathSpec's pin. Codegen
-  * emits a single static call to the scalar kernel (a Scala top-level
-  * object compiles with static forwarders), so every caller gets BOTH
-  * a tiny plan (what the inlined ~80-node tree cost was per-query
-  * janino compilation, not execution) AND compiled, box-free per-row
-  * evaluation in unbounded hot paths (weighted-sample keys,
-  * per-token surprisal) — a CodegenFallback here would silently
-  * interpret those.
-  */
-case class LnqExpr(
-    child: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.catalyst.expressions.codegen.{
-    CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, DoubleType}
-  override def inputTypes = Seq(DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(x: Any): Any =
-    DetMath.lnqDouble(x.asInstanceOf[Double])
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DetMath.lnqDouble($c)")
-  override protected def withNewChildInternal(c: Expression): LnqExpr =
-    copy(child = c)
-}
+  /** Deterministic natural log; see object doc. Bit-identical in any
+    * IEEE-754 engine evaluating the mirrored formula. One node calling
+    * [[lnqDouble]]: every caller gets a tiny plan (the inlined ~80-node
+    * tree cost per-query janino compilation) and compiled, box-free
+    * per-row evaluation in unbounded hot paths (weighted-sample keys,
+    * per-token surprisal).
+    */
+  def lnq(x: Column): Column = kernel("lnqexpr",
+    "graft.functions.DetMath.lnqDouble", DoubleType, Seq(DoubleType), Seq(asDouble(x)))
 
-/** `expq(x)` as ONE expression node computing [[DetMath.expqDouble]];
-  * see [[LnqExpr]].
-  */
-case class ExpqExpr(
-    child: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.catalyst.expressions.codegen.{
-    CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, DoubleType}
-  override def inputTypes = Seq(DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(x: Any): Any =
-    DetMath.expqDouble(x.asInstanceOf[Double])
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DetMath.expqDouble($c)")
-  override protected def withNewChildInternal(c: Expression): ExpqExpr =
-    copy(child = c)
-}
-
-/** `psi_term_micro12(br, bc, n_ref, n_cur, eps_den)` — one PSI grid
-  * cell's exact integer term ·10¹² (see
-  * [[DetMath.psiTermMicro12]]).
-  *
-  * Exists for PLAN size, not semantics: the equivalent Column form
-  * (the fixed-point ln series + decimal divides) inlines a ~200-node
-  * decimal tree whose runtime codegen dominated the whole query
-  * (measured 5.5 s of a 6.5 s sf0.1 PSI — the term stage runs over
-  * ~32 bin rows). Deliberately CodegenFallback: one interpreted call
-  * per BIN (not per input row) is nanoseconds, and it keeps the
-  * generated stage method small. It evaluates the shared scalar, so
-  * it is bit-identical to the driver-side grid by construction; the
-  * DuckDB oracle mirrors the same integer program in SQL.
-  */
-case class PsiTermMicro12(
-    br: org.apache.spark.sql.catalyst.expressions.Expression,
-    bc: org.apache.spark.sql.catalyst.expressions.Expression,
-    nRef: org.apache.spark.sql.catalyst.expressions.Expression,
-    nCur: org.apache.spark.sql.catalyst.expressions.Expression,
-    epsDen: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.Expression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.types.{DataType, LongType}
-
-  override def children: Seq[Expression] = Seq(br, bc, nRef, nCur, epsDen)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        "psi_term_micro12 needs five BIGINT inputs, got " +
-          children.map(_.dataType.simpleString).mkString(", "))
-
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.exists(_ == null)) null
-    else DetMath.psiTermMicro12(
-      vs(0).asInstanceOf[Long], vs(1).asInstanceOf[Long],
-      vs(2).asInstanceOf[Long], vs(3).asInstanceOf[Long],
-      vs(4).asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): PsiTermMicro12 =
-    copy(br = newChildren(0), bc = newChildren(1), nRef = newChildren(2),
-      nCur = newChildren(3), epsDen = newChildren(4))
+  /** `x` cast to double the way Spark casts an input implicitly, so an
+    * unaliased column is still named `lnqexpr(x)`.
+    */
+  private def asDouble(x: Column): Column =
+    column(Cast(expression(x), DoubleType))
 }

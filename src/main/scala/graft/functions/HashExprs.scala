@@ -1,12 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static digest kernel shared by interpreted eval and generated code.
+/** First 60 bits of md5(input) as an unsigned long — bit-identical to
+  * `conv(substring(md5(s), 1, 15), 16, 10)` (and DuckDB's
+  * `('0x' || substr(md5(s), 1, 15))::BIGINT`), the portable base hash of
+  * the oracle-checkable MinHash/SimHash family.
+  *
+  * Why a kernel: the composable form materializes a 32-char hex string
+  * per shingle, substrings it, then PARSES it back through radix
+  * conversion — three string allocations on the innermost loop of
+  * every signature scan. This reads the digest bytes directly: first 8
+  * bytes big-endian >>> 4 == the first 15 hex nibbles.
   * MessageDigest is not thread-safe → one instance per task thread.
   */
 object Md5Ops {
@@ -28,46 +35,11 @@ object Md5Ops {
   def prefix60(s: UTF8String): Long = prefix60(s.getBytes)
 }
 
-/** First 60 bits of md5(input) as an unsigned long — bit-identical to
-  * `conv(substring(md5(s), 1, 15), 16, 10)` (and DuckDB's
-  * `('0x' || substr(md5(s), 1, 15))::BIGINT`), the portable base hash of
-  * the oracle-checkable MinHash/SimHash family.
-  *
-  * Why a custom Expression: the composable form materializes a 32-char
-  * hex string per shingle, substrings it, then PARSES it back through
-  * radix conversion — three string allocations on the innermost loop of
-  * every signature scan. This reads the digest bytes directly:
-  * first 8 bytes big-endian >>> 4 == the first 15 hex nibbles.
-  */
-case class Md5Prefix60(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"md5_prefix60 needs string/binary input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any = input match {
-    case s: UTF8String => Md5Ops.prefix60(s)
-    case b: Array[Byte] => Md5Ops.prefix60(b)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Md5Ops.prefix60($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Prefix60 =
-    copy(child = newChild)
-}
-
 object HashExprs {
-  import org.apache.spark.sql.GraftExpressionBridge._
+  import org.apache.spark.sql.GraftExpressionBridge.{kernel, stringOrBinaryInput}
 
-  /** `md5_prefix60(s)` as a Column. */
-  def md5Prefix60(s: Column): Column = column(Md5Prefix60(expression(s)))
+  /** `md5_prefix60(s)` as a Column, over a string or binary `s`. */
+  def md5Prefix60(s: Column): Column =
+    kernel("md5prefix60", "graft.functions.Md5Ops.prefix60", LongType,
+      Seq(stringOrBinaryInput), Seq(s))
 }

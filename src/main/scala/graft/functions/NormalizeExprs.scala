@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static Unicode-normalization kernels — called from both interpreted
-  * eval and generated code (same pattern as [[WordShingleOps]]; a Scala
-  * UDF here would break whole-stage codegen under every curation scan).
+/** Unicode-normalization and text-quality kernels (a Scala UDF here
+  * would break whole-stage codegen under every curation scan).
   */
 object NormalizeOps {
+  /** Unicode NFC normalization (compose combining sequences) — the
+    * canonical-form step every dedup/fingerprint pipeline needs before
+    * hashing, or visually-identical documents hash apart.
+    */
   def nfc(input: UTF8String): UTF8String =
     UTF8String.fromString(
       java.text.Normalizer.normalize(
@@ -40,7 +40,8 @@ object NormalizeOps {
     * as strict UTF-8. Pure ASCII round-trips to itself; genuine
     * accented text (e.g. a real `é`) fails strict UTF-8 decode and is
     * left untouched — the guard makes the fix idempotent and safe to
-    * run corpus-wide.
+    * run corpus-wide. Run it before hashing/dedup, or the same document
+    * in clean and mojibake forms dedups apart.
     */
   def fixMojibake(input: UTF8String): UTF8String = {
     val s = input.toString
@@ -68,7 +69,9 @@ object NormalizeOps {
     catch { case _: java.nio.charset.CharacterCodingException => input }
   }
 
-  /** Shannon entropy in bits over Unicode code points. The exact
+  /** Shannon entropy in bits over Unicode code points — a cheap
+    * quality signal: machine-generated or binary-ish junk sits far from
+    * natural-language entropy bands. The exact
     * `log2(n) - sum(c*log2(c))/n` form needs one log per DISTINCT
     * character; terms are accumulated in ascending code-point order so
     * the float summation order is fixed (callers still round before
@@ -97,75 +100,16 @@ object NormalizeOps {
   }
 }
 
-private[graft] trait StringKernelExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string input, got ${child.dataType.simpleString}")
-}
-
-/** Unicode NFC normalization (compose combining sequences) — the
-  * canonical-form step every dedup/fingerprint pipeline needs before
-  * hashing, or visually-identical documents hash apart.
-  */
-case class NfcNormalize(child: Expression) extends StringKernelExpr {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NormalizeOps.nfc(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeOps.nfc($c);")
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** NFD-decompose + drop combining marks (portable strip_accents). */
-case class StripAccents(child: Expression) extends StringKernelExpr {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NormalizeOps.stripAccents(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeOps.stripAccents($c);")
-  override protected def withNewChildInternal(newChild: Expression): StripAccents =
-    copy(child = newChild)
-}
-
-/** Guarded repair of Latin-1-misread UTF-8 (see
-  * [[NormalizeOps.fixMojibake]]) — run before hashing/dedup or the
-  * same document in clean and mojibake forms dedups apart.
-  */
-case class FixMojibake(child: Expression) extends StringKernelExpr {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NormalizeOps.fixMojibake(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeOps.fixMojibake($c);")
-  override protected def withNewChildInternal(newChild: Expression): FixMojibake =
-    copy(child = newChild)
-}
-
-/** Per-document character-level Shannon entropy (bits) — a cheap
-  * quality signal: machine-generated or binary-ish junk sits far from
-  * natural-language entropy bands. One flat pass per document.
-  */
-case class CharEntropy(child: Expression) extends StringKernelExpr {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    NormalizeOps.charEntropy(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeOps.charEntropy($c);")
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-}
-
 object NormalizeExprs {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
-  def nfc(c: Column): Column = column(NfcNormalize(expression(c)))
-  def stripAccents(c: Column): Column = column(StripAccents(expression(c)))
-  def charEntropy(c: Column): Column = column(CharEntropy(expression(c)))
-  def fixMojibake(c: Column): Column = column(FixMojibake(expression(c)))
+  import org.apache.spark.sql.GraftExpressionBridge.kernel
+
+  def nfc(c: Column): Column = kernel("nfcnormalize",
+    "graft.functions.NormalizeOps.nfc", StringType, Seq(StringType), Seq(c))
+  def stripAccents(c: Column): Column = kernel("stripaccents",
+    "graft.functions.NormalizeOps.stripAccents", StringType, Seq(StringType), Seq(c))
+  def charEntropy(c: Column): Column = kernel("charentropy",
+    "graft.functions.NormalizeOps.charEntropy", DoubleType, Seq(StringType), Seq(c))
+  def fixMojibake(c: Column): Column = kernel("fixmojibake",
+    "graft.functions.NormalizeOps.fixMojibake", StringType, Seq(StringType), Seq(c))
 }

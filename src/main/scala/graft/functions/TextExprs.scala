@@ -1,14 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static shingling kernel, called from both interpreted eval and the
-  * generated Java (keeps the surrounding stage in whole-stage codegen).
+/** Distinct word n-gram shingles of a lowercased, trimmed text.
+  *
+  * Why a kernel: the composable formulation — `transform(sequence(0,
+  * size(toks)-n), i -> array_join(slice(toks, i+1, n), " "))` — pays
+  * ~15 s of one-time lambda codegen per query AND evaluates ~10× slower
+  * than a flat loop (the lambda-bound `slice` re-materializes per
+  * element). Shingling sits under every MinHash signature scan, so it
+  * must be a single tight pass per document.
   */
 object WordShingleOps {
   def shingle(input: UTF8String, n: Int): ArrayData = {
@@ -44,50 +48,11 @@ object WordShingleOps {
   }
 }
 
-/** Distinct word n-gram shingles of a lowercased, trimmed text column.
-  *
-  * Why a custom Expression: the composable formulation —
-  * `transform(sequence(0, size(toks)-n), i -> array_join(slice(toks,
-  * i+1, n), " "))` — pays ~15 s of one-time lambda codegen per query
-  * AND evaluates ~10× slower than a flat loop (the lambda-bound `slice`
-  * re-materializes per element). Shingling sits under every MinHash
-  * signature scan, so it must be a single tight pass per document.
-  *
-  * Evaluates as one Scala loop over the token array
-  * ([[WordShingleOps.shingle]]); the generated code is a static call to
-  * the same kernel, so shingling stages stay in whole-stage codegen.
-  */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1, s"shingle size must be >= 1, got $n")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_shingles needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingleOps.shingle(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordShingleOps.shingle($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
-/** Static positional-shingle kernel: ALL word n-grams in document
-  * order, with multiplicity — index i of the output array IS token
-  * start position i, which is what span-level dedup needs (the
-  * [[WordShingleOps.shingle]] kernel dedups, destroying positions).
+/** ALL word n-gram shingles in document order, with multiplicity —
+  * index i of the output array IS token start position i, so
+  * `posexplode` over it yields the (position, gram) pairs a
+  * repeated-span index is built from (the [[WordShingleOps.shingle]]
+  * kernel dedups, destroying positions).
   */
 object WordShingleAllOps {
   def shingleAll(input: UTF8String, n: Int): ArrayData = {
@@ -114,42 +79,17 @@ object WordShingleAllOps {
   }
 }
 
-/** ALL word n-gram shingles in positional order (array index = token
-  * start position), as `array<string>` — `posexplode` over it yields
-  * the (position, gram) pairs a repeated-span index is built from.
-  * Same single-tight-loop/codegen rationale as [[WordShingles]].
-  */
-case class WordShinglesAll(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1, s"shingle size must be >= 1, got $n")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_shingles_all needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingleAllOps.shingleAll(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordShingleAllOps.shingleAll($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesAll =
-    copy(child = newChild)
-}
-
-/** Static bigram kernel (same pattern as [[WordShingleOps]], but keeps
-  * MULTIPLICITY and emits (w1, w2) struct pairs — the shape the
-  * bigram-LM tf aggregate needs; the shingle kernel dedups and joins
-  * with spaces, both wrong for conditional-probability counting).
+/** ALL word bigrams of a lowercased, trimmed text, in order, with
+  * MULTIPLICITY, as (w1, w2) struct pairs — the shape the bigram-LM tf
+  * aggregate needs; the shingle kernel dedups and joins with spaces,
+  * both wrong for conditional-probability counting.
+  *
+  * Why a kernel: the composable form — `transform(sequence(1,
+  * size(toks)-1), i -> struct(element_at(toks, i), element_at(toks,
+  * i+1)))` — is an interpreted higher-order function AND evaluates the
+  * `split` three separate times per row (verified on the executed
+  * plan). This tokenizes once per document in a flat loop. Measured on
+  * the q_bigram_lm inventory query at sf0.1: 4.8 s → ~2 s.
   */
 object WordBigramOps {
   def bigrams(input: UTF8String): ArrayData = {
@@ -171,46 +111,11 @@ object WordBigramOps {
   }
 }
 
-/** ALL word bigrams of a lowercased, trimmed text column, in order,
-  * with multiplicity, as `array<struct<w1,w2>>`.
-  *
-  * Why a custom Expression: the composable form —
-  * `transform(sequence(1, size(toks)-1), i -> struct(element_at(toks,
-  * i), element_at(toks, i+1)))` — is an interpreted higher-order
-  * function AND evaluates the `split` three separate times per row
-  * (once under size(), twice inside the lambda; verified on the
-  * executed plan). This kernel tokenizes once per document in a flat
-  * loop and stays inside whole-stage codegen. Measured on the
-  * q_bigram_lm inventory query at sf0.1: 4.8 s → ~2 s.
+/** Overlapping token-window chunks of a document — the RAG/embedding
+  * prep step that splits long texts into bounded-token windows with
+  * `overlap` tokens of context carried between neighbors. A pure
+  * projection, so corpus chunking is an embarrassingly-parallel scan.
   */
-case class WordBigrams(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(StructType(Seq(
-      StructField("w1", StringType, nullable = false),
-      StructField("w2", StringType, nullable = false))),
-      containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_bigrams needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    WordBigramOps.bigrams(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordBigramOps.bigrams($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordBigrams =
-    copy(child = newChild)
-}
-
-/** Static chunking kernel (same pattern as [[WordShingleOps]]). */
 object TokenChunkOps {
   /** Overlapping token-window chunks. Tokens are the trimmed text split
     * on single spaces (NO lowercasing — chunk text is payload, not a
@@ -243,58 +148,40 @@ object TokenChunkOps {
   }
 }
 
-/** Overlapping token-window chunks of a document — the RAG/embedding
-  * prep step that splits long texts into bounded-token windows with
-  * `overlap` tokens of context carried between neighbors. One flat
-  * loop per document ([[TokenChunkOps.chunk]]), codegen'd as a static
-  * kernel call: a pure projection, so corpus chunking is an
-  * embarrassingly-parallel scan at any scale.
-  */
-case class TokenChunks(child: Expression, size: Int, overlap: Int)
-    extends UnaryExpression {
-
-  require(size >= 1, s"chunk size must be >= 1, got $size")
-  require(overlap >= 0 && overlap < size,
-    s"overlap must be in [0, size), got $overlap for size $size")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_chunks needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    TokenChunkOps.chunk(input.asInstanceOf[UTF8String], size, overlap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenChunkOps.chunk($c, $size, $overlap);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenChunks =
-    copy(child = newChild)
-}
-
 object TextExprs {
-  import org.apache.spark.sql.GraftExpressionBridge._
+  import org.apache.spark.sql.GraftExpressionBridge.kernel
+
+  private val strings = ArrayType(StringType, containsNull = false)
 
   /** Distinct word n-gram shingles as a Column. */
-  def wordShingles(text: Column, n: Int): Column =
-    column(WordShingles(expression(text), n))
+  def wordShingles(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle size must be >= 1, got $n")
+    kernel("wordshingles", "graft.functions.WordShingleOps.shingle",
+      strings, Seq(StringType), Seq(text), n)
+  }
 
   /** All word n-gram shingles in positional order as a Column. */
-  def wordShinglesAll(text: Column, n: Int): Column =
-    column(WordShinglesAll(expression(text), n))
+  def wordShinglesAll(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle size must be >= 1, got $n")
+    kernel("wordshinglesall", "graft.functions.WordShingleAllOps.shingleAll",
+      strings, Seq(StringType), Seq(text), n)
+  }
 
   /** All word bigrams (with multiplicity) as a Column. */
   def wordBigrams(text: Column): Column =
-    column(WordBigrams(expression(text)))
+    kernel("wordbigrams", "graft.functions.WordBigramOps.bigrams",
+      ArrayType(StructType(Seq(
+        StructField("w1", StringType, nullable = false),
+        StructField("w2", StringType, nullable = false))),
+        containsNull = false),
+      Seq(StringType), Seq(text))
 
   /** Overlapping token-window chunks as a Column. */
-  def tokenChunks(text: Column, size: Int, overlap: Int): Column =
-    column(TokenChunks(expression(text), size, overlap))
+  def tokenChunks(text: Column, size: Int, overlap: Int): Column = {
+    require(size >= 1, s"chunk size must be >= 1, got $size")
+    require(overlap >= 0 && overlap < size,
+      s"overlap must be in [0, size), got $overlap for size $size")
+    kernel("tokenchunks", "graft.functions.TokenChunkOps.chunk",
+      strings, Seq(StringType), Seq(text), size, overlap)
+  }
 }

@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` — is a higher-order
   * function, which Spark evaluates interpreted, allocating per element;
   * on an ANN/near-dup pair scan that is the entire hot loop (measured
-  * ~50× slower at 500×200 pairs × 64 dims). This expression compiles to
-  * a tight primitive `for` loop inside whole-stage codegen.
+  * ~50× slower at 500×200 pairs × 64 dims). Both eval paths call the
+  * tight loop [[VectorOps.dot]], inside whole-stage codegen. It stays a
+  * class (not a bound kernel) because it reads elements by their type,
+  * which is known only after analysis.
   *
   * Semantics: elements are widened to double and accumulated
   * left-to-right (`acc += (double)a[i] * (double)b[i]`) — bit-identical
@@ -41,45 +43,16 @@ case class DotProduct(left: Expression, right: Expression)
           s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
   }
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (aa, bb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(aa.numElements(), bb.numElements())
-    val (lf, rf) = (elemType(left) == FloatType, elemType(right) == FloatType)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (aa.isNullAt(i)) 0.0
-        else if (lf) aa.getFloat(i).toDouble else aa.getDouble(i)
-      val y = if (bb.isNullAt(i)) 0.0
-        else if (rf) bb.getFloat(i).toDouble else bb.getDouble(i)
-      acc += x * y
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorOps.dot(a.asInstanceOf[ArrayData], isFloat(left),
+      b.asInstanceOf[ArrayData], isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      def get(arr: String, e: Expression) =
-        if (elemType(e) == FloatType) s"(double) $arr.getFloat($i)"
-        else s"$arr.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double x = $a.isNullAt($i) ? 0.0 : ${get(a, left)};
-         |  double y = $b.isNullAt($i) ? 0.0 : ${get(b, right)};
-         |  $acc += x * y;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => "graft.functions.VectorOps.dot(" +
+      s"$a, ${isFloat(left)}, $b, ${isFloat(right)})")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -92,12 +65,14 @@ case class DotProduct(left: Expression, right: Expression)
   * ~400 KB at k≈800, dim=64 — shipped once per task binary).
   *
   * Why a custom Expression and not `least(struct(d_j, j)...)` (the
-  * [[graft.ext.Embeddings.nearestCentroidQuantized]] form): that
-  * expression tree grows ~130 nodes PER CENTROID, so a corpus-sized
-  * k (hundreds — see `Dedup.semDeDupK`) blows past the JVM's 64 KB
+  * form the k-means spec checks it against): that expression tree grows
+  * ~130 nodes PER CENTROID, so a corpus-sized k (hundreds — see
+  * `Dedup.semDeDupK`) blows past the JVM's 64 KB
   * method limit, kicks the whole stage out of codegen, and evaluates
-  * k·dim interpreted allocations per row. This compiles to two tight
-  * primitive loops regardless of k.
+  * k·dim interpreted allocations per row. This is one call of
+  * [[VectorOps.nearestCentroid]] regardless of k. It stays a class
+  * (not a bound kernel) because it carries the centroid matrix, which
+  * PlanAudit counts by this class's name.
   *
   * Semantics — BIT-IDENTICAL to the `least(struct)` form and to the
   * DuckDB oracle's `ROW_NUMBER() OVER (ORDER BY qd ASC, cid ASC)`:
@@ -155,19 +130,69 @@ case class NearestCentroidQ(
 
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val lf = isFloat
-    // buffer the vector ONCE: the k-centroid loop reads each element
-    // k times, and ArrayData accessors (null check + virtual get) are
-    // the dominant cost at corpus-sized k — a flat local copy turns
-    // the inner loop into pure array arithmetic, bit-identically.
-    val buf = new Array[Double](n)
+    VectorOps.nearestCentroid(arr, isFloat, flat, selfDots, dim,
+      new Array[Double](arr.numElements()))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val flatRef = ctx.addReferenceObj("centroidsFlat", flat, "double[]")
+      val ccRef = ctx.addReferenceObj("centroidSelfDots", selfDots, "double[]")
+      // per-task scratch buffer, grown on demand. Mutable state is
+      // safe: one operator instance per task thread.
+      val buf = ctx.addMutableState("double[]", "ncqBuf",
+        name => s"$name = new double[64];")
+      s"""
+         |if ($buf.length < $v.numElements()) $buf = new double[$v.numElements()];
+         |${ev.value} = graft.functions.VectorOps.nearestCentroid(
+         |  $v, $isFloat, $flatRef, $ccRef, $dim, $buf);
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(
+      newChild: Expression): NearestCentroidQ = copy(child = newChild)
+}
+
+/** The dense-vector kernels [[DotProduct]] and [[NearestCentroidQ]]
+  * call from both interpreted eval and their generated code.
+  */
+object VectorOps {
+  /** Σ a[i]·b[i] over the common prefix, each element widened to double
+    * and accumulated left-to-right; null elements are 0.
+    */
+  def dot(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (a.isNullAt(i)) 0.0
+        else if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (b.isNullAt(i)) 0.0
+        else if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      acc += x * y
+      i += 1
+    }
+    acc
+  }
+
+  /** The lowest j minimizing ⌊(v·v − v·c_j·2.0 + c_j·c_j)·10⁶⌋ over the
+    * row-major `flat` centroids of width `dim`, with `selfDots(j)` =
+    * c_j·c_j. `buf` holds at least `v.numElements()` doubles: the
+    * vector is copied into it ONCE, because the centroid loop reads
+    * each element k times and ArrayData accessors (null check +
+    * virtual get) are the dominant cost at corpus-sized k — the flat
+    * copy turns the inner loop into pure array arithmetic,
+    * bit-identically.
+    */
+  def nearestCentroid(v: ArrayData, isFloat: Boolean, flat: Array[Double],
+      selfDots: Array[Double], dim: Int, buf: Array[Double]): Int = {
+    val n = v.numElements()
     var xx = 0.0
     var i = 0
     while (i < n) {
       val x =
-        if (arr.isNullAt(i)) 0.0
-        else if (lf) arr.getFloat(i).toDouble else arr.getDouble(i)
+        if (v.isNullAt(i)) 0.0
+        else if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
       buf(i) = x
       xx += x * x
       i += 1
@@ -176,7 +201,7 @@ case class NearestCentroidQ(
     var best = Long.MaxValue
     var bestJ = 0
     var j = 0
-    while (j < k) {
+    while (j < selfDots.length) {
       var xc = 0.0
       i = 0
       while (i < m) { xc += buf(i) * flat(j * dim + i); i += 1 }
@@ -186,56 +211,6 @@ case class NearestCentroidQ(
     }
     bestJ
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("centroidsFlat", flat, "double[]")
-      val ccRef = ctx.addReferenceObj("centroidSelfDots", selfDots, "double[]")
-      // per-task scratch buffer, grown on demand: the k-centroid loop
-      // reads each element k times, and ArrayData accessors dominate
-      // at corpus-sized k — buffering once per row turns the inner
-      // loop into flat array arithmetic, bit-identically. Mutable
-      // state is safe: one operator instance per task thread.
-      val buf = ctx.addMutableState("double[]", "ncqBuf",
-        name => s"$name = new double[64];")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val xx = ctx.freshName("xx")
-      val xc = ctx.freshName("xc")
-      val q = ctx.freshName("q")
-      val best = ctx.freshName("best")
-      val bestJ = ctx.freshName("bestJ")
-      val get =
-        if (isFloat) (idx: String) => s"(double) $v.getFloat($idx)"
-        else (idx: String) => s"$v.getDouble($idx)"
-      s"""
-         |int $n = $v.numElements();
-         |if ($buf.length < $n) $buf = new double[$n];
-         |double $xx = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double x = $v.isNullAt($i) ? 0.0 : ${get(i)};
-         |  $buf[$i] = x;
-         |  $xx += x * x;
-         |}
-         |int $m = java.lang.Math.min($n, $dim);
-         |long $best = Long.MAX_VALUE;
-         |int $bestJ = 0;
-         |for (int $j = 0; $j < $k; $j++) {
-         |  double $xc = 0.0;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $xc += $buf[$i] * $flatRef[$j * $dim + $i];
-         |  }
-         |  long $q = (long) java.lang.Math.floor(($xx - $xc * 2.0 + $ccRef[$j]) * 1e6);
-         |  if ($q < $best) { $best = $q; $bestJ = $j; }
-         |}
-         |${ev.value} = $bestJ;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NearestCentroidQ = copy(child = newChild)
 }
 
 object VectorExprs {

@@ -1,14 +1,16 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.GraftExpressionBridge.{column, invocation}
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, StringType}
-import graft.functions.IntersectSize
+import graft.functions.ArrayExprs
 
 /** Catalyst optimizer rule: `size(array_intersect(a, b))` over string
-  * arrays → [[graft.functions.IntersectSize]].
+  * arrays → the `intersect_size` kernel
+  * ([[graft.functions.ArrayIntersectOps.hashIntersectSize]]).
   *
   * The built-in pair MATERIALIZES the intersected array per row only to
   * count it — and when the same expression appears in both a projection
@@ -44,12 +46,14 @@ object IntersectSizeRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
       // legacySizeOfNull=false only: under the legacy conf size(NULL)
-      // is -1, while IntersectSize is null-intolerant (returns NULL) —
-      // rewriting there would change results.
+      // is -1, while the kernel returns NULL on a NULL input —
+      // rewriting there would change results. Injected optimizer rules
+      // run after RuntimeReplaceable nodes are replaced, so the rule
+      // inserts the kernel's StaticInvoke itself.
       case Size(ArrayIntersect(a, b), false)
           if isStringArray(a) && isStringArray(b) &&
             (noNullElements(a) || noNullElements(b)) =>
-        IntersectSize(a, b)
+        invocation(ArrayExprs.intersectSize(column(a), column(b)))
     }
 }
 

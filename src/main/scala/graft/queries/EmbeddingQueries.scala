@@ -34,8 +34,7 @@ object EmbeddingQueries {
 SELECT cid AS cluster, COUNT(*) AS n_vectors FROM fin GROUP BY 1"""
 
   /** Quantized-distance SQL shared by every k-means oracle chain —
-    * mirrors [[graft.ext.Embeddings]]'s `quantizedDist` /
-    * [[graft.functions.NearestCentroidQ]] bit-for-bit.
+    * mirrors [[graft.functions.NearestCentroidQ]] bit-for-bit.
     */
   private def kmeansQdSql(emb: String, cemb: String): String =
     s"CAST(FLOOR((list_inner_product($emb, $emb) " +

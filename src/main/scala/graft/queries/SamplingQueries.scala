@@ -19,7 +19,7 @@ object SamplingQueries {
       Sampling.stratifiedHashSample(
         Tables.documents(s, dir), "doc_id", "lang",
         Map("en" -> 50, "es" -> 20), defaultPct = 10),
-      // Portable hash gate: same md5-prefix-60 integer as Md5Prefix60.
+      // Portable hash gate: same md5-prefix-60 integer as Md5Ops.prefix60.
       """SELECT doc_id, text, lang, source, n_chars FROM documents
         |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
         |  < CASE WHEN lang = 'en' THEN 50 WHEN lang = 'es' THEN 20 ELSE 10 END""".stripMargin),

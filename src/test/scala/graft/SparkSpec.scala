@@ -21,4 +21,16 @@ object SparkTestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Runs `body` as planned (whole-stage codegen), then again with no
+    * generated code at all, where kernels are found by reflection.
+    */
+  def inBothModes(body: => Unit): Unit = {
+    withClue("codegen: ")(body)
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try withClue("interpreted: ")(body)
+    finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+  }
 }

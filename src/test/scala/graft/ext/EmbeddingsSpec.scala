@@ -55,7 +55,7 @@ class EmbeddingsSpec extends SparkSpec {
       .map(_.getSeq[Double](0).toArray)
     val aggs = Embeddings.lloydPassAggs("embedding", 64)
     val pass = emb
-      .groupBy(Embeddings.nearestCentroidQuantized(col("embedding"), init)
+      .groupBy(CentroidReference.nearestCentroidQuantized(col("embedding"), init)
         .as("cluster"))
       .agg(aggs.head, aggs.tail: _*)
     val plan = pass.queryExecution.executedPlan.toString
@@ -187,24 +187,29 @@ class EmbeddingsSpec extends SparkSpec {
       Array(0.0, 0.0), Array(4.0, 0.0), Array(0.0, 4.0), Array(2.0, 2.0))
     val pts = for { x <- -3 to 7; y <- -3 to 7 }
       yield (x * 100L + y, Array((x * 0.5).toFloat, (y * 0.5).toFloat))
-    val df = pts.toDF("vec_id", "embedding")
-    val both = df.select(
-      col("vec_id"),
-      VectorExprs.nearestCentroidQ(col("embedding"), centroids).as("fast"),
-      Embeddings.nearestCentroidQuantized(col("embedding"), centroids)
-        .as("ref"))
-      .as[(Long, Int, Int)].collect()
-    assert(both.nonEmpty)
-    both.foreach { case (id, fast, ref) =>
-      assert(fast === ref, s"vec_id=$id: NearestCentroidQ=$fast least=$ref")
+    inBothModes {
+      // repartition: the optimizer evaluates a projection straight over
+      // a local relation itself, which would bypass generated code
+      val df = pts.toDF("vec_id", "embedding").repartition(2)
+      val both = df.select(
+        col("vec_id"),
+        VectorExprs.nearestCentroidQ(col("embedding"), centroids).as("fast"),
+        CentroidReference.nearestCentroidQuantized(col("embedding"), centroids)
+          .as("ref"))
+        .as[(Long, Int, Int)].collect()
+      assert(both.nonEmpty)
+      both.foreach { case (id, fast, ref) =>
+        assert(fast === ref, s"vec_id=$id: NearestCentroidQ=$fast least=$ref")
+      }
+      // (1.0, 1.0) is exactly equidistant from centroids 0 and 3
+      // (d² = 2 to each; cids 1 and 2 sit at d² = 10) — the quantized
+      // tie between 0 and 3 must go to the LOWER cid in both forms
+      val tie = Seq((0L, Array(1.0f, 1.0f))).toDF("vec_id", "embedding")
+        .repartition(1)
+        .select(VectorExprs.nearestCentroidQ(col("embedding"), centroids))
+        .as[Int].head()
+      assert(tie === 0)
     }
-    // (1.0, 1.0) is exactly equidistant from centroids 0 and 3
-    // (d² = 2 to each; cids 1 and 2 sit at d² = 10) — the quantized
-    // tie between 0 and 3 must go to the LOWER cid in both forms
-    val tie = Seq((0L, Array(1.0f, 1.0f))).toDF("vec_id", "embedding")
-      .select(VectorExprs.nearestCentroidQ(col("embedding"), centroids))
-      .as[Int].head()
-    assert(tie === 0)
   }
 
   test("NearestCentroidQ stays correct at corpus-sized k (300 " +
